@@ -292,8 +292,10 @@ object Bench {
     // the driver's tail capture truncated r15's mid-map (parsed: null);
     // trimming the 9-digit doubles cuts the line ~30% while staying two
     // orders of magnitude under any query's noise floor. Failures stay
-    // exactly -1.0.
-    val qs = healed.map { case (k, v) => f""""$k":$v%.4f""" }
+    // exactly -1.0. Locale.ROOT: a comma-decimal default locale would
+    // print "1,2345", which the history parser (PairRe) cannot read.
+    val qs = healed.map { case (k, v) =>
+      s""""$k":${"%.4f".formatLocal(java.util.Locale.ROOT, v)}""" }
       .mkString("{", ",", "}")
     val failedNames = healed.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
     val total = healed.collect { case (_, v) if v >= 0 => v }.sum

@@ -52,75 +52,33 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: state is narrow append-only parquet segments (1 hash/
   * survivor, 16 signature rows/survivor, 1 hashed set/survivor) under
-  * the log-record CAS protocol (see [[IngestLog]] — r12 replaced the
-  * bare append dirs, which had no crash-replay protection); per-close
+  * the [[StateLog]] log-record CAS (see [[IngestLog]]); per-close
   * work is one shard-side window + one signature shuffle + the
   * candidate-verify join, all independent of total corpus size except
   * through the state scan (partition-prunable by lang/band at 100 TB).
   */
 object CurationIngest {
 
-  /** One committed ingest state (r12: the log-record CAS protocol
-    * replaced three bare `mode("append")` dirs + an append-mode landing
-    * and curated sink, none replay-protected — a crashed-and-retried
-    * foreachBatch double-landed docs, double-appended dedup state, and
-    * re-curated closed shards). Every committed state is one
-    * exclusive-create record `log/v<N>` naming the live segment set and
-    * the committed batch id; segment `<seg>` implies whichever of
-    * `landing/<seg>`, `keep/<seg>`, `banded/<seg>`, `hashed/<seg>`,
-    * `curated/<seg>` dirs the batch actually wrote (readers
-    * existence-filter). A batch at or below the committed id is a crash
-    * replay and lands NOTHING.
+  /** One committed ingest state, a [[StateLog]] record naming the live
+    * segment set and the committed batch id. Segment `<seg>` implies
+    * whichever of `landing/<seg>`, `keep/<seg>`, `banded/<seg>`,
+    * `hashed/<seg>`, `curated/<seg>` dirs the batch actually wrote
+    * (readers existence-filter). Segments are never compacted.
     */
   private[graft] case class IngestLog(version: Long, segs: Seq[String], batch: Option[Long])
+      extends StateLog.Committed
 
-  private val EmptyLog = IngestLog(-1L, Seq.empty, None)
+  private val stateLog = new StateLog.Log[IngestLog](IngestLog(-1L, Seq.empty, None),
+    st => Seq("segs" -> StateLog.list(st.segs), "batch" -> StateLog.long(st.batch)),
+    (v, f) => IngestLog(v, f.list("segs"), f.long("batch")))
 
-  private def recordBody(st: IngestLog): String =
-    s"segs=${st.segs.mkString(",")};batch=${st.batch.fold("-")(_.toString)}"
-
-  private def parseRecord(version: Long, body: String): IngestLog = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    IngestLog(version,
-      kv.get("segs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong))
-  }
-
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[IngestLog] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
-
-  private[graft] def currentState(s: SparkSession, base: String): IngestLog = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).toLong).filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyLog
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyLog)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
+  /** Latest committed state ([[StateLog.Log.current]]). */
+  private[graft] def currentState(s: SparkSession, base: String): IngestLog =
+    stateLog.current(s, base)
 
   /** The committed micro-batch id — the replay guard's probe. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     currentState(s, base).batch
-
-  private def publish(s: SparkSession, base: String, st: IngestLog): Boolean = {
-    val ok = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", recordBody(st))
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
 
   /** (shard_id, doc_id, text, lang) — the streaming input row. */
   private type DocIn = (Long, Long, String, String)
@@ -198,8 +156,7 @@ object CurationIngest {
       schema: StructType, segs: Seq[String]): DataFrame = {
     val dirs = segs.map(n => s"$base/$sub/$n")
       .filter(p => graft.sources.GraftFs.exists(s, p))
-    if (dirs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (dirs.isEmpty) StateLog.emptyFrame(s, schema)
     else s.read.schema(schema).parquet(dirs: _*)
   }
 
@@ -289,11 +246,10 @@ object CurationIngest {
   def handleBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): Unit = {
     val st0 = currentState(s, base)
-    if (batchId.exists(id => st0.batch.exists(_ >= id))) return
+    if (st0.covers(batchId)) return
     batch.persist()
     try {
-      val uid = java.util.UUID.randomUUID.toString.take(8)
-      val segName = s"b${st0.version + 1}-$uid"
+      val segName = StateLog.uniqueName("b", st0.version + 1)
       val liveSegs = st0.segs :+ segName
       val docs = batch.filter(col("kind") === "doc")
         .select("shard_id", "doc_id", "text", "lang")
@@ -309,7 +265,7 @@ object CurationIngest {
         processClosedShard(s, shardDocs, base, liveSegs, segName): Unit
       }
       val next = IngestLog(st0.version + 1, liveSegs, batchId.orElse(st0.batch))
-      require(publish(s, base, next),
+      require(stateLog.publish(s, base, next),
         s"handleBatch: lost the publish race at $base (concurrent writer); " +
           "the stream retry will rebase onto the winner")
     } finally { batch.unpersist(); () }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   *
   * Unlike IncrementalDedup's append-only signature state, a matview must
   * REWRITE rows (merged groups change), so each upsert writes a fresh
-  * state version directory and repoints a _CURRENT marker — the
-  * write-new-then-swap idiom every table format (Delta/Iceberg) formalizes;
+  * state version directory and swaps the [[StateLog]] version pointer —
+  * the write-new-then-swap idiom every table format (Delta/Iceberg) formalizes;
   * readers never observe a half-written state. At 100 TB the state table
   * is bucketed on the group key so the merge join is co-located; only the
   * micro-batch shuffles.
@@ -30,32 +30,15 @@ object IncrementalAgg {
     StructField("n", LongType),
     StructField("sum_value", DecimalType(38, 2))))
 
-  /** _CURRENT carries `v<N>[:batch=<id>]` — the same replay-protection
-    * pointer format as IncrementalStats (the tag was ported here when the
-    * serve row landed: a once-per-dir state build must be crash-safe to
-    * re-run, which needs committed-batch skips).
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   /** The committed micro-batch id, if the writer threads one — the
     * build-completeness probe the serve row uses.
     */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
   /** Read the current state (empty frame before the first batch). */
   def readState(s: SparkSession, base: String): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(stateSchema).parquet(s"$base/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    StateLog.readGeneration(s, StateLog.pointer(s, base), stateSchema)(v => s"$base/$v")
 
   private def partials(batch: DataFrame): DataFrame =
     batch.groupBy("event_type")
@@ -79,8 +62,8 @@ object IncrementalAgg {
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): DataFrame = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id)))
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId)))
       return readState(s, base)
     val merged = readState(s, base).select(
         col("event_type"), col("n").as("n1"), col("sum_value").as("s1"))
@@ -95,10 +78,9 @@ object IncrementalAgg {
           .cast(DecimalType(38, 2)).as("sum_value"))
       // materialize BEFORE touching the directory tree the plan reads from
       .localCheckpoint()
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+    val next = StateLog.nextVersion(ptr)
+    merged.write.mode("overwrite").parquet(s"$base/v$next")
+    StateLog.swap(s, base, ptr, next, batchId)
     merged
   }
 

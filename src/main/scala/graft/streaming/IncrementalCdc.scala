@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
 /** Streaming CDC apply — the continuously-maintained form of
   * q_cdc_upsert: a persistent keyed snapshot absorbs each micro-batch of
   * upsert/delete change rows through ONE full-outer merge on the primary
-  * key, writing a fresh state version and repointing _CURRENT atomically
-  * (the IncrementalAgg write-new-then-swap idiom — readers never observe
+  * key, writing a fresh state version and swapping the [[StateLog]]
+  * version pointer (the write-new-then-swap idiom — readers never observe
   * a half-applied batch, the property a transactional table format
   * provides and plain parquet must construct).
   *
@@ -30,41 +30,26 @@ object IncrementalCdc {
     StructField("o_custkey", LongType),
     StructField("o_totalprice", DoubleType)))
 
-  /** _CURRENT carries `v<N>[:batch=<id>]` — the IncrementalAgg/Stats
-    * replay-protection pointer (r12: a crashed-and-retried foreachBatch
-    * must not re-apply a batch of changes — a replayed D/U merge against
-    * the post-merge state silently diverges from the one-shot apply).
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
   /** Read the current snapshot (empty before initialization). */
   def readState(s: SparkSession, base: String): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(stateSchema).parquet(s"$base/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    StateLog.readGeneration(s, StateLog.pointer(s, base), stateSchema)(v => s"$base/$v")
 
   /** Apply one micro-batch of change rows
     * (o_orderkey, op ∈ {U, D}, c_custkey, new_price) to the snapshot and
     * swap versions. Delete-wins within the batch (a key carrying both a
     * D and a U is dropped — q_cdc_upsert's precedence), then one
-    * full-outer merge against the state.
+    * full-outer merge against the state. A batch id at or below the
+    * committed tag is a crash replay and is skipped: re-applying a D/U
+    * merge to the post-merge state silently diverges from the one-shot.
     */
   def processBatch(s: SparkSession, changes: DataFrame, base: String,
       batchId: Option[Long] = None): DataFrame = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id)))
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId)))
       return readState(s, base)
     val perKey = changes.groupBy("o_orderkey").agg(
       max(when(col("op") === "D", 1).otherwise(0)).as("has_d"),
@@ -82,10 +67,9 @@ object IncrementalCdc {
         coalesce(col("u.new_price"), col("o_totalprice")).as("o_totalprice"))
       // materialize BEFORE touching the directory tree the plan reads from
       .localCheckpoint()
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+    val next = StateLog.nextVersion(ptr)
+    merged.write.mode("overwrite").parquet(s"$base/v$next")
+    StateLog.swap(s, base, ptr, next, batchId)
     merged
   }
 

@@ -32,8 +32,8 @@ import org.apache.spark.sql.types._
   * of labels IS the global min member id — so after any batch split the
   * state equals the one-shot CC over everything seen, exactly
   * (IncrementalComponentsSpec asserts row equality, plus the
-  * only-coarsens invariant per batch). State versioning follows
-  * IncrementalAgg's write-new-then-swap _CURRENT discipline: readers
+  * only-coarsens invariant per batch). State versioning is the
+  * [[StateLog]] version pointer: readers
   * never observe a half-written label table.
   *
   * At 100 TB: the label table shuffles once per batch on node_id (and
@@ -50,25 +50,13 @@ object IncrementalComponents {
     StructField("node_id", LongType),
     StructField("component", LongType)))
 
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
   /** Read the current label table (empty before the first batch). */
   def readState(s: SparkSession, base: String): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(stateSchema).parquet(s"$base/labels/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    StateLog.readGeneration(s, StateLog.pointer(s, base), stateSchema)(v => s"$base/labels/$v")
 
   /** Absorb one batch: `batchNodes` is (node_id), `batchEdges` is
     * undirected pairs (a, b) touching at least one batch node. Returns
@@ -79,8 +67,8 @@ object IncrementalComponents {
     */
   def processBatch(s: SparkSession, batchNodes: DataFrame, batchEdges: DataFrame,
       base: String, batchId: Option[Long] = None): DataFrame = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id))) return readState(s, base)
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId))) return readState(s, base)
     val st = readState(s, base)
     val fresh = batchNodes.select(col("node_id")).distinct()
       .join(st.select(col("node_id")), Seq("node_id"), "left_anti")
@@ -106,10 +94,9 @@ object IncrementalComponents {
       .select(col("node_id"),
         coalesce(col("merged"), col("component")).as("component"))
       .localCheckpoint()
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    updated.write.mode("overwrite").parquet(s"$base/labels/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+    val next = StateLog.nextVersion(ptr)
+    updated.write.mode("overwrite").parquet(s"$base/labels/v$next")
+    StateLog.swap(s, base, ptr, next, batchId)
     updated
   }
 

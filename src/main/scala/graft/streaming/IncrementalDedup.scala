@@ -26,23 +26,13 @@ import org.apache.spark.sql.types._
   * equality including the jaccard scores, and q_serve_neardup_state puts
   * the build→serve loop through the driver's oracle gate every round.
   *
-  * State protocol (r12): the IncrementalIndex/IncrementalSpan log-record
-  * CAS discipline replaced the original bare `mode("append")` writes,
-  * which had no replay protection — a crashed-and-retried foreachBatch
-  * would double-land signatures AND re-emit pairs. Now every committed
-  * state is ONE exclusive-create record `log/v<N>` naming the live
-  * segment set (each segment = writer-unique dirs `banded/<seg>`,
-  * `hashed/<seg>`, `pairs/<seg>`) and the committed batch id; a batch at
-  * or below the committed id is a crash replay and is skipped; a lost
-  * publish race rebases — the pure-batch signature/hash segments are
-  * reused, the state-dependent pair emission recomputes against the
-  * winner's state.
-  *
-  * Segments auto-compact every [[AutoCompactSegs]] batches (r15 —
-  * the Index/Span/Winnow discipline with deferred-GC tombstones and
-  * the all-live overlap guard), so the record body, the serve read,
-  * and each batch's state-side signature scan stay O(1) in batch
-  * count over a long-running ingest.
+  * State protocol: the [[StateLog]] log-record CAS and segment
+  * compaction. Every segment name owns one writer-unique dir in each of
+  * `banded/`, `hashed/` and `pairs/`. On a lost publish race the
+  * pure-batch signature/hash dirs are reused and the state-dependent pair
+  * emission recomputes against the winner's state. Segments auto-compact
+  * at [[StateLog.AutoCompactSegs]], so the record body, the serve read
+  * and each batch's state-side signature scan stay O(1) in batch count.
   */
 object IncrementalDedup {
 
@@ -59,55 +49,26 @@ object IncrementalDedup {
 
   /** One committed dedup state: segment names (shared by the banded/
     * hashed/pairs dirs — the three are always committed together) and
-    * the highest landed batch id. `tombs` are the segment names folded
-    * by the LAST compaction (deferred GC, the r15 discipline): still on
-    * disk in all three families for readers that resolved the pre-swap
-    * record, reclaimed at the NEXT compaction's entry.
+    * the highest landed batch id. `tombs` await deferred GC
+    * ([[StateLog]]).
     */
   private[graft] case class DedupState(version: Long, segs: Seq[String],
       batch: Option[Long], tombs: Seq[String] = Seq.empty)
-
-  private val EmptyState = DedupState(-1L, Seq.empty, None)
-
-  private def recordBody(st: DedupState): String =
-    s"segs=${st.segs.mkString(",")};batch=${st.batch.fold("-")(_.toString)}" +
-      s";tombs=${st.tombs.mkString(",")}"
-
-  private def parseRecord(version: Long, body: String): DedupState = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    DedupState(version,
-      kv.get("segs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong),
-      kv.get("tombs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty))
+      extends StateLog.Segmented[DedupState] {
+    def swapped(version: Long, segs: Seq[String], tombs: Seq[String]): DedupState =
+      copy(version = version, segs = segs, tombs = tombs)
   }
 
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[DedupState] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
+  private val stateLog = new StateLog.Segments[DedupState](
+    DedupState(-1L, Seq.empty, None),
+    st => Seq("segs" -> StateLog.list(st.segs), "batch" -> StateLog.long(st.batch),
+      "tombs" -> StateLog.list(st.tombs)),
+    (v, f) => DedupState(v, f.list("segs"), f.long("batch"), f.list("tombs")),
+    families = Seq("banded", "hashed", "pairs"))
 
-  /** Latest committed state: `_CURRENT` hint (or log listing) then walk
-    * forward — the IncrementalIndex discipline; a stale hint is harmless.
-    */
-  private[graft] def currentState(s: SparkSession, base: String): DedupState = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).toLong).filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyState
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyState)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
+  /** Latest committed state ([[StateLog.Log.current]]). */
+  private[graft] def currentState(s: SparkSession, base: String): DedupState =
+    stateLog.current(s, base)
 
   /** The committed micro-batch id — the serve row's build-completeness
     * probe.
@@ -115,28 +76,9 @@ object IncrementalDedup {
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     currentState(s, base).batch
 
-  private def publish(s: SparkSession, base: String, st: DedupState): Boolean = {
-    val body = recordBody(st)
-    val ok0 = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", body)
-    // ambiguous-CAS disambiguation (r15 review): an RPC failure AFTER
-    // the exclusive rename landed reports false with the target existing
-    // — our record body embeds writer-unique (uid-bearing) segment
-    // names, so a byte-identical readback means WE won. Without this the
-    // replay branch would dropSeg() LIVE family dirs and a compaction
-    // abort would dropC() the LIVE compacted dirs.
-    val ok = ok0 || graft.sources.GraftFs.readSmallFile(s, s"$base/log/v${st.version}")
-      .exists(_.trim == body.trim)
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
-
-  private def emptyDf(s: SparkSession, schema: StructType): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   private def readSegs(s: SparkSession, base: String, sub: String,
       schema: StructType, segs: Seq[String]): DataFrame =
-    if (segs.isEmpty) emptyDf(s, schema)
+    if (segs.isEmpty) StateLog.emptyFrame(s, schema)
     else s.read.schema(schema).parquet(segs.map(n => s"$base/$sub/$n"): _*)
 
   /** All pairs emitted so far, from ONE committed record (a concurrent
@@ -156,8 +98,7 @@ object IncrementalDedup {
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): DataFrame = {
     val st0 = currentState(s, base)
-    if (batchId.exists(id => st0.batch.exists(_ >= id)))
-      return emptyDf(s, pairsSchema)
+    if (st0.covers(batchId)) return StateLog.emptyFrame(s, pairsSchema)
     // first-write-wins per doc_id: an at-least-once source re-emitting a
     // document under a NEW batch id would otherwise land duplicate
     // signature/hash rows AND re-emit every pair the doc already emitted
@@ -175,22 +116,12 @@ object IncrementalDedup {
     val bBanded = DedupQueries.bandedSignatures(sets, bands = 16).localCheckpoint()
     val bHashed = fresh.select(col("doc_id"),
       Tokenize.hashedTokenSet(col("text")).as("toksh")).localCheckpoint()
-    val uid = java.util.UUID.randomUUID.toString.take(8)
-    val segName = s"b${st0.version + 1}-$uid"
+    val segName = StateLog.uniqueName("b", st0.version + 1)
     bBanded.write.mode("overwrite").parquet(s"$base/banded/$segName")
     bHashed.write.mode("overwrite").parquet(s"$base/hashed/$segName")
-    // an exit that never published must not leave the three family dirs
-    // orphaned (the Winnow dropSeg discipline)
-    def dropSeg(): Unit = Seq("banded", "hashed", "pairs")
-      .foreach(f => graft.sources.GraftFs.deleteRecursively(s, s"$base/$f/$segName"))
-    var st = st0
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 8) {
-        dropSeg() // an exit that never published must not orphan the dirs
-        require(false, s"processBatch: lost the publish race $attempts times at $base")
-      }
+    var newPairs = StateLog.emptyFrame(s, pairsSchema)
+    stateLog.append(s, base, st0, batchId,
+        abandon = stateLog.dropUnlisted(s, base, segName)) { st =>
       // the pair emission depends on the OBSERVED state (candidates =
       // batch × state ∪ batch) — recompute on every rebase
       val allBanded = readSegs(s, base, "banded", bandedSchema, st.segs).unionByName(bBanded)
@@ -204,118 +135,33 @@ object IncrementalDedup {
         .select(least(col("did1"), col("did2")).as("doc_id1"),
           greatest(col("did1"), col("did2")).as("doc_id2"))
         .distinct()
-      val newPairs = DedupQueries.verifyJaccard(cands, allHashed, 1, 2).localCheckpoint()
+      newPairs = DedupQueries.verifyJaccard(cands, allHashed, 1, 2).localCheckpoint()
       newPairs.write.mode("overwrite").parquet(s"$base/pairs/$segName")
-      val next = DedupState(st.version + 1, st.segs :+ segName,
-        batchId.orElse(st.batch), st.tombs)
-      if (publish(s, base, next)) {
-        // bound state growth (the Winnow discipline): without folding,
-        // every serve read and every batch's state-side scan opens one
-        // parquet dir per batch ever ingested. The fold runs AFTER the
-        // publish landed, so a failure here must not fail the committed
-        // batch — compaction is idempotent and re-triggers
-        if (next.segs.size >= AutoCompactSegs)
-          try compactFrom(s, base, next)
-          catch {
-            case e: Exception =>
-              System.err.println(s"[IncrementalDedup] auto-compaction at $base " +
-                s"deferred to the next trigger: ${e.getMessage}")
-          }
-        return newPairs
-      }
-      st = currentState(s, base)
-      if (batchId.exists(id => st.batch.exists(_ >= id))) {
-        // genuine concurrent same-id landing: OUR dirs are orphans (the
-        // membership guard is defense-in-depth against any path that
-        // reaches here with our own segment committed)
-        if (!st.segs.contains(segName)) dropSeg()
-        return emptyDf(s, pairsSchema)
-      }
+      DedupState(st.version + 1, st.segs :+ segName, batchId.orElse(st.batch), st.tombs)
+    } match {
+      case Some(committed) =>
+        stateLog.autoCompact(s, base, committed)(compactFrom(s, base, _))
+        newPairs
+      case None => StateLog.emptyFrame(s, pairsSchema)
     }
-    emptyDf(s, pairsSchema) // unreachable
   }
 
-  /** Auto-compaction threshold: processBatch folds the live segments
-    * whenever a publish leaves this many — steady-state serve and the
-    * per-batch state-side scans read a handful of dirs, not one per
-    * batch ever ingested.
-    */
-  private val AutoCompactSegs = 16
-
   /** Fold every live segment of all THREE families into ONE dir each
-    * and CAS-publish the swap — the Index/Span/Winnow r15 discipline.
-    * Content is unchanged verbatim: each family is rewritten as the
-    * plain union of its folded segments (no distinct — banded/hashed
-    * rows are disjoint across segments by the first-write-wins ingest
-    * guard, and pair rows keep their exact multiplicity). Concurrent
-    * ingest is safe: a batch that commits mid-compact wins the CAS and
-    * the rebase keeps its segment alongside the compacted dir. GC is
-    * DEFERRED one generation: folded inputs are tombstoned in the new
-    * record and reclaimed at the NEXT compaction's entry (before its
-    * publish, so a crash there cannot orphan them).
+    * and CAS-publish the swap ([[StateLog.Segments.compact]]). Content is
+    * unchanged verbatim: each family is rewritten as the plain union of
+    * its folded segments (no distinct — banded/hashed rows are disjoint
+    * across segments by the first-write-wins ingest guard, and pair rows
+    * keep their exact multiplicity).
     */
   def compactSegments(s: SparkSession, base: String): Unit =
     compactFrom(s, base, currentState(s, base))
 
-  private val Families = Seq(
-    ("banded", bandedSchema), ("hashed", hashedSchema), ("pairs", pairsSchema))
+  private val schemas = Map(
+    "banded" -> bandedSchema, "hashed" -> hashedSchema, "pairs" -> pairsSchema)
 
-  private[graft] def compactFrom(s: SparkSession, base: String, observed: DedupState): Unit = {
-    if (observed.segs.size <= 1) return
-    val folded = observed.segs.toSet
-    val uid = java.util.UUID.randomUUID.toString.take(8)
-    val cName = s"c${observed.version + 1}-$uid"
-    def dropC(): Unit = Families.foreach { case (f, _) =>
-      graft.sources.GraftFs.deleteRecursively(s, s"$base/$f/$cName") }
-    // duplicate/overlap fast path: proceed only while EVERY folded input
-    // is still live — with deferred GC an overlapping concurrent fold
-    // leaves our inputs readable as tombstones, and publishing ours
-    // would double-list shared content (duplicate pair rows and
-    // double-counted signatures in the per-batch state scans)
-    val live = currentState(s, base)
-    if (!folded.forall(live.segs.contains)) return
-    // reclaim the PREVIOUS generation's tombstones at entry (a full
-    // generation old; reclaiming before our publish means a crash below
-    // cannot orphan them — the still-current record keeps them listed)
-    for (t <- live.tombs.filterNot(folded.contains); (f, _) <- Families)
-      graft.sources.GraftFs.deleteRecursively(s, s"$base/$f/$t")
-    try {
-      for ((f, schema) <- Families)
-        readSegs(s, base, f, schema, observed.segs).localCheckpoint()
-          .write.mode("overwrite").parquet(s"$base/$f/$cName")
-    } catch {
-      case e: Exception =>
-        dropC()
-        // rethrow ONLY when every folded input is still live (a genuine
-        // I/O failure); a concurrent compactor that swapped any subset
-        // supersedes this fold
-        val liveNow = currentState(s, base).segs.toSet
-        if (!folded.forall(liveNow.contains)) return
-        throw e
-    }
-    var st = observed
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      attempts += 1
-      if (attempts > 8) {
-        dropC() // exhaustion must not orphan three corpus-sized dirs
-        require(false, s"compactSegments: lost the publish race $attempts times at $base")
-      }
-      if (!folded.forall(st.segs.contains)) {
-        // the race winner overlapped our folded set — its output covers
-        // the swapped content; publishing ours would double-list it
-        dropC()
-        return
-      }
-      val next = DedupState(st.version + 1,
-        (cName +: st.segs.filterNot(folded.contains)).distinct, st.batch,
-        folded.toSeq.sorted)
-      if (publish(s, base, next)) committed = true
-      else st = currentState(s, base)
-    }
-    // (prior-generation tombs were reclaimed at entry)
-  }
+  private[graft] def compactFrom(s: SparkSession, base: String, observed: DedupState): Unit =
+    stateLog.compact(s, base, observed)(f =>
+      readSegs(s, base, f, schemas(f), observed.segs).localCheckpoint())
 
   /** Attach the incremental dedup to a documents stream via foreachBatch;
     * the batch id is threaded into the committed record for crash-replay

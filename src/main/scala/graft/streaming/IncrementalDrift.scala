@@ -16,11 +16,9 @@ import org.apache.spark.sql.types._
   * crawl stream drift against its standing corpus without re-scanning
   * either side per check.
   *
-  * State protocol: versioned count tables behind an atomically-swapped
-  * `_CURRENT` pointer carrying the committed batch id (the
-  * IncrementalScd2 discipline — per-batch writes are idempotent by
-  * path, replays detected via the tag, manual no-id calls carry the
-  * committed tag forward).
+  * State protocol: versioned count tables behind the [[StateLog]]
+  * version pointer (per-batch writes are idempotent by path, replays
+  * detected via the batch tag).
   *
   * Scale shape: the state is vocabulary × #sources rows (bounded; the
   * corpus pays one tokenize + one (source, token) aggregate per batch,
@@ -34,25 +32,13 @@ object IncrementalDrift {
     StructField("token", StringType),
     StructField("n", LongType)))
 
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
   /** Current (source, token, n) counts; empty before the first batch. */
   def readCounts(s: SparkSession, base: String): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(stateSchema).parquet(s"$base/counts/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    StateLog.readGeneration(s, StateLog.pointer(s, base), stateSchema)(v => s"$base/counts/$v")
 
   /** Land one micro-batch of documents (source, text): merge its count
     * partials, swap the version. Batch cost is O(batch tokens).
@@ -66,12 +52,12 @@ object IncrementalDrift {
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): Unit = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id))) return
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId))) return
     val partial = batch.select(col("source"),
         explode(graft.functions.Tokenize.tokens(col("text"))).as("token"))
       .groupBy("source", "token").agg(count(lit(1)).as("n2"))
-    val next = ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)
+    val next = StateLog.nextVersion(ptr)
     val merged = readCounts(s, base)
       .join(partial.withColumnRenamed("source", "s2").withColumnRenamed("token", "t2"),
         col("source") === col("s2") && col("token") === col("t2"), "full_outer")
@@ -81,8 +67,7 @@ object IncrementalDrift {
         (coalesce(col("n"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n"))
       .localCheckpoint()
     merged.write.mode("overwrite").parquet(s"$base/counts/v$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v$next$tag")
+    StateLog.swap(s, base, ptr, next, batchId)
   }
 
   /** q_text_drift's output served ENTIRELY from the maintained counts:

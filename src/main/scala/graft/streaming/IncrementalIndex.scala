@@ -15,33 +15,11 @@ import org.apache.spark.sql.types._
   * IncrementalIndexSpec replays the fixture to assert). No batch ever
   * re-tokenizes history.
   *
-  * State protocol (round 9 — the PackStore publishWith discipline applied
-  * to the index, closing the crash-atomicity and concurrency gaps of the
-  * listing-driven r8 layout):
-  *
-  *  - every committed state is ONE record file `log/v<N>`, published by
-  *    EXCLUSIVE CREATE (GraftFs.writeSmallFileExclusive — the CAS). The
-  *    record carries the stats dir, the LIVE posting-segment list, and
-  *    the last committed batch id. Segment liveness is defined by the
-  *    record, never by directory listing: a crash anywhere leaves only
-  *    unreferenced orphan dirs, which readers cannot double-count.
-  *  - ingest (processBatch) writes its segment + merged stats under the
-  *    attempted version, then CASes `log/v<N+1>`. A lost race (a
-  *    concurrent compaction committed first) rebases: re-read the winner,
-  *    splice this batch's segment into ITS segment list, retry at the
-  *    next version. Stats partials stay valid across a compaction rebase
-  *    because compaction never touches stats.
-  *  - compaction (compactSegments) folds exactly the segments of the
-  *    state it read into one `c<N>` dir and CASes a record that swaps
-  *    them for it. A lost race (a batch landed mid-compact) rebases by
-  *    KEEPING the interloper's new segments alongside the compacted dir —
-  *    interleaved append during compact loses nothing, by mechanism.
-  *    Input dirs are deleted only AFTER the CAS lands; a crash between
-  *    publish and delete leaves orphans, not duplicates.
-  *  - `_CURRENT` is a fast-path HINT (latest version number), updated
-  *    after each commit; readers verify it against the log and walk
-  *    forward if stale, so a torn or lagging hint can never surface a
-  *    wrong state — the log record is the single source of truth.
+  * State protocol: the [[StateLog]] log-record CAS and segment
+  * compaction (family `postings/`). Index-specific: the record also
+  * carries the stats dir and the cumulative `ndocs` census. An ingest
+  * rebase keeps its stats merge across a compaction (compaction never
+  * touches stats) and recomputes it across a foreign ingest.
   *
   * Scale shape: the postings family is the big side and is never
   * rewritten — batches cost O(batch). The stats table is
@@ -75,84 +53,28 @@ object IncrementalIndex {
     * bit-equality of [[serveHybrid]]/[[bm25]] with the registered
     * queries, which count ALL corpus rows). Records written before this
     * field parse with ndocs absent and the serve paths fall back to the
-    * postings-derived count.
-    */
-  /** `tombs` — posting dirs folded by the LAST compaction, still on disk
-    * for readers that resolved the pre-swap record (deferred GC, the r15
-    * IncrementalWinnow discipline): deleted when the NEXT compaction
-    * publishes, so a serve that resolved either of the two most recent
-    * records never loses a parquet dir between plan resolution and scan
-    * execution. Pre-tombs records parse with the field absent.
+    * postings-derived count. `tombs` await deferred GC ([[StateLog]]);
+    * pre-tombs records parse with the field absent.
     */
   private[graft] case class IndexState(version: Long, statsDir: Option[String],
       segs: Seq[String], batch: Option[Long], ndocs: Option[Long] = None,
-      tombs: Seq[String] = Seq.empty)
-
-  private val EmptyState = IndexState(-1L, None, Seq.empty, None)
-
-  private def recordBody(st: IndexState): String =
-    s"stats=${st.statsDir.getOrElse("")};segs=${st.segs.mkString(",")};" +
-      s"batch=${st.batch.fold("-")(_.toString)};" +
-      s"ndocs=${st.ndocs.fold("-")(_.toString)};" +
-      s"tombs=${st.tombs.mkString(",")}"
-
-  private def parseRecord(version: Long, body: String): IndexState = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    IndexState(version,
-      kv.get("stats").filter(_.nonEmpty),
-      kv.get("segs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong),
-      kv.get("ndocs").filter(_ != "-").map(_.toLong),
-      kv.get("tombs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty))
+      tombs: Seq[String] = Seq.empty) extends StateLog.Segmented[IndexState] {
+    def swapped(version: Long, segs: Seq[String], tombs: Seq[String]): IndexState =
+      copy(version = version, segs = segs, tombs = tombs)
   }
 
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[IndexState] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
+  private val stateLog = new StateLog.Segments[IndexState](
+    IndexState(-1L, None, Seq.empty, None),
+    st => Seq("stats" -> st.statsDir.getOrElse(""), "segs" -> StateLog.list(st.segs),
+      "batch" -> StateLog.long(st.batch), "ndocs" -> StateLog.long(st.ndocs),
+      "tombs" -> StateLog.list(st.tombs)),
+    (v, f) => IndexState(v, f.str("stats"), f.list("segs"), f.long("batch"),
+      f.long("ndocs"), f.list("tombs")),
+    families = Seq("postings"))
 
-  /** Latest committed state: start from the `_CURRENT` hint (or the log
-    * listing when the hint is absent — first commit, or a crash before
-    * the first hint write) and walk forward until the last existing
-    * record. The walk makes a stale hint harmless at O(lag) exists-calls.
-    */
-  private[graft] def currentState(s: SparkSession, base: String): IndexState = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).toLong).filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyState
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyState)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
-
-  private def publish(s: SparkSession, base: String, st: IndexState): Boolean = {
-    val body = recordBody(st)
-    val ok0 = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", body)
-    // ambiguous-CAS disambiguation (r15 review): an RPC failure AFTER
-    // the exclusive rename landed reports false with the target existing
-    // — a byte-identical readback means WE won (compaction records carry
-    // a uid-bearing cName; batch records under the documented single-
-    // writer foreachBatch topology are ours at our version).
-    val ok = ok0 || graft.sources.GraftFs.readSmallFile(s, s"$base/log/v${st.version}")
-      .exists(_.trim == body.trim)
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
-
-  private def emptyDf(s: SparkSession, schema: StructType): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** Latest committed state ([[StateLog.Log.current]]). */
+  private[graft] def currentState(s: SparkSession, base: String): IndexState =
+    stateLog.current(s, base)
 
   /** Current per-token stats (empty before the first batch). */
   def readStats(s: SparkSession, base: String): DataFrame =
@@ -161,7 +83,7 @@ object IncrementalIndex {
   private def readStatsOf(s: SparkSession, base: String, st: IndexState): DataFrame =
     st.statsDir match {
       case Some(d) => s.read.schema(statsSchema).parquet(s"$base/$d")
-      case None => emptyDf(s, statsSchema)
+      case None => StateLog.emptyFrame(s, statsSchema)
     }
 
   /** The LIVE posting segments (token, doc_id, tf) — exactly the dirs the
@@ -172,7 +94,7 @@ object IncrementalIndex {
     readPostingsOf(s, base, currentState(s, base))
 
   private def readPostingsOf(s: SparkSession, base: String, st: IndexState): DataFrame =
-    if (st.segs.isEmpty) emptyDf(s, postingsSchema)
+    if (st.segs.isEmpty) StateLog.emptyFrame(s, postingsSchema)
     else s.read.schema(postingsSchema).parquet(st.segs.map(n => s"$base/postings/$n"): _*)
 
   /** The (n_docs, avgdl) singleton for scoring: n_docs is the record's
@@ -215,7 +137,7 @@ object IncrementalIndex {
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): Unit = {
     val st0 = currentState(s, base)
-    if (batchId.exists(id => st0.batch.exists(_ >= id))) return
+    if (st0.covers(batchId)) return
     val tf = batchTf(batch).localCheckpoint()
     val partial = tf.groupBy("token")
       .agg(count(lit(1)).as("df2"), sum("tf").as("cf2"))
@@ -223,25 +145,13 @@ object IncrementalIndex {
     // postings but DO count toward n_docs/avgdl — the serveHybrid/bm25
     // contract); pure batch data, so rebases reuse it
     val batchDocs = batch.select("doc_id").distinct().count()
-    var st = st0
-    var attempts = 0
-    var committed = false
     var seg: Option[String] = None
     var statsOf: Option[(String, String)] = None // (writtenDir, mergedFromStatsDir)
-    while (!committed) {
-      attempts += 1
-      require(attempts <= 8, s"processBatch: lost the publish race $attempts times at $base")
+    stateLog.append(s, base, st0, batchId) { st =>
       val v = st.version + 1
       val segName = seg.getOrElse {
-        // per-writer uid in the segment name (r15 ADVICE): two processes
-        // replaying the same batch concurrently would otherwise produce
-        // byte-identical record BODIES (`b$v` alone), and the
-        // ambiguous-CAS readback below would let BOTH conclude they won —
-        // the uid makes bodies writer-unique, so the readback proof holds
-        // without leaning on the single-writer topology (the discipline
-        // IncrementalDedup's segments already follow)
-        val uid = java.util.UUID.randomUUID.toString.take(8)
-        val n = s"b$v-$uid"
+        // writer-unique, so the ambiguous-CAS readback proves ownership
+        val n = StateLog.uniqueName("b", v)
         tf.write.mode("overwrite").parquet(s"$base/postings/$n")
         seg = Some(n); n
       }
@@ -272,14 +182,9 @@ object IncrementalIndex {
         if (st.segs.isEmpty) 0L
         else readPostingsOf(s, base, st).select("doc_id").distinct().count()
       }
-      val next = IndexState(v, Some(statsName), st.segs :+ segName,
+      IndexState(v, Some(statsName), st.segs :+ segName,
         batchId.orElse(st.batch), Some(baseDocs + batchDocs), st.tombs)
-      if (publish(s, base, next)) committed = true
-      else {
-        st = currentState(s, base)
-        if (batchId.exists(id => st.batch.exists(_ >= id))) return
-      }
-    }
+    }: Unit
   }
 
   /** q_text_index's output shape served from the maintained state:
@@ -381,18 +286,10 @@ object IncrementalIndex {
   /** Fold all live posting segments into ONE (the LSM/compactTail
     * analogue for the index): per-batch ingest leaves one small parquet
     * dir per micro-batch, and a year of minutely batches is 5×10⁵ dirs
-    * whose open tax every searchHeads pays — this rewrites their union
-    * into `c<N>` (content unchanged by construction: postings are
-    * disjoint (token, doc) facts, order-free) and CAS-publishes a record
-    * swapping them for it. Concurrent ingest is SAFE: a batch that
-    * commits mid-compact wins the CAS, and the rebase keeps its segments
-    * alongside the compacted dir. GC is DEFERRED one compaction
-    * generation (the r15 IncrementalWinnow discipline): folded inputs
-    * are tombstoned in the new record and reclaimed at the NEXT
-    * compaction's entry (before its publish — so a crash there cannot
-    * orphan them), keeping a reader that resolved the pre-swap record
-    * between currentState and scan execution scanning live files.
-    * Stats are untouched (they were never per-segment).
+    * whose open tax every searchHeads pays. Content is unchanged by
+    * construction (postings are disjoint (token, doc) facts, order-free);
+    * the swap, rebase and deferred GC are [[StateLog.Segments.compact]].
+    * Stats and the `ndocs` census are untouched (never per-segment).
     */
   def compactSegments(s: SparkSession, base: String): Unit =
     compactFrom(s, base, currentState(s, base))
@@ -402,84 +299,8 @@ object IncrementalIndex {
     * deterministically (commit an ingest between the read and the
     * publish).
     */
-  private[graft] def compactFrom(s: SparkSession, base: String, observed: IndexState): Unit = {
-    if (observed.segs.size <= 1) return
-    val folded = observed.segs.toSet
-    // WRITER-UNIQUE compacted dir name (still `c`-prefixed for operators):
-    // two same-observed compactors write to DIFFERENT dirs, so the loser
-    // can never overwrite an already-published winner in place (the
-    // transient-partial-directory race) — it just deletes its own
-    // unreferenced dir on abort.
-    val cName = s"c${observed.version + 1}-" +
-      java.util.UUID.randomUUID.toString.take(8)
-    // Fast-path duplicate/overlap guard: proceed only while EVERY
-    // folded input is still live. All-or-nothing matters with deferred
-    // GC (r15): an overlapping concurrent fold leaves our inputs
-    // READABLE as tombstones, so an exists-guard would let us succeed
-    // and publish a state listing the shared postings TWICE (ours +
-    // the other compactor's output — an additive double-count). An
-    // APPEND never removes a segment, so the legitimate stale-observed
-    // rebase always passes. The same guard re-runs inside the CAS loop.
-    val live = currentState(s, base)
-    if (!folded.forall(live.segs.contains)) return
-    // reclaim the PREVIOUS generation's tombstones at entry: a full
-    // generation old (no reader holding the current or prior record
-    // references them), and reclaiming BEFORE our own publish means a
-    // crash below cannot orphan them — they stay listed in the
-    // still-current record and the next compaction re-reclaims
-    live.tombs.filterNot(folded.contains)
-      .foreach(n => graft.sources.GraftFs.deleteRecursively(s, s"$base/postings/$n"))
-    // TOCTOU window: a concurrent winner can publish AND delete the
-    // folded dirs between the guard above and this read — treat a read/
-    // write failure whose live state confirms the swap as a lost race,
-    // not an error.
-    try {
-      readPostingsOf(s, base, observed).localCheckpoint()
-        .write.mode("overwrite").parquet(s"$base/postings/$cName")
-    } catch {
-      case e: Exception =>
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/postings/$cName")
-        // rethrow ONLY when every folded input is still live (a genuine
-        // I/O failure reading committed data); if ANY left the live set,
-        // a concurrent compactor with an overlapping folded set swapped
-        // a subset of our inputs mid-read — its compacted dir covers the
-        // content and our fold is superseded, not failed
-        val liveNow = currentState(s, base).segs.toSet
-        if (!folded.forall(liveNow.contains)) return
-        throw e
-    }
-    var st = observed
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      attempts += 1
-      if (attempts > 8) {
-        // exhaustion must not orphan the written compacted dir
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/postings/$cName")
-        require(false, s"compactSegments: lost the publish race $attempts times at $base")
-      }
-      // Rebase guard: if the race winner was a compaction overlapping
-      // our folded set (same observed state or any sub/superset fold),
-      // its output covers the swapped content — publishing ours would
-      // double-count every shared posting. Abort; the winner owns the
-      // tombstone cleanup; we remove our never-published duplicate dir.
-      if (!folded.forall(st.segs.contains)) {
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/postings/$cName")
-        return
-      }
-      // keep every segment committed since the observed state (an
-      // interleaved append loses nothing); swap only the folded inputs,
-      // tombstone them (deferred GC — deleted by the NEXT compaction)
-      val next = IndexState(st.version + 1, st.statsDir,
-        (cName +: st.segs.filterNot(folded.contains)).distinct, st.batch,
-        st.ndocs, // compaction rewrites segments, never the corpus census
-        folded.toSeq.sorted)
-      if (publish(s, base, next)) committed = true
-      else st = currentState(s, base)
-    }
-    // (prior-generation tombs were reclaimed at entry; appends cannot
-    // add tombs and an interleaved compaction takes the overlap exit)
-  }
+  private[graft] def compactFrom(s: SparkSession, base: String, observed: IndexState): Unit =
+    stateLog.compact(s, base, observed)(_ => readPostingsOf(s, base, observed).localCheckpoint())
 
   /** Attach to a documents stream via foreachBatch (replay-protected). */
   def attach(docs: DataFrame, base: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =

@@ -25,9 +25,8 @@ import org.apache.spark.sql.types._
   * recsFromTables) — state-served ≡ one-shot bit-for-bit, which
   * IncrementalMineSpec pins after replaying the fixture in batches.
   *
-  * State protocol: versioned tables behind an atomically-swapped
-  * `_CURRENT` pointer carrying the committed batch id (the
-  * IncrementalScd2/Drift discipline — replays skipped via the tag).
+  * State protocol: versioned tables behind the [[StateLog]] version
+  * pointer (replays skipped via its batch tag).
   * Scale shape: per batch one distinct + one C(len,2) within-basket
   * fan-out (bounded by basket size) + three full-outer merges on the
   * state grains; the corpus is never re-scanned.
@@ -40,35 +39,17 @@ object IncrementalMine {
     StructField("p1", LongType), StructField("p2", LongType), StructField("c", LongType)))
   private val nbSchema = StructType(Seq(StructField("nb", LongType)))
 
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
-  private def readOr(s: SparkSession, path: String, schema: StructType,
-      exists: Boolean): DataFrame =
-    if (exists) s.read.schema(schema).parquet(path)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Current (sup, pairs, nb) state; all empty before batch 0. */
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
-  def readState(s: SparkSession, base: String): (DataFrame, DataFrame, DataFrame) =
-    currentPointer(s, base) match {
-      case Some((v, _)) => (
-        readOr(s, s"$base/$v/sup", supSchema, exists = true),
-        readOr(s, s"$base/$v/pairs", pairSchema, exists = true),
-        readOr(s, s"$base/$v/nb", nbSchema, exists = true))
-      case None => (
-        readOr(s, "", supSchema, exists = false),
-        readOr(s, "", pairSchema, exists = false),
-        readOr(s, "", nbSchema, exists = false))
-    }
+  /** Current (sup, pairs, nb) state; all empty before batch 0. */
+  def readState(s: SparkSession, base: String): (DataFrame, DataFrame, DataFrame) = {
+    val p = StateLog.pointer(s, base)
+    (StateLog.readGeneration(s, p, supSchema)(v => s"$base/$v/sup"),
+      StateLog.readGeneration(s, p, pairSchema)(v => s"$base/$v/pairs"),
+      StateLog.readGeneration(s, p, nbSchema)(v => s"$base/$v/nb"))
+  }
 
   /** Merge one micro-batch of (ok, pk) basket items (whole baskets) into
     * the mining state and swap versions. Replays (batch id <= committed
@@ -76,8 +57,8 @@ object IncrementalMine {
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): Unit = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id))) return
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId))) return
     val bi = batch.select(col("ok"), col("pk")).distinct().localCheckpoint()
     val supP = bi.groupBy(col("pk").as("pk2")).agg(count(lit(1)).as("s2"))
     val pairP = bi.as("a").join(bi.as("b"),
@@ -99,12 +80,11 @@ object IncrementalMine {
     val nbM = nb.unionByName(nbP.select(col("nb2").as("nb")))
       .agg(sum("nb").cast(LongType).as("nb")) // empty state: just the partial
       .localCheckpoint()
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    supM.write.mode("overwrite").parquet(s"$base/$next/sup")
-    pairM.write.mode("overwrite").parquet(s"$base/$next/pairs")
-    nbM.write.mode("overwrite").parquet(s"$base/$next/nb")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+    val next = StateLog.nextVersion(ptr)
+    supM.write.mode("overwrite").parquet(s"$base/v$next/sup")
+    pairM.write.mode("overwrite").parquet(s"$base/v$next/pairs")
+    nbM.write.mode("overwrite").parquet(s"$base/v$next/nb")
+    StateLog.swap(s, base, ptr, next, batchId)
   }
 
   /** The serve-time filtered tables: frequent items (s >= MinItemSup),

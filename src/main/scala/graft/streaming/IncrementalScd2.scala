@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   * physics: a CLOSED version never changes again, so closed versions
   * land APPEND-ONLY (one parquet segment per batch — the
   * IncrementalIndex posting discipline), while the bounded one-row-per-
-  * user CURRENT table is rewritten behind a _CURRENT version swap (the
-  * IncrementalAgg matview discipline). Per batch: seed each affected
+  * user CURRENT table is rewritten behind the [[StateLog]] version
+  * pointer (the IncrementalAgg matview discipline). Per batch: seed each affected
   * user's open version in front of its batch events, run the SCD2
   * suppression window across the seam (a batch whose first change
   * equals the open version's value is suppressed — the cross-batch rule
@@ -30,33 +30,13 @@ object IncrementalScd2 {
     StructField("event_type", StringType),
     StructField("valid_from_us", LongType)))
 
-  /** _CURRENT carries `v<N>` or `v<N>:batch=<id>` (the IncrementalIndex
-    * / PackIngest replay discipline): a foreachBatch replay after a
-    * crash between the swap and the checkpoint commit is skipped, so a
-    * batch's versions never double-land.
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
-  private def currentVersion(s: SparkSession, base: String): Option[String] =
-    currentPointer(s, base).map(_._1)
-
-  /** Open (current) versions, one row per user seen so far. */
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
+  /** Open (current) versions, one row per user seen so far. */
   def readCurrentTable(s: SparkSession, base: String): DataFrame =
-    currentVersion(s, base) match {
-      case Some(v) => s.read.schema(curSchema).parquet(s"$base/current/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema)
-    }
+    StateLog.readGeneration(s, StateLog.pointer(s, base), curSchema)(v => s"$base/current/$v")
 
   /** All closed versions (append-only segments). */
   def readClosed(s: SparkSession, base: String): DataFrame = {
@@ -79,9 +59,9 @@ object IncrementalScd2 {
 
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): Unit = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id))) return
-    val next = ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId))) return
+    val next = StateLog.nextVersion(ptr)
     val cur = readCurrentTable(s, base).localCheckpoint()
     val ev = batch.select(col("user_id"), col("event_id"), col("event_type"),
       expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
@@ -111,8 +91,7 @@ object IncrementalScd2 {
     // a manual call WITHOUT a batch id carries the committed tag forward —
     // dropping it would erase replay protection for the next crash-replay
     // of an attach()-driven stream sharing this state
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v$next$tag")
+    StateLog.swap(s, base, ptr, next, batchId)
   }
 
   /** Attach to an events stream via foreachBatch (replay-protected). */

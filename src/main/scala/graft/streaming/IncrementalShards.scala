@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * running total, assigns shards by starting offset, and MERGES its
   * per-shard partials into the versioned manifest (sum/min/max are
   * associative, so a shard spanning a batch boundary merges exactly).
-  * Same write-new-then-swap state idiom as IncrementalAgg/IncrementalCdc;
+  * The manifest is versioned behind the [[StateLog]] version pointer;
   * IncrementalShardsSpec pins final manifest ≡ the one-shot operator.
   *
   * Scale: per batch the merge touches |shards| + |batch| rows; the
@@ -27,40 +27,22 @@ object IncrementalShards {
     StructField("n_bytes", LongType), StructField("n_tokens", LongType),
     StructField("first_doc", LongType), StructField("last_doc", LongType)))
 
-  /** _CURRENT carries `v<N>[:batch=<id>]` — the IncrementalAgg/Stats
-    * replay-protection pointer (r12: a replayed batch would double-count
-    * its bytes/tokens into the manifest AND shift every later offset).
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
-  private def currentVersion(s: SparkSession, base: String): Option[String] =
-    currentPointer(s, base).map(_._1)
-
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
   def readState(s: SparkSession, base: String): DataFrame =
-    currentVersion(s, base) match {
-      case Some(v) => s.read.schema(stateSchema).parquet(s"$base/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    StateLog.readGeneration(s, StateLog.pointer(s, base), stateSchema)(v => s"$base/$v")
 
   /** Absorb one doc batch (doc_id, n_chars, text) into the manifest. A
     * batch id at or below the committed tag is a crash replay and is
-    * skipped.
+    * skipped: re-landing it would double-count its bytes/tokens AND shift
+    * every later offset.
     */
   def processBatch(s: SparkSession, docs: DataFrame, base: String,
       batchId: Option[Long] = None): DataFrame = {
-    if (batchId.exists(id => committedBatch(s, base).exists(_ >= id)))
-      return readState(s, base)
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId))) return readState(s, base)
     val state = readState(s, base)
     val baseOffset = state.agg(coalesce(sum("n_bytes"), lit(0L))).collect()(0).getLong(0)
     val w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -88,11 +70,9 @@ object IncrementalShards {
         greatest(coalesce(col("l1"), col("l2")), coalesce(col("l2"), col("l1"))).as("last_doc"))
       // materialize BEFORE touching the directory tree the plan reads from
       .localCheckpoint()
-    val ptr = currentPointer(s, base)
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+    val next = StateLog.nextVersion(ptr)
+    merged.write.mode("overwrite").parquet(s"$base/v$next")
+    StateLog.swap(s, base, ptr, next, batchId)
     merged
   }
 
@@ -139,13 +119,12 @@ object IncrementalShards {
         sum("n_tokens").as("n_tokens"),
         min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
     val merged = kept.union(rebuilt).localCheckpoint()
-    val ptr = currentPointer(s, base)
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
+    val ptr = StateLog.pointer(s, base)
+    val next = StateLog.nextVersion(ptr)
+    merged.write.mode("overwrite").parquet(s"$base/v$next")
     // a repair is not a stream batch: carry the committed batch tag
     // forward unchanged so replay protection survives the repair swap
-    val tag = ptr.flatMap(_._2).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+    StateLog.swap(s, base, ptr, next, None)
     merged
   }
 }

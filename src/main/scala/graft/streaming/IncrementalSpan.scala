@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.util.control.NonFatal
+
 /** Incremental maintenance of the span-provenance state — the streaming
   * upkeep of q_text_span_source's "who copied whom" audit: each arriving
   * micro-batch of documents lands its per-doc window-occurrence counts
@@ -22,34 +24,17 @@ import org.apache.spark.sql.types._
   * window-vocabulary-grain merge, and the corpus text is never
   * re-tokenized.
   *
-  * State protocol — the IncrementalIndex log-record CAS, ported verbatim
-  * (r11 advice: the old single-pointer swap let two concurrent ingests
-  * silently drop or tear a batch):
+  * State protocol: the [[StateLog]] log-record CAS and segment
+  * compaction. Span-specific:
   *
-  *  - every committed state is ONE record file `log/v<N>`, published by
-  *    EXCLUSIVE CREATE (GraftFs.writeSmallFileExclusive — the CAS). The
-  *    record carries the stats dir, the LIVE occ/docs segment lists, and
-  *    the last committed batch id. Segment liveness is defined by the
-  *    record, never by listing or position: a crash anywhere leaves only
-  *    unreferenced orphan dirs, which readers cannot double-count.
-  *  - ingest writes its occ/docs segments and merged stats under
-  *    WRITER-UNIQUE names, then CASes `log/v<N+1>`. A lost race rebases:
-  *    re-read the winner, re-merge the stats partial against ITS stats,
-  *    splice the batch segments into ITS lists, retry at the next
-  *    version. The occ/docs segments are pure batch data — version-
-  *    independent — so a rebase never rewrites them.
-  *  - stats are vocabulary-sized and rewritten per merge, so superseded
-  *    stats dirs are GARBAGE: after a commit at v, the stats dir of
-  *    v−2 is deleted (if no surviving record references it). Exactly one
-  *    superseded version is kept so a reader serving state v−1 while the
-  *    commit lands never has its scan deleted out from under it.
-  *  - compaction ([[compactSegments]]) folds the occ and docs segment
-  *    lists of the state it read into one dir each and CASes a record
-  *    swapping them in — the IncrementalIndex compactFrom discipline:
-  *    writer-unique output dir, duplicate-compactor guard, rebase keeps
-  *    interloper segments, inputs deleted only after the publish lands.
-  *  - `_CURRENT` is a fast-path HINT (latest version number), verified
-  *    against the log and walked forward when stale.
+  *  - every segment name owns one dir in each of the families `occ/` and
+  *    `docs/`; the record writes the list under both keys (`occ=`,
+  *    `docs=`, and `tombocc=`, `tombdocs=` for tombstones).
+  *  - stats are vocabulary-sized and rewritten per merge under
+  *    writer-unique names, so superseded stats dirs are GARBAGE: after a
+  *    commit at v, the stats dir of v−2 is deleted ([[gcStats]]) unless a
+  *    surviving record names it. One superseded version is kept so a
+  *    reader serving state v−1 while the commit lands keeps its scan.
   *
   * Contract: each doc_id arrives exactly once across batches (corpus
   * ingest). Concurrent ingests and compactions are safe under the CAS;
@@ -66,81 +51,34 @@ object IncrementalSpan {
     StructField("gh", LongType), StructField("cnt", LongType),
     StructField("src", LongType)))
 
-  /** One committed span state: the `log/v<version>` record. `occSegs` /
-    * `docSegs` are dir names under `occ/` / `docs/`; `statsDir` is
-    * relative to `base`.
-    */
-  /** `occTombs`/`docTombs` — segment dirs folded by the LAST compaction,
-    * still on disk for readers that resolved the pre-swap record
-    * (deferred GC, the r15 IncrementalWinnow discipline): deleted when
-    * the NEXT compaction publishes. Pre-tombs records parse with the
-    * fields absent.
+  /** One committed span state: the `log/v<version>` record. Each name in
+    * `segs` is a dir under both `occ/` and `docs/` (so [[occSegs]] and
+    * [[docSegs]] are the same list); `statsDir` is relative to `base`.
+    * `tombs` await deferred GC ([[StateLog]]); pre-tombs records parse
+    * with the fields absent.
     */
   private[graft] case class SpanState(version: Long, statsDir: Option[String],
-      occSegs: Seq[String], docSegs: Seq[String], batch: Option[Long],
-      occTombs: Seq[String] = Seq.empty, docTombs: Seq[String] = Seq.empty)
-
-  private val EmptyState = SpanState(-1L, None, Seq.empty, Seq.empty, None)
-
-  private def recordBody(st: SpanState): String =
-    s"stats=${st.statsDir.getOrElse("")};occ=${st.occSegs.mkString(",")};" +
-      s"docs=${st.docSegs.mkString(",")};batch=${st.batch.fold("-")(_.toString)};" +
-      s"tombocc=${st.occTombs.mkString(",")};tombdocs=${st.docTombs.mkString(",")}"
-
-  private def parseRecord(version: Long, body: String): SpanState = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    SpanState(version,
-      kv.get("stats").filter(_.nonEmpty),
-      kv.get("occ").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("docs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong),
-      kv.get("tombocc").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("tombdocs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty))
+      segs: Seq[String], batch: Option[Long], tombs: Seq[String] = Seq.empty)
+      extends StateLog.Segmented[SpanState] {
+    def occSegs: Seq[String] = segs
+    def docSegs: Seq[String] = segs
+    def occTombs: Seq[String] = tombs
+    def docTombs: Seq[String] = tombs
+    def swapped(version: Long, segs: Seq[String], tombs: Seq[String]): SpanState =
+      copy(version = version, segs = segs, tombs = tombs)
   }
 
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[SpanState] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
+  private val stateLog = new StateLog.Segments[SpanState](
+    SpanState(-1L, None, Seq.empty, None),
+    st => Seq("stats" -> st.statsDir.getOrElse(""), "occ" -> StateLog.list(st.segs),
+      "docs" -> StateLog.list(st.segs), "batch" -> StateLog.long(st.batch),
+      "tombocc" -> StateLog.list(st.tombs), "tombdocs" -> StateLog.list(st.tombs)),
+    (v, f) => SpanState(v, f.str("stats"), f.list("occ"), f.long("batch"), f.list("tombocc")),
+    families = Seq("occ", "docs"))
 
-  /** Latest committed state: start from the `_CURRENT` hint (or the log
-    * listing when the hint is absent) and walk forward until the last
-    * existing record — a stale hint is harmless at O(lag) exists-calls.
-    */
-  private[graft] def currentState(s: SparkSession, base: String): SpanState = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).takeWhile(_.isDigit).toLong)
-      .filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyState
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyState)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
-
-  private def publish(s: SparkSession, base: String, st: SpanState): Boolean = {
-    val body = recordBody(st)
-    val ok0 = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", body)
-    // ambiguous-CAS disambiguation (r15 review): an RPC failure AFTER
-    // the exclusive rename landed reports false with the target existing
-    // — our record body embeds writer-unique (uid-bearing) segment/stats
-    // names, so a byte-identical readback means WE won.
-    val ok = ok0 || graft.sources.GraftFs.readSmallFile(s, s"$base/log/v${st.version}")
-      .exists(_.trim == body.trim)
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
+  /** Latest committed state ([[StateLog.Log.current]]). */
+  private[graft] def currentState(s: SparkSession, base: String): SpanState =
+    stateLog.current(s, base)
 
   /** Bounded stats growth (r11 advice): after a commit at version v, the
     * stats dir referenced by record v−2 is garbage UNLESS a surviving
@@ -150,29 +88,26 @@ object IncrementalSpan {
     */
   private def gcStats(s: SparkSession, base: String, committed: SpanState): Unit =
     try {
-      readRecord(s, base, committed.version - 2).flatMap(_.statsDir).foreach { old =>
+      stateLog.read(s, base, committed.version - 2).flatMap(_.statsDir).foreach { old =>
         val keep = Seq(committed.version - 1, committed.version)
-          .flatMap(readRecord(s, base, _)).flatMap(_.statsDir)
+          .flatMap(stateLog.read(s, base, _)).flatMap(_.statsDir)
         if (!keep.contains(old))
           graft.sources.GraftFs.deleteRecursively(s, s"$base/$old")
       }
-    } catch { case _: Throwable => () } // GC must never fail a commit
-
-  private def empty(s: SparkSession, schema: StructType): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    } catch { case NonFatal(_) => () } // GC must never fail a commit
 
   private def readStatsOf(s: SparkSession, base: String, st: SpanState): DataFrame =
     st.statsDir match {
       case Some(d) => s.read.schema(statsSchema).parquet(s"$base/$d")
-      case None => empty(s, statsSchema)
+      case None => StateLog.emptyFrame(s, statsSchema)
     }
 
   private def readOccOf(s: SparkSession, base: String, st: SpanState): DataFrame =
-    if (st.occSegs.isEmpty) empty(s, occSchema)
+    if (st.occSegs.isEmpty) StateLog.emptyFrame(s, occSchema)
     else s.read.schema(occSchema).parquet(st.occSegs.map(n => s"$base/occ/$n"): _*)
 
   private def readDocsOf(s: SparkSession, base: String, st: SpanState): DataFrame =
-    if (st.docSegs.isEmpty) empty(s, docsSchema)
+    if (st.docSegs.isEmpty) StateLog.emptyFrame(s, docsSchema)
     else s.read.schema(docsSchema).parquet(st.docSegs.map(n => s"$base/docs/$n"): _*)
 
   /** Merge one micro-batch of (doc_id, text) documents into the span
@@ -184,7 +119,7 @@ object IncrementalSpan {
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): Unit = {
     val st0 = currentState(s, base)
-    if (batchId.exists(id => st0.batch.exists(_ >= id))) return
+    if (st0.covers(batchId)) return
     // first-write-wins per doc_id: an at-least-once source re-emitting a
     // document under a NEW batch id (the replay tag only guards same-id
     // redelivery) would otherwise double its window counts in BOTH the
@@ -203,24 +138,18 @@ object IncrementalSpan {
       .select(col("doc_id"), coalesce(col("n2"), lit(0L)).as("n_windows"))
     val statsP = occP.groupBy(col("gh").as("g2"))
       .agg(sum("k").as("c2"), min("doc_id").as("s2"))
-    var st = st0
-    var attempts = 0
-    var committed = false
-    var segs: Option[(String, String)] = None // writer-unique (occSeg, docsSeg)
+    var seg: Option[String] = None
     var statsOf: Option[(String, String)] = None // (writtenDir, mergedFromStatsDir)
-    while (!committed) {
-      attempts += 1
-      require(attempts <= 8, s"processBatch: lost the publish race $attempts times at $base")
+    stateLog.append(s, base, st0, batchId) { st =>
       val v = st.version + 1
-      // the batch segments are pure batch data — version-independent, so
-      // a rebase reuses them; writer-unique names make concurrent
-      // attempts at the same version physically disjoint
-      val (occSeg, docsSeg) = segs.getOrElse {
-        val uid = java.util.UUID.randomUUID.toString.take(8)
-        val p = (s"b$v-$uid", s"b$v-$uid")
-        occP.write.mode("overwrite").parquet(s"$base/occ/${p._1}")
-        docsP.write.mode("overwrite").parquet(s"$base/docs/${p._2}")
-        segs = Some(p); p
+      // the batch segment is pure batch data — version-independent, so a
+      // rebase reuses it; a writer-unique name makes concurrent attempts
+      // at the same version physically disjoint
+      val segName = seg.getOrElse {
+        val n = StateLog.uniqueName("b", v)
+        occP.write.mode("overwrite").parquet(s"$base/occ/$n")
+        docsP.write.mode("overwrite").parquet(s"$base/docs/$n")
+        seg = Some(n); n
       }
       // the stats merge is against a SPECIFIC predecessor stats dir;
       // reuse the written merge only while the committed dir hasn't
@@ -236,36 +165,21 @@ object IncrementalSpan {
               (coalesce(col("cnt"), lit(0L)) + coalesce(col("c2"), lit(0L))).as("cnt"),
               least(col("src"), col("s2")).as("src")) // least skips nulls: min of the present sides
             .localCheckpoint()
-          val n = s"stats/v$v-" + java.util.UUID.randomUUID.toString.take(8)
+          val n = StateLog.uniqueName("stats/v", v)
           merged.write.mode("overwrite").parquet(s"$base/$n")
           statsOf = Some((n, st.statsDir.getOrElse("")))
           n
       }
-      val next = SpanState(v, Some(statsName), st.occSegs :+ occSeg,
-        st.docSegs :+ docsSeg, batchId.orElse(st.batch),
-        st.occTombs, st.docTombs)
-      if (publish(s, base, next)) { committed = true; gcStats(s, base, next) }
-      else {
-        st = currentState(s, base)
-        if (batchId.exists(id => st.batch.exists(_ >= id))) return
-      }
-    }
+      SpanState(v, Some(statsName), st.segs :+ segName, batchId.orElse(st.batch), st.tombs)
+    }.foreach(gcStats(s, base, _))
   }
 
-  /** Fold the current occ and docs segment lists into one dir each and
-    * CAS-publish the swap — the IncrementalIndex compactSegments
-    * discipline (r11 verdict ask 5): without it a year of frequent
-    * batches is hundreds of thousands of small parquet dirs on the serve
-    * path. Content is unchanged by construction — occ rows are disjoint
-    * (gh, doc_id) facts and docs rows disjoint doc_ids, both order-free.
-    * Concurrent ingest is safe: a batch that commits mid-compact wins
-    * the CAS and the rebase keeps its segments alongside the compacted
-    * dirs. GC is DEFERRED one compaction generation (the r15
-    * IncrementalWinnow discipline): folded inputs are tombstoned in the
-    * new record and reclaimed at the NEXT compaction's entry (before
-    * its publish, so a crash there cannot orphan them) — a reader that
-    * resolved the pre-swap record between currentState and scan
-    * execution keeps its files.
+  /** Fold the live segments into one occ dir and one docs dir and
+    * CAS-publish the swap ([[StateLog.Segments.compact]]; r11 verdict
+    * ask 5): without it a year of frequent batches is hundreds of
+    * thousands of small parquet dirs on the serve path. Content is
+    * unchanged by construction — occ rows are disjoint (gh, doc_id) facts
+    * and docs rows disjoint doc_ids, both order-free.
     */
   def compactSegments(s: SparkSession, base: String): Unit =
     compactFrom(s, base, currentState(s, base))
@@ -274,79 +188,11 @@ object IncrementalSpan {
     * so IncrementalSpanSpec can drive the lost-CAS rebase path
     * deterministically.
     */
-  private[graft] def compactFrom(s: SparkSession, base: String, observed: SpanState): Unit = {
-    if (observed.occSegs.size <= 1 && observed.docSegs.size <= 1) return
-    val foldedOcc = observed.occSegs.toSet
-    val foldedDocs = observed.docSegs.toSet
-    val uid = java.util.UUID.randomUUID.toString.take(8)
-    val cName = s"c${observed.version + 1}-$uid"
-    // duplicate/overlap fast path: proceed only while EVERY folded
-    // input is still live — with deferred GC (r15) an overlapping
-    // concurrent fold leaves our inputs readable as tombstones, and an
-    // exists-guard would let us publish a state listing shared window
-    // counts twice (an additive double-count). Appends never remove a
-    // segment, so the legitimate stale-observed rebase always passes.
-    val live = currentState(s, base)
-    if (!foldedOcc.forall(live.occSegs.contains)
-      || !foldedDocs.forall(live.docSegs.contains)) return
-    // reclaim the PREVIOUS generation's tombstones at entry (a full
-    // generation old; reclaiming before our publish means a crash below
-    // cannot orphan them — the still-current record keeps them listed
-    // and the next compaction re-reclaims)
-    live.occTombs.filterNot(foldedOcc.contains)
-      .foreach(n => graft.sources.GraftFs.deleteRecursively(s, s"$base/occ/$n"))
-    live.docTombs.filterNot(foldedDocs.contains)
-      .foreach(n => graft.sources.GraftFs.deleteRecursively(s, s"$base/docs/$n"))
-    try {
-      readOccOf(s, base, observed).localCheckpoint()
-        .write.mode("overwrite").parquet(s"$base/occ/$cName")
-      readDocsOf(s, base, observed).localCheckpoint()
-        .write.mode("overwrite").parquet(s"$base/docs/$cName")
-    } catch {
-      case e: Exception =>
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/occ/$cName")
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/docs/$cName")
-        // rethrow ONLY when every folded input is still live (a genuine
-        // I/O failure reading committed data); a concurrent compactor
-        // that swapped any subset of our inputs supersedes this fold
-        val liveNow = currentState(s, base).occSegs.toSet
-        if (!foldedOcc.forall(liveNow.contains)) return
-        throw e
+  private[graft] def compactFrom(s: SparkSession, base: String, observed: SpanState): Unit =
+    stateLog.compact(s, base, observed) {
+      case "occ" => readOccOf(s, base, observed).localCheckpoint()
+      case _ => readDocsOf(s, base, observed).localCheckpoint()
     }
-    var st = observed
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      attempts += 1
-      if (attempts > 8) {
-        // exhaustion must not orphan the written compacted dirs
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/occ/$cName")
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/docs/$cName")
-        require(false, s"compactSegments: lost the publish race $attempts times at $base")
-      }
-      if (!foldedOcc.forall(st.occSegs.contains)
-        || !foldedDocs.forall(st.docSegs.contains)) {
-        // the race winner was a compaction overlapping our folded set —
-        // its output covers the swapped content; publishing ours would
-        // double-count shared windows. Abort; the winner owns cleanup.
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/occ/$cName")
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/docs/$cName")
-        return
-      }
-      // keep every segment committed since the observed state (an
-      // interleaved append loses nothing); swap only the folded inputs,
-      // tombstone them (deferred GC — deleted by the NEXT compaction)
-      val next = SpanState(st.version + 1, st.statsDir,
-        (cName +: st.occSegs.filterNot(foldedOcc.contains)).distinct,
-        (cName +: st.docSegs.filterNot(foldedDocs.contains)).distinct,
-        st.batch,
-        foldedOcc.toSeq.sorted, foldedDocs.toSeq.sorted)
-      if (publish(s, base, next)) committed = true
-      else st = currentState(s, base)
-    }
-    // (prior-generation tombs were reclaimed at entry; appends cannot
-    // add tombs and an interleaved compaction takes the overlap exit)
-  }
 
   /** The full provenance audit served from state — ≡ q_text_span_source
     * over everything ingested (IncrementalSpanSpec pins row equality).

@@ -20,9 +20,9 @@ import org.apache.spark.sql.types._
   * exact row equality after replaying the fixture in micro-batches, not
   * a tolerance.
   *
-  * State discipline is IncrementalAgg's write-new-then-swap: each batch
+  * State discipline is the [[StateLog]] version pointer: each batch
   * merges count partials (associative+commutative) into a fresh version
-  * directory and repoints _CURRENT atomically; readers never observe a
+  * directory and swaps the pointer atomically; readers never observe a
   * half-written state. At 100 TB the histogram is bounded by distinct
   * (group, value) pairs — sub-linear in rows for any quantized measure —
   * and bucketed on v the merge join is co-located; only the micro-batch
@@ -35,31 +35,15 @@ object IncrementalStats {
     StructField("v", LongType),
     StructField("t", LongType)))
 
-  /** `_CURRENT` carries `v<N>[:batch=<id>]` — the version plus the last
-    * committed foreachBatch id (the IncrementalDrift/IncrementalScd2
-    * replay-protection discipline).
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   /** The committed micro-batch id, if the writer threads one — the
     * build-completeness probe the serve row uses.
     */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
   /** Read the current histogram state (empty frame before batch 0). */
   def readState(s: SparkSession, base: String): DataFrame =
-    currentPointer(s, base) match {
-      case Some((ver, _)) => s.read.schema(stateSchema).parquet(s"$base/$ver")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    StateLog.readGeneration(s, StateLog.pointer(s, base), stateSchema)(v => s"$base/$v")
 
   /** Merge one micro-batch of (grp, v) observations into the histogram
     * and swap versions. The full-outer merge touches only |distinct
@@ -79,8 +63,8 @@ object IncrementalStats {
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): DataFrame = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id)))
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId)))
       return readState(s, base)
     val partial = batch.groupBy(col("grp").as("g2"), col("v").as("v2"))
       .agg(count(lit(1)).as("t2"))
@@ -92,10 +76,9 @@ object IncrementalStats {
         (coalesce(col("t"), lit(0L)) + coalesce(col("t2"), lit(0L))).as("t"))
       // materialize BEFORE touching the directory tree the plan reads from
       .localCheckpoint()
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+    val next = StateLog.nextVersion(ptr)
+    merged.write.mode("overwrite").parquet(s"$base/v$next")
+    StateLog.swap(s, base, ptr, next, batchId)
     merged
   }
 

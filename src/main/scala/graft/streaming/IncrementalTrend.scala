@@ -22,8 +22,8 @@ import org.apache.spark.sql.types._
   *     (EventQueries.rfmFromUsers) — bit-equal to one-shot. The serve
   *     pays the user-grain quintile windows, never an event re-scan.
   *
-  * State protocol: versioned tables behind the batch-tagged `_CURRENT`
-  * swap (the IncrementalDrift/Scd2 discipline — crash replays skipped).
+  * State protocol: versioned tables behind the [[StateLog]] version
+  * pointer (crash replays skipped by its batch tag).
   */
 object IncrementalTrend {
 
@@ -42,21 +42,9 @@ object IncrementalTrend {
     StructField("n_pairs", LongType), StructField("n", LongType),
     StructField("tie", LongType)))
 
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   private def readOr(s: SparkSession, base: String, sub: String,
       schema: StructType): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(schema).parquet(s"$base/$v/$sub")
-      case None =>
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    StateLog.readGeneration(s, StateLog.pointer(s, base), schema)(v => s"$base/$v/$sub")
 
   /** Current hourly trend grain (empty before batch 0). */
   def readHourly(s: SparkSession, base: String): DataFrame =
@@ -164,8 +152,8 @@ object IncrementalTrend {
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None): Unit = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id))) return
+    val ptr = StateLog.pointer(s, base)
+    if (ptr.exists(_.covers(batchId))) return
     // Barrier budget (r17 — the maintainer's ~4.5 s/batch was almost
     // entirely driver-sequenced tiny jobs): only frames that are BOTH
     // multi-consumer AND non-trivial to recompute stay materialized (hP,
@@ -269,37 +257,37 @@ object IncrementalTrend {
           coalesce(col("l2"), lit(Long.MinValue))).as("last_us"),
         (coalesce(col("f"), lit(0L)) + coalesce(col("f2"), lit(0L))).as("f"),
         (coalesce(col("m"), lit(0L)) + coalesce(col("m2"), lit(0L))).as("m"))
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
+    val next = StateLog.nextVersion(ptr)
     // the six grain writes are INDEPENDENT jobs (slopes_cum derives from
     // the materialized slopesM, not from the slopes parquet) — overlap
     // them from a small thread pool (guide §2.6) instead of paying six
     // sequential driver-scheduled write barriers; the version pointer
     // swaps only after every write has committed, so readers still see
-    // old-or-new, never a mix. A failure in any write propagates and the
-    // pointer never swaps (the half-written generation dir is garbage,
-    // same as the sequential failure mode).
+    // old-or-new, never a mix. A failed write is rethrown only after ALL
+    // six have settled and the pointer never swaps: no writer is still
+    // running into `v<next>` when a replay of this batch rewrites it.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val writes = Seq(
-      () => hM.write.mode("overwrite").parquet(s"$base/$next/hourly"),
-      () => slopesM.write.mode("overwrite").parquet(s"$base/$next/slopes"),
+      () => hM.write.mode("overwrite").parquet(s"$base/v$next/hourly"),
+      () => slopesM.write.mode("overwrite").parquet(s"$base/v$next/slopes"),
       // the cumulative Sen marginal is rewritten alongside the histogram
       // it derives from — the window is paid HERE, with the grain work,
       // so serve never sorts
       () => graft.operators.TimeSeriesQueries.senCumFromSlopes(slopesM)
-        .write.mode("overwrite").parquet(s"$base/$next/slopes_cum"),
-      () => uM.write.mode("overwrite").parquet(s"$base/$next/users"),
-      () => valsM.write.mode("overwrite").parquet(s"$base/$next/vals"),
-      () => momentsM.write.mode("overwrite").parquet(s"$base/$next/moments"))
-    Await.result(Future.sequence(writes.map(w => Future(w()))), Duration.Inf)
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+        .write.mode("overwrite").parquet(s"$base/v$next/slopes_cum"),
+      () => uM.write.mode("overwrite").parquet(s"$base/v$next/users"),
+      () => valsM.write.mode("overwrite").parquet(s"$base/v$next/vals"),
+      () => momentsM.write.mode("overwrite").parquet(s"$base/v$next/moments"))
+    writes.map(w => Future(w())).map(Await.ready(_, Duration.Inf).value.get)
+      .collectFirst { case scala.util.Failure(e) => throw e }
+    StateLog.swap(s, base, ptr, next, batchId)
   }
 
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    StateLog.pointer(s, base).flatMap(_.batch)
 
   /** MK/Sen trend from state — ≡ q_ts_trend one-shot, but nothing is
     * re-aggregated or SORTED at serve: S, n_pairs, n, and the tie

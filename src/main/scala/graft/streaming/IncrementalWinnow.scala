@@ -21,90 +21,41 @@ import org.apache.spark.sql.types._
   * `winnowPairsOn` by construction: same distinct fp relation, same
   * tail).
   *
-  * State protocol: the IncrementalDedup log-record CAS — one
-  * exclusive-create record `log/v<N>` naming the live segment set and
-  * committed batch id; replays at or below the committed id land
-  * nothing; a lost publish race re-CASes with the SAME segment (batch
-  * derivations are batch-pure, so no rebase recompute exists here).
-  * Segments auto-compact every [[AutoCompactSegs]] batches
-  * ([[compactSegments]]) so the record body and the serve read stay
-  * O(1) in batch count over a long-running ingest.
+  * State protocol: the [[StateLog]] log-record CAS and segment
+  * compaction (family `fps/`). Batch derivations are batch-pure, so a
+  * lost publish race re-CASes the SAME segment with no recompute.
+  * Segments auto-compact at [[StateLog.AutoCompactSegs]] so the record
+  * body and the serve read stay O(1) in batch count.
   */
 object IncrementalWinnow {
 
   private val fpSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("fp_hash", LongType)))
 
-  /** `tombs` — segment dirs folded by the LAST compaction, still on disk
-    * for readers that resolved the pre-swap record (deferred GC, r14
-    * ADVICE): they are deleted when the NEXT compaction publishes, so a
-    * serve that resolved any of the two most recent records never has a
-    * parquet dir removed between plan resolution and scan execution.
-    */
+  /** One committed winnow state; `tombs` await deferred GC ([[StateLog]]). */
   private[graft] case class WinnowState(version: Long, segs: Seq[String],
       batch: Option[Long], tombs: Seq[String] = Seq.empty)
-
-  private val EmptyState = WinnowState(-1L, Seq.empty, None)
-
-  private def recordBody(st: WinnowState): String =
-    s"segs=${st.segs.mkString(",")};batch=${st.batch.fold("-")(_.toString)}" +
-      s";tombs=${st.tombs.mkString(",")}"
-
-  private def parseRecord(version: Long, body: String): WinnowState = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    WinnowState(version,
-      kv.get("segs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong),
-      kv.get("tombs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty))
+      extends StateLog.Segmented[WinnowState] {
+    def swapped(version: Long, segs: Seq[String], tombs: Seq[String]): WinnowState =
+      copy(version = version, segs = segs, tombs = tombs)
   }
 
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[WinnowState] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
+  private val stateLog = new StateLog.Segments[WinnowState](
+    WinnowState(-1L, Seq.empty, None),
+    st => Seq("segs" -> StateLog.list(st.segs), "batch" -> StateLog.long(st.batch),
+      "tombs" -> StateLog.list(st.tombs)),
+    (v, f) => WinnowState(v, f.list("segs"), f.long("batch"), f.list("tombs")),
+    families = Seq("fps"))
 
-  private[graft] def currentState(s: SparkSession, base: String): WinnowState = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).toLong).filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyState
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyState)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
+  /** Latest committed state ([[StateLog.Log.current]]). */
+  private[graft] def currentState(s: SparkSession, base: String): WinnowState =
+    stateLog.current(s, base)
 
   /** The committed micro-batch id — the serve row's build-completeness
     * probe.
     */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     currentState(s, base).batch
-
-  private def publish(s: SparkSession, base: String, st: WinnowState): Boolean = {
-    val body = recordBody(st)
-    val ok0 = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", body)
-    // ambiguous-CAS disambiguation (r15 review): an RPC failure AFTER the
-    // exclusive rename landed reports false with the target existing. Our
-    // record body embeds writer-unique (uid-bearing) segment names, so a
-    // byte-identical readback means WE won — without this, the caller's
-    // rebase would misread its own commit as a rival's (the replay branch
-    // would then delete LIVE segment dirs; a compaction abort would
-    // delete the LIVE compacted dir).
-    val ok = ok0 || graft.sources.GraftFs.readSmallFile(s, s"$base/log/v${st.version}")
-      .exists(_.trim == body.trim)
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
 
   /** The maintained fingerprint relation (doc_id, fp_hash) from ONE
     * committed record, GLOBALLY distinct: each segment is distinct
@@ -118,8 +69,7 @@ object IncrementalWinnow {
     */
   def readFingerprints(s: SparkSession, base: String): DataFrame = {
     val st = currentState(s, base)
-    if (st.segs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], fpSchema)
+    if (st.segs.isEmpty) StateLog.emptyFrame(s, fpSchema)
     else s.read.schema(fpSchema).parquet(st.segs.map(n => s"$base/fps/$n"): _*)
       .distinct()
   }
@@ -131,88 +81,23 @@ object IncrementalWinnow {
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
       batchId: Option[Long] = None, k: Int = 3, w: Int = 4): Unit = {
     val st0 = currentState(s, base)
-    if (batchId.exists(id => st0.batch.exists(_ >= id))) return
+    if (st0.covers(batchId)) return
     val fps = TextQueries.winnowOn(batch.select("doc_id", "text"), k, w)
       .select("doc_id", "fp_hash").distinct()
-    val uid = java.util.UUID.randomUUID.toString.take(8)
-    val segName = s"b${st0.version + 1}-$uid"
+    val segName = StateLog.uniqueName("b", st0.version + 1)
     fps.write.mode("overwrite").parquet(s"$base/fps/$segName")
-    // an exit that never published must not leave the segment orphaned
-    def dropSeg(): Unit = graft.sources.GraftFs.deleteRecursively(s, s"$base/fps/$segName")
-    var st = st0
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 16) {
-        dropSeg()
-        require(false, s"processBatch: lost the publish race $attempts times at $base")
-      }
-      val next = WinnowState(st.version + 1, st.segs :+ segName,
-        batchId.orElse(st.batch), st.tombs)
-      if (publish(s, base, next)) {
-        // bound state growth: without compaction the record body and the
-        // serve-time read (N tiny parquet dirs + a global distinct) grow
-        // linearly with batch count over a long-running ingest. The fold
-        // runs AFTER this batch's publish already landed, so a failure
-        // here (lost-CAS exhaustion, a concurrent compactor racing the
-        // same inputs) must not fail the committed batch — compaction is
-        // idempotent and re-triggers on the next publish at ≥
-        // AutoCompactSegs (r14 ADVICE: availability, not correctness)
-        if (next.segs.size >= AutoCompactSegs)
-          try compactFrom(s, base, next)
-          catch {
-            case e: Exception =>
-              System.err.println(s"[IncrementalWinnow] auto-compaction at $base " +
-                s"deferred to the next trigger: ${e.getMessage}")
-          }
-        return
-      }
-      st = currentState(s, base)
-      if (batchId.exists(id => st.batch.exists(_ >= id))) {
-        // defense-in-depth: never drop a segment the committed record
-        // references (a concurrent same-id landing leaves OURS orphaned)
-        if (!st.segs.contains(segName)) dropSeg()
-        return
-      }
-    }
+    stateLog.append(s, base, st0, batchId, maxAttempts = 16,
+        abandon = stateLog.dropUnlisted(s, base, segName)) { st =>
+      WinnowState(st.version + 1, st.segs :+ segName, batchId.orElse(st.batch), st.tombs)
+    }.foreach(stateLog.autoCompact(s, base, _)(compactFrom(s, base, _)))
   }
 
-  /** Auto-compaction threshold: processBatch folds the live segments
-    * whenever a publish leaves this many — steady-state serve reads a
-    * handful of dirs, not one per batch ever ingested.
-    */
-  private val AutoCompactSegs = 16
-
   /** Fold every live fingerprint segment into ONE globally-distinct
-    * segment and CAS-publish the swap — the IncrementalSpan/Index
-    * compactSegments discipline. Content is unchanged by construction:
-    * readFingerprints applies a global distinct anyway, so pre-folding
-    * it into the compacted segment is the same relation (and makes the
-    * at-least-once cross-segment duplicates disappear from disk, not
-    * just from the serve view). Concurrent ingest is safe: a batch that
-    * commits mid-compact wins the CAS and the rebase keeps its segment
-    * alongside the compacted dir.
-    *
-    * GC is DEFERRED one compaction generation (r14 ADVICE): the folded
-    * input dirs are recorded as the new state's `tombs`; the NEXT
-    * compaction reclaims the live record's tombs at ENTRY (before its
-    * own fold — they are already a full generation old, so no reader
-    * that resolved either of the two most recent records references
-    * them, and reclaiming before our own publish means a crash anywhere
-    * in THIS compaction cannot orphan them: they stay listed in the
-    * still-current record and the next attempt re-reclaims). The
-    * guarantee is TWO RECORDS DEEP, not a wall-clock window: a reader
-    * that resolved the pre-swap record between currentState and scan
-    * execution keeps its files until the following compaction — a full
-    * 16-batch auto-window in steady state, but an operator invoking
-    * compactSegments back-to-back shortens it to the gap between calls
-    * (a scan still holding a YET older record was never covered; pace
-    * explicit maintenance accordingly). The cost is ≤ one generation of
-    * folded segments parked on disk; a crash between this compactor's
-    * own fold-write and publish can still orphan its UNREFERENCED
-    * `cName` output dir — the same pre-existing class as a crashed
-    * ingest's segment, invisible to every reader and bounded by crash
-    * count, not by runtime.
+    * segment and CAS-publish the swap ([[StateLog.Segments.compact]]).
+    * Content is unchanged by construction: readFingerprints applies a
+    * global distinct anyway, so pre-folding it into the compacted segment
+    * is the same relation (and makes the at-least-once cross-segment
+    * duplicates disappear from disk, not just from the serve view).
     */
   def compactSegments(s: SparkSession, base: String): Unit =
     compactFrom(s, base, currentState(s, base))
@@ -221,80 +106,9 @@ object IncrementalWinnow {
     * out so the spec can drive the lost-CAS rebase path
     * deterministically.
     */
-  private[graft] def compactFrom(s: SparkSession, base: String, observed: WinnowState): Unit = {
-    if (observed.segs.size <= 1) return
-    val folded = observed.segs.toSet
-    val uid = java.util.UUID.randomUUID.toString.take(8)
-    val cName = s"c${observed.version + 1}-$uid"
-    // duplicate/overlapping-compactor fast path: proceed only while
-    // EVERY folded input is still live. All-or-nothing matters with
-    // deferred GC (r15): an overlapping concurrent fold leaves our
-    // inputs READABLE as tombstones, so without this guard we would
-    // succeed and publish a state listing the shared content twice —
-    // once in our cName, once in the other compactor's (harmless for
-    // winnow's distinct relation, a double-count for the additive
-    // siblings; guarded identically in all three). An APPEND never
-    // removes a segment, so the legitimate stale-observed rebase
-    // (interleaved ingest) always passes this check.
-    val live = currentState(s, base)
-    if (!folded.forall(live.segs.contains)) return
-    // reclaim the PREVIOUS generation's tombstones at entry: they are a
-    // full compaction generation old (no reader holding the current or
-    // prior record references them), and reclaiming BEFORE our own
-    // publish means a crash anywhere below cannot orphan them — they
-    // stay listed in the still-current record and the next compaction
-    // re-reclaims (deleteRecursively of a missing dir is a no-op)
-    live.tombs.filterNot(folded.contains)
-      .foreach(n => graft.sources.GraftFs.deleteRecursively(s, s"$base/fps/$n"))
-    try {
-      s.read.schema(fpSchema).parquet(observed.segs.map(n => s"$base/fps/$n"): _*)
-        .distinct()
-        .write.mode("overwrite").parquet(s"$base/fps/$cName")
-    } catch {
-      case e: Exception =>
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/fps/$cName")
-        // rethrow ONLY when every folded input is still live (a genuine
-        // I/O failure reading committed data). If ANY folded seg already
-        // left the live set, a concurrent compactor with an overlapping
-        // folded set swapped (and possibly reclaimed) a subset of our
-        // inputs mid-read — its compacted dir covers the content, our
-        // fold is superseded, and failing the caller would be pure
-        // failure amplification (r14 ADVICE).
-        val liveNow = currentState(s, base).segs.toSet
-        if (!folded.forall(liveNow.contains)) return
-        throw e
-    }
-    var st = observed
-    var attempts = 0
-    var committed = false
-    while (!committed) {
-      attempts += 1
-      if (attempts > 8) {
-        // exhaustion must not orphan the written compacted dir
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/fps/$cName")
-        require(false, s"compactSegments: lost the publish race $attempts times at $base")
-      }
-      if (!folded.forall(st.segs.contains)) {
-        // the race winner was another compaction overlapping our folded
-        // set (same observed state, or a superset/subset fold) — its
-        // output covers the swapped content; publishing ours would
-        // double-list it. Abort; the winner owns the tombstone cleanup.
-        graft.sources.GraftFs.deleteRecursively(s, s"$base/fps/$cName")
-        return
-      }
-      // keep every segment committed since the observed state (an
-      // interleaved append loses nothing); swap only the folded inputs,
-      // tombstone them (deferred GC — deleted by the NEXT compaction)
-      val next = WinnowState(st.version + 1,
-        (cName +: st.segs.filterNot(folded.contains)).distinct, st.batch,
-        folded.toSeq.sorted)
-      if (publish(s, base, next)) committed = true
-      else st = currentState(s, base)
-    }
-    // (prior-generation tombs were reclaimed at entry; an interleaved
-    // append cannot add tombs, and an interleaved compaction takes the
-    // superseded-fold exit above — nothing further to delete here)
-  }
+  private[graft] def compactFrom(s: SparkSession, base: String, observed: WinnowState): Unit =
+    stateLog.compact(s, base, observed)(_ =>
+      s.read.schema(fpSchema).parquet(observed.segs.map(n => s"$base/fps/$n"): _*).distinct())
 
   /** The MOSS match step served from the maintained fingerprint relation
     * — ≡ q_text_winnow_pairs one-shot by construction (the fp relation

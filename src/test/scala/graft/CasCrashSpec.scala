@@ -21,12 +21,6 @@ import org.scalatest.matchers.should.Matchers
   */
 class CasCrashSpec extends SparkTestBase with Matchers {
 
-  private def ensureScheme(s: SparkSession): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    conf.set("fs.graftfault.impl", classOf[FaultInjectingFileSystem].getName)
-    conf.set("fs.AbstractFileSystem.graftfault.impl", classOf[FaultInjectingAbstractFs].getName)
-  }
-
   private case class Maintainer(
       name: String,
       ingest: (SparkSession, DataFrame, String, Option[Long]) => Unit,
@@ -55,7 +49,7 @@ class CasCrashSpec extends SparkTestBase with Matchers {
     m.serve(spark, base).collect().map(_.toString).sorted.toSeq
 
   test("all four maintainers converge bit-identically through every injected failure point") {
-    ensureScheme(spark)
+    FaultInjectingFileSystem.install(spark)
     for (m <- maintainers) withClue(s"maintainer=${m.name} ") {
       FaultInjectingFileSystem.reset()
       val cleanBase = Files.createTempDirectory(s"graft_cas_clean_${m.name}").toFile.getAbsolutePath

@@ -94,22 +94,30 @@ class CurationIngestSpec extends SparkTestBase with Matchers {
     }
   }
 
+  /** Shard 0's docs as (shard_id, doc_id, text, lang) feed rows. */
+  private def shard0 = Tables.documents(spark, sfTiny)
+    .withColumn("shard_id", floor(col("doc_id") / K))
+    .filter(col("shard_id") === 0)
+    .select("shard_id", "doc_id", "text", "lang")
+
+  /** One handleBatch input: `doc` rows, plus a `close` of `closeShard`. */
+  private def tagged(docRows: org.apache.spark.sql.DataFrame, closeShard: Option[Long]) = {
+    val d = docRows.select(lit("doc").as("kind"), col("shard_id"), col("doc_id"),
+      col("text"), col("lang"), lit(0L).as("n_docs"))
+    closeShard match {
+      case Some(sid) => d.unionByName(
+        Seq(("close", sid, 0L, null: String, null: String, 0L))
+          .toDF("kind", "shard_id", "doc_id", "text", "lang", "n_docs"))
+      case None => d
+    }
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("crash replay of a committed ingest batch lands nothing (docs, state, curated)") {
     val base = Files.createTempDirectory("graft_ci_replay").toFile.getAbsolutePath
-    val docs = Tables.documents(spark, sfTiny)
-      .withColumn("shard_id", floor(col("doc_id") / K))
-      .filter(col("shard_id") === 0)
-      .select("shard_id", "doc_id", "text", "lang")
-    def tagged(docRows: org.apache.spark.sql.DataFrame, closeShard: Option[Long]) = {
-      val d = docRows.select(lit("doc").as("kind"), col("shard_id"), col("doc_id"),
-        col("text"), col("lang"), lit(0L).as("n_docs"))
-      closeShard match {
-        case Some(sid) => d.unionByName(
-          Seq(("close", sid, 0L, null: String, null: String, 0L))
-            .toDF("kind", "shard_id", "doc_id", "text", "lang", "n_docs"))
-        case None => d
-      }
-    }
+    val docs = shard0
     // batch 0 lands shard 0's docs; batch 1 closes (and curates) it
     CurationIngest.handleBatch(spark, tagged(docs, None), base, Some(0L))
     CurationIngest.handleBatch(spark, tagged(docs.limit(0), Some(0L)), base, Some(1L))
@@ -125,5 +133,32 @@ class CurationIngestSpec extends SparkTestBase with Matchers {
       .collect().map(_.toString).sorted.toSeq shouldBe curated
     CurationIngest.readLanding(spark, base).count() shouldBe landed
     CurationIngest.committedBatch(spark, base) shouldBe Some(1L)
+  }
+
+  test("ambiguous CAS on the ingest publish: a landed record reported lost still commits") {
+    FaultInjectingFileSystem.install(spark)
+    val docs = shard0
+    def run(base: String): Unit = {
+      CurationIngest.handleBatch(spark, tagged(docs, None), base, Some(0L))
+      CurationIngest.handleBatch(spark, tagged(docs.limit(0), Some(0L)), base, Some(1L))
+    }
+    val clean = Files.createTempDirectory("graft_ci_cas_clean").toFile.getAbsolutePath
+    run(clean)
+    val faultDir = Files.createTempDirectory("graft_ci_cas_fault").toFile.getAbsolutePath
+    val fault = s"graftfault://$faultDir"
+    FaultInjectingFileSystem.reset()
+    // the log/v0 rename LANDS but reports failure: the readback must
+    // claim the commit instead of throwing "lost the publish race"
+    FaultInjectingFileSystem.renameLieOnce("/log/v0")
+    try {
+      run(fault)
+      FaultInjectingFileSystem.fired.map(_._1) should contain("renameLie")
+    } finally FaultInjectingFileSystem.reset()
+    CurationIngest.committedBatch(spark, fault) shouldBe Some(1L)
+    sortedRows(CurationIngest.readLanding(spark, fault)) shouldBe
+      sortedRows(CurationIngest.readLanding(spark, clean))
+    val curated = sortedRows(CurationIngest.readCurated(spark, clean))
+    curated should not be empty
+    sortedRows(CurationIngest.readCurated(spark, fault)) shouldBe curated
   }
 }

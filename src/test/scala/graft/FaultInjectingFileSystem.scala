@@ -65,6 +65,13 @@ class FaultInjectingAbstractFs(uri: URI, conf: org.apache.hadoop.conf.Configurat
     uri, new FaultInjectingFileSystem, conf, "graftfault", false)
 
 object FaultInjectingFileSystem {
+  /** Register the `graftfault` scheme on the session's Hadoop config. */
+  def install(s: org.apache.spark.sql.SparkSession): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfault.impl", classOf[FaultInjectingFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.graftfault.impl", classOf[FaultInjectingAbstractFs].getName)
+  }
+
   private val scheduled = new ConcurrentHashMap[(String, String), AtomicInteger]()
   private val firedLog = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 

@@ -53,4 +53,37 @@ class IncrementalTrendSpec extends SparkTestBase with Matchers {
     new java.io.File(base).listFiles().count(_.getName.startsWith("v")) shouldBe 3
     rows(IncrementalTrend.serveTrend(spark, base)) shouldBe t
   }
+
+  test("a failed grain write throws only after its sibling writes settle; the replay converges") {
+    FaultInjectingFileSystem.install(spark)
+    val split = (0 until 3).map(i => rawRows.filter(abs(hash(col("event_id"))) % 3 === i))
+    val clean = Files.createTempDirectory("graft_inctrend_clean").toFile.getAbsolutePath
+    split.zipWithIndex.foreach { case (b, i) =>
+      IncrementalTrend.processBatch(spark, b, clean, Some(i.toLong)) }
+    val faultDir = Files.createTempDirectory("graft_inctrend_fault").toFile.getAbsolutePath
+    val fault = s"graftfault://$faultDir"
+    FaultInjectingFileSystem.reset()
+    try {
+      IncrementalTrend.processBatch(spark, split(0), fault, Some(0L))
+      // one of batch 1's six grain writes into generation v1 fails
+      FaultInjectingFileSystem.failCreateOnce("/v1/slopes")
+      intercept[Exception] { IncrementalTrend.processBatch(spark, split(1), fault, Some(1L)) }
+      FaultInjectingFileSystem.fired.map(_._1) should contain("failCreate")
+      // no sibling writer is still running into v1 once the batch threw
+      def files(f: java.io.File): Seq[String] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f.getPath)
+      def v1Files = files(new java.io.File(faultDir, "v1")).toSet
+      val settled = v1Files
+      Thread.sleep(1000)
+      v1Files shouldBe settled
+      IncrementalTrend.committedBatch(spark, fault) shouldBe Some(0L)
+      // the replay rewrites v1 with no writer of the failed attempt left
+      IncrementalTrend.processBatch(spark, split(1), fault, Some(1L))
+      IncrementalTrend.processBatch(spark, split(2), fault, Some(2L))
+    } finally FaultInjectingFileSystem.reset()
+    rows(IncrementalTrend.serveTrend(spark, fault)) shouldBe
+      rows(IncrementalTrend.serveTrend(spark, clean))
+    rows(IncrementalTrend.serveRfm(spark, fault)) shouldBe
+      rows(IncrementalTrend.serveRfm(spark, clean))
+  }
 }

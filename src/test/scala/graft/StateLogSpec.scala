@@ -1,0 +1,99 @@
+package graft
+
+import java.nio.file.Files
+
+import graft.sources.GraftFs
+import graft.streaming.{CurationIngest, IncrementalAgg, IncrementalDedup, IncrementalIndex,
+  IncrementalSpan, IncrementalWinnow}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.matchers.should.Matchers
+
+/** The shared state-publication module (graft.streaming.StateLog) as the
+  * maintainers use it: the `_CURRENT` hint is only a fast path, record
+  * and pointer formats are the ones already on disk, and every log
+  * maintainer writes its record with the same keys in the same order.
+  */
+class StateLogSpec extends SparkTestBase with Matchers {
+
+  private case class LogMaintainer(name: String, ingest: (DataFrame, String, Long) => Unit,
+      current: String => Any, layout: String)
+
+  private val U = "[0-9a-f]{8}"
+
+  private def maintainers = Seq(
+    LogMaintainer("index", (b, base, id) => IncrementalIndex.processBatch(spark, b, base, Some(id)),
+      IncrementalIndex.currentState(spark, _),
+      s"stats=stats/v1;segs=b0-$U,b1-$U;batch=1;ndocs=\\d+;tombs="),
+    LogMaintainer("span", (b, base, id) => IncrementalSpan.processBatch(spark, b, base, Some(id)),
+      IncrementalSpan.currentState(spark, _),
+      s"stats=stats/v1-$U;occ=(b0-$U,b1-$U);docs=\\1;batch=1;tombocc=;tombdocs="),
+    LogMaintainer("winnow", (b, base, id) => IncrementalWinnow.processBatch(spark, b, base, Some(id)),
+      IncrementalWinnow.currentState(spark, _), s"segs=b0-$U,b1-$U;batch=1;tombs="),
+    LogMaintainer("dedup", (b, base, id) => IncrementalDedup.processBatch(spark, b, base, Some(id)): Unit,
+      IncrementalDedup.currentState(spark, _), s"segs=b0-$U,b1-$U;batch=1;tombs="),
+    LogMaintainer("curation", (b, base, id) => CurationIngest.handleBatch(spark,
+        b.select(lit("doc").as("kind"), lit(0L).as("shard_id"), col("doc_id"), col("text"),
+          col("lang"), lit(0L).as("n_docs")), base, Some(id)),
+      CurationIngest.currentState(spark, _), s"segs=b0-$U,b1-$U;batch=1"))
+
+  test("a junk _CURRENT hint reads as absent: every log maintainer falls back to the listing") {
+    val docs = Tables.documents(spark, sfTiny).filter(col("doc_id") < 60)
+    for (m <- maintainers) withClue(s"maintainer=${m.name} ") {
+      val base = Files.createTempDirectory(s"graft_statelog_${m.name}").toFile.getAbsolutePath
+      for (i <- 0L to 1L) m.ingest(docs.filter(col("doc_id") % 2 === i), base, i)
+      GraftFs.readSmallFile(spark, s"$base/log/v1").get.trim should fullyMatch regex m.layout
+      val want = m.current(base)
+      for (junk <- Seq("v1#torn", "garbage", "", "v", "v-1", "v0")) withClue(s"hint='$junk' ") {
+        GraftFs.writeSmallFileAtomic(spark, s"$base/_CURRENT", junk)
+        m.current(base) shouldBe want
+      }
+      GraftFs.deleteRecursively(spark, s"$base/_CURRENT")
+      m.current(base) shouldBe want
+    }
+  }
+
+  test("log records in the established format parse field for field") {
+    def at(body: String): String = {
+      val base = Files.createTempDirectory("graft_statelog_rec").toFile.getAbsolutePath
+      GraftFs.writeSmallFileAtomic(spark, s"$base/log/v0", body)
+      base
+    }
+    IncrementalIndex.currentState(spark,
+      at("stats=stats/v0;segs=b0-aa,c1-bb;batch=3;ndocs=17;tombs=b9-cc")) shouldBe
+      IncrementalIndex.IndexState(0L, Some("stats/v0"), Seq("b0-aa", "c1-bb"), Some(3L),
+        Some(17L), Seq("b9-cc"))
+    // a pre-ndocs, pre-tombs record: the fields read as absent
+    IncrementalIndex.currentState(spark, at("stats=stats/v0;segs=b0-aa;batch=-")) shouldBe
+      IncrementalIndex.IndexState(0L, Some("stats/v0"), Seq("b0-aa"), None)
+    val span = IncrementalSpan.currentState(spark,
+      at("stats=stats/v0-dd;occ=c2-aa,b3-bb;docs=c2-aa,b3-bb;batch=3;tombocc=b0-cc;tombdocs=b0-cc"))
+    span shouldBe IncrementalSpan.SpanState(0L, Some("stats/v0-dd"), Seq("c2-aa", "b3-bb"),
+      Some(3L), Seq("b0-cc"))
+    (span.occSegs, span.docSegs, span.docTombs) shouldBe
+      ((Seq("c2-aa", "b3-bb"), Seq("c2-aa", "b3-bb"), Seq("b0-cc")))
+    IncrementalWinnow.currentState(spark, at("segs=c1-aa,b2-bb;batch=2;tombs=")) shouldBe
+      IncrementalWinnow.WinnowState(0L, Seq("c1-aa", "b2-bb"), Some(2L))
+    IncrementalDedup.currentState(spark, at("segs=;batch=-;tombs=b0-aa")) shouldBe
+      IncrementalDedup.DedupState(0L, Seq.empty, None, Seq("b0-aa"))
+    CurationIngest.currentState(spark, at("segs=b0-aa;batch=0")) shouldBe
+      CurationIngest.IngestLog(0L, Seq("b0-aa"), Some(0L))
+  }
+
+  test("the version pointer keeps its v<N>[:batch=<id>] format and carries the tag forward") {
+    val base = Files.createTempDirectory("graft_statelog_ptr").toFile.getAbsolutePath
+    val events = Tables.events(spark, sfTiny)
+    def pointer = GraftFs.readSmallFile(spark, s"$base/_CURRENT").map(_.trim)
+    IncrementalAgg.processBatch(spark, events.filter(col("event_id") % 2 === 0), base, Some(4L))
+    pointer shouldBe Some("v0:batch=4")
+    IncrementalAgg.processBatch(spark, events.filter(col("event_id") % 2 === 1), base)
+    pointer shouldBe Some("v1:batch=4") // a call without an id keeps the tag
+    IncrementalAgg.processBatch(spark, events, base, Some(4L)) // replay: no swap
+    pointer shouldBe Some("v1:batch=4")
+    IncrementalAgg.committedBatch(spark, base) shouldBe Some(4L)
+    // an untagged pointer written by an older writer still reads
+    GraftFs.writeSmallFileAtomic(spark, s"$base/_CURRENT", "v1")
+    IncrementalAgg.committedBatch(spark, base) shouldBe None
+    IncrementalAgg.readState(spark, base).count() should be > 0L
+  }
+}
