@@ -1,9 +1,11 @@
 #!/usr/bin/env bash
 # Launch a graft main class under spark-submit with the pinned profile.
 # Usage: scripts/spark-submit-graft.sh <mainClass> [args...]
-#   e.g. scripts/spark-submit-graft.sh graft.QBench q_sql_q1 q_dedup_near
-# Env passthrough: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_REPS, SPARK_GRAFT_CPUS,
-# SPARK_GRAFT_SHUFFLE (read by the mains themselves).
+#   e.g. scripts/spark-submit-graft.sh graft.Profile q_sql_q1 q_dedup_near
+# Env passthrough (read by the mains themselves): SPARK_GRAFT_SF_DIR,
+# SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS (Bench, Profile, ScaleBench),
+# SPARK_GRAFT_BENCH_BAND_HI and SPARK_GRAFT_BENCH_OUTLIER_X (Bench),
+# SPARK_GRAFT_REPS (PriceAudit), SPARK_GRAFT_SCALE_ROWS (ScaleBench).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="$1"; shift

@@ -1,12 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
-/** Session-state hygiene shared by every timing harness (Bench,
-  * PriceAudit, QBench callers): released state must mean the SAME thing
-  * in the auditor as in the bench it audits, or their numbers measure
-  * different pinned-state conditions.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Session, warm-up, timing rule and session-state hygiene shared by
+  * every timing harness (Bench, Profile, PriceAudit): released state and
+  * medians must mean the SAME thing in the profiler and auditor as in the
+  * bench they explain, or their numbers measure different conditions.
   */
 private[graft] object BenchUtil {
+  /** Bench's session: `local[cpus]`, one shuffle partition per core. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm up codegen/parquet/shuffle machinery so the first timed query
+    * isn't charged session startup.
+    */
+  def warmUp(spark: SparkSession): Unit =
+    try { SparkEntry.entry(spark).count(); () } catch { case NonFatal(_) => () }
+
   /** Release session-pinned executor-memory state between queries:
     * localCheckpoint / persist blocks otherwise accumulate across the
     * suite's ~1000 executions and the mounting GC pressure taxes every
@@ -17,7 +36,34 @@ private[graft] object BenchUtil {
     try {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
+
+  /** Per-rep wall seconds in run order, and their median. */
+  final case class Timing(reps: Seq[Double], median: Double)
+
+  /** Bench's timing rule: `reps` timed `count()`s of a fresh DataFrame,
+    * then releasePinned.
+    */
+  def measure(spark: SparkSession, sfDir: String, reps: Int,
+      fn: (SparkSession, String) => DataFrame): Timing = {
+    var failed = false
+    val runs = (1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count() } catch { case _: Throwable => failed = true }
+      (System.nanoTime() - t0) / 1e9
+    }
+    val times = runs.sorted
+    // true median: average the two middle reps when reps is even (the
+    // upper-middle element alone reports the max for reps=2). A query
+    // that failed ANY rep reports -1 — time-to-failure must never pose
+    // as a timing, and a negative value is unmissable downstream.
+    val median =
+      if (failed) -1.0
+      else if (times.length % 2 == 1) times(times.length / 2)
+      else (times(times.length / 2 - 1) + times(times.length / 2)) / 2.0
+    releasePinned(spark)
+    Timing(runs, median)
+  }
 }
 
 object Bench {
@@ -30,16 +76,10 @@ object Bench {
     // occasional GC straggler. k=3 by default; SPARK_GRAFT_BENCH_REPS=1
     // restores the old single-pass behavior.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up codegen/parquet/shuffle machinery so the first timed query
-    // isn't charged session startup; deterministic name order keeps
-    // per-round numbers comparable.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val spark = BenchUtil.session(cpus)
+    // Warm up before the first timed query; deterministic name order
+    // keeps per-round numbers comparable.
+    BenchUtil.warmUp(spark)
     // --- environment fingerprint (r9 verdict item 1b) ---------------------
     // The round-9 driver artifact read 1.5x the judge/builder band purely
     // from box contention; a canonical artifact must be self-labeling. A
@@ -83,29 +123,11 @@ object Bench {
     val sortedQueries = SparkEntry.queries.toSeq.sortBy(_._1)
     val midIdx = sortedQueries.length / 2
 
-    // Each query is priced self-contained (BenchUtil.releasePinned —
-    // shared with PriceAudit so the auditor measures under the SAME
-    // pinned-state conditions it audits).
-    def releasePinned(): Unit = BenchUtil.releasePinned(spark)
-
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      var failed = false
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => failed = true }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      // true median: average the two middle reps when reps is even (the
-      // upper-middle element alone reports the max for reps=2). A query
-      // that failed ANY rep reports -1 — time-to-failure must never pose
-      // as a timing, and a negative value is unmissable downstream.
-      val median =
-        if (failed) -1.0
-        else if (times.length % 2 == 1) times(times.length / 2)
-        else (times(times.length / 2 - 1) + times(times.length / 2)) / 2.0
-      releasePinned()
-      median
-    }
+    // Each query is priced self-contained (BenchUtil.measure releases
+    // pinned state after its reps — shared with Profile so a profile's
+    // medians are measured under the SAME conditions as the bench's).
+    def measure(fn: (SparkSession, String) => DataFrame): Double =
+      BenchUtil.measure(spark, sfDir, reps, fn).median
 
     // --- contended-window self-healing (r10 verdict item 1) --------------
     // Contended readings on this box come in transient WINDOWS: the r9/r10

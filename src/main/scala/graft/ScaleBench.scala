@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-slope certification harness (r13 verdict item 1): time the
   * heaviest registered rows at three fixture decades (sf0.01 / sf0.1 /
   * the [[ScaleFixtureGen]]-derived sf1) and report per-row wall clocks
@@ -45,13 +43,8 @@ object ScaleBench {
         "0.1" -> "/root/testdata/sf0.1", "1" -> "target/sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val spark = BenchUtil.session(cpus)
+    BenchUtil.warmUp(spark)
 
     def loadAvg(): String =
       try {

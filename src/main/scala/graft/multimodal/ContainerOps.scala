@@ -448,7 +448,8 @@ object ContainerOps {
     * files, not payload columns in parquet. The export side writes one
     * file per media object (ensureMediaObjects); the read side is the
     * real binaryFile scan (partition packing governed by the same
-    * maxPartitionBytes + openCostInBytes knobs MediaProbe measures),
+    * maxPartitionBytes + openCostInBytes knobs measured in PERF.md
+    * round 6, "Multimodal decode batch shape"),
     * media_id recovered from the object name, and the SAME ContainerParser
     * walks the bytes — so the full loop (build → object store → source →
     * parse) is proven against the identical DuckDB oracle as
@@ -742,8 +743,8 @@ object ContainerOps {
     * visibility), which is not speculation-safe on a lease-holding FS.
     * The production write path is [[PackStore.writeComponent]], whose
     * attempt-unique file names + vacuum orphan sweep carry the full
-    * retry/speculation contract (proven by RetryProbe's
-    * pack_component_write class).
+    * retry/speculation contract (proven by the pack_component_write
+    * class of the RetryProbe test main, src/test).
     */
   def ensurePackedObjects(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val tag = graft.sources.GraftFs.scaleTag(s, dir)

@@ -448,8 +448,8 @@ object MultimodalOps {
   )
 
   /** Band geometry for a banded hamming join over a `hashBits`-bit hash
-    * at corpus size n — the SearchScaleProbe "width must grow ~log n"
-    * observation turned into code. Returns the LARGEST band count b
+    * at corpus size n — the "width must grow ~log n" observation of
+    * PERF.md's round-8 search-scale measurement turned into code. Returns the LARGEST band count b
     * (recall rises with b: a radius-r pair survives iff some band is
     * flip-free, and more bands mean more chances) whose expected
     * random-collision candidate volume stays within budget:
@@ -486,7 +486,7 @@ object MultimodalOps {
     * near-tie gradients, measured hamming ≤ 4), and the join must
     * recover the original↔twin pairs: banded candidates (4 bands ×
     * 14 bits) verified by exact bit_count(xor) ≤ 6. Band width is the
-    * occupancy knob: 7-bit bands saturate (SearchScaleProbe measured k²
+    * occupancy knob: 7-bit bands saturate (PERF.md round 8 measured k²
     * candidate growth at ×10 — 128 bucket values birthday-collapse)
     * while 14-bit buckets stay selective; at larger corpora the width
     * grows with log n (longer hash / more grids), the SemDeDup

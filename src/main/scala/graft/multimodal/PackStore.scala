@@ -602,10 +602,10 @@ object PackStore {
   private def writerToken(): String = java.util.UUID.randomUUID.toString.take(8)
 
 
-  /** Test seam (RetryProbe / PackStoreSpec): when true, the FIRST attempt
-    * of pack-writing task 0 throws after its first object lands — local
-    * mode shares the JVM, so the static is visible from executor threads
-    * (the RetryProbe.fired idiom).
+  /** Test seam (the RetryProbe test main under src/test): when true, the
+    * FIRST attempt of pack-writing task 0 throws after its first object
+    * lands — local mode shares the JVM, so the static is visible from
+    * executor threads (the RetryProbe.fired idiom).
     */
   @volatile private[graft] var failFirstWriteAttempt: Boolean = false
 

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
   * the ANN indexes and the hybrid retrieval the pipeline ships (r10
   * verdict ask 2). A pipeline that builds approximate indexes must
   * measure what the approximation costs; until this round that truth
-  * lived only in specs and probes (KnnGraphSpec recall floors,
-  * RecallProbe) — these two operators register it as oracle-checked
+  * lived only in specs and one-off sweeps (KnnGraphSpec recall floors,
+  * PERF.md round 5) — these two operators register it as oracle-checked
   * rows, so the driver's hash-compare proves the METRIC computation
   * itself, not just the rankings it consumes.
   *
@@ -174,7 +174,7 @@ object EvalQueries {
   /** recall@5 of the three registered ANN indexes against brute-force
     * ground truth IN EACH INDEX'S OWN METRIC — q_ann_lsh and q_ann_ivf
     * (cosine) vs the q_sim_cosine_topk ranking, q_ann_ivfpq (L2) vs the
-    * exact L2 top-5 (the KnnGraphSpec/RecallProbe convention): one row
+    * exact L2 top-5 (the KnnGraphSpec convention): one row
     * per (system, query), n_hits = |approx top-5 ∩ exact top-5|, recall
     * = n_hits/5. The approximate rankings are the REGISTERED queries'
     * own plans (annLsh/annIvf/annIvfPq vals reused verbatim), so this

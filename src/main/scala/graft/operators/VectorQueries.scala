@@ -865,7 +865,7 @@ object VectorQueries {
 
   /** The SECOND measured LSH operating point, registered so the recall/
     * cost tradeoff is a benched fact rather than one sweep's assertion
-    * (GraphOpPointProbe, PERF.md): 24 tables × 5 bits recalls 1.000 of
+    * (PERF.md round 9, LSH-graph operating-point sweep): 24 tables × 5 bits recalls 1.000 of
     * the exact within-label top-3 at BOTH sf0.01 and sf0.1 — the
     * perfect-recall dial — at +20% candidate-verify volume and +26%
     * build wall over the shipped 16×6 (0.957/0.982 recall). Same

@@ -138,9 +138,12 @@ object GraftFs {
   def scaleTag(s: SparkSession, dir: String): String = {
     val (fs, q) = resolve(s, dir)
     val seed = q.toString.foldLeft(1469598103934665603L)((a, c) => (a * 1099511628211L) ^ c.toLong)
+    // A missing dir reads as empty; any other listing failure propagates,
+    // since an empty fold would rotate the tag and silently rebuild every
+    // artifact keyed by it.
     val listing =
-      try { if (fs.exists(q)) fs.listStatus(q) else Array.empty[org.apache.hadoop.fs.FileStatus] }
-      catch { case _: java.io.IOException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+      try { if (fs.exists(q)) fs.listStatus(q) else Array.empty[FileStatus] }
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
     val h = listing.sortBy(_.getPath.getName)
       .foldLeft(seed) { (acc, st) =>
         val n = st.getPath.getName.foldLeft(acc)((a, c) => (a * 1099511628211L) ^ c.toLong)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * Scale design: state per user is O(1) — (num, den) for EWMA, ≤19 rows
   * for the anomaly window — so total state is O(users) regardless of
   * history length, and the RocksDB provider carries it past memory
-  * (StateStoreBench). Batch mode runs the SAME processors (each key's
+  * (PERF.md round 4, state-store shootout). Batch mode runs the SAME processors (each key's
   * full history in one handleInputRows call), which is what the DuckDB
   * oracle checks; StreamingSpec drives the real multi-batch stream and
   * pins stream ≡ batch.

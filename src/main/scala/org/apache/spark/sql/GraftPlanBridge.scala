@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Minimal `private[sql]` bridge: turn a hand-built [[LogicalPlan]] into a
   * DataFrame. `classic.Dataset.ofRows` is the blessed entry point for
   * libraries that introduce their own logical operators (the same shim
-  * every Spark-extension project carries since the API split); nothing else
-  * from the private surface is touched.
+  * every Spark-extension project carries since the API split), plus the
+  * listener-bus drain a profiler needs before it reads its listeners;
+  * nothing else from the private surface is touched.
   */
 object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -18,4 +19,8 @@ object GraftPlanBridge {
     */
   def columnExpr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Block until every listener event posted so far has been delivered. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -21,7 +21,7 @@ class EvalSpec extends SparkTestBase with Matchers {
     val got = EvalQueries.evalRecall.query(spark, sfTiny).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
 
-    // independent ground truths, computed the RecallProbe way
+    // independent ground truths: brute-force top-5 sets
     val truthCos = topSets(VectorQueries.cosineTopk.query(spark, sfTiny))
     val e = Tables.embeddings(spark, sfTiny).select("vec_id", "embedding")
     val q = e.filter(col("vec_id") < 10)

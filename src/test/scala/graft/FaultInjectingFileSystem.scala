@@ -19,6 +19,9 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
   *     on the pattern).
   *   - failDeleteOnce(substr): the next delete whose path contains substr
   *     throws — a crash during deferred GC of folded segment dirs.
+  *   - failListOnce(substr): the next listStatus whose path contains
+  *     substr throws — a listing that fails for a reason other than a
+  *     missing dir.
   *
   * Schedules are one-shot and recorded; a spec must assert `fired`, or it
   * silently tested nothing. Registered via `fs.graftfault.impl` +
@@ -50,6 +53,12 @@ class FaultInjectingFileSystem extends RawLocalFileSystem {
     if (FaultInjectingFileSystem.take("failCreate", f.toUri.getPath))
       throw new java.io.IOException(s"injected create failure at $f")
     super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (FaultInjectingFileSystem.take("failList", p.toUri.getPath))
+      throw new java.io.IOException(s"injected listing failure at $p")
+    super.listStatus(p)
   }
 
   override def delete(p: Path, recursive: Boolean): Boolean = {
@@ -94,6 +103,8 @@ object FaultInjectingFileSystem {
     scheduled.put(("failCreate", substr), new AtomicInteger(1)): Unit
   def failDeleteOnce(substr: String): Unit =
     scheduled.put(("failDelete", substr), new AtomicInteger(1)): Unit
+  def failListOnce(substr: String): Unit =
+    scheduled.put(("failList", substr), new AtomicInteger(1)): Unit
 
   def reset(): Unit = { scheduled.clear(); synchronized { firedLog.clear() } }
   def fired: Seq[(String, String)] = synchronized { firedLog.toVector }

@@ -116,4 +116,22 @@ class GraftFsSpec extends SparkTestBase with Matchers {
     val t4 = GraftFs.scaleTag(spark, a3)
     t3 should not be t4
   }
+
+  test("scaleTag: a failed listing throws instead of reading as an empty dir; a missing dir still reads as empty") {
+    FaultInjectingFileSystem.install(spark)
+    FaultInjectingFileSystem.reset()
+    val local = Files.createTempDirectory("graft_tag_fault").toFile.getAbsolutePath
+    Files.write(java.nio.file.Paths.get(local, "t.parquet"), "x".getBytes("UTF-8"))
+    val dir = s"graftfault://$local"
+    val good = GraftFs.scaleTag(spark, dir)
+    val missing = GraftFs.scaleTag(spark, s"$dir/absent")
+    missing should startWith (s"$dir/absent".replaceAll("[^A-Za-z0-9._-]", "_"))
+    try {
+      FaultInjectingFileSystem.failListOnce(local)
+      an[java.io.IOException] should be thrownBy GraftFs.scaleTag(spark, dir)
+      FaultInjectingFileSystem.fired.map(_._1) shouldBe Seq("failList")
+    } finally FaultInjectingFileSystem.reset()
+    // the fault was one-shot: the next lookup lists again and agrees
+    GraftFs.scaleTag(spark, dir) shouldBe good
+  }
 }

@@ -35,7 +35,7 @@ class KnnGraphSpec extends SparkTestBase with Matchers {
     val r24 = lsh24.intersect(exact).size.toDouble / exact.size
     val r16 = lsh16.intersect(exact).size.toDouble / exact.size
     // the TRADEOFF claim, asserted not prosed: more tables at fewer bits
-    // buys recall (measured 1.000 at sf0.01 AND sf0.1, GraphOpPointProbe)
+    // buys recall (measured 1.000 at sf0.01 AND sf0.1, PERF.md round 9)
     r24 should be >= 0.99
     r24 should be >= r16
   }

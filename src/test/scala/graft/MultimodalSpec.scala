@@ -93,7 +93,7 @@ class MultimodalSpec extends SparkTestBase with Matchers {
   test("hammingBands: derived layout matches the probe-proven geometry and scales with n") {
     // the registered q_mm_phash layout is DERIVED, not pinned: at the
     // 5000-media sizing point the rule must reproduce the 4×14 layout
-    // SearchScaleProbe validated (8×7 birthday-collapsed one decade up)
+    // measured in PERF.md round 8 (8×7 birthday-collapsed one decade up)
     MultimodalOps.hammingBands(MultimodalOps.PhashCorpusN, 56) shouldBe ((4, 14))
     (MultimodalOps.phashBands, MultimodalOps.phashBandBits) shouldBe ((4, 14))
     // occupancy holds at ×1 and ×10: expected random-collision volume

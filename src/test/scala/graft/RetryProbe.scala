@@ -1,6 +1,5 @@
-package graft.operators
+package graft
 
-import graft.Tables
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -23,6 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Prints RETRYPROBE lines; exits nonzero on any mismatch or if the
   * injection never fired (which would mean the probe proved nothing).
+  * Run: sbt 'Test/runMain graft.RetryProbe' (SPARK_GRAFT_SF_DIR, default sf0.01).
   */
 object RetryProbe {
 

@@ -1,5 +1,6 @@
-package graft.operators
+package graft
 
+import graft.operators.CurationQueries
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -17,12 +18,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     metrics) — otherwise the probe proved nothing and says so.
   *
   * Needs its own JVM (memory fraction is fixed at session build), so a
-  * diagnostic main like RetryProbe; exits nonzero on mismatch.
+  * test main like RetryProbe; exits nonzero on mismatch.
   * Reference rows come from the same starved session BEFORE starving
   * can matter (memory fraction does not affect results by contract —
-  * the cross-session equality is what DetProbe/Verify already pin), so
+  * the cross-session equality is what InvarianceCheck/Verify already pin), so
   * the probe's real assertions are identity across two in-session runs
   * plus the nonzero spill counters.
+  * Run: SPARK_DRIVER_MEM=1g sbt 'Test/runMain graft.SpillProbe'
+  * (SPARK_GRAFT_SF_DIR, default sf0.1; with the default 8g heap nothing
+  * spills at sf0.1 and the probe exits nonzero, a 1g heap makes the
+  * sort-merge join spill).
   */
 object SpillProbe {
 
