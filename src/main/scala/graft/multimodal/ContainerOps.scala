@@ -421,27 +421,25 @@ object ContainerOps {
     * so a change to buildPayload's parameters re-keys the cache instead
     * of silently reusing stale objects.
     */
-  def ensureMediaObjects(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-media-objects/$payloadFingerprint/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        containerTable(s, dir).foreachPartition { it: Iterator[(Long, Array[Byte])] =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          it.foreach { case (id, payload) =>
-            val p = new org.apache.hadoop.fs.Path(s"$base/m$id.bin")
-            val fs = p.getFileSystem(conf)
-            val out = fs.create(p, true)
-            try out.write(payload) finally out.close()
-          }
+  def ensureMediaObjects(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    exportObjects(s, dir, "target/graft-media-objects", containerTable(s, dir))
+
+  /** Export `objs` one file per object (`m<id>.bin`) from executors, once
+    * per scale dir, under `<root>/<payloadFingerprint>/<scaleTag>`.
+    */
+  private[multimodal] def exportObjects(s: org.apache.spark.sql.SparkSession, dir: String,
+      root: String, objs: => Dataset[(Long, Array[Byte])]): String =
+    graft.sources.GraftFs.artifact(s, dir, tag => s"$root/$payloadFingerprint/$tag") { base =>
+      objs.foreachPartition { it: Iterator[(Long, Array[Byte])] =>
+        val conf = new org.apache.hadoop.conf.Configuration()
+        it.foreach { case (id, payload) =>
+          val p = new org.apache.hadoop.fs.Path(s"$base/m$id.bin")
+          val fs = p.getFileSystem(conf)
+          val out = fs.create(p, true)
+          try out.write(payload) finally out.close()
         }
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
       }
     }
-    base
-  }
 
   /** Container parsing over Spark's `binaryFile` SOURCE — the ingestion
     * shape a 100 TB media corpus actually has: thousands of loose object
@@ -479,27 +477,8 @@ object ContainerOps {
     * have nothing to re-encode and are dropped here — exactly what a
     * transcode job does with its quarantine lane.
     */
-  def ensureEncodedObjects(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-media-encoded/$payloadFingerprint/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        encodedObjects(s, dir).foreachPartition { it: Iterator[(Long, Array[Byte])] =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          it.foreach { case (id, bytes) =>
-            val p = new org.apache.hadoop.fs.Path(s"$base/m$id.bin")
-            val fs = p.getFileSystem(conf)
-            val out = fs.create(p, true)
-            try out.write(bytes) finally out.close()
-          }
-        }
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
-    }
-    base
-  }
+  def ensureEncodedObjects(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    exportObjects(s, dir, "target/graft-media-encoded", encodedObjects(s, dir))
 
   /** The ENCODE round-trip, oracle-checked: original payload → parse →
     * re-encode from parsed fields → object store → binaryFile scan →
@@ -681,19 +660,11 @@ object ContainerOps {
     * re-parsed, it must match the same clean-subset oracle as
     * q_mm_encode: the layout is invisible to the round-trip.
     */
-  def ensureEncodedPack(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-media-encoded-pack/$payloadFingerprint-p$NumPacks-s2/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        PackStore.initBase(s, base, encodedObjects(s, dir), NumPacks)
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
+  def ensureEncodedPack(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.sources.GraftFs.artifact(s, dir,
+        tag => s"target/graft-media-encoded-pack/$payloadFingerprint-p$NumPacks-s2/$tag") {
+      PackStore.initBase(s, _, encodedObjects(s, dir), NumPacks)
     }
-    base
-  }
 
   val mmEncodePacked = QueryDef(
     "q_mm_encode_packed",
@@ -746,39 +717,31 @@ object ContainerOps {
     * retry/speculation contract (proven by the pack_component_write
     * class of the RetryProbe test main, src/test).
     */
-  def ensurePackedObjects(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-media-packed/$payloadFingerprint-p$NumPacks-range/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        import s.implicits._
-        val manifest = containerTable(s, dir)
-          .repartitionByRange(NumPacks, col("_1"))
-          .sortWithinPartitions("_1") // monotone offsets within a pack
-          .mapPartitions { it: Iterator[(Long, Array[Byte])] =>
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val conf = new org.apache.hadoop.conf.Configuration()
-            val p = new org.apache.hadoop.fs.Path(s"$base/pack-$pid.bin")
-            val fs = p.getFileSystem(conf)
-            val out = fs.create(p, true)
-            var off = 0L
-            val entries = Iterator.newBuilder[(Long, Int, Long, Int)]
-            try it.foreach { case (id, payload) =>
-              out.write(payload)
-              entries += ((id, pid, off, payload.length))
-              off += payload.length
-            } finally out.close()
-            entries.result()
-          }
-          .toDF("media_id", "pack", "offset", "length")
-        manifest.write.mode("overwrite").parquet(s"$base/manifest")
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
+  def ensurePackedObjects(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.sources.GraftFs.artifact(s, dir,
+        tag => s"target/graft-media-packed/$payloadFingerprint-p$NumPacks-range/$tag") { base =>
+      import s.implicits._
+      val manifest = containerTable(s, dir)
+        .repartitionByRange(NumPacks, col("_1"))
+        .sortWithinPartitions("_1") // monotone offsets within a pack
+        .mapPartitions { it: Iterator[(Long, Array[Byte])] =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val conf = new org.apache.hadoop.conf.Configuration()
+          val p = new org.apache.hadoop.fs.Path(s"$base/pack-$pid.bin")
+          val fs = p.getFileSystem(conf)
+          val out = fs.create(p, true)
+          var off = 0L
+          val entries = Iterator.newBuilder[(Long, Int, Long, Int)]
+          try it.foreach { case (id, payload) =>
+            out.write(payload)
+            entries += ((id, pid, off, payload.length))
+            off += payload.length
+          } finally out.close()
+          entries.result()
+        }
+        .toDF("media_id", "pack", "offset", "length")
+      manifest.write.mode("overwrite").parquet(s"$base/manifest")
     }
-    base
-  }
 
   /** Manifest-driven packfile scan: filter the manifest (a normal pruned
     * columnar scan — parquet min/max stats skip whole row groups for id

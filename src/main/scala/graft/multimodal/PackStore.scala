@@ -218,19 +218,36 @@ object PackStore {
         throw new IllegalStateException(
           s"snapshot $id of $base is incomplete (missing #eof terminator): " +
             "torn read or abandoned write — retry, or reclaim via publish")
-      case Some(content) =>
-        content.split("\n").filter(l => l.nonEmpty && !l.startsWith("#")).toSeq.map { line =>
-          line.split("\t") match {
-            case Array(d, lo, hi) => Component(d, lo.toLong, hi.toLong)
-            case Array(d, lo, hi, b64) =>
-              Component(d, lo.toLong, hi.toLong, Some(decodeBloom(b64)))
-            case Array(d, lo, hi, b64, mz) =>
-              Component(d, lo.toLong, hi.toLong, Some(decodeBloom(b64)),
-                Some(MetaZone.decode(mz)))
-            case other =>
-              throw new IllegalStateException(s"bad snapshot line: ${other.mkString("\t")}")
-          }
-        }
+      case Some(content) => parseSnapshot(content)
+    }
+
+  private def parseSnapshot(content: String): Seq[Component] =
+    content.split("\n").filter(l => l.nonEmpty && !l.startsWith("#")).toSeq.map { line =>
+      line.split("\t") match {
+        case Array(d, lo, hi) => Component(d, lo.toLong, hi.toLong)
+        case Array(d, lo, hi, b64) =>
+          Component(d, lo.toLong, hi.toLong, Some(decodeBloom(b64)))
+        case Array(d, lo, hi, b64, mz) =>
+          Component(d, lo.toLong, hi.toLong, Some(decodeBloom(b64)),
+            Some(MetaZone.decode(mz)))
+        case other =>
+          throw new IllegalStateException(s"bad snapshot line: ${other.mkString("\t")}")
+      }
+    }
+
+  /** Qualified component dirs snapshot `id` references, for a GC scan.
+    * Only a snapshot that vanished since the listing (vacuumed) or is
+    * torn (no `#eof`: an in-flight write, whose staged dirs the grace
+    * age protects) reads as referencing nothing. Any other failure — an
+    * I/O error past [[graft.sources.GraftFs.readSmallFile]]'s retries, a
+    * bad line — propagates: read as empty, it would let the caller
+    * delete dirs a committed snapshot still names.
+    */
+  private def snapshotRefs(s: SparkSession, base: String, id: Long): Seq[String] =
+    graft.sources.GraftFs.readSmallFile(s, snapPath(base, id)) match {
+      case Some(content) if content.trim.endsWith("#eof") =>
+        parseSnapshot(content).map(c => graft.sources.GraftFs.qualify(s, c.dir))
+      case _ => Seq.empty
     }
 
   /** The free-form note a publish attached to snapshot `id` (None when
@@ -516,8 +533,8 @@ object PackStore {
     * references — the parent vacuum's branch-liveness set. ALL snapshot
     * files on disk count, not a retention window: each branch prunes its
     * own log with its own vacuum, and whatever it has not pruned, it
-    * holds. Torn/in-flight snapshot files are skipped (their staged dirs
-    * are grace-age-protected like any in-flight write).
+    * holds. Vanished and torn/in-flight snapshot files are skipped (see
+    * [[snapshotRefs]]); any other read failure propagates.
     */
   private def branchLiveRefs(s: SparkSession, base: String,
       exclude: Option[String] = None): Set[String] = {
@@ -529,10 +546,7 @@ object PackStore {
       else {
         val own = graft.sources.GraftFs.listFiles(s, s"$bb/snapshots")
           .flatMap(f => snapIdOf(f.getPath.getName))
-          .flatMap { id =>
-            try readSnapshot(s, bb, id).map(c => graft.sources.GraftFs.qualify(s, c.dir))
-            catch { case _: Exception => Seq.empty }
-          }
+          .flatMap(snapshotRefs(s, bb, _))
         own ++ branchLiveRefs(s, bb, None)
       }
     }.toSet
@@ -579,10 +593,8 @@ object PackStore {
     val bb = graft.sources.GraftFs.qualify(s, branchBase(base, name))
     val parentRefs = graft.sources.GraftFs.listFiles(s, s"$base/snapshots")
       .flatMap(f => snapIdOf(f.getPath.getName))
-      .flatMap { id =>
-        try readSnapshot(s, base, id).map(c => graft.sources.GraftFs.qualify(s, c.dir))
-        catch { case _: Exception => Seq.empty }
-      }.toSet ++ branchLiveRefs(s, base, exclude = Some(bb))
+      .flatMap(snapshotRefs(s, base, _))
+      .toSet ++ branchLiveRefs(s, base, exclude = Some(bb))
     val held = parentRefs.filter(_.startsWith(bb + "/"))
     if (held.nonEmpty)
       throw new IllegalStateException(
@@ -1239,30 +1251,22 @@ object PackStore {
     * states (merged-view equality, open counts, pointer atomicity,
     * expired-snapshot typed failure) at spec scale.
     */
-  def ensureLifecycleStore(s: SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-pack-store/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-snap2/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        import s.implicits._
-        val objs = ContainerOps.containerTable(s, dir)
-        val ids = objs.map(_._1)
-        val (lo, hi) = (ids.agg(min("value")).head.getLong(0), ids.agg(max("value")).head.getLong(0))
-        val c1 = lo + (hi - lo) * 6 / 10
-        val c2 = lo + (hi - lo) * 8 / 10
-        initBase(s, base, objs.filter(_._1 <= c1), ContainerOps.NumPacks)     // snapshot 0
-        appendDelta(s, base, objs.filter(o => o._1 > c1 && o._1 <= c2))       // snapshot 1
-        compact(s, base, ContainerOps.NumPacks)                               // snapshot 2 (≤ c2)
-        appendDelta(s, base, objs.filter(_._1 > c2))                          // snapshot 3
-        compact(s, base, ContainerOps.NumPacks)                               // snapshot 4 (all)
-        vacuum(s, base, retainSnapshots = 3)                                  // expire 0, 1
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
+  def ensureLifecycleStore(s: SparkSession, dir: String): String =
+    graft.sources.GraftFs.artifact(s, dir, tag =>
+        s"target/graft-pack-store/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-snap2/$tag") { base =>
+      import s.implicits._
+      val objs = ContainerOps.containerTable(s, dir)
+      val ids = objs.map(_._1)
+      val (lo, hi) = (ids.agg(min("value")).head.getLong(0), ids.agg(max("value")).head.getLong(0))
+      val c1 = lo + (hi - lo) * 6 / 10
+      val c2 = lo + (hi - lo) * 8 / 10
+      initBase(s, base, objs.filter(_._1 <= c1), ContainerOps.NumPacks)     // snapshot 0
+      appendDelta(s, base, objs.filter(o => o._1 > c1 && o._1 <= c2))       // snapshot 1
+      compact(s, base, ContainerOps.NumPacks)                               // snapshot 2 (≤ c2)
+      appendDelta(s, base, objs.filter(_._1 > c2))                          // snapshot 3
+      compact(s, base, ContainerOps.NumPacks)                               // snapshot 4 (all)
+      vacuum(s, base, retainSnapshots = 3)                                  // expire 0, 1
     }
-    base
-  }
 
   val mmPackLifecycle = QueryDef(
     "q_mm_pack_lifecycle",
@@ -1319,24 +1323,16 @@ ORDER BY media_id"""),
     * equal the oracle's `media_id % 10 <> 3` cut. Built once per scale
     * dir behind the fingerprint guard.
     */
-  def ensureDeleteStore(s: SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-pack-deletes/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s2/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        import s.implicits._
-        val objs = ContainerOps.containerTable(s, dir)
-        initBase(s, base, objs, ContainerOps.NumPacks)          // snapshot 0
-        deleteIds(s, base, objs.map(_._1).filter(_ % 10 == 3L)) // snapshot 1
-        compact(s, base, ContainerOps.NumPacks)                 // snapshot 2 (physical drop)
-        vacuum(s, base)
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
+  def ensureDeleteStore(s: SparkSession, dir: String): String =
+    graft.sources.GraftFs.artifact(s, dir, tag =>
+        s"target/graft-pack-deletes/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s2/$tag") { base =>
+      import s.implicits._
+      val objs = ContainerOps.containerTable(s, dir)
+      initBase(s, base, objs, ContainerOps.NumPacks)          // snapshot 0
+      deleteIds(s, base, objs.map(_._1).filter(_ % 10 == 3L)) // snapshot 1
+      compact(s, base, ContainerOps.NumPacks)                 // snapshot 2 (physical drop)
+      vacuum(s, base)
     }
-    base
-  }
 
   /** DELETE path, oracle-checked end-to-end: ingest → tombstone →
     * compact → vacuum, then the surviving store must parse to exactly
@@ -1363,22 +1359,14 @@ ${ContainerOps.containerOracleBaseForStore}
     * delta NOT subtracted by its own tombstone). Built once per scale
     * dir behind the fingerprint guard.
     */
-  def ensureUpsertStore(s: SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-pack-upserts/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s1/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        import s.implicits._
-        val objs = ContainerOps.containerTable(s, dir)
-        initBase(s, base, objs, ContainerOps.NumPacks)                    // snapshot 0
-        upsert(s, base, ContainerOps.containerTableV2(s, dir).filter(_._1 % 10 == 3L)) // snapshot 1
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
+  def ensureUpsertStore(s: SparkSession, dir: String): String =
+    graft.sources.GraftFs.artifact(s, dir, tag =>
+        s"target/graft-pack-upserts/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s1/$tag") { base =>
+      import s.implicits._
+      val objs = ContainerOps.containerTable(s, dir)
+      initBase(s, base, objs, ContainerOps.NumPacks)                    // snapshot 0
+      upsert(s, base, ContainerOps.containerTableV2(s, dir).filter(_._1 % 10 == 3L)) // snapshot 1
     }
-    base
-  }
 
   /** Atomic UPSERT, oracle-checked end-to-end: ingest → one-publish
     * replace of the ≡3 (mod 10) ids with v2 payloads → live scan. DuckDB
@@ -1411,26 +1399,19 @@ ORDER BY media_id"""),
     * dir behind the fingerprint guard.
     */
   def ensureMetaStore(s: SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-pack-meta/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s2zm/$tag")
     def metaOf(objs: Dataset[(Long, Array[Byte])]): org.apache.spark.sql.DataFrame = {
       import s.implicits._
       objs.map { case (id, b) => ContainerOps.ContainerParser.parse(id, b) }
         .toDF().select("media_id", "format", "sample_rate", "n_bytes")
     }
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        import s.implicits._
-        val v1 = ContainerOps.containerTable(s, dir)
-        initBase(s, base, v1, ContainerOps.NumPacks, meta = Some(metaOf(v1)))    // snapshot 0
-        val v2 = ContainerOps.containerTableV2(s, dir).filter(_._1 % 10 == 3L)
-        upsert(s, base, v2, meta = Some(metaOf(v2)))                             // snapshot 1
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
+    graft.sources.GraftFs.artifact(s, dir, tag =>
+        s"target/graft-pack-meta/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s2zm/$tag") { base =>
+      import s.implicits._
+      val v1 = ContainerOps.containerTable(s, dir)
+      initBase(s, base, v1, ContainerOps.NumPacks, meta = Some(metaOf(v1)))    // snapshot 0
+      val v2 = ContainerOps.containerTableV2(s, dir).filter(_._1 % 10 == 3L)
+      upsert(s, base, v2, meta = Some(metaOf(v2)))                             // snapshot 1
     }
-    base
   }
 
   /** Metadata-pruned scan, oracle-checked end-to-end: "the 16 kHz+ WAVs"
@@ -1472,34 +1453,26 @@ ${ContainerOps.containerOracleBaseV2ForStore}
     * guard; divergence refusal, drop refusal, and parent-vacuum
     * protection are PackBranchSpec's job at spec scale.
     */
-  def ensureBranchStore(s: SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-pack-branch/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        import s.implicits._
-        val objs = ContainerOps.containerTable(s, dir)
-        val ids = objs.map(_._1)
-        val (lo, hi) = (ids.agg(min("value")).head.getLong(0), ids.agg(max("value")).head.getLong(0))
-        val c1 = lo + (hi - lo) * 6 / 10
-        val c2 = lo + (hi - lo) * 8 / 10
-        initBase(s, base, objs.filter(_._1 <= c1), ContainerOps.NumPacks)  // main snap 0
-        createBranch(s, base, "ingest")                                    // branch @ fork 0
-        appendDelta(s, branchBase(base, "ingest"),
-          objs.filter(o => o._1 > c1 && o._1 <= c2))                       // branch-only delta
-        mergeBranch(s, base, "ingest")                                     // main snap 1 (ff)
-        appendDelta(s, base, objs.filter(_._1 > c2))                       // main snap 2
-        compact(s, base, ContainerOps.NumPacks)                            // main snap 3
-        vacuum(s, base, retainSnapshots = 1, orphanGraceMs = 0L)           // expire 0-2
-        dropBranch(s, base, "ingest")                                      // refs rehomed: clean
-        vacuum(s, base, retainSnapshots = 1, orphanGraceMs = 0L)           // sweep released dirs
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
+  def ensureBranchStore(s: SparkSession, dir: String): String =
+    graft.sources.GraftFs.artifact(s, dir, tag =>
+        s"target/graft-pack-branch/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}/$tag") { base =>
+      import s.implicits._
+      val objs = ContainerOps.containerTable(s, dir)
+      val ids = objs.map(_._1)
+      val (lo, hi) = (ids.agg(min("value")).head.getLong(0), ids.agg(max("value")).head.getLong(0))
+      val c1 = lo + (hi - lo) * 6 / 10
+      val c2 = lo + (hi - lo) * 8 / 10
+      initBase(s, base, objs.filter(_._1 <= c1), ContainerOps.NumPacks)  // main snap 0
+      createBranch(s, base, "ingest")                                    // branch @ fork 0
+      appendDelta(s, branchBase(base, "ingest"),
+        objs.filter(o => o._1 > c1 && o._1 <= c2))                       // branch-only delta
+      mergeBranch(s, base, "ingest")                                     // main snap 1 (ff)
+      appendDelta(s, base, objs.filter(_._1 > c2))                       // main snap 2
+      compact(s, base, ContainerOps.NumPacks)                            // main snap 3
+      vacuum(s, base, retainSnapshots = 1, orphanGraceMs = 0L)           // expire 0-2
+      dropBranch(s, base, "ingest")                                      // refs rehomed: clean
+      vacuum(s, base, retainSnapshots = 1, orphanGraceMs = 0L)           // sweep released dirs
     }
-    base
-  }
 
   /** Branch lifecycle end-to-end under the full-container oracle: data
     * staged on a branch, fast-forward-merged, compacted into main, the

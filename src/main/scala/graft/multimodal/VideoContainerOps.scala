@@ -240,33 +240,15 @@ object VideoContainerOps {
     * re-encode and are dropped).
     */
   def ensureEncodedVideoObjects(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-video-encoded/${ContainerOps.payloadFingerprint}/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        videoTable(s, dir).foreachPartition { it: Iterator[(Long, Array[Byte])] =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          it.foreach { case (id, payload) =>
-            val parsed = VideoParser.parse(id, payload)
-            if (parsed.error.isEmpty && payload.length >= BodyOffset) {
-              val body = java.util.Arrays.copyOfRange(payload, BodyOffset, payload.length)
-              encodeVideo(parsed, body) match {
-                case Right(bytes) =>
-                  val p = new org.apache.hadoop.fs.Path(s"$base/m$id.bin")
-                  val fs = p.getFileSystem(conf)
-                  val out = fs.create(p, true)
-                  try out.write(bytes) finally out.close()
-                case Left(_) => () // quarantined
-              }
-            }
-          }
-        }
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
-    }
-    base
+    import s.implicits._
+    ContainerOps.exportObjects(s, dir, "target/graft-video-encoded",
+      videoTable(s, dir).flatMap { case (id, payload) =>
+        val parsed = VideoParser.parse(id, payload)
+        if (parsed.error.isEmpty && payload.length >= BodyOffset) {
+          val body = java.util.Arrays.copyOfRange(payload, BodyOffset, payload.length)
+          encodeVideo(parsed, body).toOption.map(id -> _) // Left: quarantined
+        } else None
+      })
   }
 
   /** The video ENCODE round-trip through the object store, mirroring
@@ -362,19 +344,11 @@ object VideoContainerOps {
     * the image/audio corpus, and the SAME video oracle must hold through
     * the packed layout. Layout and modality are orthogonal axes.
     */
-  def ensureVideoPack(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-video-pack/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s2/$tag")
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        graft.sources.GraftFs.deleteRecursively(s, base)
-        PackStore.initBase(s, base, videoTable(s, dir), ContainerOps.NumPacks)
-        graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
-      }
+  def ensureVideoPack(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.sources.GraftFs.artifact(s, dir, tag =>
+        s"target/graft-video-pack/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s2/$tag") {
+      PackStore.initBase(s, _, videoTable(s, dir), ContainerOps.NumPacks)
     }
-    base
-  }
 
   val mmVideoPacked = QueryDef(
     "q_mm_video_packed",

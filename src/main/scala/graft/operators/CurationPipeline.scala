@@ -148,13 +148,9 @@ object CurationPipeline {
     * oracle-comparable against the original parquet.
     */
   private def documentsViaCsv(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val path = graft.sources.GraftFs.qualify(s, s"target/graft-e2e/$tag/documents_csv")
     val src = Tables.documents(s, dir)
-    synchronized {
-      if (!graft.sources.GraftFs.hasSuccess(s, path))
-        graft.sources.FormatSources.writeCsv(src, path)
-    }
+    val path = graft.sources.GraftFs.artifact(s, dir, tag => s"target/graft-e2e/$tag/documents_csv")(
+      graft.sources.FormatSources.writeCsv(src, _))
     graft.sources.FormatSources.readCsv(s, path, src.schema)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.{Tokenize, VectorOps}
+import graft.sources.GraftFs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1250,16 +1251,10 @@ object DedupQueries {
     * the dir name so a constant change can never serve a stale prefix.
     */
   private[graft] def containmentPrefixPersisted(s: SparkSession, dir: String,
-      num: Int = 4, den: Int = 5): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-dedup/$tag/cprefix_${num}_$den")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
+      num: Int = 4, den: Int = 5): DataFrame =
+    GraftFs.persisted(s, dir, tag => s"target/graft-dedup/$tag/cprefix_${num}_$den") {
       containmentPrefixTable(containmentSets(s, dir), num, den)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
     }
-    s.read.parquet(base)
-  }
 
   private[graft] def containmentSets(s: SparkSession, dir: String): DataFrame =
     docTokensHashed(s, dir).withColumn("sz", size(col("toksh")))
@@ -1390,15 +1385,7 @@ object DedupQueries {
     * engine-exact) and writes to builder scratch; later calls read back.
     */
   private[graft] def clusterLabelsPersisted(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val tag = graft.sources.GraftFs.scaleTag(s, dir)
-      val base = graft.sources.GraftFs.qualify(s, s"target/graft-dedup/$tag/cluster_labels")
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        clusterLabelsFresh(s, dir)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
-      }
-      s.read.parquet(base)
-    }
+    GraftFs.persisted(s, dir, tag => s"target/graft-dedup/$tag/cluster_labels")(clusterLabelsFresh(s, dir))
 
   val dedupCanonical = QueryDef(
     "q_dedup_canonical",

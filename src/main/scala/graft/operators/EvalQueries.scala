@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.Tokenize
+import graft.sources.GraftFs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,15 +76,7 @@ object EvalQueries {
     * `sbt test`.
     */
   private[graft] def gradeTablePersisted(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val tag = graft.sources.GraftFs.scaleTag(s, dir)
-      val base = graft.sources.GraftFs.qualify(s, s"target/graft-eval/$tag/grades")
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        gradeTableFresh(s, dir)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
-      }
-      s.read.parquet(base)
-    }
+    relPersisted(s, dir, "grades")(gradeTableFresh(s, dir))
 
   /** The hybrid RUN FILE persisted per scale dir — IR evaluation's other
     * standard artifact (trec_eval scores a materialized run file against
@@ -96,19 +89,9 @@ object EvalQueries {
     * driver-side recomputations re-rank fresh and re-prove it every
     * `sbt test`.
     */
-  private def runFilePersisted(s: SparkSession, dir: String, name: String)
-      (fresh: => DataFrame): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s, s"target/graft-eval/$tag/${name}_run")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-      fresh.select("query_id", "rank", "doc_id")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
-    }
-    s.read.parquet(base)
-  }
-
   private[graft] def hybridRunPersisted(s: SparkSession, dir: String): DataFrame =
-    runFilePersisted(s, dir, "hybrid")(SearchQueries.textHybrid.query(s, dir))
+    relPersisted(s, dir, "hybrid_run")(
+      SearchQueries.textHybrid.query(s, dir).select("query_id", "rank", "doc_id"))
 
   /** The two ablation run files — the same materialize-once contract for
     * the hybrid's component systems: bm25-only is bm25ScoresStage's
@@ -135,19 +118,12 @@ object EvalQueries {
       .select("query_id", "rank", "doc_id")
   }
 
-  /** Generic per-scale-dir persisted relation — the same materialize-once
-    * contract as the run files, for eval artifacts whose schema isn't the
-    * (query_id, rank, doc_id) run shape.
+  /** Per-scale-dir persisted eval relation (grades, run files, truth
+    * and found pair sets) under target/graft-eval.
     */
   private def relPersisted(s: SparkSession, dir: String, name: String)
-      (fresh: => DataFrame): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s, s"target/graft-eval/$tag/$name")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-      fresh.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
-    }
-    s.read.parquet(base)
-  }
+      (fresh: => DataFrame): DataFrame =
+    GraftFs.persisted(s, dir, tag => s"target/graft-eval/$tag/$name")(fresh)
 
   /** The dedup-eval ground truth (exact J ≥ 0.5 pairs) persisted per
     * corpus snapshot — the dedup family's qrels: a deployment derives the
@@ -166,10 +142,10 @@ object EvalQueries {
       DedupQueries.nearDupPairsStage(s, dir).select("doc_id1", "doc_id2"))
 
   private[graft] def bm25RunPersisted(s: SparkSession, dir: String): DataFrame =
-    runFilePersisted(s, dir, "bm25")(bm25RunFresh(s, dir))
+    relPersisted(s, dir, "bm25_run")(bm25RunFresh(s, dir))
 
   private[graft] def vecRunPersisted(s: SparkSession, dir: String): DataFrame =
-    runFilePersisted(s, dir, "vec")(vecRunFresh(s, dir))
+    relPersisted(s, dir, "vec_run")(vecRunFresh(s, dir))
 
   /** recall@5 of the three registered ANN indexes against brute-force
     * ground truth IN EACH INDEX'S OWN METRIC — q_ann_lsh and q_ann_ivf

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.VectorOps
+import graft.sources.GraftFs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -398,19 +399,11 @@ object GraphQueries {
     * change can never serve stale labels.
     */
   private[graft] def componentLabelsPersisted(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    synchronized {
-      val tag = graft.sources.GraftFs.scaleTag(s, dir)
-      val base = graft.sources.GraftFs.qualify(s,
-        s"target/graft-ivf/$tag/components_cc1_p${VectorQueries.GraphLshTables}x${VectorQueries.GraphLshBits}r${VectorQueries.GraphLshRadius}")
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        val e = Tables.embeddings(s, dir)
-        DedupQueries.connectedComponents(
-            e.select(col("vec_id").as("doc_id")),
-            lshUndirectedEdges(s, dir)
-              .select(col("a").as("doc_id1"), col("b").as("doc_id2")))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
-      }
-      s.read.parquet(base)
+    GraftFs.persisted(s, dir, tag =>
+        s"target/graft-ivf/$tag/components_cc1_p${VectorQueries.GraphLshTables}x${VectorQueries.GraphLshBits}r${VectorQueries.GraphLshRadius}") {
+      DedupQueries.connectedComponents(
+        Tables.embeddings(s, dir).select(col("vec_id").as("doc_id")),
+        lshUndirectedEdges(s, dir).select(col("a").as("doc_id1"), col("b").as("doc_id2")))
     }
 
   /** Connected components of the persisted portable-LSH kNN graph — the
@@ -744,15 +737,9 @@ object GraphQueries {
     * every round.
     */
   private[graft] def dbscanCoreLabelsPersisted(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    synchronized {
-      val tag = graft.sources.GraftFs.scaleTag(s, dir)
-      val base = graft.sources.GraftFs.qualify(s,
-        s"target/graft-ivf/$tag/dbscan_db1_mp${DbscanMinPts}_p${VectorQueries.GraphLshTables}x${VectorQueries.GraphLshBits}r${VectorQueries.GraphLshRadius}")
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        dbscanCoreLabels(lshUndirectedEdges(s, dir).localCheckpoint(), DbscanMinPts)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
-      }
-      s.read.parquet(base)
+    GraftFs.persisted(s, dir, tag =>
+        s"target/graft-ivf/$tag/dbscan_db1_mp${DbscanMinPts}_p${VectorQueries.GraphLshTables}x${VectorQueries.GraphLshBits}r${VectorQueries.GraphLshRadius}") {
+      dbscanCoreLabels(lshUndirectedEdges(s, dir).localCheckpoint(), DbscanMinPts)
     }
 
   /** The core-cluster label build: degree census → core filter (degree ≥

@@ -158,12 +158,15 @@ object MiningQueries {
     * persisted ≡ fresh.
     */
   private[graft] def minePairsPersisted(s: org.apache.spark.sql.SparkSession, dir: String):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-mine/$tag/pairs_v2_i${MinItemSup}_p$MinPairSup")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-      graft.sources.GraftFs.deleteRecursively(s, base)
+      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val base = minedStore(s, dir)
+    (s.read.parquet(s"$base/pairs"), s.read.parquet(s"$base/sup"), s.read.parquet(s"$base/nb"))
+  }
+
+  /** The store dir behind [[minePairsPersisted]], built on first use. */
+  private def minedStore(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.sources.GraftFs.artifact(s, dir,
+        tag => s"target/graft-mine/$tag/pairs_v2_i${MinItemSup}_p$MinPairSup") { base =>
       val bi = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -182,23 +185,15 @@ object MiningQueries {
         .agg(count(lit(1)).as("c"))
         .filter(col("c") >= MinPairSup)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$base/pairs")
-      graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
     }
-    (s.read.parquet(s"$base/pairs"), s.read.parquet(s"$base/sup"), s.read.parquet(s"$base/nb"))
-  }
 
   /** The persisted distinct basket-item grain from the same store — the
     * input the guarded twin re-reads instead of re-paying the lineitem
     * scan + distinct shuffle (oracle still derives from raw lineitem, so
     * the hash-compare proves persisted ≡ fresh).
     */
-  private[graft] def basketItemsPersisted(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    minePairsPersisted(s, dir)
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-mine/$tag/pairs_v2_i${MinItemSup}_p$MinPairSup")
-    s.read.parquet(s"$base/bi")
-  }
+  private[graft] def basketItemsPersisted(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(s"${minedStore(s, dir)}/bi")
 
   /** Association rules from the frequent pairs (both directions of every
     * pair), with confidence = sup(pair)/sup(antecedent) and lift =

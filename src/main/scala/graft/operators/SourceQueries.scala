@@ -18,20 +18,16 @@ import org.apache.spark.sql.functions._
   */
 object SourceQueries {
 
-  private def scratch(s: SparkSession, dir: String, fmt: String): String =
-    GraftFs.qualify(s, s"target/graft-formats/${GraftFs.scaleTag(s, dir)}/$fmt")
-
-  private def ensure(s: SparkSession, path: String)(write: => Unit): Unit = synchronized {
-    if (!GraftFs.hasSuccess(s, path)) write
-  }
+  /** Path of scratch copy `name`, written once per scale dir by `write`. */
+  private def scratch(s: SparkSession, dir: String, name: String)(write: String => Unit): String =
+    GraftFs.artifact(s, dir, tag => s"target/graft-formats/$tag/$name")(write)
 
   /** CSV scan: nation round-tripped through the CSV sink+source. */
   val scanCsv = QueryDef(
     "q_scan_csv",
     (s, dir) => {
       val src = Tables.nation(s, dir)
-      val path = scratch(s, dir, "nation_csv")
-      ensure(s, path)(FormatSources.writeCsv(src, path))
+      val path = scratch(s, dir, "nation_csv")(FormatSources.writeCsv(src, _))
       FormatSources.readCsv(s, path, src.schema)
         .orderBy("n_nationkey")
     },
@@ -45,8 +41,7 @@ object SourceQueries {
     "q_scan_json",
     (s, dir) => {
       val src = Tables.supplier(s, dir)
-      val path = scratch(s, dir, "supplier_json")
-      ensure(s, path)(FormatSources.writeJson(src, path))
+      val path = scratch(s, dir, "supplier_json")(FormatSources.writeJson(src, _))
       FormatSources.readJson(s, path, src.schema)
         .orderBy("s_suppkey")
     },
@@ -60,8 +55,7 @@ object SourceQueries {
     "q_scan_orc",
     (s, dir) => {
       val src = Tables.customer(s, dir)
-      val path = scratch(s, dir, "customer_orc")
-      ensure(s, path)(FormatSources.writeOrc(src, path))
+      val path = scratch(s, dir, "customer_orc")(FormatSources.writeOrc(src, _))
       FormatSources.readOrc(s, path)
         .orderBy("c_custkey")
     },
@@ -82,19 +76,17 @@ object SourceQueries {
   val scanCompacted = QueryDef(
     "q_scan_compacted",
     (s, dir) => {
-      val fragPath = scratch(s, dir, "orders_fragmented")
-      val outPath = scratch(s, dir, "orders_compacted")
-      ensure(s, fragPath) {
+      val fragPath = scratch(s, dir, "orders_fragmented") { p =>
         Tables.orders(s, dir).repartition(64)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(fragPath)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
       }
-      ensure(s, outPath) {
+      val outPath = scratch(s, dir, "orders_compacted") { p =>
         val frags = GraftFs.listFiles(s, fragPath)
           .filter(_.getPath.getName.endsWith(".parquet"))
         val fragFiles = frags.length
         val bytes = frags.map(_.getLen).sum
         val target = math.max(1L, bytes / 8)
-        val nOut = FormatSources.compactParquet(s, fragPath, outPath, targetBytes = target)
+        val nOut = FormatSources.compactParquet(s, fragPath, p, targetBytes = target)
         require(nOut == math.ceil(bytes.toDouble / target).toInt && nOut < fragFiles,
           s"compaction contract violated: $fragFiles files / $bytes bytes -> $nOut files")
       }
@@ -123,17 +115,15 @@ object SourceQueries {
   val scanEvolved = QueryDef(
     "q_scan_evolved",
     (s, dir) => {
-      val gen0 = scratch(s, dir, "orders_gen0")
-      val gen1 = scratch(s, dir, "orders_gen1")
-      ensure(s, gen0) {
+      val gen0 = scratch(s, dir, "orders_gen0") { p =>
         Tables.orders(s, dir).filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_custkey", "o_totalprice")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(gen0)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
       }
-      ensure(s, gen1) {
+      val gen1 = scratch(s, dir, "orders_gen1") { p =>
         Tables.orders(s, dir).filter(col("o_orderkey") % 2 === 1)
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(gen1)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
       }
       s.read.option("mergeSchema", "true").parquet(gen0, gen1)
         .orderBy("o_orderkey")

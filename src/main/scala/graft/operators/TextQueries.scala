@@ -1118,16 +1118,11 @@ object TextQueries {
     * hash-proven every driver run; WinnowSpec pins row equality too.
     */
   private[graft] def winnowPairsPersisted(s: org.apache.spark.sql.SparkSession, dir: String,
-      k: Int = 3, w: Int = 4, dfCap: Int = 16, minShared: Int = 2): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-winnow/$tag/pairs_k${k}w${w}c${dfCap}m$minShared")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
+      k: Int = 3, w: Int = 4, dfCap: Int = 16, minShared: Int = 2): DataFrame =
+    graft.sources.GraftFs.persisted(s, dir,
+        tag => s"target/graft-winnow/$tag/pairs_k${k}w${w}c${dfCap}m$minShared") {
       winnowPairsOn(Tables.documents(s, dir).select("doc_id", "text"), k, w, dfCap, minShared)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
     }
-    s.read.parquet(base)
-  }
 
   private[graft] def winnowSpansOn(docs: DataFrame, k: Int = 3, w: Int = 4,
       dfCap: Int = 16, minShared: Int = 2,

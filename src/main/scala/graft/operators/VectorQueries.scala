@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.{VectorCentroid, VectorOps}
+import graft.sources.GraftFs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -311,15 +312,11 @@ object VectorQueries {
     * writes to builder scratch under target/; subsequent calls read the
     * tiny parquet (k rows) straight back.
     */
-  private[graft] def ivfCodebook(s: SparkSession, dir: String): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s, s"target/graft-ivf/$tag/codebook_of2") // of2 = order-free scaled-long means (r9)
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
+  private[graft] def ivfCodebook(s: SparkSession, dir: String): DataFrame =
+    // of2 = order-free scaled-long means (r9)
+    GraftFs.persisted(s, dir, tag => s"target/graft-ivf/$tag/codebook_of2") {
       ivfCentroids(s, dir, iters = 2).coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
     }
-    s.read.parquet(base)
-  }
 
   /** IVF-style ANN: k-means-refined coarse quantizer (per-label seed + 2
     * Lloyd iterations, `ivfCentroids`), **2-way multi-assignment** (every
@@ -614,17 +611,12 @@ object VectorQueries {
     * rows) back.
     */
   private[operators] def subCodebookPersisted(s: SparkSession, dir: String,
-      k2: Int): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
+      k2: Int): DataFrame =
     // of2: portable seed + order-free means (r9)
-    val base = graft.sources.GraftFs.qualify(s, s"target/graft-ivf/$tag/subcodebook_of2_k$k2")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
+    GraftFs.persisted(s, dir, tag => s"target/graft-ivf/$tag/subcodebook_of2_k$k2") {
       subCodebook(Tables.embeddings(s, dir).select("vec_id", "label", "embedding"),
-          k2, iters = 2)
-        .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
+          k2, iters = 2).coalesce(1)
     }
-    s.read.parquet(base)
-  }
 
   /** IVF candidate pairs for the within-label kNN graph: every vector
     * joins the inverted lists of its `assign` nearest sub-cells (multi-
@@ -821,18 +813,12 @@ object VectorQueries {
     * name so a constant change can never serve a stale graph.
     */
   private[graft] def lshKnnEdgesPersisted(s: SparkSession, dir: String,
-      tables: Int = GraphLshTables, bits: Int = GraphLshBits): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-ivf/$tag/lshknn_p${tables}x${bits}r$GraphLshRadius")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
+      tables: Int = GraphLshTables, bits: Int = GraphLshBits): DataFrame =
+    GraftFs.persisted(s, dir, tag => s"target/graft-ivf/$tag/lshknn_p${tables}x${bits}r$GraphLshRadius") {
       val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
       knnGraphFromCandidatesSym(e,
           lshGraphCandidatesUndirected(e, tables, bits, GraphLshRadius), 3)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
     }
-    s.read.parquet(base)
-  }
 
   /** Full within-label kNN graph from hyperplane-LSH candidates — the
     * corpus×corpus graph (every vector, not a query slice) with NO
@@ -1078,15 +1064,8 @@ object VectorQueries {
     * exhaustive-edge CC and persisted ≡ fresh every `sbt test`.
     */
   private[graft] def vecClusterLabelsPersisted(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val tag = graft.sources.GraftFs.scaleTag(s, dir)
-      val base = graft.sources.GraftFs.qualify(s, s"target/graft-ivf/$tag/vec_cluster_labels")
-      if (!graft.sources.GraftFs.hasSuccess(s, base)) {
-        vecClusterFromEmbeddings(
-            Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
-      }
-      s.read.parquet(base)
+    GraftFs.persisted(s, dir, tag => s"target/graft-ivf/$tag/vec_cluster_labels") {
+      vecClusterFromEmbeddings(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
     }
 
   val vecCluster = QueryDef(
@@ -1189,16 +1168,10 @@ object VectorQueries {
     * so persisted ≡ fresh stays hash-proven. [[pqCodebookFresh]] keeps
     * the inline derivation (spec pin + the residual-family path).
     */
-  private[graft] def pqCodebook(s: SparkSession, dir: String): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-ivf/$tag/pqcodebook_of2_pf$PqPlaneFamily")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
+  private[graft] def pqCodebook(s: SparkSession, dir: String): DataFrame =
+    GraftFs.persisted(s, dir, tag => s"target/graft-ivf/$tag/pqcodebook_of2_pf$PqPlaneFamily") {
       pqCodebookFresh(s, dir).coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
     }
-    s.read.parquet(base)
-  }
 
   private[graft] def pqCodebookFresh(s: SparkSession, dir: String): DataFrame =
     pqCodebookFromSubs(
@@ -1216,31 +1189,18 @@ object VectorQueries {
     * (min_by/array_sort with explicit tiebreaks); the oracle replays
     * encode + assignment from raw embeddings every driver run.
     */
-  private[graft] def pqCodesPersisted(s: SparkSession, dir: String): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-ivf/$tag/pqcodes_pf$PqPlaneFamily")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
+  private[graft] def pqCodesPersisted(s: SparkSession, dir: String): DataFrame =
+    GraftFs.persisted(s, dir, tag => s"target/graft-ivf/$tag/pqcodes_pf$PqPlaneFamily") {
       pqCodes(Tables.embeddings(s, dir).select("vec_id", "embedding"), pqCodebook(s, dir))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
     }
-    s.read.parquet(base)
-  }
 
-  private[graft] def coarseAssignPersisted(s: SparkSession, dir: String,
-      k: Int): DataFrame = synchronized {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    val base = graft.sources.GraftFs.qualify(s,
-      s"target/graft-ivf/$tag/coarse_assign_of2_a$k")
-    if (!graft.sources.GraftFs.hasSuccess(s, base)) {
+  private[graft] def coarseAssignPersisted(s: SparkSession, dir: String, k: Int): DataFrame =
+    GraftFs.persisted(s, dir, tag => s"target/graft-ivf/$tag/coarse_assign_of2_a$k") {
       val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
       val centroidArr = ivfCodebook(s, dir)
         .agg(collect_list(struct(col("c_id"), col("c_emb"))).as("cents"))
       nearestCells(e, "embedding", "vec_id", centroidArr, k)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
     }
-    s.read.parquet(base)
-  }
 
   /** PQ codes: per (vec, subspace) the L2-nearest codebook centroid —
     * 64 floats compress to 8 5-bit codes (51× smaller). Encoding joins
@@ -1430,21 +1390,15 @@ object VectorQueries {
       // a fiction — first call per scale dir builds and writes, every
       // later run reads the snapshot back (measured: 11.7 s recomputing
       // vs the true incremental cost after this change).
-      val tag = graft.sources.GraftFs.scaleTag(s, dir)
       // construction parameters are part of the artifact PATH: changing
       // tables/bits/radius, k, or the slice rule must miss the snapshot
       // and rebuild, never silently reuse stale state (there is no
       // content revalidation analogous to bucketLayoutValid here)
       val fp = s"pp1t${GraphLshTables}b${GraphLshBits}r${GraphLshRadius}k3s5" // pp1 = portable-plane family v1 (r9): a family change must miss the snapshot
-      val graphBase = graft.sources.GraftFs.qualify(s, s"target/graft-knn/$tag/old_graph_lsh_$fp")
-      synchronized {
-        if (!graft.sources.GraftFs.hasSuccess(s, graphBase)) {
-          knnGraphFromCandidates(old,
-              lshGraphCandidates(old, GraphLshTables, GraphLshBits, GraphLshRadius), 3)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(graphBase)
-        }
+      val oldGraph = GraftFs.persisted(s, dir, tag => s"target/graft-knn/$tag/old_graph_lsh_$fp") {
+        knnGraphFromCandidates(old,
+          lshGraphCandidates(old, GraphLshTables, GraphLshBits, GraphLshRadius), 3)
       }
-      val oldGraph = s.read.parquet(graphBase)
       // home buckets depend on tables/bits and the corpus slice only
       // (radius shapes the probe fan-out at query time, k the merge)
       val bucketsFp = s"pp1t${GraphLshTables}b${GraphLshBits}s5"
@@ -1598,7 +1552,6 @@ object VectorQueries {
     "q_ann_ivfpq_incr",
     (s, dir) => {
       val e = Tables.embeddings(s, dir).select(col("label"), col("vec_id"), col("embedding"))
-      val tag = graft.sources.GraftFs.scaleTag(s, dir)
       // one fingerprint directory for the whole frozen index family: any
       // construction-parameter change (Lloyd iters, PQ seed, assignment
       // fan-out, slice rule) relocates ALL artifacts and rebuilds them
@@ -1609,14 +1562,8 @@ object VectorQueries {
       val isNew = col("vec_id") % sliceMod === 0
       val old = e.filter(!isNew)
       val fresh = e.filter(isNew)
-      def persisted(name: String)(build: => DataFrame): DataFrame = {
-        val base = graft.sources.GraftFs.qualify(s, s"target/graft-ivfpq/$tag/$fp/$name")
-        synchronized {
-          if (!graft.sources.GraftFs.hasSuccess(s, base))
-            build.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(base)
-        }
-        s.read.parquet(base)
-      }
+      def persisted(name: String)(build: => DataFrame): DataFrame =
+        GraftFs.persisted(s, dir, tag => s"target/graft-ivfpq/$tag/$fp/$name")(build)
       // frozen-at-index-build artifacts, trained on the standing corpus only
       val centroids = persisted("centroids") { coarseCentroidsOf(old, iters = lloydIters).coalesce(1) }
       val codebook = persisted("codebook") {

@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.Tables
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
 
 /** Bucketed table layouts — the co-located-join physical design for 100 TB
   * fact⋈dim work (SURVEY.md §4.2): both sides pre-hashed into the same
@@ -21,10 +22,6 @@ object BucketedTables {
   def ordersTable(dir: String): String = s"graft_orders_bucketed_${tag(dir)}"
   def customerTable(dir: String): String = s"graft_customer_bucketed_${tag(dir)}"
 
-  /** Create (once per session) orders + customer bucketed by the join key
-    * into 8 buckets, sorted within buckets — the layout that lets the
-    * planner elide both join-side exchanges (asserted in PlanShapeSpec).
-    */
   /** The sorted-scan invariant: AT MOST one parquet part file per bucket
     * (bucket id encoded as the `_0000N` filename suffix; a bucket whose
     * key values are absent writes no file — e.g. 5 languages hashed into 8
@@ -43,7 +40,33 @@ object BucketedTables {
       ids.forall(i => i >= 0 && i < 8)
   }
 
-  def ensure(s: SparkSession, dir: String): Unit = synchronized {
+  /** Create (once per session) orders + customer bucketed by the join key
+    * into 8 buckets, sorted within buckets — the layout that lets the
+    * planner elide both join-side exchanges (asserted in PlanShapeSpec).
+    */
+  def ensure(s: SparkSession, dir: String): Unit = {
+    ensureBucketed(s, dir, ordersTable(dir), "orders", Tables.orders(s, dir),
+      Seq("o_custkey"), Seq("o_custkey"))
+    ensureBucketed(s, dir, customerTable(dir), "customer", Tables.customer(s, dir),
+      Seq("c_custkey"), Seq("c_custkey"))
+  }
+
+  /** Register `table` (8 buckets on `clusterBy`, sorted by `sortBy`) over
+    * the layout at target/graft-bucketed/<scaleTag>/`name`, once per
+    * session. External tables with explicit paths: the in-memory catalog
+    * forgets tables between sessions but their files survive, and a
+    * managed saveAsTable refuses a pre-existing location.
+    *
+    * The write repartitions on the bucket key first → exactly one file
+    * per bucket; Spark only honors within-bucket sortBy order at read
+    * time (eliding the join-side Sorts) when a bucket is a single file.
+    * If the bucket files survive from an earlier session, they are
+    * re-registered with bucket-spec DDL — after re-proving the
+    * one-file-per-bucket invariant; a stale/partial layout is wiped and
+    * rewritten instead of trusted.
+    */
+  private def ensureBucketed(s: SparkSession, dir: String, table: String, name: String,
+      src: => DataFrame, clusterBy: Seq[String], sortBy: Seq[String]): Unit = synchronized {
     // Sound because EVERY bucketed layout this session scans went through
     // bucketLayoutValid below (one file per bucket). It must stay set for
     // the whole session: Spark reads it at physical-planning time, which
@@ -51,39 +74,25 @@ object BucketedTables {
     // them — restoring it right after ensure() would silently re-insert
     // the sorts this layout exists to elide.
     s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    // external tables with explicit paths: the in-memory catalog forgets
-    // tables between sessions but their files survive, and a managed
-    // saveAsTable refuses a pre-existing location
-    def scratch(name: String) =
-      GraftFs.qualify(s, s"target/graft-bucketed/${GraftFs.scaleTag(s, dir)}/$name")
-    // repartition on the bucket key first → exactly one file per bucket;
-    // Spark only honors within-bucket sortBy order at read time (eliding
-    // the join-side Sorts) when a bucket is a single file. If the bucket
-    // files survive from an earlier session (the in-memory catalog does
-    // not), re-register them with bucket-spec DDL — after re-proving the
-    // one-file-per-bucket invariant; a stale/partial layout is wiped and
-    // rewritten instead of trusted.
-    def ensureOne(table: String, src: org.apache.spark.sql.DataFrame,
-        key: String, path: String): Unit =
-      if (!s.catalog.tableExists(table)) {
-        if (GraftFs.hasSuccess(s, path) && bucketLayoutValid(s, path)) {
-          s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING PARQUET
-                   |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-                   |LOCATION '$path'""".stripMargin)
-        } else {
-          GraftFs.deleteRecursively(s, path)
-          src.repartition(8, org.apache.spark.sql.functions.col(key))
-            .write
-            .bucketBy(8, key).sortBy(key)
-            .option("path", path)
-            .mode(SaveMode.Overwrite)
-            .saveAsTable(table)
-          require(bucketLayoutValid(s, path),
-            s"bucketed write at $path violated one-file-per-bucket; sorted scans would be wrong")
-        }
+    if (!s.catalog.tableExists(table)) {
+      val path = GraftFs.qualify(s, s"target/graft-bucketed/${GraftFs.scaleTag(s, dir)}/$name")
+      val df = src
+      if (GraftFs.hasSuccess(s, path) && bucketLayoutValid(s, path)) {
+        s.sql(s"""CREATE TABLE $table (${df.schema.toDDL}) USING PARQUET
+                 |CLUSTERED BY (${clusterBy.mkString(", ")}) SORTED BY (${sortBy.mkString(", ")}) INTO 8 BUCKETS
+                 |LOCATION '$path'""".stripMargin)
+      } else {
+        GraftFs.deleteRecursively(s, path)
+        df.repartition(8, clusterBy.map(col): _*)
+          .write
+          .bucketBy(8, clusterBy.head, clusterBy.tail: _*).sortBy(sortBy.head, sortBy.tail: _*)
+          .option("path", path)
+          .mode(SaveMode.Overwrite)
+          .saveAsTable(table)
+        require(bucketLayoutValid(s, path),
+          s"bucketed write at $path violated one-file-per-bucket; sorted scans would be wrong")
       }
-    ensureOne(ordersTable(dir), Tables.orders(s, dir), "o_custkey", scratch("orders"))
-    ensureOne(customerTable(dir), Tables.customer(s, dir), "c_custkey", scratch("customer"))
+    }
   }
 
   def ordersPkTable(dir: String): String = s"graft_orders_pk_bucketed_${tag(dir)}"
@@ -97,29 +106,9 @@ object BucketedTables {
     * parquet. Distinct from ensure()'s o_custkey layout, which serves the
     * customer-join family.
     */
-  def ensureOrdersPk(s: SparkSession, dir: String): Unit = synchronized {
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    val path = GraftFs.qualify(s, s"target/graft-bucketed/${GraftFs.scaleTag(s, dir)}/orders_pk")
-    val table = ordersPkTable(dir)
-    if (!s.catalog.tableExists(table)) {
-      val src = Tables.orders(s, dir)
-      if (GraftFs.hasSuccess(s, path) && bucketLayoutValid(s, path)) {
-        s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING PARQUET
-                 |CLUSTERED BY (o_orderkey) SORTED BY (o_orderkey) INTO 8 BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-      } else {
-        GraftFs.deleteRecursively(s, path)
-        src.repartition(8, org.apache.spark.sql.functions.col("o_orderkey"))
-          .write
-          .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .option("path", path)
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(table)
-        require(bucketLayoutValid(s, path),
-          s"bucketed write at $path violated one-file-per-bucket; sorted scans would be wrong")
-      }
-    }
-  }
+  def ensureOrdersPk(s: SparkSession, dir: String): Unit =
+    ensureBucketed(s, dir, ordersPkTable(dir), "orders_pk", Tables.orders(s, dir),
+      Seq("o_orderkey"), Seq("o_orderkey"))
 
   // v2: round-8 portable hash family (PortableHash) — the version suffix
   // invalidates any signature table persisted under the murmur3 family
@@ -139,30 +128,9 @@ object BucketedTables {
     * it. The caller passes the signature frame (sources stays independent
     * of the operator layer).
     */
-  def ensureSignatures(s: SparkSession, dir: String,
-      src: org.apache.spark.sql.DataFrame): Unit = synchronized {
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    val path = GraftFs.qualify(s, s"target/graft-bucketed/${GraftFs.scaleTag(s, dir)}/signatures_v3")
-    val table = signaturesTable(dir)
-    if (!s.catalog.tableExists(table)) {
-      if (GraftFs.hasSuccess(s, path) && bucketLayoutValid(s, path)) {
-        s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING PARQUET
-                 |CLUSTERED BY (lang, band, sig) SORTED BY (lang, band, sig) INTO 8 BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-      } else {
-        GraftFs.deleteRecursively(s, path)
-        src.repartition(8, org.apache.spark.sql.functions.col("lang"),
-            org.apache.spark.sql.functions.col("band"), org.apache.spark.sql.functions.col("sig"))
-          .write
-          .bucketBy(8, "lang", "band", "sig").sortBy("lang", "band", "sig")
-          .option("path", path)
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(table)
-        require(bucketLayoutValid(s, path),
-          s"bucketed write at $path violated one-file-per-bucket; sorted scans would be wrong")
-      }
-    }
-  }
+  def ensureSignatures(s: SparkSession, dir: String, src: DataFrame): Unit =
+    ensureBucketed(s, dir, signaturesTable(dir), "signatures_v3", src,
+      Seq("lang", "band", "sig"), Seq("lang", "band", "sig"))
 
   def eventsTable(dir: String): String = s"graft_events_bucketed_${tag(dir)}"
 
@@ -175,34 +143,12 @@ object BucketedTables {
     * ts is pre-converted to epoch micros (long) at write — the one-time
     * ingest cost that replaces a per-query conversion.
     */
-  def ensureEvents(s: SparkSession, dir: String): Unit = synchronized {
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    val path = GraftFs.qualify(s, s"target/graft-bucketed/${GraftFs.scaleTag(s, dir)}/events")
-    val table = eventsTable(dir)
-    if (!s.catalog.tableExists(table)) {
-      val src = Tables.events(s, dir).select(
-        org.apache.spark.sql.functions.col("event_id"),
-        org.apache.spark.sql.functions.expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-        org.apache.spark.sql.functions.col("user_id"),
-        org.apache.spark.sql.functions.col("event_type"),
-        org.apache.spark.sql.functions.col("value"))
-      if (GraftFs.hasSuccess(s, path) && bucketLayoutValid(s, path)) {
-        s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING PARQUET
-                 |CLUSTERED BY (user_id) SORTED BY (user_id, ts_us, event_id) INTO 8 BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-      } else {
-        GraftFs.deleteRecursively(s, path)
-        src.repartition(8, org.apache.spark.sql.functions.col("user_id"))
-          .write
-          .bucketBy(8, "user_id").sortBy("user_id", "ts_us", "event_id")
-          .option("path", path)
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(table)
-        require(bucketLayoutValid(s, path),
-          s"bucketed write at $path violated one-file-per-bucket; sorted scans would be wrong")
-      }
-    }
-  }
+  def ensureEvents(s: SparkSession, dir: String): Unit =
+    ensureBucketed(s, dir, eventsTable(dir), "events",
+      Tables.events(s, dir).select(
+        col("event_id"), expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
+        col("user_id"), col("event_type"), col("value")),
+      Seq("user_id"), Seq("user_id", "ts_us", "event_id"))
 
   def curatedTable(dir: String): String = s"graft_curated_bucketed_${tag(dir)}"
 
@@ -213,29 +159,8 @@ object BucketedTables {
     * passes the curated frame (the pipeline derives it from the CSV-
     * ingested corpus; sources stays independent of the operator layer).
     */
-  def ensureCurated(s: SparkSession, dir: String,
-      src: org.apache.spark.sql.DataFrame): Unit = synchronized {
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    val path = GraftFs.qualify(s, s"target/graft-bucketed/${GraftFs.scaleTag(s, dir)}/curated")
-    val table = curatedTable(dir)
-    if (!s.catalog.tableExists(table)) {
-      if (GraftFs.hasSuccess(s, path) && bucketLayoutValid(s, path)) {
-        s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING PARQUET
-                 |CLUSTERED BY (lang) SORTED BY (lang) INTO 8 BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-      } else {
-        GraftFs.deleteRecursively(s, path)
-        src.repartition(8, org.apache.spark.sql.functions.col("lang"))
-          .write
-          .bucketBy(8, "lang").sortBy("lang")
-          .option("path", path)
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(table)
-        require(bucketLayoutValid(s, path),
-          s"bucketed write at $path violated one-file-per-bucket; sorted scans would be wrong")
-      }
-    }
-  }
+  def ensureCurated(s: SparkSession, dir: String, src: DataFrame): Unit =
+    ensureBucketed(s, dir, curatedTable(dir), "curated", src, Seq("lang"), Seq("lang"))
 
   /** `fp` encodes the bucket-signature construction parameters (LSH
     * tables/bits, corpus slice rule): a parameter change must miss this
@@ -253,30 +178,9 @@ object BucketedTables {
     * caller passes the bucket frame (sources stays independent of the
     * operator layer's plane seeds).
     */
-  def ensureVecBuckets(s: SparkSession, dir: String, fp: String,
-      src: org.apache.spark.sql.DataFrame): Unit = synchronized {
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    val path = GraftFs.qualify(s, s"target/graft-bucketed/${GraftFs.scaleTag(s, dir)}/vecbuckets_$fp")
-    val table = vecBucketsTable(dir, fp)
-    if (!s.catalog.tableExists(table)) {
-      if (GraftFs.hasSuccess(s, path) && bucketLayoutValid(s, path)) {
-        s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING PARQUET
-                 |CLUSTERED BY (label, t, b) SORTED BY (label, t, b) INTO 8 BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-      } else {
-        GraftFs.deleteRecursively(s, path)
-        src.repartition(8, org.apache.spark.sql.functions.col("label"),
-            org.apache.spark.sql.functions.col("t"), org.apache.spark.sql.functions.col("b"))
-          .write
-          .bucketBy(8, "label", "t", "b").sortBy("label", "t", "b")
-          .option("path", path)
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(table)
-        require(bucketLayoutValid(s, path),
-          s"bucketed write at $path violated one-file-per-bucket; sorted scans would be wrong")
-      }
-    }
-  }
+  def ensureVecBuckets(s: SparkSession, dir: String, fp: String, src: DataFrame): Unit =
+    ensureBucketed(s, dir, vecBucketsTable(dir, fp), s"vecbuckets_$fp", src,
+      Seq("label", "t", "b"), Seq("label", "t", "b"))
 
   def documentsTable(dir: String): String = s"graft_documents_bucketed_${tag(dir)}"
 
@@ -287,27 +191,7 @@ object BucketedTables {
     * This is the 100 TB shape for corpora whose per-lang token dictionaries
     * are too large to broadcast — the layout replaces the broadcast.
     */
-  def ensureDocuments(s: SparkSession, dir: String): Unit = synchronized {
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    val path = GraftFs.qualify(s, s"target/graft-bucketed/${GraftFs.scaleTag(s, dir)}/documents")
-    val table = documentsTable(dir)
-    if (!s.catalog.tableExists(table)) {
-      val src = Tables.documents(s, dir)
-      if (GraftFs.hasSuccess(s, path) && bucketLayoutValid(s, path)) {
-        s.sql(s"""CREATE TABLE $table (${src.schema.toDDL}) USING PARQUET
-                 |CLUSTERED BY (lang) SORTED BY (lang) INTO 8 BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-      } else {
-        GraftFs.deleteRecursively(s, path)
-        src.repartition(8, org.apache.spark.sql.functions.col("lang"))
-          .write
-          .bucketBy(8, "lang").sortBy("lang")
-          .option("path", path)
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(table)
-        require(bucketLayoutValid(s, path),
-          s"bucketed write at $path violated one-file-per-bucket; sorted scans would be wrong")
-      }
-    }
-  }
+  def ensureDocuments(s: SparkSession, dir: String): Unit =
+    ensureBucketed(s, dir, documentsTable(dir), "documents", Tables.documents(s, dir),
+      Seq("lang"), Seq("lang"))
 }

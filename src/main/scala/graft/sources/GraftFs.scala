@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Filesystem plumbing through the Hadoop FileSystem API: layouts,
   * compaction, and incremental state live where the data lives — HDFS,
@@ -152,6 +152,36 @@ object GraftFs {
     dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-fp" + java.lang.Long.toHexString(h)
   }
 
+  /** Build-once artifact derived from the tables under scale dir `dir` —
+    * the one implementation of the cache every derived layout (codebooks,
+    * labels, pack stores, format round-trips) rides. The artifact lives
+    * at `path(scaleTag(s, dir))`, so a changed fixture listing relocates
+    * it and a stale copy is never read. Under a per-path JVM lock: with
+    * no `_SUCCESS` marker, any partial output is wiped, `build(base)`
+    * writes the artifact under `base`, and the marker lands last. A
+    * `build` that throws leaves no marker, so the next call rebuilds.
+    * Nested builds take their distinct path locks in dependency order.
+    * Returns the qualified `base`.
+    */
+  def artifact(s: SparkSession, dir: String, path: String => String)
+      (build: String => Unit): String = {
+    val base = qualify(s, path(scaleTag(s, dir)))
+    exclusiveLocks.computeIfAbsent("artifact:" + base, _ => new Object).synchronized {
+      if (!hasSuccess(s, base)) {
+        deleteRecursively(s, base)
+        try build(base)
+        catch { case e: Throwable => deleteRecursively(s, s"$base/_SUCCESS"); throw e }
+        writeSmallFileAtomic(s, s"$base/_SUCCESS", "done")
+      }
+    }
+    base
+  }
+
+  /** An [[artifact]] that is one parquet write of `df`, read back. */
+  def persisted(s: SparkSession, dir: String, path: String => String)
+      (df: => DataFrame): DataFrame =
+    s.read.parquet(artifact(s, dir, path)(df.write.mode(SaveMode.Overwrite).parquet(_)))
+
   /** Rename `from` to `to` without overwrite; false if the source is
     * missing or the destination exists — the one-winner claim primitive
     * (exactly one of N concurrent renamers of the same source succeeds).
@@ -206,8 +236,10 @@ object GraftFs {
 
   // In-process mutexes backing writeSmallFileExclusive on filesystems
   // whose create(overwrite=false) is check-then-act (the local FS): the
-  // same TOCTOU closing Delta's LogStore does per-FS. Keyed by qualified
-  // path; bounded by the number of distinct CAS files a JVM touches.
+  // same TOCTOU closing Delta's LogStore does per-FS; also the per-path
+  // locks of writeSmallFileAtomic ("swap:") and artifact ("artifact:").
+  // Keyed by qualified path; bounded by the number of distinct CAS files
+  // and artifact dirs a JVM touches.
   private val exclusiveLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 

@@ -18,19 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object PartitionedEvents {
 
-  private def baseFor(spark: SparkSession, dir: String): String = {
-    val tag = GraftFs.scaleTag(spark, dir)
-    GraftFs.qualify(spark, s"target/graft-partitioned/$tag/events_by_date")
-  }
-
   /** Write (once) and return the path of the date-partitioned events copy.
     * Partition column: `event_date` = date(ts). Data columns keep the
     * original event identity so aggregates reconcile exactly with the flat
     * fixture.
     */
-  def ensureWritten(spark: SparkSession, dir: String): String = synchronized {
-    val base = baseFor(spark, dir)
-    if (!GraftFs.hasSuccess(spark, base)) {
+  def ensureWritten(spark: SparkSession, dir: String): String =
+    GraftFs.artifact(spark, dir, tag => s"target/graft-partitioned/$tag/events_by_date") { base =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), to_date(col("ts")).as("event_date"))
@@ -38,6 +32,4 @@ object PartitionedEvents {
         .partitionBy("event_date")
         .parquet(base)
     }
-    base
-  }
 }

@@ -45,16 +45,7 @@ object IncrementalShards {
     if (ptr.exists(_.covers(batchId))) return readState(s, base)
     val state = readState(s, base)
     val baseOffset = state.agg(coalesce(sum("n_bytes"), lit(0L))).collect()(0).getLong(0)
-    val w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
-    val partials = docs
-      .select(col("doc_id"), col("n_chars"),
-        graft.functions.Tokenize.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("offset", lit(baseOffset) + sum("n_chars").over(w) - col("n_chars"))
-      .withColumn("shard_id", floor(col("offset") / ShardBytes))
-      .groupBy("shard_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_bytes"),
-        sum("n_tokens").as("n_tokens"),
-        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
+    val partials = shardsFrom(docs, baseOffset)
     val merged = state.select(col("shard_id"), col("n_docs").as("d1"), col("n_bytes").as("b1"),
         col("n_tokens").as("t1"), col("first_doc").as("f1"), col("last_doc").as("l1"))
       .join(partials.select(col("shard_id").as("sid2"), col("n_docs").as("d2"),
@@ -74,6 +65,23 @@ object IncrementalShards {
     merged.write.mode("overwrite").parquet(s"$base/v$next")
     StateLog.swap(s, base, ptr, next, batchId)
     merged
+  }
+
+  /** Per-shard partials of `docs` (doc_id order) laid out from byte
+    * offset `baseOffset`: each doc's shard is its starting offset over
+    * [[ShardBytes]].
+    */
+  private def shardsFrom(docs: DataFrame, baseOffset: Long): DataFrame = {
+    val w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
+    docs
+      .select(col("doc_id"), col("n_chars"),
+        graft.functions.Tokenize.tokenCount(col("text")).cast("long").as("n_tokens"))
+      .withColumn("offset", lit(baseOffset) + sum("n_chars").over(w) - col("n_chars"))
+      .withColumn("shard_id", floor(col("offset") / ShardBytes))
+      .groupBy("shard_id")
+      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_bytes"),
+        sum("n_tokens").as("n_tokens"),
+        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
   }
 
   /** Attach the manifest maintenance to a document stream via foreachBatch;
@@ -108,16 +116,7 @@ object IncrementalShards {
       coalesce(sum("n_bytes"), lit(0L)), coalesce(max("last_doc"), lit(Long.MinValue)))
       .collect()(0)
     val (baseOffset, lastKeptDoc) = (keptInfo.getLong(0), keptInfo.getLong(1))
-    val w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
-    val rebuilt = docsCorrected.filter(col("doc_id") > lastKeptDoc)
-      .select(col("doc_id"), col("n_chars"),
-        graft.functions.Tokenize.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("offset", lit(baseOffset) + sum("n_chars").over(w) - col("n_chars"))
-      .withColumn("shard_id", floor(col("offset") / ShardBytes))
-      .groupBy("shard_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_bytes"),
-        sum("n_tokens").as("n_tokens"),
-        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
+    val rebuilt = shardsFrom(docsCorrected.filter(col("doc_id") > lastKeptDoc), baseOffset)
     val merged = kept.union(rebuilt).localCheckpoint()
     val ptr = StateLog.pointer(s, base)
     val next = StateLog.nextVersion(ptr)

@@ -22,8 +22,11 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
   *   - failListOnce(substr): the next listStatus whose path contains
   *     substr throws — a listing that fails for a reason other than a
   *     missing dir.
+  *   - failOpen(substr, times): the next `times` opens whose path
+  *     contains substr throw — a file that stays unreadable past the
+  *     caller's retries.
   *
-  * Schedules are one-shot and recorded; a spec must assert `fired`, or it
+  * Schedules are counted (one-shot unless given a count) and recorded; a spec must assert `fired`, or it
   * silently tested nothing. Registered via `fs.graftfault.impl` +
   * `fs.AbstractFileSystem.graftfault.impl` (FileSystem instances are
   * cached per scheme, hence the static schedule).
@@ -59,6 +62,12 @@ class FaultInjectingFileSystem extends RawLocalFileSystem {
     if (FaultInjectingFileSystem.take("failList", p.toUri.getPath))
       throw new java.io.IOException(s"injected listing failure at $p")
     super.listStatus(p)
+  }
+
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (FaultInjectingFileSystem.take("failOpen", f.toUri.getPath))
+      throw new java.io.IOException(s"injected open failure at $f")
+    super.open(f, bufferSize)
   }
 
   override def delete(p: Path, recursive: Boolean): Boolean = {
@@ -105,6 +114,8 @@ object FaultInjectingFileSystem {
     scheduled.put(("failDelete", substr), new AtomicInteger(1)): Unit
   def failListOnce(substr: String): Unit =
     scheduled.put(("failList", substr), new AtomicInteger(1)): Unit
+  def failOpen(substr: String, times: Int): Unit =
+    scheduled.put(("failOpen", substr), new AtomicInteger(times)): Unit
 
   def reset(): Unit = { scheduled.clear(); synchronized { firedLog.clear() } }
   def fired: Seq[(String, String)] = synchronized { firedLog.toVector }

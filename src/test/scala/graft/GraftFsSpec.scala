@@ -134,4 +134,92 @@ class GraftFsSpec extends SparkTestBase with Matchers {
     // the fault was one-shot: the next lookup lists again and agrees
     GraftFs.scaleTag(spark, dir) shouldBe good
   }
+
+  /** A fixture dir holding one table file, and a scratch root for artifacts. */
+  private def artifactFixture(name: String): (String, String => String) = {
+    val fixture = Files.createTempDirectory(s"graft_art_fx_$name").toFile.getAbsolutePath
+    Files.write(java.nio.file.Paths.get(fixture, "t.parquet"), "x".getBytes("UTF-8"))
+    val root = Files.createTempDirectory(s"graft_art_out_$name").toFile.getAbsolutePath
+    (fixture, tag => s"$root/$tag/art")
+  }
+
+  private def touch(p: String): Unit =
+    GraftFs.writeSmallFileAtomic(spark, p, "")
+
+  test("artifact: the first call builds and marks, a second call does not run build") {
+    val (fixture, path) = artifactFixture("once")
+    var builds = 0
+    val b1 = GraftFs.artifact(spark, fixture, path) { base => builds += 1; touch(s"$base/part-0") }
+    val b2 = GraftFs.artifact(spark, fixture, path) { _ => builds += 1 }
+    builds shouldBe 1
+    b2 shouldBe b1
+    b1 shouldBe GraftFs.qualify(spark, path(GraftFs.scaleTag(spark, fixture)))
+    GraftFs.hasSuccess(spark, b1) shouldBe true
+    GraftFs.exists(spark, s"$b1/part-0") shouldBe true
+
+    // persisted: one parquet build, read back; the second call reads only
+    val (fixture2, path2) = artifactFixture("persisted")
+    var frames = 0
+    def df = { frames += 1; spark.range(5).toDF("id") }
+    GraftFs.persisted(spark, fixture2, path2)(df).collect().map(_.getLong(0)).sorted shouldBe (0L until 5L)
+    GraftFs.persisted(spark, fixture2, path2)(df).count() shouldBe 5
+    frames shouldBe 1
+  }
+
+  test("artifact: a stray file in a dir without _SUCCESS is wiped before the rebuild") {
+    val (fixture, path) = artifactFixture("stray")
+    val base = GraftFs.qualify(spark, path(GraftFs.scaleTag(spark, fixture)))
+    touch(s"$base/part-stale") // partial output of a crashed build
+    GraftFs.artifact(spark, fixture, path)(b => touch(s"$b/part-new")) shouldBe base
+    GraftFs.listFiles(spark, base).map(_.getPath.getName).filterNot(_.startsWith(".")).sorted shouldBe
+      Seq("_SUCCESS", "part-new")
+  }
+
+  test("artifact: a build that throws leaves no _SUCCESS, and the next call rebuilds") {
+    val (fixture, path) = artifactFixture("throw")
+    val ex = intercept[IllegalStateException] {
+      GraftFs.artifact(spark, fixture, path) { base =>
+        touch(s"$base/part-0")
+        touch(s"$base/_SUCCESS") // a writer's own commit marker, then a failed check
+        throw new IllegalStateException("build check failed")
+      }
+    }
+    ex.getMessage shouldBe "build check failed"
+    val base = GraftFs.qualify(spark, path(GraftFs.scaleTag(spark, fixture)))
+    GraftFs.hasSuccess(spark, base) shouldBe false
+    var rebuilt = false
+    GraftFs.artifact(spark, fixture, path) { b => rebuilt = true; touch(s"$b/part-1") }
+    rebuilt shouldBe true
+    GraftFs.hasSuccess(spark, base) shouldBe true
+    GraftFs.exists(spark, s"$base/part-0") shouldBe false
+  }
+
+  test("artifact: two threads calling with one path run build exactly once") {
+    val (fixture, path) = artifactFixture("race")
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val start = new CountDownLatch(1)
+    def call(): Unit = {
+      start.await()
+      bases.add(GraftFs.artifact(spark, fixture, path) { base =>
+        builds.incrementAndGet()
+        Thread.sleep(200) // hold the build open while the other caller arrives
+        touch(s"$base/part-0")
+      }): Unit
+    }
+    raceAll(() => call(), () => { start.countDown(); call() })
+    builds.get() shouldBe 1
+    bases.toArray.distinct should have length 1
+  }
+
+  test("artifact: a changed fixture listing gives a new path and a new build") {
+    val (fixture, path) = artifactFixture("regen")
+    var builds = 0
+    val before = GraftFs.artifact(spark, fixture, path) { _ => builds += 1 }
+    Files.write(java.nio.file.Paths.get(fixture, "t2.parquet"), "y".getBytes("UTF-8"))
+    val after = GraftFs.artifact(spark, fixture, path) { _ => builds += 1 }
+    after should not be before
+    builds shouldBe 2
+    GraftFs.hasSuccess(spark, before) shouldBe true // the stale copy is left, never read
+  }
 }

@@ -88,6 +88,26 @@ class PackBranchSpec extends SparkTestBase with Matchers {
     idsOf(base) shouldBe (0L until 60L)
   }
 
+  test("dropBranch propagates an unreadable parent snapshot instead of reading it as no refs") {
+    FaultInjectingFileSystem.install(spark)
+    FaultInjectingFileSystem.reset()
+    val base = s"graftfault://${freshBase("unreadable")}"
+    PackStore.initBase(spark, base, objs(0, 30), 2)  // main snap 0
+    PackStore.createBranch(spark, base, "held")
+    val bb = PackStore.branchBase(base, "held")
+    PackStore.appendDelta(spark, bb, objs(30, 60))   // branch-owned dir
+    PackStore.mergeBranch(spark, base, "held")       // main snap 1 refs it
+    try {
+      // unreadable past readSmallFile's 20 retries: an I/O error, not a
+      // vanished or torn snapshot, so it must not count as "no refs"
+      FaultInjectingFileSystem.failOpen("store/snapshots/snap-1", 1000)
+      an[java.io.IOException] should be thrownBy PackStore.dropBranch(spark, base, "held")
+      FaultInjectingFileSystem.fired.map(_._1) should contain("failOpen")
+    } finally FaultInjectingFileSystem.reset()
+    graft.sources.GraftFs.exists(spark, bb) shouldBe true
+    idsOf(base) shouldBe (0L until 60L)              // merged view intact
+  }
+
   test("streaming ingest into a branch, then fast-forward merge (staging pipeline)") {
     import graft.api.implicits._
     import org.apache.spark.sql.streaming.Trigger
