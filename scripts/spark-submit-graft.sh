@@ -2,6 +2,9 @@
 # Launch a graft main class under spark-submit with the pinned profile.
 # Usage: scripts/spark-submit-graft.sh <mainClass> [args...]
 #   e.g. scripts/spark-submit-graft.sh graft.Profile q_sql_q1 q_dedup_near
+# The mains set master (local[SPARK_GRAFT_CPUS], each with its own default),
+# shuffle partitions and the UTC time zone themselves through
+# graft.GraftSession; conf/graft-submit.conf holds only the driver heap.
 # Env passthrough (read by the mains themselves): SPARK_GRAFT_SF_DIR,
 # SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS (Bench, Profile, ScaleBench),
 # SPARK_GRAFT_BENCH_BAND_HI and SPARK_GRAFT_BENCH_OUTLIER_X (Bench),
@@ -18,6 +21,5 @@ if [ -z "$JAR" ]; then
 fi
 exec /opt/spark/bin/spark-submit \
   --class "$MAIN" \
-  --master "local[${SPARK_GRAFT_CPUS:-32}]" \
   --properties-file conf/graft-submit.conf \
   "$JAR" "$@"

@@ -3,23 +3,13 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session, warm-up, timing rule and session-state hygiene shared by
-  * every timing harness (Bench, Profile, PriceAudit): released state and
+/** Warm-up, timing rule, load label and session-state hygiene shared by
+  * every timing harness (Bench, Profile, PriceAudit; sessions come from
+  * [[GraftSession]]): released state and
   * medians must mean the SAME thing in the profiler and auditor as in the
   * bench they explain, or their numbers measure different conditions.
   */
 private[graft] object BenchUtil {
-  /** Bench's session: `local[cpus]`, one shuffle partition per core. */
-  def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Warm up codegen/parquet/shuffle machinery so the first timed query
     * isn't charged session startup.
     */
@@ -37,6 +27,17 @@ private[graft] object BenchUtil {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     } catch { case NonFatal(_) => () }
+
+  /** The 1/5/15-minute load averages as `[a,b,c]`, or `[]` when
+    * /proc/loadavg cannot be read: the contention label a harness prints
+    * next to its timings.
+    */
+  def loadAvg(): String =
+    try {
+      val s = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim.split(" ")
+      s"[${s(0)},${s(1)},${s(2)}]"
+    } catch { case NonFatal(_) => "[]" }
 
   /** Per-rep wall seconds in run order, and their median. */
   final case class Timing(reps: Seq[Double], median: Double)
@@ -69,14 +70,14 @@ private[graft] object BenchUtil {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(4)
     // Per-query medians over k reps: single runs on this box carry
     // ±15-25% noise (PERF.md round 5) which makes cross-round totals hard
     // to read; the median discards the rep-1 plan/codegen warmup and the
     // occasional GC straggler. k=3 by default; SPARK_GRAFT_BENCH_REPS=1
     // restores the old single-pass behavior.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = BenchUtil.session(cpus)
+    val spark = GraftSession.start(cpus)
     // Warm up before the first timed query; deterministic name order
     // keeps per-round numbers comparable.
     BenchUtil.warmUp(spark)
@@ -88,12 +89,6 @@ object Bench {
     // any reading carries proof of band position: calib medians near the
     // committed reference (~0.35 s on a quiet box, PERF.md) certify a clean
     // run; inflated calib numbers certify contention, not plan regressions.
-    def loadAvg(): String =
-      try {
-        val s = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim.split(" ")
-        s"[${s(0)},${s(1)},${s(2)}]"
-      } catch { case _: Throwable => "[]" }
     def calibrate(shots: Int = 3): Double = {
       // Band sensor, not a micro-agg: the box's slow phase shows up in
       // shuffle/sort/window machinery (the suite's dominant cost), so the
@@ -118,7 +113,7 @@ object Bench {
       }.sorted
       ts(ts.length / 2)
     }
-    val loadStart = loadAvg()
+    val loadStart = BenchUtil.loadAvg()
     val calibStart = calibrate()
     val sortedQueries = SparkEntry.queries.toSeq.sortBy(_._1)
     val midIdx = sortedQueries.length / 2
@@ -250,7 +245,7 @@ object Bench {
           .filter { case (_, l) =>
             SfRe.findFirstMatchIn(l).exists(_.group(1) == sfDir) &&
             RepsRe.findFirstMatchIn(l).exists(_.group(1) == reps.toString) &&
-            CpusRe.findFirstMatchIn(l).exists(_.group(1) == cpus) }
+            CpusRe.findFirstMatchIn(l).exists(_.group(1) == cpus.toString) }
           .takeRight(12)
           .flatMap { case (stamp, l) =>
             QueriesRe.findFirstMatchIn(l).map(m =>
@@ -305,7 +300,7 @@ object Bench {
           name -> reMeasured.getOrElse(qi, v)
         }
       }
-    val loadEnd = loadAvg()
+    val loadEnd = BenchUtil.loadAvg()
     val calib = s"""{"start":$calibStart,"mid":$calibMid,"end":$calibEnd,""" +
       s""""post":$calibPost,"requeried":$requeried,""" +
       s""""outliers_requeried":${outliers.length},"outlier_post":$outlierPost,""" +

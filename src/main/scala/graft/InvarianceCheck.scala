@@ -13,24 +13,14 @@ import org.apache.spark.sql.SparkSession
 object InvarianceCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val rows = SparkEntry.select(args.drop(1).toSeq)
+    val names = rows.map(_._1)
 
     def collectAll(cores: Int): Map[String, Either[String, Seq[String]]] = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions", cores)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      val out = names.map { n =>
-        n -> (SparkEntry.queries.get(n) match {
-          case Some(fn) =>
-            try Right(fn(spark, sfDir).collect().map(_.toString).toSeq)
-            catch { case t: Throwable => Left(s"${t.getClass.getSimpleName}: ${t.getMessage}") }
-          case None => Left("unknown query")
-        })
+      val spark = GraftSession.start(cores, logLevel = "ERROR")
+      val out = rows.map { case (n, fn) =>
+        n -> (try Right(fn(spark, sfDir).collect().map(_.toString).toSeq)
+          catch { case t: Throwable => Left(s"${t.getClass.getSimpleName}: ${t.getMessage}") })
       }.toMap
       spark.stop()
       // a fresh builder after stop() must not resurrect the stopped context

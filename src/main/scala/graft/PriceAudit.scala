@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
 object PriceAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = BenchUtil.session(cpus)
+    val selected = SparkEntry.select(args.toSeq)
+    val spark = GraftSession.start(GraftSession.cpus(32))
     BenchUtil.warmUp(spark)
     def time(body: => Unit): Double = {
       val ts = (1 to reps).map { _ =>
@@ -37,9 +37,7 @@ object PriceAudit {
       // count and mat sides here use the SAME estimator, so ratios hold)
       ts(ts.length / 2)
     }
-    val only = args.toSet
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
+    val rows = selected
       .flatMap { case (name, fn) =>
         try {
           val tCount = time { fn(spark, sfDir).count(): Unit }

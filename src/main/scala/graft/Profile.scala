@@ -40,15 +40,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val names = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown rows: ${unknown.mkString(", ")}")
-    val spark = BenchUtil.session(cpus)
+    val rows = SparkEntry.select(args.toSeq)
+    val spark = GraftSession.start(GraftSession.cpus(4))
     try {
       BenchUtil.warmUp(spark)
-      names.foreach(n => println("PROFILE " + row(spark, sfDir, reps, n, SparkEntry.queries(n))))
+      rows.foreach { case (n, fn) => println("PROFILE " + row(spark, sfDir, reps, n, fn)) }
     } finally spark.stop()
   }
 

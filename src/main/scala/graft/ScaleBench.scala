@@ -41,19 +41,12 @@ object ScaleBench {
       }
       else Seq("0.01" -> "/root/testdata/sf0.01",
         "0.1" -> "/root/testdata/sf0.1", "1" -> "target/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = GraftSession.cpus(16)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = BenchUtil.session(cpus)
+    val spark = GraftSession.start(cpus)
     BenchUtil.warmUp(spark)
 
-    def loadAvg(): String =
-      try {
-        val s = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim.split(" ")
-        s"[${s(0)},${s(1)},${s(2)}]"
-      } catch { case _: Throwable => "[]" }
-
-    val loadStart = loadAvg()
+    val loadStart = BenchUtil.loadAvg()
     // walk sf-major so each decade's artifact builds (scaleTag-keyed
     // indexes) amortize across that decade's reps exactly as in Bench
     val cells: Seq[(String, String, Double)] = dirs.flatMap { case (label, dir) =>
@@ -74,7 +67,7 @@ object ScaleBench {
         (name, label, med)
       }
     }
-    val loadEnd = loadAvg()
+    val loadEnd = BenchUtil.loadAvg()
 
     val labels = dirs.map(_._1)
     val byRow = cells.groupBy(_._1)

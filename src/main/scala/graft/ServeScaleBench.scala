@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Decade certification for the maintainer SERVE family (r14 verdict
@@ -45,23 +45,12 @@ object ServeScaleBench {
       }
       else Seq("0.01" -> "/root/testdata/sf0.01",
         "0.1" -> "/root/testdata/sf0.1", "1" -> "target/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(16)
+    val spark = GraftSession.start(cpus)
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    def loadAvg(): String =
-      try {
-        val s = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim.split(" ")
-        s"[${s(0)},${s(1)},${s(2)}]"
-      } catch { case _: Throwable => "[]" }
 
     /** One family cell: fresh state base, Batches-batch ingest, serve ×2. */
     def runFamily(label: String, dir: String, family: String,
@@ -119,7 +108,7 @@ object ServeScaleBench {
           base, Some(i.toLong))
     }
 
-    val loadStart = loadAvg()
+    val loadStart = BenchUtil.loadAvg()
     val cells = dirs.map { case (label, dir) =>
       val fams = Seq(
         runFamily(label, dir, "trend", trendIngest,
@@ -139,7 +128,7 @@ object ServeScaleBench {
             graft.streaming.IncrementalWinnow.currentState(spark, b).segs.size}"""))
       s""""$label":{${fams.mkString(",")}}"""
     }
-    val loadEnd = loadAvg()
+    val loadEnd = BenchUtil.loadAvg()
     val json = s"""{"metric":"serve_scale","cpus":"$cpus","batches":$Batches,""" +
       s""""dirs":{${dirs.map { case (k, v) => s""""$k":"$v"""" }.mkString(",")}},""" +
       s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +

@@ -30,6 +30,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(d => d.name -> d.query).toMap
 
+  /** The rows a main runs: those named, in the given order, or every
+    * registered row sorted by name when none is named. An unknown name
+    * fails here, before any row runs.
+    */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown rows: ${unknown.mkString(", ")}")
+    if (names.isEmpty) all.toSeq.sortBy(_._1) else names.map(n => n -> all(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

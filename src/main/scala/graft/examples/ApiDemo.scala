@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end facade smoke for a fresh checkout (docs/API.md quickstart):
   * read the documents fixture, run three `graft.api` verbs — token count,
   * quality score, the composed curate pipeline — and print a one-line
@@ -15,12 +13,9 @@ import org.apache.spark.sql.SparkSession
 object ApiDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      // spark-submit injects master/conf from the pinned profile; the
-      // fallbacks make `sbt "runMain graft.examples.ApiDemo"` work too
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the engine's session (local[4] unless SPARK_GRAFT_CPUS says
+    // otherwise), the same under spark-submit and `sbt runMain`
+    val spark = graft.GraftSession.start(graft.GraftSession.cpus(4))
 
     import graft.api.implicits._
     val docs = graft.Tables.documents(spark, dir)

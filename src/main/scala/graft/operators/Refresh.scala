@@ -215,8 +215,7 @@ object RefresherApp {
       case Left(msg) => System.err.println(msg); sys.exit(1)
       case Right(c) => c
     }
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(4).getOrCreate()
     try {
       // -table form: every node target runs a refresh of that one table
       // (the catalog is the node analogue); -targets form: each target IS

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Task-retry determinism probe: on a real cluster tasks fail and retry
   * constantly (preemption, spot loss, OOM-kill), and Spark's recovery
@@ -45,11 +45,8 @@ object RetryProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(4)
       .master("local[4, 3]") // 3 task attempts — retries enabled
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._

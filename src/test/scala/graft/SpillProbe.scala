@@ -33,11 +33,7 @@ object SpillProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(8)
       // starve execution memory so aggregates/joins must spill
       .config("spark.memory.fraction", "0.05")
       .config("spark.memory.storageFraction", "0.1")
