@@ -392,16 +392,14 @@ final class PackStoreHandle(val spark: SparkSession, val base: String) {
     */
   def stats(): DataFrame = {
     import spark.implicits._
-    val comps = PackStore.readCurrent(spark, base)
-    val (tombs, data) = comps.partition(_.dir.contains("/tombs/"))
+    val tip = PackStore.latest(spark, base)
+    val (tombs, data) = tip.comps.partition(_.dir.contains("/tombs/"))
     val tombIds =
       if (tombs.isEmpty) 0L
       else tombs.map(c => spark.read.parquet(c.dir).count()).sum
-    val snaps = graft.sources.GraftFs.listFiles(spark, s"$base/snapshots")
-      .map(_.getPath.getName).count(_.startsWith("snap-"))
     Seq((
-      PackStore.latestSnapshotId(spark, base).getOrElse(-1L),
-      snaps.toLong,
+      tip.version,
+      PackStore.snapshotIds(spark, base).size.toLong,
       data.count(_.dir.contains("/packs/")).toLong,
       data.count(_.dir.contains("/deltas/")).toLong,
       tombs.size.toLong,

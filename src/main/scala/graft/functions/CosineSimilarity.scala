@@ -13,9 +13,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** Native Catalyst expression: cosine similarity of two float-vector
   * columns (SURVEY.md §7.2).
   *
-  * Semantics are bit-identical to the higher-order-function formulation in
-  * VectorOps.cosineHof (the correctness reference, asserted by
-  * CosineExpressionSpec): each float is widened to double and dot / both
+  * Semantics are bit-identical to the higher-order-function formulation
+  * `HofReferences.cosineHof` under src/test (the correctness reference,
+  * asserted by CosineExpressionSpec): each float is widened to double and dot / both
   * norms accumulate sequentially in index order; result = dot/sqrt(na*nb).
   * Mismatched dimensions yield NULL — exactly like the HOF twin, where
   * zip_with pads the shorter array with nulls and the null poisons the

@@ -59,26 +59,14 @@ object PortableHash {
     * fold h ← (h·131 + code) mod 1e9+7 over the token's characters, init
     * 0 — the native codegen'd [[PortableTokenHash]] expression (a
     * zero-allocation byte fold; ~the cost of a murmur3 pass, vs the
-    * Column-HOF reference below that allocates one single-char UTF8String
-    * per character). Matches DuckDB's `string_split(t,'')`+`ord` fold on
-    * the ASCII corpus (TESTDATA.md: documents text is pure ASCII).
+    * Column-HOF reference `HofReferences.tokenHashReference` under
+    * src/test that allocates one single-char UTF8String per character).
+    * Matches DuckDB's `string_split(t,'')`+`ord` fold on the ASCII corpus (TESTDATA.md: documents text is pure ASCII).
     * Requires GraftFunctions.ensureRegistered (done in Tables.load, so
     * every query path has it).
     */
   def tokenHash(t: Column): Column =
     call_function(GraftFunctions.PortableTokenHashName, t)
-
-  /** The same fold as a pure built-in-Column formulation — the
-    * readable reference PortableHashSpec pins the native expression (and
-    * the DuckDB fragment) against. `slice(split(t,""), 1, length(t))`
-    * takes exactly length(t) single-char elements — robust to Java
-    * split's trailing-empty behavior.
-    */
-  def tokenHashReference(t: Column): Column =
-    aggregate(
-      slice(split(t, ""), lit(1), length(t)),
-      lit(0L),
-      (h, c) => (h * lit(BaseMul) + ascii(c)) % lit(BaseMod))
 
   /** tokenHash over every element of a string array (one codegen'd pass). */
   def tokenHashes(toks: Column): Column = transform(toks, t => tokenHash(t))

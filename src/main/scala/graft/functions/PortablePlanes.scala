@@ -70,18 +70,12 @@ object PortablePlanes {
     * the 6dp-rounded integer-plane dot is > 0. Since r16 this is the
     * native fused PlaneBucket expression (one bits×dim loop per row) —
     * bit-identical to the `bits` chained when(round(dot HOF) > 0) columns
-    * it replaces ([[bucketColHof]], the NativeFoldsSpec reference).
+    * it replaces (`HofReferences.bucketColHof` under src/test, the
+    * NativeFoldsSpec reference).
     */
   def bucketCol(emb: Column, t: Int, bits: Int, family: Long = 0L): Column =
     call_function(GraftFunctions.PlaneBucketName, emb,
       typedlit((0 until bits).map(h => weights(t, h, bits, family).toSeq).toSeq))
-
-  /** The HOF reference formulation of [[bucketCol]]. */
-  def bucketColHof(emb: Column, t: Int, bits: Int, family: Long = 0L): Column =
-    (0 until bits).map { h =>
-      when(round(VectorOps.dotHof(emb, typedlit(weights(t, h, bits, family))), 6) > 0,
-        lit(1 << h)).otherwise(lit(0))
-    }.reduce(_ + _)
 
   /** The identical bucket id as a DuckDB SQL fragment over a DOUBLE[]
     * column expression `emb` (the list_inner_product fold matches the

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd char-fold hash — the hot-path form of
-  * [[PortableHash.tokenHashReference]]: h ← (h·131 + code) mod 1e9+7 over
+  * `HofReferences.tokenHashReference` (src/test): h ← (h·131 + code) mod 1e9+7 over
   * the string's characters, identical arithmetic to the DuckDB oracle
   * fragment ([[PortableHash.tokenHashSql]]). The Column-HOF formulation
   * (slice ∘ split ∘ aggregate) allocates a single-char UTF8String per

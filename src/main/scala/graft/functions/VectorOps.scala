@@ -6,47 +6,29 @@ import org.apache.spark.sql.functions._
 /** Column builders for vector math over ArrayType(FloatType) embeddings.
   *
   * All arithmetic is promoted to double and accumulated sequentially in
-  * index order (Spark's `aggregate` higher-order function), which makes the
-  * result bit-identical to DuckDB's list_inner_product/list_sum over
-  * double-cast lists — the property the oracle compare relies on.
-  * These are pure Catalyst expressions (no UDFs), so they stay inside
-  * whole-stage codegen. A native Expression with doGenCode
-  * (graft.functions.CosineSimilarity) supersedes these in hot paths; these
-  * remain the correctness reference.
+  * index order, which makes the result bit-identical to DuckDB's
+  * list_inner_product/list_sum over double-cast lists — the property the
+  * oracle compare relies on. These functions call native codegen
+  * expressions; their higher-order-function references (`dotHof`,
+  * `normSqHof`, `cosineHof`) live in `graft.HofReferences` under
+  * src/test, where the specs pin them bit for bit.
   */
 object VectorOps {
   /** Sequential-order double dot product of two float arrays — the native
-    * codegen expression since r16 (bit-identical to [[dotHof]], the HOF
-    * correctness reference NativeFoldsSpec pins it against; the HOFs are
-    * CodegenFallback and allocate per row).
+    * codegen expression since r16 (bit-identical to `HofReferences.dotHof`
+    * under src/test, the HOF reference NativeFoldsSpec pins it against;
+    * the HOFs are CodegenFallback and allocate per row).
     */
   def dot(a: Column, b: Column): Column =
     call_function(GraftFunctions.DotName, a, b)
 
-  /** The HOF reference formulation of [[dot]]. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
-
   /** Squared L2 norm. */
   def normSq(a: Column): Column = dot(a, a)
 
-  /** Cosine similarity via built-ins: dot / sqrt(|a|² · |b|²) — single
-    * sqrt, mirrored exactly in oracle SQL. Correctness reference for the
-    * native expression.
-    */
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / sqrt(normSqHof(a) * normSqHof(b))
-
-  /** HOF squared L2 norm (reference twin of normSq). */
-  def normSqHof(a: Column): Column = dotHof(a, a)
-
   /** Cosine similarity via the native codegen expression (bit-identical to
-    * cosineHof; one fused loop per row). Requires
-    * GraftFunctions.ensureRegistered — done in Tables.load, so every query
-    * path has it.
+    * `HofReferences.cosineHof` under src/test; one fused loop per row).
+    * Requires GraftFunctions.ensureRegistered — done in Tables.load, so
+    * every query path has it.
     */
   def cosine(a: Column, b: Column): Column =
     call_function(GraftFunctions.CosineName, a, b)

@@ -516,32 +516,6 @@ object MultimodalOps {
   private[graft] val (phashBands, phashBandBits) = hammingBands(PhashCorpusN, hashBits = 56)
   private val phashMask = (1L << phashBandBits) - 1
 
-  /** The interpreted HOF formulation of the phash hash stage (original +
-    * twin), KEPT as the spec reference for the native DHash56 that
-    * replaced it on the query path (r17): MmDHashSpec pins native ≡ this
-    * bit-for-bit over the fixture corpus, both variants. Not on any
-    * query path.
-    */
-  private[graft] def phashHofHashes(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.documents(s, dir).filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id").as("media_id"),
-        expr("transform(sequence(1, length(text)), i -> cast(ascii(substring(text, i, 1)) as bigint))")
-          .as("codes"))
-    val twins = base.select((col("media_id") + 1000000000L).as("media_id"),
-      expr("transform(codes, (x, i) -> x + 10 + CASE WHEN i % 5 = 0 THEN cast(1 as bigint) ELSE cast(0 as bigint) END)")
-        .as("codes"))
-    base.unionAll(twins)
-      .withColumn("len", size(col("codes")).cast("long"))
-      .withColumn("pix",
-        expr("transform(sequence(0, 63), k -> element_at(codes, cast((k * len) div 64 as int) + 1))"))
-      .select(col("media_id"), expr(
-        """aggregate(sequence(0, 55), cast(0 as bigint), (acc, b) ->
-          |  acc + CASE WHEN element_at(pix, cast((b div 7) * 8 + (b % 7) + 2 as int))
-          |                  > element_at(pix, cast((b div 7) * 8 + (b % 7) + 1 as int))
-          |             THEN shiftleft(cast(1 as bigint), cast(b as int))
-          |             ELSE cast(0 as bigint) END)""".stripMargin).as("hash"))
-  }
-
   val mmPhash = QueryDef(
     "q_mm_phash",
     (s, dir) => {
@@ -550,8 +524,8 @@ object MultimodalOps {
       // chain, which allocated a text-length codes array, a 64-slot pix
       // array, and 56 boxed fold steps per row; DHash56 reads the 64
       // sampled code points straight off the string). MmDHashSpec pins
-      // native ≡ the kept HOF reference (hofHashes below) bit-for-bit on
-      // the fixture corpus, both variants.
+      // native ≡ the kept HOF reference (HofReferences.phashHofHashes,
+      // src/test) bit-for-bit on the fixture corpus, both variants.
       val base = Tables.documents(s, dir).filter(col("doc_id") % 2 === 0)
         .select(col("doc_id").as("media_id"), col("text"))
       val dhash = (twin: Boolean) => call_function(

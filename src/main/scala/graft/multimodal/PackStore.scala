@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.QueryDef
+import graft.streaming.StateLog
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,25 +22,25 @@ import org.apache.spark.sql.functions._
   *     doesn't know its snapshot id until its commit wins, and two
   *     concurrent writers must never share a dir). Nothing is ever
   *     modified in place.
-  *   - **Snapshots are immutable too; CURRENT is the only mutable
-  *     thing.** Every publish writes the full component list to a new
-  *     immutable `snapshots/snap-<k>` file (one `dir \t minId \t maxId`
-  *     line per component), then atomically swaps the one-line CURRENT
-  *     pointer to `<k>` (tmp + rename — [[graft.sources.GraftFs
-  *     .writeSmallFileAtomic]]), so a reader sees the old or the new
-  *     snapshot, never a mix. WRITERS ARE OPTIMISTICALLY CONCURRENT:
-  *     every publish is an exclusive-create CAS on the next snapshot
-  *     file with rebase-and-retry on conflict (appends rebase onto the
-  *     winner's live set; compaction aborts and re-merges when its
-  *     base moved — the Iceberg rewrite-conflict rule), so independent
-  *     ingest jobs share a base with no external lock. Readers are
-  *     never blocked; vacuum remains admin-serialized.
+  *   - **Snapshots are immutable too.** Every publish writes the full
+  *     component list to a new immutable `snapshots/snap-<k>` record
+  *     (one `dir \t minId \t maxId` line per component), so a reader sees
+  *     the old or the new snapshot, never a mix. The snapshot log runs
+  *     on [[graft.streaming.StateLog.Log]], the commit protocol every
+  *     maintainer's log shares: an exclusive-create CAS on the next
+  *     record, the ambiguous-CAS readback, the `CURRENT` hint and its
+  *     forward walk. WRITERS ARE OPTIMISTICALLY CONCURRENT: a lost race
+  *     rebases and retries (appends rebase onto the winner's live set;
+  *     compaction aborts and re-merges when its base moved — the Iceberg
+  *     rewrite-conflict rule), so independent ingest jobs share a base
+  *     with no external lock. Readers are never blocked; vacuum remains
+  *     admin-serialized.
   *     Retained snapshots stay readable AS OF their publish point
   *     (`scanAt`) — the Iceberg/Delta time-travel contract: an audit or
   *     a reproducibility rerun reads the exact corpus a training job
   *     saw, not whatever compaction has since rewritten.
   *   - **Reads union the live manifests.** `scan` prunes components by
-  *     the CURRENT min/max before touching their manifests (a range
+  *     the live snapshot's min/max before touching their manifests (a range
   *     lookup inside the base never even reads a delta's manifest
   *     footer), then prunes packs via the manifest exactly like
   *     [[ContainerOps.packedScan]].
@@ -54,7 +55,7 @@ import org.apache.spark.sql.functions._
   *     dangling read.
   *
   * Scale shape: ingest cost tracks the batch (one small component write,
-  * one pointer swap); scan cost tracks live bytes + live pack count;
+  * one snapshot record); scan cost tracks live bytes + live pack count;
   * compaction is the only corpus-sized pass and runs on whatever cadence
   * keeps the delta count acceptable — the standard LSM trade, made
   * explicit and spec-proven here (PackStoreSpec counts real pack opens
@@ -109,239 +110,127 @@ object PackStore {
     Vector.fill(buf.remaining() / 8)(buf.getLong)
   }
 
-  private def currentPath(base: String) = s"$base/CURRENT"
-  private def snapPath(base: String, id: Long) = s"$base/snapshots/snap-$id"
-  private def checkpointPath(base: String) = s"$base/CHECKPOINT"
-
-  /** Periodic checkpoint cadence (every Nth publish refreshes
-    * CHECKPOINT). The checkpoint pins a recently-known tip id so tip
-    * discovery WITHOUT a readable CURRENT hint walks forward a bounded
-    * number of probes instead of listing the snapshots directory — at a
-    * year of 1-minute streaming publishes that listing is 5x10^5
-    * entries, the one remaining O(total-publishes) cost on the read
-    * path. Vacuum also refreshes it, preserving the invariant that the
-    * checkpoint is never older than the oldest retained snapshot (a
-    * forward walk from it can never under-read across a vacuum gap).
+  /** One committed snapshot: the decoded `snapshots/snap-<k>` record,
+    * the one parse point every read path shares. `kind` records why the
+    * snapshot exists — `init`/`delta`/`upsert` carry new data, `delete`
+    * retractions, `compact` only rewrites (the bit the changelog
+    * subscriber keys on); `note` is the tag the publish attached
+    * ([[graft.streaming.PackIngest]] stores `batch=<id>` there, so a
+    * replay is detected through the commit itself).
     */
-  private val CheckpointEvery = 16L
-
-  /** Best-effort checkpoint refresh: a plain atomic swap (no CAS — any
-    * recorded tip is valid, the forward walk heals staleness; a lost
-    * race between two refreshers just keeps the other's tip).
-    */
-  private def writeCheckpoint(s: SparkSession, base: String, id: Long): Unit =
-    try graft.sources.GraftFs.writeSmallFileAtomic(s, checkpointPath(base), id.toString)
-    catch { case _: Exception => () }
-
-  private def readCheckpointTip(s: SparkSession, base: String): Option[Long] =
-    try graft.sources.GraftFs.readSmallFile(s, checkpointPath(base)).map(_.trim.toLong)
-    catch { case _: Exception => None }
-
-  /** Strict `snap-<digits>` name parse: listing-driven discovery must
-    * ignore anything else in the snapshots dir (tmp commit files, editor
-    * droppings) rather than crash on `toLong`.
-    */
-  private val SnapName = "snap-(\\d+)".r
-  private def snapIdOf(name: String): Option[Long] =
-    name match { case SnapName(d) => Some(d.toLong); case _ => None }
-
-  private[graft] def snapshotExists(s: SparkSession, base: String, id: Long): Boolean =
-    graft.sources.GraftFs.exists(s, snapPath(base, id))
-
-  /** A snapshot file is complete (not an in-flight exclusive write) when
-    * its `#eof` terminator landed — the walk-forward probe's torn-read
-    * guard. Reads through CURRENT never need this (CURRENT only advances
-    * after the close), only tip discovery does.
-    */
-  private def isCompleteSnapshot(s: SparkSession, base: String, id: Long): Boolean =
-    try graft.sources.GraftFs.readSmallFile(s, snapPath(base, id))
-      .exists(_.trim.endsWith("#eof"))
-    catch { case _: Exception => false } // mid-write read: not complete yet
-
-  /** Latest published snapshot id (None on an empty store). CURRENT is a
-    * HINT, not the truth: with concurrent writers it can lag, regress
-    * (two winners advancing it out of order), or read torn mid-swap on a
-    * checksumming local FS — so a clean hint walks forward over complete
-    * snapshot files (almost always zero steps; also heals the crash
-    * window between a snapshot's exclusive write and its CURRENT
-    * advance), and an unreadable/garbled hint falls back to listing the
-    * snapshot dir for the max complete id (vacuum deletes old snap
-    * files, so walking from 0 would under-read a vacuumed store).
-    */
-  def latestSnapshotId(s: SparkSession, base: String): Option[Long] = {
-    val hint =
-      try graft.sources.GraftFs.readSmallFile(s, currentPath(base)).map(_.trim.toLong)
-      catch { case _: Exception => None }
-    def walkFrom(h: Long): Long = {
-      var tip = h
-      var k = h + 1
-      while (isCompleteSnapshot(s, base, k)) { tip = k; k += 1 }
-      tip
-    }
-    hint match {
-      case Some(h) => Some(walkFrom(h))
-      case None =>
-        // no readable CURRENT: the CHECKPOINT pins a recent tip to walk
-        // forward from — O(publishes-since-checkpoint) probes, never a
-        // directory listing. Guard against a checkpoint staler than the
-        // retention window (its snap file vacuumed, nothing newer found
-        // by the walk): that walk would under-read, so fall through to
-        // the exhaustive listing instead.
-        val fromCkpt = readCheckpointTip(s, base).map(walkFrom)
-          .filter(isCompleteSnapshot(s, base, _))
-        fromCkpt.orElse {
-          graft.sources.GraftFs.listFiles(s, s"$base/snapshots")
-            .flatMap(f => snapIdOf(f.getPath.getName))
-            .filter(isCompleteSnapshot(s, base, _))
-            .maxOption
-        }
-    }
+  private[graft] final case class Snapshot(version: Long, kind: String, note: Option[String],
+      comps: Seq[Component]) extends StateLog.Committed {
+    def batch: Option[Long] =
+      note.filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
   }
 
-  /** Components of snapshot `id`. Typed failure — not a dangling read —
-    * when the snapshot was vacuumed away or never existed. Lines starting
-    * with `#` are snapshot metadata (see [[snapshotNote]]), not components.
-    *
-    * The `#eof` terminator is REQUIRED: a snapshot read torn at a line
-    * boundary parses as a valid-but-shorter component list, which would
-    * silently and permanently drop that snapshot's adds from any consumer
-    * that doesn't retry (a changelog batch most of all) — so incomplete
-    * content throws typed here, at the one parse point every read path
-    * shares, and the caller's retry/replay machinery does its job.
+  /** A component line: `dir \t minId \t maxId [\t bloom [\t metaStats]]`.
+    * Meta stats need the bloom field present; writeComponent emits both.
     */
-  def readSnapshot(s: SparkSession, base: String, id: Long): Seq[Component] =
-    graft.sources.GraftFs.readSmallFile(s, snapPath(base, id)) match {
-      case None =>
-        throw new IllegalArgumentException(
-          s"snapshot $id of $base is expired or was never published")
-      case Some(content) if !content.trim.endsWith("#eof") =>
-        throw new IllegalStateException(
-          s"snapshot $id of $base is incomplete (missing #eof terminator): " +
-            "torn read or abandoned write — retry, or reclaim via publish")
-      case Some(content) => parseSnapshot(content)
+  private def encodeLine(c: Component): String =
+    (Seq(c.dir, c.minId.toString, c.maxId.toString) ++
+      c.bloom.map(encodeBloom) ++ c.bloom.flatMap(_ => c.metaStats.map(MetaZone.encode)))
+      .mkString("\t")
+
+  private def decodeLine(line: String): Component = line.split("\t") match {
+    case Array(d, lo, hi, rest @ _*) if rest.size <= 2 && lo.toLongOption.isDefined &&
+        hi.toLongOption.isDefined =>
+      Component(d, lo.toLong, hi.toLong, rest.headOption.map(decodeBloom),
+        rest.lift(1).map(MetaZone.decode))
+    case other => throw new IllegalStateException(s"bad snapshot line: ${other.mkString("\t")}")
+  }
+
+  /** The snapshot log, on [[StateLog.Log]]: records `snapshots/snap-<k>`,
+    * hint `CURRENT`=`<k>`. A record is `#kind=`, an optional `#note=`,
+    * one line per component, and the `#eof` terminator. A body without
+    * `#eof` is INCOMPLETE (a torn read or a crashed writer's garbage): a
+    * read cut at a line boundary would otherwise parse as a valid but
+    * shorter component list and silently drop that snapshot's adds.
+    * Files from before kinds existed read as `delta`, the conservative
+    * choice (a subscriber would rather re-emit than drop).
+    */
+  private val snapLog = new StateLog.Log[Snapshot](Snapshot(-1L, "init", None, Seq.empty),
+    StateLog.Codec[Snapshot](
+      st => (Seq(s"#kind=${st.kind}") ++ st.note.map(n => s"#note=$n") ++
+        st.comps.map(encodeLine) :+ "#eof").mkString("\n"),
+      (v, body) =>
+        if (!body.trim.endsWith("#eof")) None
+        else {
+          val lines = body.split("\n").filter(_.nonEmpty).toSeq
+          def field(k: String) = lines.find(_.startsWith(s"#$k=")).map(_.stripPrefix(s"#$k="))
+          Some(Snapshot(v, field("kind").getOrElse("delta"), field("note"),
+            lines.filterNot(_.startsWith("#")).map(decodeLine)))
+        }),
+    StateLog.Layout("snapshots", "snap-", "CURRENT", ""))
+
+  /** The latest committed snapshot (version -1 on an empty store). */
+  private[graft] def latest(s: SparkSession, base: String): Snapshot = snapLog.current(s, base)
+
+  /** Latest published snapshot id (None on an empty store). */
+  def latestSnapshotId(s: SparkSession, base: String): Option[Long] =
+    Some(latest(s, base).version).filter(_ >= 0)
+
+  /** Every listed snapshot id, ascending. */
+  private[graft] def snapshotIds(s: SparkSession, base: String): Seq[Long] =
+    snapLog.versions(s, base)
+
+  /** Snapshot `id`. Typed failure, never a dangling or short read: the
+    * snapshot was vacuumed away or never existed, or its content is
+    * incomplete (the caller's retry or replay machinery does its job).
+    */
+  private[graft] def snapshotAt(s: SparkSession, base: String, id: Long): Snapshot =
+    snapLog.record(s, base, id) match {
+      case None => throw new IllegalArgumentException(
+        s"snapshot $id of $base is expired or was never published")
+      case Some(None) => throw new IllegalStateException(
+        s"snapshot $id of $base is incomplete (missing #eof terminator): " +
+          "torn read or abandoned write — retry, or reclaim via publish")
+      case Some(Some(snap)) => snap
     }
 
-  private def parseSnapshot(content: String): Seq[Component] =
-    content.split("\n").filter(l => l.nonEmpty && !l.startsWith("#")).toSeq.map { line =>
-      line.split("\t") match {
-        case Array(d, lo, hi) => Component(d, lo.toLong, hi.toLong)
-        case Array(d, lo, hi, b64) =>
-          Component(d, lo.toLong, hi.toLong, Some(decodeBloom(b64)))
-        case Array(d, lo, hi, b64, mz) =>
-          Component(d, lo.toLong, hi.toLong, Some(decodeBloom(b64)),
-            Some(MetaZone.decode(mz)))
-        case other =>
-          throw new IllegalStateException(s"bad snapshot line: ${other.mkString("\t")}")
-      }
-    }
+  /** Components of snapshot `id`, typed as [[snapshotAt]]. */
+  def readSnapshot(s: SparkSession, base: String, id: Long): Seq[Component] =
+    snapshotAt(s, base, id).comps
+
+  def readCurrent(s: SparkSession, base: String): Seq[Component] = latest(s, base).comps
+
+  /** The latest snapshot, then each older one down to the first that is
+    * expired — each snapshot file read once.
+    */
+  private[graft] def history(s: SparkSession, base: String): Iterator[Snapshot] =
+    Iterator.iterate(Option(latest(s, base)).filter(_.version >= 0))(
+      _.filter(_.version > 0).flatMap(p => snapLog.read(s, base, p.version - 1)))
+      .takeWhile(_.isDefined).flatten
 
   /** Qualified component dirs snapshot `id` references, for a GC scan.
     * Only a snapshot that vanished since the listing (vacuumed) or is
-    * torn (no `#eof`: an in-flight write, whose staged dirs the grace
-    * age protects) reads as referencing nothing. Any other failure — an
-    * I/O error past [[graft.sources.GraftFs.readSmallFile]]'s retries, a
-    * bad line — propagates: read as empty, it would let the caller
-    * delete dirs a committed snapshot still names.
+    * torn (an in-flight write, whose staged dirs the grace age protects)
+    * reads as referencing nothing. Any other failure — an I/O error past
+    * [[graft.sources.GraftFs.readSmallFile]]'s retries, a bad line —
+    * propagates: read as empty, it would let the caller delete dirs a
+    * committed snapshot still names.
     */
   private def snapshotRefs(s: SparkSession, base: String, id: Long): Seq[String] =
-    graft.sources.GraftFs.readSmallFile(s, snapPath(base, id)) match {
-      case Some(content) if content.trim.endsWith("#eof") =>
-        parseSnapshot(content).map(c => graft.sources.GraftFs.qualify(s, c.dir))
-      case _ => Seq.empty
-    }
+    snapLog.read(s, base, id).fold(Seq.empty[String])(
+      _.comps.map(c => graft.sources.GraftFs.qualify(s, c.dir)))
 
-  /** The free-form note a publish attached to snapshot `id` (None when
-    * none was). [[graft.streaming.PackIngest]] stores the micro-batch id
-    * here — IN the atomically-swapped pointer — so replayed batches are
-    * detected without a separate (non-atomic) marker file.
-    */
-  def snapshotNote(s: SparkSession, base: String, id: Long): Option[String] =
-    graft.sources.GraftFs.readSmallFile(s, snapPath(base, id))
-      .flatMap(_.split("\n").find(_.startsWith("#note=")).map(_.stripPrefix("#note=")))
-
-  def readCurrent(s: SparkSession, base: String): Seq[Component] =
-    latestSnapshotId(s, base).fold(Seq.empty[Component])(readSnapshot(s, base, _))
-
-  /** OPTIMISTIC publish — the multi-writer commit protocol. The caller
-    * supplies a `rebase` function from the freshly-read live component
-    * set to the set it wants to publish (or None to abort): the loop
-    * reads the tip, rebases, and attempts an EXCLUSIVE create of the
-    * next snapshot file (`#eof`-terminated, so tip discovery never
-    * trusts a torn in-flight write); losing the race just re-reads and
-    * rebases — the Iceberg/Delta optimistic-concurrency loop on the
-    * exclusive-create primitive. CURRENT then advances best-effort
-    * (monotone check; a regression lost to a race is healed by the
-    * walk-forward tip). `kind` records WHY the snapshot exists —
-    * `init`/`delta` carry new data, `compact` only rewrites — the bit
-    * the changelog subscriber keys on; `note` carries the ingest batch
-    * id for replay detection. Both commit atomically with the publish.
-    */
-  /** CAS attempts before the publish fails typed. Every lost attempt
-    * means SOME writer committed (progress is system-wide), so a real
-    * contender exhausts this only under pathological contention — and a
-    * store wedged by external garbage surfaces as an error, not a spin.
+  /** CAS attempts before a publish fails typed. Every lost attempt means
+    * SOME writer committed, so only pathological contention or a store
+    * wedged by external garbage exhausts it.
     */
   private val MaxPublishAttempts = 1000
 
-  private def publishWith(s: SparkSession, base: String, kind: String,
-      note: Option[String])(rebase: Seq[Component] => Option[Seq[Component]]): Option[Long] = {
-    var attempts = 0
-    while (attempts < MaxPublishAttempts) {
-      attempts += 1
-      val tip = latestSnapshotId(s, base)
-      val live = tip.fold(Seq.empty[Component])(readSnapshot(s, base, _))
-      rebase(live) match {
-        case None => return None // caller abort (e.g. compaction base changed)
-        case Some(comps) =>
-          val id = tip.fold(0L)(_ + 1)
-          val lines = Seq(s"#kind=$kind") ++ note.map(n => s"#note=$n") ++
-            comps.map { c =>
-              // meta stats ride as field 5 and need field 4 present — a
-              // component with stats always carries an id bloom in
-              // practice (writeComponent emits both)
-              val tail = c.bloom.fold("") { b =>
-                "\t" + encodeBloom(b) +
-                  c.metaStats.fold("")(m => "\t" + MetaZone.encode(m))
-              }
-              s"${c.dir}\t${c.minId}\t${c.maxId}$tail"
-            } :+ "#eof"
-          if (graft.sources.GraftFs.writeSmallFileExclusive(s, snapPath(base, id),
-              lines.mkString("\n"))) {
-            // best-effort monotone advance; stale/torn hints are healed on read
-            val cur =
-              try graft.sources.GraftFs.readSmallFile(s, currentPath(base)).map(_.trim.toLong)
-              catch { case _: Exception => None }
-            if (cur.forall(_ < id))
-              try graft.sources.GraftFs.writeSmallFileAtomic(s, currentPath(base), id.toString)
-              catch { case _: Exception => () } // lost advance race: healed on read
-            if (id % CheckpointEvery == 0L) writeCheckpoint(s, base, id)
-            return Some(id)
-          }
-          // Lost the CAS. Almost always a real competing publish — but if
-          // snap-<id> exists WITHOUT its #eof terminator it is torn
-          // garbage (the rename commit exposes targets only complete, so
-          // no in-flight writer can look like this): it would block this
-          // slot forever while staying invisible to tip discovery, the
-          // permanent livelock. Reclaim it and retry; racing reclaimers
-          // are safe (delete is idempotent, the CAS re-arbitrates).
-          if (snapshotExists(s, base, id) && !isCompleteSnapshot(s, base, id))
-            graft.sources.GraftFs.deleteRecursively(s, snapPath(base, id))
-        // loop — fresh tip, fresh rebase
-      }
-    }
-    throw new IllegalStateException(
-      s"publish of $base failed after $MaxPublishAttempts CAS attempts — " +
-        "pathological contention or an external process wedging the snapshot log")
-  }
-
-  /** The publish kind of snapshot `id` (`init` / `delta` / `compact`);
-    * pre-kind snapshot files read as `delta` (the conservative choice —
-    * a subscriber would rather re-emit than drop).
+  /** OPTIMISTIC publish of a `kind` snapshot through the log's CAS loop
+    * ([[StateLog.Log.append]]): `rebase` maps the freshly read live
+    * component set to the set to publish, or None to abort (e.g. a
+    * compaction whose base moved). The committed snapshot, or None on
+    * abort.
     */
-  def snapshotKind(s: SparkSession, base: String, id: Long): String =
-    graft.sources.GraftFs.readSmallFile(s, snapPath(base, id))
-      .flatMap(_.split("\n").find(_.startsWith("#kind=")).map(_.stripPrefix("#kind=")))
-      .getOrElse("delta")
+  private def publish(s: SparkSession, base: String, kind: String, note: Option[String])(
+      rebase: Seq[Component] => Option[Seq[Component]]): Option[Snapshot] =
+    snapLog.append(s, base, latest(s, base), None, maxAttempts = MaxPublishAttempts) { tip =>
+      rebase(tip.comps).map(Snapshot(tip.version + 1, kind, note, _))
+    }
 
   // --------------------------------------------------------------------
   // Named refs (tags) — immutable human-named pins on snapshot ids, the
@@ -364,7 +253,7 @@ object PackStore {
   def createTag(s: SparkSession, base: String, name: String, id: Long): Unit = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || "._-".contains(c)),
       s"tag name must be [A-Za-z0-9._-]+: '$name'")
-    if (!isCompleteSnapshot(s, base, id))
+    if (snapLog.read(s, base, id).isEmpty)
       throw new IllegalArgumentException(
         s"cannot tag snapshot $id of $base: missing, torn, or expired")
     if (!graft.sources.GraftFs.writeSmallFileExclusive(s, tagPath(base, name), s"$id\n#eof"))
@@ -381,14 +270,16 @@ object PackStore {
       case None => throw new IllegalArgumentException(s"no tag '$name' on $base")
     }
 
-  /** All readable tags, name-sorted. Torn/foreign files are skipped (the
-    * listing must tolerate tmp droppings, like snapshot discovery).
+  /** All readable tags, name-sorted. Torn, vanished and foreign-content
+    * tag files are skipped (the listing must tolerate tmp droppings); an
+    * I/O error propagates, since [[vacuum]] pins snapshots by this list.
     */
   def listTags(s: SparkSession, base: String): Seq[(String, Long)] =
     graft.sources.GraftFs.listFiles(s, s"$base/refs")
       .flatMap(_.getPath.getName match {
         case TagRefName(n) =>
-          try Some(n -> resolveTag(s, base, n)) catch { case _: Exception => None }
+          try Some(n -> resolveTag(s, base, n)) catch { case _: IllegalStateException |
+              _: IllegalArgumentException => None }
         case _ => None
       }).sortBy(_._1)
 
@@ -481,7 +372,7 @@ object PackStore {
         throw new IllegalStateException(
           s"branch '$name' already exists on $base (lost the reclaim race)")
     }
-    publishWith(s, branchBase(base, name), "init", Some(s"fork:$forkId"))(_ => Some(comps))
+    publish(s, branchBase(base, name), "init", Some(s"fork:$forkId"))(_ => Some(comps)): Unit
     forkId
   }
 
@@ -510,13 +401,17 @@ object PackStore {
       case None => throw new IllegalArgumentException(s"no branch '$name' on $base")
     }
 
-  /** All readable branches, name-sorted, with their fork ids. */
+  /** All readable branches, name-sorted, with their fork ids. Torn,
+    * vanished and foreign-content FORK files are skipped; an I/O error
+    * propagates.
+    */
   def listBranches(s: SparkSession, base: String): Seq[(String, Long)] = {
     val (fs, q) = graft.sources.GraftFs.resolve(s, branchRoot(base))
     if (!fs.exists(q)) Seq.empty
     else fs.listStatus(q).toSeq.filter(_.isDirectory).flatMap { st =>
       val n = st.getPath.getName
-      try Some(n -> branchForkId(s, base, n)) catch { case _: Exception => None }
+      try Some(n -> branchForkId(s, base, n)) catch { case _: IllegalStateException |
+          _: IllegalArgumentException => None }
     }.sortBy(_._1)
   }
 
@@ -544,9 +439,7 @@ object PackStore {
       val bb = st.getPath.toString
       if (exclude.contains(bb)) Seq.empty
       else {
-        val own = graft.sources.GraftFs.listFiles(s, s"$bb/snapshots")
-          .flatMap(f => snapIdOf(f.getPath.getName))
-          .flatMap(snapshotRefs(s, bb, _))
+        val own = snapshotIds(s, bb).flatMap(snapshotRefs(s, bb, _))
         own ++ branchLiveRefs(s, bb, None)
       }
     }.toSet
@@ -567,18 +460,18 @@ object PackStore {
     val forkComps =
       try readSnapshot(s, base, forkId)
       catch {
-        case _: Exception =>
+        case _: IllegalArgumentException => // expired on the parent
           try readSnapshot(s, branchBase(base, name), 0L)
           catch {
-            case _: Exception => throw new IllegalStateException(
+            case _: IllegalArgumentException => throw new IllegalStateException(
               s"merge of branch '$name': fork snapshot $forkId expired on both " +
                 "the parent and the branch log — re-fork to merge")
           }
       }
     val branchTip = branchLive(s, base, name) // typed on a torn branch
-    publishWith(s, base, "delta", Some(s"merge:$name")) { mainLive =>
+    publish(s, base, "delta", Some(s"merge:$name")) { mainLive =>
       if (mainLive == forkComps) Some(branchTip) else None
-    }.getOrElse(throw new IllegalStateException(
+    }.map(_.version).getOrElse(throw new IllegalStateException(
       s"merge of branch '$name' into $base refused: parent content diverged " +
         s"from fork snapshot $forkId (non-fast-forward)"))
   }
@@ -591,9 +484,7 @@ object PackStore {
     */
   def dropBranch(s: SparkSession, base: String, name: String): Unit = {
     val bb = graft.sources.GraftFs.qualify(s, branchBase(base, name))
-    val parentRefs = graft.sources.GraftFs.listFiles(s, s"$base/snapshots")
-      .flatMap(f => snapIdOf(f.getPath.getName))
-      .flatMap(snapshotRefs(s, base, _))
+    val parentRefs = snapshotIds(s, base).flatMap(snapshotRefs(s, base, _))
       .toSet ++ branchLiveRefs(s, base, exclude = Some(bb))
     val held = parentRefs.filter(_.startsWith(bb + "/"))
     if (held.nonEmpty)
@@ -720,7 +611,7 @@ object PackStore {
     val mm = s.read.parquet(dir).agg(min("media_id"), max("media_id")).head
     if (!mm.isNullAt(0)) {
       val comp = Component(dir, mm.getLong(0), mm.getLong(1), Some(bloomOf(s, dir)))
-      publishWith(s, base, "delete", note)(live => Some(live :+ comp)): Unit
+      publish(s, base, "delete", note)(live => Some(live :+ comp)): Unit
     }
   }
 
@@ -749,7 +640,7 @@ object PackStore {
     s.read.parquet(s"$dDir/manifest").select("media_id")
       .write.mode("overwrite").parquet(tDir)
     val tComp = Component(tDir, dComp.minId, dComp.maxId, Some(bloomOf(s, tDir)))
-    publishWith(s, base, "upsert", note)(live => Some(live :+ tComp :+ dComp)): Unit
+    publish(s, base, "upsert", note)(live => Some(live :+ tComp :+ dComp)): Unit
   }
 
   /** Initialize the store: the whole batch becomes component packs/v0,
@@ -761,7 +652,7 @@ object PackStore {
     val dir = s"$base/packs/v0-${writerToken()}"
     val comp0 = writeComponent(s, objs, dir, nPacks)
     val comp = meta.fold(comp0)(m => comp0.copy(metaStats = Some(writeMeta(s, dir, m))))
-    val ok = publishWith(s, base, "init", None) { live =>
+    val ok = publish(s, base, "init", None) { live =>
       if (live.nonEmpty) None else Some(Seq(comp))
     }
     if (ok.isEmpty)
@@ -785,7 +676,7 @@ object PackStore {
       return
     }
     val comp = meta.fold(comp0)(m => comp0.copy(metaStats = Some(writeMeta(s, dir, m))))
-    publishWith(s, base, "delta", note)(live => Some(live :+ comp)): Unit
+    publish(s, base, "delta", note)(live => Some(live :+ comp)): Unit
   }
 
   /** Attach the batch's record-level metadata to a component dir: a
@@ -807,7 +698,7 @@ object PackStore {
   }
 
   /** Raw bytes of every live object whose id falls in `idRange` (all when
-    * None): component-pruned by CURRENT min/max, pack-pruned by the
+    * None): component-pruned by the snapshot's min/max, pack-pruned by the
     * manifests, positioned range reads in (pack_path, offset) order.
     * Parallelism scales with bytes, not pack count: entries shuffle on
     * (pack_path, offset-chunk of `chunkBytes`), so a large pack is read
@@ -1102,7 +993,7 @@ object PackStore {
           Seq(if (meta.columns.length > 1)
             comp0.copy(metaStats = Some(writeMeta(s, dir, meta))) else comp0)
         }
-      done = publishWith(s, base, "compact", note) { live =>
+      done = publish(s, base, "compact", note) { live =>
         if (live == merged) Some(newGen) else None
       }.isDefined
     }
@@ -1143,7 +1034,7 @@ object PackStore {
             comp0.copy(metaStats = Some(writeMeta(s, dir, meta))) else comp0
           tail.filter(isTombstone) :+ comp
         }
-      done = publishWith(s, base, "compact", note) { cur =>
+      done = publish(s, base, "compact", note) { cur =>
         if (cur == live) Some(prefix ++ newTail) else None
       }.isDefined
     }
@@ -1161,7 +1052,7 @@ object PackStore {
   /** Expire all but the newest `retainSnapshots` snapshots, then delete
     * component dirs no retained snapshot references (safe exactly
     * because every pointer that could name them is gone first). The
-    * default keeps only CURRENT's snapshot — the no-time-travel
+    * default keeps only the latest snapshot — the no-time-travel
     * behavior; a larger retention is the audit/reproducibility window,
     * priced in storage exactly like Iceberg's expire_snapshots.
     *
@@ -1177,8 +1068,10 @@ object PackStore {
     */
   def vacuum(s: SparkSession, base: String, retainSnapshots: Int = 1,
       orphanGraceMs: Long = DefaultOrphanGraceMs): Unit = {
-    val snapIds = graft.sources.GraftFs.listFiles(s, s"$base/snapshots")
-      .flatMap(f => snapIdOf(f.getPath.getName)).sorted
+    // expiring snapshots makes the only gaps in the log; a stale hint
+    // below one would hide every snapshot above it
+    snapLog.rehint(s, base)
+    val snapIds = snapshotIds(s, base)
     // tagged snapshots are pinned OUTSIDE the count window (Iceberg tag
     // semantics): a tag holds both the snapshot file and every component
     // it references, however old — dropTag returns it to normal retention
@@ -1193,11 +1086,7 @@ object PackStore {
       .map(c => graft.sources.GraftFs.qualify(s, c.dir)).toSet
     // pointers first: an expired snapshot must be unreadable before any
     // component it references can go
-    expired.foreach(id => graft.sources.GraftFs.deleteRecursively(s, snapPath(base, id)))
-    // refresh the checkpoint to the newest retained id: vacuum is the
-    // only deleter of snap files, so doing it here keeps the invariant
-    // "checkpoint >= oldest retained" that the no-listing tip walk needs
-    retained.lastOption.foreach(writeCheckpoint(s, base, _))
+    expired.foreach(id => graft.sources.GraftFs.deleteRecursively(s, snapLog.path(base, id)))
     // qualify both sides of the liveness check: snapshot files carry dirs
     // as written (possibly scheme-less), listStatus returns them qualified.
     // Branch-referenced dirs are live too (a fork shares the parent's

@@ -1094,15 +1094,11 @@ object VectorQueries {
 
   /** Squared L2 distance between two double arrays (sequential HOF fold). */
   /** Squared L2 — the native codegen expression since r16 (bit-identical
-    * to [[l2sqHof]], the HOF reference NativeFoldsSpec pins it against).
+    * to `HofReferences.l2sqHof` under src/test, the HOF reference
+    * NativeFoldsSpec pins it against).
     */
   private[operators] def l2sq(a: Column, b: Column): Column =
     call_function(graft.functions.GraftFunctions.L2SqName, a, b)
-
-  /** The HOF reference formulation of [[l2sq]]. */
-  private[graft] def l2sqHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double"))
-      * (x.cast("double") - y.cast("double"))), lit(0.0), (acc, v) => acc + v)
 
   private[operators] val PqM = 8      // subspaces (64 dims → 8×8)
   private[operators] val PqSub = 8    // dims per subspace

@@ -69,8 +69,9 @@ object CurationIngest {
       extends StateLog.Committed
 
   private val stateLog = new StateLog.Log[IngestLog](IngestLog(-1L, Seq.empty, None),
-    st => Seq("segs" -> StateLog.list(st.segs), "batch" -> StateLog.long(st.batch)),
-    (v, f) => IngestLog(v, f.list("segs"), f.long("batch")))
+    StateLog.fields(
+      st => Seq("segs" -> StateLog.list(st.segs), "batch" -> StateLog.long(st.batch)),
+      (v, f) => IngestLog(v, f.list("segs"), f.long("batch"))))
 
   /** Latest committed state ([[StateLog.Log.current]]). */
   private[graft] def currentState(s: SparkSession, base: String): IngestLog =

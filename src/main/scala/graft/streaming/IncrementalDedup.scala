@@ -137,7 +137,7 @@ object IncrementalDedup {
         .distinct()
       newPairs = DedupQueries.verifyJaccard(cands, allHashed, 1, 2).localCheckpoint()
       newPairs.write.mode("overwrite").parquet(s"$base/pairs/$segName")
-      DedupState(st.version + 1, st.segs :+ segName, batchId.orElse(st.batch), st.tombs)
+      Some(DedupState(st.version + 1, st.segs :+ segName, batchId.orElse(st.batch), st.tombs))
     } match {
       case Some(committed) =>
         stateLog.autoCompact(s, base, committed)(compactFrom(s, base, _))

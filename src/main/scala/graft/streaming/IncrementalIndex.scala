@@ -182,8 +182,8 @@ object IncrementalIndex {
         if (st.segs.isEmpty) 0L
         else readPostingsOf(s, base, st).select("doc_id").distinct().count()
       }
-      IndexState(v, Some(statsName), st.segs :+ segName,
-        batchId.orElse(st.batch), Some(baseDocs + batchDocs), st.tombs)
+      Some(IndexState(v, Some(statsName), st.segs :+ segName,
+        batchId.orElse(st.batch), Some(baseDocs + batchDocs), st.tombs))
     }: Unit
   }
 

@@ -170,7 +170,7 @@ object IncrementalSpan {
           statsOf = Some((n, st.statsDir.getOrElse("")))
           n
       }
-      SpanState(v, Some(statsName), st.segs :+ segName, batchId.orElse(st.batch), st.tombs)
+      Some(SpanState(v, Some(statsName), st.segs :+ segName, batchId.orElse(st.batch), st.tombs))
     }.foreach(gcStats(s, base, _))
   }
 

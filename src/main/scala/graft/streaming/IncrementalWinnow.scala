@@ -88,7 +88,7 @@ object IncrementalWinnow {
     fps.write.mode("overwrite").parquet(s"$base/fps/$segName")
     stateLog.append(s, base, st0, batchId, maxAttempts = 16,
         abandon = stateLog.dropUnlisted(s, base, segName)) { st =>
-      WinnowState(st.version + 1, st.segs :+ segName, batchId.orElse(st.batch), st.tombs)
+      Some(WinnowState(st.version + 1, st.segs :+ segName, batchId.orElse(st.batch), st.tombs))
     }.foreach(stateLog.autoCompact(s, base, _)(compactFrom(s, base, _)))
   }
 

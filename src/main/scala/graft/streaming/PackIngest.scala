@@ -38,7 +38,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object PackIngest {
 
-  private def batchNote(id: Long) = s"batch=$id"
+  private def batchNote(id: Long) = s"batch=$id" // read back as PackStore.Snapshot.batch
 
   /** Highest committed batch id visible in the snapshot log. Scans notes
     * back through the whole RETAINED window — not just the tip — because
@@ -52,13 +52,7 @@ object PackIngest {
     * which `retainSnapshots >= 2` gives by construction.
     */
   private def committedBatch(s: SparkSession, base: String): Option[Long] =
-    PackStore.latestSnapshotId(s, base).flatMap { tip =>
-      Iterator.iterate(tip)(_ - 1)
-        .takeWhile(k => k >= 0 && PackStore.snapshotExists(s, base, k))
-        .flatMap(k => PackStore.snapshotNote(s, base, k))
-        .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
-        .maxOption
-    }
+    PackStore.history(s, base).flatMap(_.batch).maxOption
 
   /** Land one micro-batch (media_id, payload) into the store; replayed
     * batchIds are detected via the tip snapshot's note and skipped.

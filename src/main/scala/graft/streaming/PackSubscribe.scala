@@ -70,12 +70,15 @@ object PackSubscribe {
     */
   def changesFor(s: SparkSession, base: String, ids: Seq[Long]): Changes = {
     import s.implicits._
+    // each snapshot file is read once, even when it is both a member of
+    // the set and the predecessor of the next member
+    val read = scala.collection.mutable.Map.empty[Long, PackStore.Snapshot]
+    def snap(k: Long) = read.getOrElseUpdate(k, PackStore.snapshotAt(s, base, k))
     val fresh = for {
       k <- ids.sorted
-      if PackStore.snapshotKind(s, base, k) != "compact"
-      prev = if (k == 0) Set.empty[String]
-             else PackStore.readSnapshot(s, base, k - 1).map(_.dir).toSet
-      c <- PackStore.readSnapshot(s, base, k) if !prev.contains(c.dir)
+      cur = snap(k) if cur.kind != "compact"
+      prev = if (k == 0) Set.empty[String] else snap(k - 1).comps.map(_.dir).toSet
+      c <- cur.comps if !prev.contains(c.dir)
     } yield c
     val tombs = fresh.filter(_.dir.contains("/tombs/"))
     val deletes = tombs.map(c => s.read.parquet(c.dir).select("media_id").as[Long])

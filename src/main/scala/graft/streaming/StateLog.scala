@@ -12,26 +12,34 @@ import scala.annotation.tailrec
   * (Impala's `REFRESH` fan-out).
   *
   * '''Log-record CAS''' ([[StateLog.Log]]: IncrementalIndex, Span,
-  * Winnow, Dedup, CurationIngest).
-  *  - Every committed state is ONE record file `log/v<N>` of
-  *    `key=value;…` fields, published by EXCLUSIVE CREATE
-  *    (GraftFs.writeSmallFileExclusive — the CAS). The record names the
-  *    live segment dirs and the last committed batch id. Liveness is
-  *    defined by the record, never by directory listing, so a crash
-  *    anywhere leaves only unreferenced orphan dirs no reader can count.
+  * Winnow, Dedup, CurationIngest, and PackStore's snapshot log).
+  *  - Every committed state is ONE immutable record file, published by
+  *    EXCLUSIVE CREATE (GraftFs.writeSmallFileExclusive — the CAS). The
+  *    [[StateLog.Layout]] names the files: maintainers keep `log/v<N>`
+  *    of `key=value;…` fields with the hint `_CURRENT`=`v<N>`; PackStore
+  *    keeps `snapshots/snap-<k>` (an `#eof`-terminated component list)
+  *    with the hint `CURRENT`=`<k>`. A record names the live dirs and
+  *    the last committed batch. Liveness is defined by the record, never
+  *    by directory listing, so a crash anywhere leaves only unreferenced
+  *    orphan dirs no reader can count.
   *  - A lost race rebases ([[StateLog.Log.append]]): re-read the winner,
   *    rebuild the record on top of it, retry at the next version. A
   *    winner whose batch tag already covers ours means the batch landed
-  *    elsewhere, and nothing more is published.
+  *    elsewhere, and nothing more is published; `next` may also abort.
   *  - Ambiguous CAS: a rename that landed but reported failure is settled
   *    by reading the record back. Bodies embed writer-unique
   *    ([[StateLog.uniqueName]]) dir names, so a byte-identical body
-  *    proves this writer won.
-  *  - `_CURRENT` holds `v<N>`, a fast-path HINT written after each
-  *    commit. Readers start there (or at the highest listed record when
-  *    the hint is absent or unparseable) and walk forward to the last
-  *    existing record, so a stale, torn or junk hint costs O(lag) reads,
-  *    never a wrong state.
+  *    proves this writer won. A lost slot whose record reads INCOMPLETE
+  *    ([[StateLog.Codec]]) is torn garbage and is reclaimed; a record
+  *    that cannot be read is never reclaimed.
+  *  - The hint is a fast path written after each commit. A failed hint
+  *    write is reported, never thrown: the record is already committed.
+  *    Readers start at the hint (or at the highest complete listed
+  *    record when the hint is absent, unparseable or expired) and walk
+  *    forward to the last complete record, so a stale, torn or junk hint
+  *    costs O(lag) reads, never a wrong state. A caller that deletes old
+  *    records (PackStore's vacuum) first re-points the hint at the tip
+  *    ([[StateLog.Log.rehint]]), so no walk from it crosses a gap.
   *
   * '''Segment compaction''' ([[StateLog.Segments.compact]]) folds the
   * segments of an observed state into one writer-unique `c<N>-<uid>` dir
@@ -110,75 +118,127 @@ private[graft] object StateLog {
   def emptyFrame(s: SparkSession, schema: StructType): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
 
-  /** `v<N>` → N; anything else → None. */
-  private def versionOf(name: String): Option[Long] =
-    if (name.startsWith("v") && name.drop(1).forall(_.isDigit)) name.drop(1).toLongOption
-    else None
-
   private val MaxAttempts = 8
 
-  /** One maintainer's log under `base`: `empty` is the state before the
-    * first commit, `encode`/`decode` its record codec.
+  /** `<pre><digits>` → the version; anything else → None. */
+  private def versionOf(pre: String, name: String): Option[Long] =
+    if (name.startsWith(pre) && name.drop(pre.length).forall(_.isDigit))
+      name.drop(pre.length).toLongOption
+    else None
+
+  /** Where a log's files live under its base: record `v` is
+    * `<dir>/<prefix><v>`, and the hint file `hint` holds `<hintPrefix><v>`.
     */
-  class Log[S <: Committed](empty: S, encode: S => Seq[(String, String)],
-      decode: (Long, Fields) => S) {
+  final case class Layout(dir: String, prefix: String, hint: String, hintPrefix: String)
 
-    private def body(st: S): String =
-      encode(st).map { case (k, v) => s"$k=$v" }.mkString(";")
+  /** The maintainers' layout: `log/v<N>`, hint `_CURRENT`=`v<N>`. */
+  val MaintainerLayout: Layout = Layout("log", "v", "_CURRENT", "v")
 
-    /** The committed record `log/v<v>`, if any. */
-    def read(s: SparkSession, base: String, v: Long): Option[S] =
-      GraftFs.readSmallFile(s, s"$base/log/v$v").map { b =>
-        decode(v, new Fields(b.trim.split(";").map { f =>
-          val i = f.indexOf('=')
-          f.take(i) -> f.drop(i + 1)
-        }.toMap))
-      }
+  /** A record codec. `decode` returns None for an INCOMPLETE body (a
+    * read cut short, or garbage a crashed writer left); readers treat
+    * such a record as absent.
+    */
+  final case class Codec[S](encode: S => String, decode: (Long, String) => Option[S])
+
+  /** The maintainers' `key=value;…` codec; its records are never
+    * incomplete.
+    */
+  def fields[S](encode: S => Seq[(String, String)], decode: (Long, Fields) => S): Codec[S] =
+    Codec(st => encode(st).map { case (k, v) => s"$k=$v" }.mkString(";"),
+      (v, b) => Some(decode(v, new Fields(b.trim.split(";").map { f =>
+        val i = f.indexOf('=')
+        f.take(i) -> f.drop(i + 1)
+      }.toMap))))
+
+  /** One log under `base`: `empty` is the state before the first commit,
+    * `codec` its record codec, `layout` where its files live.
+    */
+  class Log[S <: Committed](empty: S, codec: Codec[S], layout: Layout = MaintainerLayout) {
+
+    /** The file of record `v`. */
+    def path(base: String, v: Long): String = s"$base/${layout.dir}/${layout.prefix}$v"
+
+    /** Record `v`: None when absent, Some(None) when incomplete. */
+    def record(s: SparkSession, base: String, v: Long): Option[Option[S]] =
+      GraftFs.readSmallFile(s, path(base, v)).map(codec.decode(v, _))
+
+    /** The committed record `v`, if it exists and is complete. */
+    def read(s: SparkSession, base: String, v: Long): Option[S] = record(s, base, v).flatten
+
+    /** Every listed record version, ascending. */
+    def versions(s: SparkSession, base: String): Seq[Long] =
+      GraftFs.listFiles(s, s"$base/${layout.dir}")
+        .flatMap(f => versionOf(layout.prefix, f.getPath.getName)).sorted
 
     /** The latest committed state: from the hint, else the highest
-      * listed record, walking forward to the last record that exists.
+      * complete listed record, walking forward to the last complete one.
       */
     def current(s: SparkSession, base: String): S = {
       @tailrec def walk(st: S): S = read(s, base, st.version + 1) match {
         case Some(n) => walk(n)
         case None => st
       }
-      def listed: Option[Long] = {
-        val (fs, q) = GraftFs.resolve(s, s"$base/log")
-        if (!fs.exists(q)) None
-        else fs.listStatus(q).toSeq.flatMap(f => versionOf(f.getPath.getName)).maxOption
-      }
-      GraftFs.readSmallFile(s, s"$base/_CURRENT").flatMap(h => versionOf(h.trim))
+      def listed: Option[S] =
+        versions(s, base).reverseIterator.flatMap(read(s, base, _)).nextOption()
+      GraftFs.readSmallFile(s, s"$base/${layout.hint}")
+        .flatMap(h => versionOf(layout.hintPrefix, h.trim))
         .flatMap(read(s, base, _))
-        .orElse(listed.map(v => read(s, base, v).getOrElse(empty)))
+        .orElse(listed)
         .fold(empty)(walk)
     }
 
-    /** CAS-publish `st` as `log/v<st.version>`; true when it committed. */
+    /** CAS-publish `st` as record `st.version`; true when it committed. */
     def publish(s: SparkSession, base: String, st: S): Boolean = {
-      val path = s"$base/log/v${st.version}"
-      val b = body(st)
-      val ok = GraftFs.writeSmallFileExclusive(s, path, b) ||
-        GraftFs.readSmallFile(s, path).exists(_.trim == b)
-      if (ok) GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
+      val p = path(base, st.version)
+      val b = codec.encode(st)
+      val ok = GraftFs.writeSmallFileExclusive(s, p, b) ||
+        (GraftFs.readSmallFile(s, p) match {
+          case Some(r) if r.trim == b => true // ambiguous CAS: our rename landed
+          case Some(r) if codec.decode(st.version, r).isEmpty =>
+            GraftFs.deleteRecursively(s, p) // torn slot: reclaim, the retry re-arbitrates
+            false
+          case _ => false
+        })
+      // The record is committed: a stale hint costs readers a forward walk, never a wrong state.
+      if (ok)
+        try writeHint(s, base, st.version)
+        catch {
+          case e: java.io.IOException =>
+            System.err.println(s"[StateLog] hint at $base left behind committed " +
+              s"version ${st.version}: ${e.getMessage}")
+        }
       ok
+    }
+
+    private def writeHint(s: SparkSession, base: String, v: Long): Unit =
+      GraftFs.writeSmallFileAtomic(s, s"$base/${layout.hint}", s"${layout.hintPrefix}$v")
+
+    /** Re-point the hint at the latest committed state. A caller that
+      * deletes old records calls this first: a walk from a stale hint
+      * stops at the first missing record, short of the tip.
+      */
+    def rehint(s: SparkSession, base: String): Unit = {
+      val v = current(s, base).version
+      if (v >= 0) writeHint(s, base, v)
     }
 
     /** The ingest CAS loop: publish `next(observed)`, rebasing onto the
       * winner after each lost race, at most `maxAttempts` times. Returns
-      * the committed state, or None when a winner's tag covers `batchId`.
-      * `abandon` runs with the last observed state on every exit that
-      * published nothing.
+      * the committed state, or None when `next` aborts (returns None) or
+      * a winner's tag covers `batchId`. `abandon` runs with the last
+      * observed state on every exit that published nothing.
       */
     def append(s: SparkSession, base: String, observed: S, batchId: Option[Long],
         maxAttempts: Int = MaxAttempts, abandon: S => Unit = (_: S) => ())(
-        next: S => S): Option[S] = {
+        next: S => Option[S]): Option[S] = {
       var st = observed
       var attempts = 0
       while (attempts < maxAttempts) {
         attempts += 1
-        val n = next(st)
-        if (publish(s, base, n)) return Some(n)
+        next(st) match {
+          case None => abandon(st); return None
+          case Some(n) => if (publish(s, base, n)) return Some(n)
+        }
         st = current(s, base)
         if (st.covers(batchId)) { abandon(st); return None }
       }
@@ -192,7 +252,7 @@ private[graft] object StateLog {
     */
   class Segments[S <: Segmented[S]](empty: S, encode: S => Seq[(String, String)],
       decode: (Long, Fields) => S, families: Seq[String])
-      extends Log[S](empty, encode, decode) {
+      extends Log[S](empty, fields(encode, decode)) {
 
     /** Delete every family dir of each of `names`. */
     def drop(s: SparkSession, base: String, names: Iterable[String]): Unit =

@@ -16,7 +16,7 @@ class CosineExpressionSpec extends SparkTestBase with Matchers {
     val b = e.select(col("vec_id").as("id2"), col("embedding").as("e2")).filter(col("id2") between (50, 100))
     val pairs = a.crossJoin(b)
     val diff = pairs.select(
-        (VectorOps.cosine(col("e1"), col("e2")) - VectorOps.cosineHof(col("e1"), col("e2"))).as("d"))
+        (VectorOps.cosine(col("e1"), col("e2")) - HofReferences.cosineHof(col("e1"), col("e2"))).as("d"))
       .agg(max(abs(col("d"))).as("maxd"), count(lit(1)).as("n"))
       .collect().head
     diff.getLong(1) should be > 0L
@@ -47,7 +47,7 @@ class CosineExpressionSpec extends SparkTestBase with Matchers {
     val df = Seq((Seq(1.0f, 0.0f, 0.0f), Seq(1.0f, 0.0f)))
       .toDF("a", "b")
       .select(VectorOps.cosine(col("a"), col("b")).as("native"),
-        VectorOps.cosineHof(col("a"), col("b")).as("hof"))
+        HofReferences.cosineHof(col("a"), col("b")).as("hof"))
     val r = df.collect().head
     r.isNullAt(0) shouldBe true
     r.isNullAt(1) shouldBe true

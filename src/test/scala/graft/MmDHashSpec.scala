@@ -6,7 +6,7 @@ import org.scalatest.matchers.should.Matchers
 
 /** graft_dhash56 (the r17 native fused dHash that replaced q_mm_phash's
   * interpreted transform/aggregate chain) must be bit-identical to the
-  * kept HOF reference (MultimodalOps.phashHofHashes) for BOTH variants
+  * kept HOF reference (HofReferences.phashHofHashes) for BOTH variants
   * (original + re-encoded twin) over the fixture corpus, and must run
   * inside whole-stage codegen — the reason it exists.
   */
@@ -14,7 +14,7 @@ class MmDHashSpec extends SparkTestBase with Matchers {
 
   test("graft_dhash56 == the HOF transform/aggregate chain, bit for bit, both variants, all fixture media") {
     GraftFunctions.ensureRegistered(spark)
-    val hof = graft.multimodal.MultimodalOps.phashHofHashes(spark, sfTiny)
+    val hof = HofReferences.phashHofHashes(spark, sfTiny)
     val dh = (twin: Boolean) =>
       call_function(GraftFunctions.DHash56Name, col("text"), lit(twin))
     val base = Tables.documents(spark, sfTiny).filter(col("doc_id") % 2 === 0)

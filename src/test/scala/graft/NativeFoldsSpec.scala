@@ -19,9 +19,9 @@ class NativeFoldsSpec extends SparkTestBase with Matchers {
     val b = e.select(col("vec_id").as("id2"), col("embedding").as("e2")).filter(col("id2") between (40, 90))
     val pairs = a.crossJoin(b)
     val diff = pairs.select(
-        (VectorOps.dot(col("e1"), col("e2")) - VectorOps.dotHof(col("e1"), col("e2"))).as("dd"),
+        (VectorOps.dot(col("e1"), col("e2")) - HofReferences.dotHof(col("e1"), col("e2"))).as("dd"),
         (call_function(GraftFunctions.L2SqName, col("e1"), col("e2"))
-          - graft.operators.VectorQueries.l2sqHof(col("e1"), col("e2"))).as("dl"))
+          - HofReferences.l2sqHof(col("e1"), col("e2"))).as("dl"))
       .agg(max(abs(col("dd"))).as("mdd"), max(abs(col("dl"))).as("mdl"), count(lit(1)).as("n"))
       .collect().head
     diff.getLong(2) should be > 0L
@@ -35,7 +35,7 @@ class NativeFoldsSpec extends SparkTestBase with Matchers {
       val mismatches = (0 until tables).map { t =>
         e.select(
             PortablePlanes.bucketCol(col("embedding"), t, bits, family).as("native"),
-            PortablePlanes.bucketColHof(col("embedding"), t, bits, family).as("hof"))
+            HofReferences.bucketColHof(col("embedding"), t, bits, family).as("hof"))
           .filter(col("native") =!= col("hof") || col("native").isNull =!= col("hof").isNull)
           .count()
       }.sum
@@ -53,7 +53,7 @@ class NativeFoldsSpec extends SparkTestBase with Matchers {
       ).toDF("id", "emb")
       .select(col("id"),
         PortablePlanes.bucketCol(col("emb"), 0, 6).as("native"),
-        PortablePlanes.bucketColHof(col("emb"), 0, 6).as("hof"))
+        HofReferences.bucketColHof(col("emb"), 0, 6).as("hof"))
       .orderBy("id").collect()
     df(0).getInt(1) shouldBe df(0).getInt(2)
     df(0).getInt(1) shouldBe 0

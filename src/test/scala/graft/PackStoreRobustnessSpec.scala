@@ -20,7 +20,14 @@ import org.scalatest.matchers.should.Matchers
   *   4. compacting a fully-tombstoned store publishes the empty set
   *      instead of crashing;
   *   5. replay detection survives an interleaved note-less publish
-  *      between a batch's commit and its replay.
+  *      between a batch's commit and its replay;
+  *   6. a stale CURRENT kept below a vacuum gap by a tag must not hide
+  *      the tip;
+  *   7. on a `graftfault://` base: an ambiguous CAS (rename landed,
+  *      reported failure) on initBase or appendDelta commits once; a
+  *      committed snapshot that cannot be read is never reclaimed; an
+  *      unreadable tag stops vacuum before any delete; a failed CURRENT
+  *      write after a commit is reported, not thrown.
   */
 class PackStoreRobustnessSpec extends SparkTestBase with Matchers {
   import spark.implicits._
@@ -165,54 +172,33 @@ class PackStoreRobustnessSpec extends SparkTestBase with Matchers {
       .collect().map(_._1).sorted shouldBe (50L until 100L)
   }
 
-  test("checkpointed tip discovery: no snapshots-dir listing, file probes flat as the log grows 10x") {
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.graftcount.impl", classOf[CountingFileSystem].getName)
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.AbstractFileSystem.graftcount.impl", classOf[CountingAbstractFs].getName)
-
-    def logOfSize(n: Int): String = {
-      val local = Files.createTempDirectory(s"graft_packckpt$n").toFile.getAbsolutePath
-      val base = s"graftcount:$local/store"
-      // hand-author a long snapshot log (publish machinery is exercised
-      // elsewhere; here only DISCOVERY cost is under measurement)
-      for (k <- 0 until n)
-        writeRaw(s"$base/snapshots/snap-$k", "#kind=delta\n#eof")
-      writeRaw(s"$base/CHECKPOINT", (n - 3).toString)
-      base // no CURRENT: the worst case that used to force a full listing
-    }
-
-    def probesFor(base: String): (Int, Int) = {
-      CountingFileSystem.reset()
-      PackStore.latestSnapshotId(spark, base) shouldBe defined
-      (CountingFileSystem.listedPaths.count(_.endsWith("/snapshots")),
-        CountingFileSystem.openedPaths.count(_.contains("/snap-")))
-    }
-
-    val (listSmall, openSmall) = probesFor(logOfSize(20))
-    val (listBig, openBig) = probesFor(logOfSize(200))
-    // never a directory listing, and the probe count does not grow with
-    // the log — it tracks distance-from-checkpoint only
-    listSmall shouldBe 0
-    listBig shouldBe 0
-    openBig shouldBe openSmall
-    openBig should be <= 8
-
-    // integration: real publishes refresh CHECKPOINT on the cadence and
-    // tip discovery through it returns the true tip
-    val local = Files.createTempDirectory("graft_packckpt_int").toFile.getAbsolutePath
+  test("tip discovery without CURRENT: the listing finds the true tip after 17 publishes and after a retention vacuum") {
+    val local = Files.createTempDirectory("graft_packtip").toFile.getAbsolutePath
     val ibase = s"$local/store"
     PackStore.initBase(spark, ibase, objs(0, 5), 1)
     for (i <- 0 until 17) PackStore.appendDelta(spark, ibase, objs(10 + i * 5, 15 + i * 5))
-    graft.sources.GraftFs.exists(spark, s"$ibase/CHECKPOINT") shouldBe true
+    graft.sources.GraftFs.exists(spark, s"$ibase/CHECKPOINT") shouldBe false
     graft.sources.GraftFs.deleteRecursively(spark, s"$ibase/CURRENT")
     PackStore.latestSnapshotId(spark, ibase) shouldBe Some(17L)
-    // vacuum refreshes the checkpoint past the deletions it makes, so
-    // the no-listing walk still lands on the tip afterwards
+    // vacuum deletes the old snapshots: the listing starts at the highest
+    // complete listed snapshot, never at a deleted one
     PackStore.vacuum(spark, ibase, retainSnapshots = 2, orphanGraceMs = 0L)
     graft.sources.GraftFs.deleteRecursively(spark, s"$ibase/CURRENT")
     PackStore.latestSnapshotId(spark, ibase) shouldBe Some(17L)
     PackStore.scanBytes(spark, ibase).collect().length shouldBe (5 + 17 * 5)
+  }
+
+  test("a stale CURRENT below a tagged snapshot survives vacuum: the tip is still found and an append lands on it") {
+    val base = freshBase("packstalegap")
+    PackStore.initBase(spark, base, objs(0, 20), 1) // snap 0
+    PackStore.createTag(spark, base, "keep", 0L)
+    for (k <- 1 to 3) PackStore.appendDelta(spark, base, objs(10 + k * 10, 20 + k * 10))
+    // lost hint advances (reported, never thrown) leave CURRENT at the tag
+    graft.sources.GraftFs.writeSmallFileAtomic(spark, s"$base/CURRENT", "0")
+    PackStore.vacuum(spark, base, retainSnapshots = 1, orphanGraceMs = 0L) // expires 1, 2
+    PackStore.latestSnapshotId(spark, base) shouldBe Some(3L)
+    PackStore.appendDelta(spark, base, objs(50, 60))
+    PackStore.scanBytes(spark, base).collect().map(_._1).sorted shouldBe (0L until 60L)
   }
 
   test("replay detection survives an interleaved note-less publish (manual compact between commit and replay)") {
@@ -223,8 +209,7 @@ class PackStoreRobustnessSpec extends SparkTestBase with Matchers {
     // an admin compaction (no batch note) lands AFTER the commit — a
     // tip-only replay check would now be blind to batch 1
     PackStore.compact(spark, base, 1)
-    PackStore.snapshotNote(spark, base,
-      PackStore.latestSnapshotId(spark, base).get) shouldBe None
+    PackStore.latest(spark, base).note shouldBe None
     val tip = PackStore.latestSnapshotId(spark, base).get
     PackIngest.processBatch(spark, batch(10, 20), base, batchId = 1L) shouldBe false
     PackIngest.processBatch(spark, batch(0, 10), base, batchId = 0L) shouldBe false
@@ -233,5 +218,85 @@ class PackStoreRobustnessSpec extends SparkTestBase with Matchers {
     // a genuinely NEW batch still lands
     PackIngest.processBatch(spark, batch(20, 25), base, batchId = 2L) shouldBe true
     PackStore.scanBytes(spark, base).collect().map(_._1).sorted shouldBe (0L until 25L)
+  }
+
+  // ---- commit-protocol faults on a graftfault:// base -------------------
+
+  private def faultBase(tag: String): String = {
+    FaultInjectingFileSystem.install(spark)
+    FaultInjectingFileSystem.reset()
+    s"graftfault://${Files.createTempDirectory(s"graft_$tag").toFile.getAbsolutePath}/store"
+  }
+
+  private def ids(base: String): Seq[Long] =
+    PackStore.scanBytes(spark, base).collect().map(_._1).toSeq.sorted
+
+  test("ambiguous CAS on initBase: a landed snapshot 0 is claimed, not reported as a non-empty store") {
+    val base = faultBase("packinitlie")
+    FaultInjectingFileSystem.renameLieOnce("/snapshots/snap-0")
+    PackStore.initBase(spark, base, objs(0, 20), 1)
+    FaultInjectingFileSystem.fired.map(_._1) should contain("renameLie")
+    PackStore.latestSnapshotId(spark, base) shouldBe Some(0L)
+    PackStore.readCurrent(spark, base) should have size 1
+    FaultInjectingFileSystem.reset()
+  }
+
+  test("ambiguous CAS on appendDelta: the delta lands once, not twice") {
+    val base = faultBase("packappendlie")
+    PackStore.initBase(spark, base, objs(0, 20), 1)
+    FaultInjectingFileSystem.renameLieOnce("/snapshots/snap-1")
+    PackStore.appendDelta(spark, base, objs(20, 30))
+    FaultInjectingFileSystem.fired.map(_._1) should contain("renameLie")
+    PackStore.latestSnapshotId(spark, base) shouldBe Some(1L)
+    PackStore.readCurrent(spark, base).map(_.dir).distinct should have size 2
+    PackStore.readCurrent(spark, base) should have size 2
+    ids(base) shouldBe (0L until 30L)
+    FaultInjectingFileSystem.reset()
+  }
+
+  test("a committed snapshot that cannot be read is never reclaimed: the append throws and snap-1 survives") {
+    val base = faultBase("packnoreclaim")
+    PackStore.initBase(spark, base, objs(0, 20), 1)  // snap 0
+    PackStore.appendDelta(spark, base, objs(20, 30)) // snap 1
+    // a lost hint advance leaves CURRENT stale, and snap-1 stays
+    // unreadable past readSmallFile's retries
+    graft.sources.GraftFs.writeSmallFileAtomic(spark, s"$base/CURRENT", "0")
+    FaultInjectingFileSystem.failOpen("/snapshots/snap-1", 42)
+    an[java.io.IOException] should be thrownBy
+      PackStore.appendDelta(spark, base, objs(30, 40))
+    FaultInjectingFileSystem.fired.map(_._1) should contain("failOpen")
+    FaultInjectingFileSystem.reset()
+    graft.sources.GraftFs.exists(spark, s"$base/snapshots/snap-1") shouldBe true
+    PackStore.appendDelta(spark, base, objs(30, 40)) // the retry lands on top
+    ids(base) shouldBe (0L until 40L)
+  }
+
+  test("vacuum stops before any delete when a tag file cannot be read") {
+    val base = faultBase("packtagio")
+    def named(lo: Long, hi: Long) =
+      spark.range(lo, hi).as[Long].map(i => (i, s"payload-$i".getBytes("UTF-8")))
+    PackStore.initBase(spark, base, named(0, 20), 1)   // snap 0
+    PackStore.createTag(spark, base, "keep", 0L)
+    PackStore.compact(spark, base, 1)                  // snap 1
+    PackStore.appendDelta(spark, base, named(20, 30))  // snap 2
+    FaultInjectingFileSystem.failOpen("/refs/tag-keep", 21)
+    an[java.io.IOException] should be thrownBy
+      PackStore.vacuum(spark, base, retainSnapshots = 1)
+    FaultInjectingFileSystem.fired.map(_._1) should contain("failOpen")
+    FaultInjectingFileSystem.reset()
+    PackStore.listTags(spark, base) shouldBe Seq("keep" -> 0L)
+    PackStore.scanTag(spark, base, "keep").count() shouldBe 20
+  }
+
+  test("a failed CURRENT write after a committed publish is reported, not thrown: the append lands once") {
+    val base = faultBase("packhint")
+    PackStore.initBase(spark, base, objs(0, 20), 1)
+    FaultInjectingFileSystem.failCreateOnce(".CURRENT.tmp-")
+    PackStore.appendDelta(spark, base, objs(20, 30))
+    FaultInjectingFileSystem.fired.map(_._1) should contain("failCreate")
+    FaultInjectingFileSystem.reset()
+    graft.sources.GraftFs.readSmallFile(spark, s"$base/CURRENT").map(_.trim) shouldBe Some("0")
+    PackStore.latestSnapshotId(spark, base) shouldBe Some(1L)
+    ids(base) shouldBe (0L until 30L)
   }
 }

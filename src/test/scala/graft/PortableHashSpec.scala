@@ -30,7 +30,7 @@ class PortableHashSpec extends AnyFunSuite with Matchers with SparkTestBase {
       // parity is pinned for ASCII + BMP)
       .union(Seq("", "café", "日本語").toDF("t"))
     val viaNative = toks.select(col("t"), PortableHash.tokenHash(col("t")).as("h"))
-    val viaRef = toks.select(col("t").as("t2"), PortableHash.tokenHashReference(col("t")).as("h2"))
+    val viaRef = toks.select(col("t").as("t2"), HofReferences.tokenHashReference(col("t")).as("h2"))
     val joined = viaNative.join(viaRef, col("t") === col("t2"))
       .filter(col("h") =!= col("h2"))
     joined.count() shouldBe 0L

@@ -53,6 +53,23 @@ class StateLogSpec extends SparkTestBase with Matchers {
     }
   }
 
+  test("a failed hint write after a committed CAS is reported, not thrown: every log maintainer") {
+    FaultInjectingFileSystem.install(spark)
+    val docs = Tables.documents(spark, sfTiny).filter(col("doc_id") < 60)
+    for (m <- maintainers) withClue(s"maintainer=${m.name} ") {
+      FaultInjectingFileSystem.reset()
+      val base = "graftfault://" +
+        Files.createTempDirectory(s"graft_statelog_hint_${m.name}").toFile.getAbsolutePath
+      m.ingest(docs.filter(col("doc_id") % 2 === 0), base, 0L)
+      FaultInjectingFileSystem.failCreateOnce("._CURRENT.tmp-")
+      m.ingest(docs.filter(col("doc_id") % 2 === 1), base, 1L) // committed: returns
+      FaultInjectingFileSystem.fired.map(_._1) should contain("failCreate")
+      FaultInjectingFileSystem.reset()
+      GraftFs.readSmallFile(spark, s"$base/_CURRENT").map(_.trim) shouldBe Some("v0")
+      GraftFs.readSmallFile(spark, s"$base/log/v1").get.trim should fullyMatch regex m.layout
+    }
+  }
+
   test("log records in the established format parse field for field") {
     def at(body: String): String = {
       val base = Files.createTempDirectory("graft_statelog_rec").toFile.getAbsolutePath
