@@ -626,12 +626,13 @@ object PackStore {
     * prior version is simply added (its tombstone entry subtracts
     * nothing). The tombstone ids are read back from the delta's own
     * committed manifest, so a retried publish can never tombstone ids
-    * the delta doesn't carry.
+    * the delta doesn't carry. Returns the committed snapshot, None for an
+    * empty batch.
     */
   def upsert(s: SparkSession, base: String, objs: Dataset[(Long, Array[Byte])],
       nPacks: Int = 1, note: Option[String] = None,
-      meta: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
-    if (objs.isEmpty) return // an empty upsert publishes nothing
+      meta: Option[org.apache.spark.sql.DataFrame] = None): Option[Snapshot] = {
+    if (objs.isEmpty) return None // an empty upsert publishes nothing
     val token = writerToken()
     val dDir = s"$base/deltas/d-$token"
     val dComp0 = writeComponent(s, objs, dDir, nPacks)
@@ -640,7 +641,7 @@ object PackStore {
     s.read.parquet(s"$dDir/manifest").select("media_id")
       .write.mode("overwrite").parquet(tDir)
     val tComp = Component(tDir, dComp.minId, dComp.maxId, Some(bloomOf(s, tDir)))
-    publish(s, base, "upsert", note)(live => Some(live :+ tComp :+ dComp)): Unit
+    publish(s, base, "upsert", note)(live => Some(live :+ tComp :+ dComp))
   }
 
   /** Initialize the store: the whole batch becomes component packs/v0,
@@ -665,18 +666,19 @@ object PackStore {
     * compaction can never collide with one an older retained snapshot
     * references; the optimistic publish rebases onto whatever live set
     * wins the race — two concurrent appends both land, in some order.
+    * Returns the committed snapshot, None for an empty batch.
     */
   def appendDelta(s: SparkSession, base: String, objs: Dataset[(Long, Array[Byte])],
       nPacks: Int = 1, note: Option[String] = None,
-      meta: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
+      meta: Option[org.apache.spark.sql.DataFrame] = None): Option[Snapshot] = {
     val dir = s"$base/deltas/d-${writerToken()}"
     val comp0 = writeComponent(s, objs, dir, nPacks)
     if (isEmptyComponent(comp0)) { // empty batch: publish nothing
       graft.sources.GraftFs.deleteRecursively(s, dir)
-      return
+      return None
     }
     val comp = meta.fold(comp0)(m => comp0.copy(metaStats = Some(writeMeta(s, dir, m))))
-    publish(s, base, "delta", note)(live => Some(live :+ comp)): Unit
+    publish(s, base, "delta", note)(live => Some(live :+ comp))
   }
 
   /** Attach the batch's record-level metadata to a component dir: a

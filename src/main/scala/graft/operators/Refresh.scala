@@ -6,6 +6,8 @@ import scala.concurrent.duration._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.{QualifiedTableName, TableIdentifier}
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType, CatalogUtils}
 
 /** One refresh target (reference: `ImpalaNode.hostName`,
   * /root/reference/impala-refresher.go:28-40). The reference fans out over N
@@ -31,13 +33,31 @@ final case class RefreshResult(target: String, ok: Boolean, error: Option[String
   */
 object Refresh {
 
-  /** E-R1: reload metadata + file listing for one table so the next scan
-    * sees files added behind the catalog's back (semantics of ref R2,
-    * impala-refresher.go:48-49 — Impala `REFRESH <table>` → Spark
-    * `REFRESH TABLE`).
+  /** E-R1: make the next scan of `table` see files added behind the
+    * catalog's back (semantics of ref R2, impala-refresher.go:48-49 —
+    * Impala `REFRESH <table>`, a metadata update, not a reload).
+    *
+    * For a table of the session catalog (a 1–2 part name while the
+    * session catalog is current, or `spark_catalog.<db>.<t>`) it drops
+    * the table's relation from the session's relation cache, so the next
+    * read builds a new file index and lists the table once. If that
+    * relation is in the cache, it is first re-listed in place: DataFrames
+    * the caller already built share it and must see the new files too.
+    * An uncached table is not listed at all; Spark's
+    * `catalog.refreshTable` would build a relation for it, list it twice
+    * and throw the relation away.
+    *
+    * Spark's `catalog.refreshTable` still runs when the name is a temp
+    * view, a persisted view, not a session-catalog table (an unknown name
+    * among them, so its error is Spark's `TABLE_OR_VIEW_NOT_FOUND`), or
+    * when the session holds any cached data, whose `CACHE TABLE`
+    * dependents Spark recaches.
     */
   def refreshTable(spark: SparkSession, table: String): Unit =
-    spark.catalog.refreshTable(table)
+    sessionTable(spark, table) match {
+      case Some(meta) if spark.sharedState.cacheManager.isEmpty => invalidate(spark, meta.identifier)
+      case _ => spark.catalog.refreshTable(table)
+    }
 
   /** E-R6: partition-scoped refresh — Impala's `REFRESH <table>
     * PARTITION (<spec>)` (reload one partition's file listing after
@@ -47,36 +67,77 @@ object Refresh {
     * partition; discovering brand-new partition directories is
     * `ALTER TABLE ... RECOVER PARTITIONS` territory.
     *
+    * The spec must name every partition column of a session-catalog
+    * table, with the key case of the table's definition, and match one
+    * partition exactly: a partial spec, a wrong-case or extra key, a
+    * view, an unpartitioned table or an unknown value throws
+    * `IllegalArgumentException`, an unknown table Spark's
+    * `TABLE_OR_VIEW_NOT_FOUND`. Values are compared raw, as the catalog
+    * stores them, so a value Hive path-escaping changes (`10:00`, `a=b`)
+    * matches. Existence is one catalog probe; nothing is listed.
+    *
     * Documented deviation (same class as SURVEY §7.1's): Spark's public
-    * invalidation granularity is the TABLE (`refreshTable`;
-    * `refreshByPath` only recaches cached plans — probed empirically),
-    * so the *invalidation* here is table-wide. The partition-scoping
-    * that matters at 100 TB — the RE-LIST COST — is preserved anyway:
-    * Spark's CatalogFileIndex re-lists lazily and partition-pruned, so
-    * the next query pays listing only for the partitions it actually
-    * scans, not the 10k others (RefreshSpec proves this with a
-    * listStatus-counting FileSystem: after a partition refresh, a query
-    * pinned to that partition lists ONLY that partition's directory).
+    * invalidation granularity is the TABLE, so the invalidation is the
+    * table step of [[refreshTable]]. The partition-scoping that matters
+    * at 100 TB — the RE-LIST COST — is preserved anyway: Spark's
+    * CatalogFileIndex re-lists lazily and partition-pruned, so the next
+    * query pays listing only for the partitions it actually scans, not
+    * the 10k others (RefreshSpec proves this with a listStatus-counting
+    * FileSystem). When the session holds cached data, Spark's
+    * `catalog.refreshByPath` on the partition's location and
+    * `catalog.refreshTable` run instead, recaching plans over its files.
     */
   def refreshPartition(spark: SparkSession, table: String, spec: Map[String, String]): Unit = {
     require(spec.nonEmpty, "empty partition spec")
-    val specSql = spec.map { case (k, v) => s"$k='$v'" }.mkString(", ")
-    val wanted = spec.map { case (k, v) => s"$k=$v" }.toSet
-    // existence validation collects SHOW PARTITIONS — O(#partitions) of
-    // metadata strings on the driver (Impala parity: it errors on unknown
-    // partitions). Bounded and metadata-only, but at ~10^5+ partitions
-    // prefer a catalog listPartitions call filtered by the spec (one
-    // partition probe) over materializing the full listing.
-    val known = spark.sql(s"SHOW PARTITIONS $table").collect()
-      .map(_.getString(0).split("/").toSet)
-    require(known.contains(wanted),
-      s"partition ($specSql) not found in $table") // Impala errors on unknown partitions
-    // best-effort targeted recache for plans cached over this partition's
-    // files, then the table-granular invalidation Spark actually offers
-    spark.sql(s"DESCRIBE FORMATTED $table PARTITION ($specSql)").collect()
-      .find(_.getString(0).trim == "Location").map(_.getString(1))
-      .foreach(spark.catalog.refreshByPath)
-    spark.catalog.refreshTable(table)
+    val meta = sessionTable(spark, table).getOrElse {
+      spark.table(table) // an unknown name throws Spark's TABLE_OR_VIEW_NOT_FOUND here
+      throw new IllegalArgumentException(s"$table is not a partitioned session-catalog table")
+    }
+    def missing = new IllegalArgumentException( // Impala errors on unknown partitions
+      s"partition (${spec.map { case (k, v) => s"$k='$v'" }.mkString(", ")}) not found in $table")
+    if (spec.keySet != meta.partitionColumnNames.toSet || spec.values.exists(v => v == null || v.isEmpty))
+      throw missing
+    val part = spark.sessionState.catalog.listPartitions(meta.identifier, Some(spec))
+      .find(_.spec == spec).getOrElse(throw missing)
+    if (spark.sharedState.cacheManager.isEmpty) invalidate(spark, meta.identifier)
+    else {
+      spark.catalog.refreshByPath(CatalogUtils.URIToString(part.location))
+      spark.catalog.refreshTable(table)
+    }
+  }
+
+  /** Spark's `CatalogManager.SESSION_CATALOG_NAME`, which is `private[sql]`. */
+  private val SessionCatalogName = "spark_catalog"
+
+  /** The existing session-catalog table `table` names: a 1–2 part name
+    * while the session catalog is current, or `spark_catalog.<db>.<t>`.
+    * None for a temp view, a persisted view, a name another catalog
+    * resolves and an unknown name.
+    */
+  private def sessionTable(spark: SparkSession, table: String): Option[CatalogTable] = {
+    val catalog = spark.sessionState.catalog
+    val parts = spark.sessionState.sqlParser.parseMultipartIdentifier(table)
+    def session(name: String) = name.equalsIgnoreCase(SessionCatalogName)
+    val inSession = session(spark.sessionState.catalogManager.currentCatalog.name)
+    val id = parts match {
+      case Seq(t) if inSession => Some(TableIdentifier(t))
+      case Seq(db, t) if inSession => Some(TableIdentifier(t, Some(db)))
+      case Seq(c, db, t) if session(c) => Some(TableIdentifier(t, Some(db)))
+      case _ => None
+    }
+    id.filter(i => !catalog.isTempView(parts) && catalog.tableExists(i)).map(catalog.getTableMetadata)
+      .filter(_.tableType != CatalogTableType.VIEW)
+  }
+
+  /** Re-list the table's cached relation in place, if there is one, and
+    * drop it from the relation cache.
+    */
+  private def invalidate(spark: SparkSession, id: TableIdentifier): Unit = {
+    val catalog = spark.sessionState.catalog
+    val q = catalog.qualifyIdentifier(id)
+    val key = QualifiedTableName(q.catalog.get, q.database.get, q.table)
+    Option(catalog.getCachedTable(key)).foreach(_.refresh())
+    catalog.invalidateCachedTable(key)
   }
 
   /** R10: parse a comma-separated target list. Deviation from the reference

@@ -70,9 +70,12 @@ object PackIngest {
     else {
       // tuple column names: PackStore.writeComponent partitions on _1
       val objs = batch.selectExpr("media_id AS _1", "payload AS _2").as[(Long, Array[Byte])]
-      if (upsertMode) PackStore.upsert(s, base, objs, note = Some(batchNote(batchId)))
-      else PackStore.appendDelta(s, base, objs, note = Some(batchNote(batchId)))
-      val deltas = PackStore.readCurrent(s, base).count(_.dir.contains("/deltas/d"))
+      val committed =
+        if (upsertMode) PackStore.upsert(s, base, objs, note = Some(batchNote(batchId)))
+        else PackStore.appendDelta(s, base, objs, note = Some(batchNote(batchId)))
+      // an empty batch publishes nothing: count the tip it left in place
+      val deltas = committed.getOrElse(PackStore.latest(s, base)).comps
+        .count(_.dir.contains("/deltas/d"))
       if (deltas > maxDeltas) {
         PackStore.compact(s, base, nPacks, note = Some(batchNote(batchId)))
         PackStore.vacuum(s, base, retainSnapshots)

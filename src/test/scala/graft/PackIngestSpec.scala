@@ -65,4 +65,25 @@ class PackIngestSpec extends SparkTestBase with Matchers {
     PackStore.latestSnapshotId(spark, base).get shouldBe tip
     PackStore.scan(spark, base).collect().map(_.toString).sorted shouldBe want
   }
+
+  test("processBatch counts deltas from its own publish: two snapshot reads per batch") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CountingFileSystem].getName)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.AbstractFileSystem.graftcount.impl", classOf[CountingAbstractFs].getName)
+    val local = Files.createTempDirectory("graft_packing_opens").toFile.getAbsolutePath
+    val base = s"graftcount:$local/store"
+    def batch(lo: Long) = (lo until lo + 5).map(i => (i, Array.fill[Byte](8)(i.toByte)))
+      .toDF("media_id", "payload")
+    def snapOpens(batchId: Long): Int = {
+      CountingFileSystem.reset()
+      PackIngest.processBatch(spark, batch(batchId * 5), base, batchId, maxDeltas = 8) shouldBe true
+      CountingFileSystem.openedPaths.count(_.contains("/snapshots/snap-"))
+    }
+    snapOpens(0L)
+    // batch 1 reads snap-0 twice: the replay check's history walk and the
+    // publish's tip; the delta count comes from the snapshot it committed
+    snapOpens(1L) shouldBe 2
+    PackStore.readCurrent(spark, base).count(_.dir.contains("/deltas/d")) shouldBe 2
+  }
 }
