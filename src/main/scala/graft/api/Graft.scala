@@ -425,7 +425,6 @@ final class PackStoreHandle(val spark: SparkSession, val base: String) {
     * consistent snapshot; re-register to observe later publishes.
     */
   def createViews(prefix: String): Unit = {
-    import spark.implicits._
     scan().toDF("media_id", "payload").createOrReplaceTempView(s"${prefix}_bytes")
     meta().createOrReplaceTempView(s"${prefix}_meta")
     parseContainers().toDF().createOrReplaceTempView(s"${prefix}_containers")

@@ -36,8 +36,7 @@ object MetaZone {
     * harm); a false positive only costs the meta read the bloom would
     * have saved.
     */
-  private val Bits = 1024
-  private val Words = Bits / 64
+  private val ColBloom = Bloom(1024)
 
   /** One column's zone entry. min/max are the column's non-null extrema
     * rendered as strings (compared back in the column's own domain);
@@ -54,13 +53,6 @@ object MetaZone {
     case _ => "opaque"
   }
 
-  private def mix(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
   private def fnv64(s: String): Long = {
     var h = 0xcbf29ce484222325L
     for (b <- s.getBytes("UTF-8")) { h ^= (b & 0xffL); h *= 0x100000001b3L }
@@ -72,23 +64,17 @@ object MetaZone {
     * (predicate literals), which is the whole point.
     */
   private def hashIn(dt: String, v: Any): Option[Long] = (dt, v) match {
-    case ("long", n: java.lang.Number) => Some(mix(n.longValue()))
+    case ("long", n: java.lang.Number) => Some(Bloom.mix(n.longValue()))
     case ("double", n: java.lang.Number) =>
-      Some(mix(java.lang.Double.doubleToLongBits(n.doubleValue())))
-    case ("string", s) => Some(mix(fnv64(s.toString)))
+      Some(Bloom.mix(java.lang.Double.doubleToLongBits(n.doubleValue())))
+    case ("string", s) => Some(Bloom.mix(fnv64(s.toString)))
     case _ => None
   }
-
-  private def positions(h: Long): Seq[Int] =
-    (1 to 3).map(k => math.floorMod(mix(h + k * 0x632be59bd9b4e019L), Bits).toInt)
-
-  private def mightContain(bloom: Vector[Long], h: Long): Boolean =
-    positions(h).forall(p => (bloom(p >> 6) & (1L << (p & 63))) != 0L)
 
   /** Compute the zone entry for every column of `df` in two narrow
     * passes: one agg for string-rendered min/max, one distinct-positions
     * pass for the blooms (positions, not values, cross to the driver —
-    * bounded by Bits per column regardless of component size).
+    * bounded by the bloom width per column regardless of component size).
     */
   def statsOf(s: SparkSession, df: DataFrame): Map[String, ColStat] = {
     import s.implicits._
@@ -102,16 +88,15 @@ object MetaZone {
       it.flatMap { row =>
         tags.indices.iterator.flatMap { i =>
           if (row.isNullAt(i)) Iterator.empty
-          else hashIn(tags(i), row.get(i)).iterator.flatMap(positions(_).map(p => (i, p)))
+          else hashIn(tags(i), row.get(i)).iterator.flatMap(ColBloom.positions(_).map(p => (i, p)))
         }
       }
     }.distinct().collect()
-    val blooms = Array.fill(fields.size)(new Array[Long](Words))
-    posPairs.foreach { case (i, p) => blooms(i)(p >> 6) |= (1L << (p & 63)) }
+    val setBits = posPairs.toSeq.groupMap(_._1)(_._2)
     fields.zipWithIndex.map { case (f, i) =>
       f.name.toLowerCase -> ColStat(tags(i),
         Option(mmRow.getString(2 * i)), Option(mmRow.getString(2 * i + 1)),
-        blooms(i).toVector)
+        ColBloom.of(setBits.getOrElse(i, Nil)))
     }.toMap
   }
 
@@ -125,12 +110,7 @@ object MetaZone {
 
   def encode(stats: Map[String, ColStat]): String = {
     val cols = stats.toSeq.sortBy(_._1).map { case (name, st) =>
-      val words = {
-        val buf = java.nio.ByteBuffer.allocate(st.bloom.length * 8)
-        st.bloom.foreach(buf.putLong)
-        java.util.Base64.getEncoder.encodeToString(buf.array())
-      }
-      Seq(b64(name), st.dt, st.minS.fold("")(b64), st.maxS.fold("")(b64), words)
+      Seq(b64(name), st.dt, st.minS.fold("")(b64), st.maxS.fold("")(b64), Bloom.encode(st.bloom))
         .mkString("")
     }
     b64(cols.mkString(""))
@@ -140,11 +120,10 @@ object MetaZone {
     unb64(tok).split('').filter(_.nonEmpty).map { colBlob =>
       colBlob.split('') match {
         case Array(n, dt, mn, mx, bl) =>
-          val buf = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(bl))
           unb64(n) -> ColStat(dt,
             if (mn.isEmpty) None else Some(unb64(mn)),
             if (mx.isEmpty) None else Some(unb64(mx)),
-            Vector.fill(buf.remaining() / 8)(buf.getLong))
+            Bloom.decode(bl))
         case other => throw new IllegalStateException(
           s"bad meta-zone column blob: ${other.mkString("|")}")
       }
@@ -250,7 +229,7 @@ object MetaZone {
         case (Some(mn), Some(mx)) =>
           val below = cmpIn(st.dt, mn, v).exists(_ > 0)
           val above = cmpIn(st.dt, mx, v).exists(_ < 0)
-          val bloomMiss = hashIn(st.dt, v).exists(!mightContain(st.bloom, _))
+          val bloomMiss = hashIn(st.dt, v).exists(!ColBloom.mightContain(st.bloom, _))
           below || above || bloomMiss
         case _ => true // ranged type, no non-null value in this component
       }

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import graft.{QueryDef, Tables}
 import graft.functions.VectorOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import graft.QueryDef
 import graft.streaming.StateLog
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Generational pack store — the WRITE lifecycle of the packed layout.
@@ -80,35 +80,7 @@ object PackStore {
     * objects the false-positive rate is well under 1%, and a false
     * positive only costs the manifest read the bloom would have saved.
     */
-  private val BloomBits = 4096
-
-  /** splitmix64 finalizer — one deterministic mixing function usable
-    * identically executor-side (bloom build) and driver-side (prune
-    * test); no dependence on Spark's hash expressions.
-    */
-  private def mix(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
-  private[graft] def bloomPositions(id: Long): Seq[Int] =
-    (1 to 3).map(k => math.floorMod(mix(id + k * 0x632be59bd9b4e019L), BloomBits).toInt)
-
-  private[graft] def mightContain(bloom: Vector[Long], id: Long): Boolean =
-    bloomPositions(id).forall(p => (bloom(p >> 6) & (1L << (p & 63))) != 0L)
-
-  private def encodeBloom(b: Vector[Long]): String = {
-    val buf = java.nio.ByteBuffer.allocate(b.length * 8)
-    b.foreach(buf.putLong)
-    java.util.Base64.getEncoder.encodeToString(buf.array())
-  }
-
-  private def decodeBloom(s64: String): Vector[Long] = {
-    val buf = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(s64))
-    Vector.fill(buf.remaining() / 8)(buf.getLong)
-  }
+  private[graft] val IdBloom = Bloom(4096)
 
   /** One committed snapshot: the decoded `snapshots/snap-<k>` record,
     * the one parse point every read path shares. `kind` records why the
@@ -129,13 +101,13 @@ object PackStore {
     */
   private def encodeLine(c: Component): String =
     (Seq(c.dir, c.minId.toString, c.maxId.toString) ++
-      c.bloom.map(encodeBloom) ++ c.bloom.flatMap(_ => c.metaStats.map(MetaZone.encode)))
+      c.bloom.map(Bloom.encode) ++ c.bloom.flatMap(_ => c.metaStats.map(MetaZone.encode)))
       .mkString("\t")
 
   private def decodeLine(line: String): Component = line.split("\t") match {
     case Array(d, lo, hi, rest @ _*) if rest.size <= 2 && lo.toLongOption.isDefined &&
         hi.toLongOption.isDefined =>
-      Component(d, lo.toLong, hi.toLong, rest.headOption.map(decodeBloom),
+      Component(d, lo.toLong, hi.toLong, rest.headOption.map(Bloom.decode),
         rest.lift(1).map(MetaZone.decode))
     case other => throw new IllegalStateException(s"bad snapshot line: ${other.mkString("\t")}")
   }
@@ -568,7 +540,7 @@ object PackStore {
     // empty input (e.g. compacting a fully-tombstoned store): an EMPTY
     // component — inverted range so every range prune skips it, all-zero
     // bloom — never a null-row NPE; callers may drop it from the publish
-    if (mm.isNullAt(0)) Component(dir, 0L, -1L, Some(Vector.fill(BloomBits / 64)(0L)))
+    if (mm.isNullAt(0)) Component(dir, 0L, -1L, Some(IdBloom.of(Nil)))
     else Component(dir, mm.getLong(0), mm.getLong(1), Some(bloomOf(s, s"$dir/manifest")))
   }
 
@@ -577,18 +549,15 @@ object PackStore {
 
   /** Bloom zone map over a parquet path's media_id column: distinct BIT
     * POSITIONS are collected, not ids, so the driver-side mass is
-    * bounded by BloomBits however large the component is (one narrow
+    * bounded by the bloom width however large the component is (one narrow
     * pass over the id column).
     */
   private def bloomOf(s: SparkSession, parquetPath: String): Vector[Long] = {
     import s.implicits._
-    val positions = s.read.parquet(parquetPath)
+    IdBloom.of(s.read.parquet(parquetPath)
       .select("media_id").as[Long]
-      .mapPartitions(_.flatMap(bloomPositions))
-      .distinct().collect()
-    val arr = new Array[Long](BloomBits / 64)
-    positions.foreach(p => arr(p >> 6) |= (1L << (p & 63)))
-    arr.toVector
+      .mapPartitions(_.flatMap(IdBloom.positions))
+      .distinct().collect())
   }
 
   private def isTombstone(c: Component): Boolean = c.dir.contains("/tombs/")
@@ -731,7 +700,7 @@ object PackStore {
         // but whose bloom rejects every id is skipped before its
         // manifest is ever read (blooms absent = never skip)
         .filter(c => hi - lo >= 64 ||
-          c.bloom.forall(b => (lo to hi).exists(mightContain(b, _))))
+          c.bloom.forall(b => (lo to hi).exists(IdBloom.mightContain(b, _))))
     }
     // POSITION-AWARE subtraction: a tombstone subtracts only from
     // components that precede it in the live list. deleteIds appends its
@@ -805,7 +774,7 @@ object PackStore {
   private def scanData(s: SparkSession, live: Seq[Component],
       idRange: Option[(Long, Long)],
       chunkBytes: Long,
-      idFilter: Option[org.apache.spark.sql.DataFrame] = None): Dataset[(Long, Array[Byte])] = {
+      idFilter: Option[org.apache.spark.sql.DataFrame]): Dataset[(Long, Array[Byte])] = {
     import s.implicits._
     // ONE multi-path relation over every live manifest (r17): same rows
     // as the unionByName-of-single-path-reads it replaces (downstream
@@ -1253,7 +1222,6 @@ ${ContainerOps.containerOracleBaseForStore}
   def ensureUpsertStore(s: SparkSession, dir: String): String =
     graft.sources.GraftFs.artifact(s, dir, tag =>
         s"target/graft-pack-upserts/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s1/$tag") { base =>
-      import s.implicits._
       val objs = ContainerOps.containerTable(s, dir)
       initBase(s, base, objs, ContainerOps.NumPacks)                    // snapshot 0
       upsert(s, base, ContainerOps.containerTableV2(s, dir).filter(_._1 % 10 == 3L)) // snapshot 1
@@ -1297,7 +1265,6 @@ ORDER BY media_id"""),
     }
     graft.sources.GraftFs.artifact(s, dir, tag =>
         s"target/graft-pack-meta/${ContainerOps.payloadFingerprint}-p${ContainerOps.NumPacks}-s2zm/$tag") { base =>
-      import s.implicits._
       val v1 = ContainerOps.containerTable(s, dir)
       initBase(s, base, v1, ContainerOps.NumPacks, meta = Some(metaOf(v1)))    // snapshot 0
       val v2 = ContainerOps.containerTableV2(s, dir).filter(_._1 % 10 == 3L)

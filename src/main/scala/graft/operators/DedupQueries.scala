@@ -1429,7 +1429,6 @@ object DedupQueries {
   // ---- Semantic dedup (SemDeDup) -------------------------------------------
 
   private val SemPlanesPerTable = 3 // 2^3 = 8 cells per table at fixture scale
-  private val SemTables = 2
   private val SemDim = 64
   // Fixture-calibrated: distinct fixture embeddings top out at cos 0.48-0.60
   // (no true near-dups), so the paper's 0.95-class epsilon never fires here;

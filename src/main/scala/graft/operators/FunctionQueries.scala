@@ -13,7 +13,6 @@ import org.apache.spark.sql.types._
   * binary .x5 tie at 1dp.
   */
 object FunctionQueries {
-  private val D = DecimalType(12, 4)
 
   /** String family: upper/lower/substring/concat/trim/length/LIKE/regexp. */
   val fnString = QueryDef(

@@ -47,11 +47,6 @@ object GraphQueries {
       |edges AS (SELECT src, dst FROM knn),
       |und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM edges)""".stripMargin
 
-  /** The portable-LSH edge prelude — same terminal CTEs, sub-quadratic
-    * candidate generation (see VectorQueries.PortableLshEdgeSql).
-    */
-  private def LshEdgeSql = VectorQueries.PortableLshEdgeSql
-
   /** Exact within-label kNN top-3 directed edges (src, dst) — the same
     * construction as q_vec_knn_graph / q_vec_pagerank.
     */

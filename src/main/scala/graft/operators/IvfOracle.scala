@@ -47,7 +47,7 @@ private[operators] object IvfOracle {
   /** One Lloyd step: argmax-assign against `cb$k`, re-key the scaled
     * element rows → `x${k + 1}`.
     */
-  private def assignCtes(k: Int, trainWhere: String = ""): String =
+  private def assignCtes(k: Int, trainWhere: String): String =
     s"""${simCte(s"s$k", s"cb$k", trainWhere)},
        |g$k AS (SELECT vec_id, c_id FROM (
        |    SELECT vec_id, c_id, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, c_id ASC) AS rn

@@ -154,18 +154,18 @@ object Refresh {
     * (`concurrency == 0` ⇒ unbounded, ref :122/:153), each with a deadline.
     * On timeout the target is marked failed and its Spark jobs are cancelled
     * via the job tag — the analogue of the reference's `Process.Kill()`
-    * (impala-refresher.go:79-80). The action is pluggable for tests; the
-    * default is the real catalog refresh.
+    * (impala-refresher.go:79-80). `action` refreshes one target by name:
+    * [[refreshTable]] or [[refreshPartition]] in RefresherApp and the
+    * benchmark, a probe in the specs.
     */
   def refreshAll(
       spark: SparkSession,
       targets: Seq[RefreshTarget],
       timeout: Duration = 60.seconds,
       concurrency: Int = 0,
-      action: String => Unit = null,
+      action: String => Unit,
       onDispatch: String => Unit = _ => (),
   ): Seq[RefreshResult] = {
-    val act: String => Unit = if (action == null) t => refreshTable(spark, t) else action
     // Outer pool = the reference's sliding dispatch window (ref R6): at most
     // `concurrency` targets in flight. Inner pool runs the actual action so
     // the deadline is raced against completion from *dispatch* time — the
@@ -187,7 +187,7 @@ object Refresh {
           val start = System.nanoTime()
           val run = Future {
             spark.sparkContext.addJobTag(tag)
-            try act(target.name)
+            try action(target.name)
             finally spark.sparkContext.removeJobTag(tag)
           }(workerEc)
           try {
@@ -252,23 +252,34 @@ object RefresherApp {
     """usage: RefresherApp -table <table> -nodes n1,n2,... [-timeout seconds] [-concurrency n]
       |       RefresherApp -targets t1,t2,... [-timeout seconds] [-concurrency n]""".stripMargin
 
+  private val flags = Set("-table", "-nodes", "-targets", "-timeout", "-concurrency")
+
   /** R8/R9: flag parsing + required-argument validation, returned as data so
-    * the validation rules are unit-testable (RefreshSpec).
+    * the validation rules are unit-testable (RefreshSpec). Like Go's `flag`
+    * package, an unknown flag, a flag with no value and a non-integer
+    * `-timeout`/`-concurrency` are usage errors.
     */
   def parseArgs(args: Array[String]): Either[String, RefresherConfig] = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val pairs = args.grouped(2).toSeq
+    if (!pairs.forall(p => p.length == 2 && flags(p(0)))) return Left(usageText)
+    val opts = pairs.map(p => p(0) -> p(1)).toMap
+    def int(flag: String, default: Int) =
+      opts.get(flag).fold(Option(default))(_.toIntOption).toRight(usageText)
     val table = opts.getOrElse("-table", "")
     val nodes = opts.getOrElse("-nodes", "")
     val targetsArg = opts.getOrElse("-targets", "")
-    val timeout = opts.get("-timeout").map(_.toInt).getOrElse(60).seconds
-    val concurrency = opts.get("-concurrency").map(_.toInt).getOrElse(0)
-    if (table.nonEmpty || nodes.nonEmpty) {
-      // reference shape: both -table and -nodes are required (ref :157-160)
-      if (table.isEmpty || nodes.isEmpty) Left(usageText)
-      else Right(RefresherConfig(Refresh.parseTargets(nodes), Some(table), timeout, concurrency))
-    } else if (targetsArg.nonEmpty)
-      Right(RefresherConfig(Refresh.parseTargets(targetsArg), None, timeout, concurrency))
-    else Left(usageText)
+    for {
+      timeout <- int("-timeout", 60)
+      concurrency <- int("-concurrency", 0)
+      cfg <-
+        if (table.nonEmpty || nodes.nonEmpty) {
+          // reference shape: both -table and -nodes are required (ref :157-160)
+          if (table.isEmpty || nodes.isEmpty) Left(usageText)
+          else Right(RefresherConfig(Refresh.parseTargets(nodes), Some(table), timeout.seconds, concurrency))
+        } else if (targetsArg.nonEmpty)
+          Right(RefresherConfig(Refresh.parseTargets(targetsArg), None, timeout.seconds, concurrency))
+        else Left(usageText)
+    } yield cfg
   }
 
   def main(args: Array[String]): Unit = {
@@ -281,11 +292,8 @@ object RefresherApp {
       // -table form: every node target runs a refresh of that one table
       // (the catalog is the node analogue); -targets form: each target IS
       // the table.
-      val action: String => Unit = cfg.table match {
-        case Some(t) => _ => Refresh.refreshTable(spark, t)
-        case None => t => Refresh.refreshTable(spark, t)
-      }
-      val results = Refresh.refreshAll(spark, cfg.targets, cfg.timeout, cfg.concurrency, action,
+      val results = Refresh.refreshAll(spark, cfg.targets, cfg.timeout, cfg.concurrency,
+        t => Refresh.refreshTable(spark, cfg.table.getOrElse(t)),
         onDispatch = t => println(s"Refreshing $t's metadata..."))
       results.foreach { r =>
         if (r.ok) println(s"${r.target} refreshed successfully! Took: ${r.durationNanos / 1e9}s")

@@ -1,9 +1,13 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.streaming.{IncrementalIndex, IncrementalSpan}
-import org.apache.spark.sql.SparkSession
+import graft.sources.GraftFs
+import graft.streaming.{IncrementalAgg, IncrementalCdc, IncrementalComponents,
+  IncrementalDedup, IncrementalDrift, IncrementalIndex, IncrementalMine, IncrementalScd2,
+  IncrementalShards, IncrementalSpan, IncrementalStats, IncrementalTrend, IncrementalWinnow}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** The incremental maintainers' SERVE paths as registered, oracle-checked
   * rows (r12) — until now the build→serve loop (IncrementalIndex /
@@ -11,51 +15,51 @@ import org.apache.spark.sql.functions._
   * then answering from state alone) was proven only by specs. These rows
   * put the maintained-state surfaces through the driver's DuckDB hash
   * gate every round: each serves from a state built ONCE per scale dir
-  * by a deterministic two-batch ingest (doc_id parity split — the
-  * IncrementalIndexSpec/IncrementalSpanSpec replay shape), and each
-  * must be BIT-EQUAL to its one-shot registered twin, so the oracle is
-  * the twin's oracle verbatim. A hash mismatch here means the ingest
-  * merge, the state protocol, or the serve derivation drifted from the
-  * one-shot semantics — exactly the regression a streaming deployment
-  * fears and cannot see in one-shot tests.
+  * by a deterministic two- or three-batch ingest (the maintainer specs'
+  * replay shapes), and each must be BIT-EQUAL to its one-shot registered
+  * twin, so the oracle is the twin's oracle verbatim. A hash mismatch
+  * here means the ingest merge, the state protocol, or the serve
+  * derivation drifted from the one-shot semantics — exactly the
+  * regression a streaming deployment fears and cannot see in one-shot
+  * tests.
   *
-  * The state build is the same persisted-artifact contract as the index
-  * builds (cluster labels, prefix relation, run files): first call per
-  * dir pays the ingest, later calls serve from the committed log. The
-  * build is crash-safe to re-run — processBatch skips batch ids at or
-  * below the committed tag, so a partially-built state (batch 0
-  * committed, crash before batch 1) is completed, never double-landed.
+  * Each state is a build-once [[GraftFs.artifact]] at
+  * `target/graft-state/<scaleTag>/<family>`, like every derived layout:
+  * the first call per dir runs the ingest under the artifact's per-path
+  * lock and marks the state `_SUCCESS`; later calls serve from the
+  * committed log. A build that fails part-way leaves no marker, so the
+  * next call wipes the partial state and rebuilds it from batch 0 rather
+  * than resuming it — the ingest is deterministic, so the rebuilt state
+  * is the same.
   */
 object ServeQueries {
 
-  private def stateBase(s: SparkSession, dir: String, family: String): String = {
-    val tag = graft.sources.GraftFs.scaleTag(s, dir)
-    graft.sources.GraftFs.qualify(s, s"target/graft-state/$tag/$family")
-  }
+  /** Serve row state `family` over scale dir `dir`, built once by
+    * `ingest(base)`; returns the qualified base.
+    */
+  private def state(s: SparkSession, dir: String, family: String)(ingest: String => Unit): String =
+    GraftFs.artifact(s, dir, tag => s"target/graft-state/$tag/$family")(ingest)
 
-  private[graft] def indexStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "index")
-      if (!IncrementalIndex.currentState(s, base).batch.contains(1L)) {
-        val docs = Tables.documents(s, dir)
-        for (i <- 0 until 2)
-          IncrementalIndex.processBatch(s,
-            docs.filter(pmod(col("doc_id"), lit(2)) === i), base, Some(i.toLong))
-      }
-      base
+  /** A [[state]] whose ingest splits `frame` into `n` batches by
+    * `pmod(key, n)` and lands batch i, with id i, through `process`.
+    */
+  private def splitState(s: SparkSession, dir: String, family: String, key: Column, n: Int)
+      (frame: => DataFrame)(process: (DataFrame, String, Option[Long]) => Any): String =
+    state(s, dir, family) { base =>
+      val f = frame
+      for (i <- 0 until n) process(f.filter(pmod(key, lit(n)) === i), base, Some(i.toLong))
     }
 
-  private[graft] def spanStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "span")
-      if (!IncrementalSpan.currentState(s, base).batch.contains(1L)) {
-        val docs = Tables.documents(s, dir).select("doc_id", "text")
-        for (i <- 0 until 2)
-          IncrementalSpan.processBatch(s,
-            docs.filter(pmod(col("doc_id"), lit(2)) === i), base, Some(i.toLong))
-      }
-      base
-    }
+  /** A decimal(12,2) amount as whole cents. */
+  private def cents(c: Column): Column = (c.cast(DecimalType(12, 2)) * 100).cast(LongType)
+
+  private def indexStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "index", col("doc_id"), 2)(Tables.documents(s, dir))(
+      IncrementalIndex.processBatch(s, _, _, _))
+
+  private def spanStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "span", col("doc_id"), 2)(
+      Tables.documents(s, dir).select("doc_id", "text"))(IncrementalSpan.processBatch(s, _, _, _))
 
   /** RRF hybrid retrieval served ENTIRELY from the maintained inverted-
     * index state (tf from posting segments, df from the stats table,
@@ -89,18 +93,10 @@ object ServeQueries {
   /** Span state holding ONLY the standing slice (doc_id % 5 ≠ 0 — the
     * registered q_text_novelty split), for the admission-question serve.
     */
-  private[graft] def noveltyStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "novelty")
-      if (!IncrementalSpan.currentState(s, base).batch.contains(1L)) {
-        val standing = Tables.documents(s, dir).select("doc_id", "text")
-          .filter(col("doc_id") % 5 =!= 0)
-        for (i <- 0 until 2)
-          IncrementalSpan.processBatch(s,
-            standing.filter(pmod(col("doc_id"), lit(2)) === i), base, Some(i.toLong))
-      }
-      base
-    }
+  private def noveltyStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "novelty", col("doc_id"), 2)(
+      Tables.documents(s, dir).select("doc_id", "text").filter(col("doc_id") % 5 =!= 0))(
+      IncrementalSpan.processBatch(s, _, _, _))
 
   /** The admission question served from state — q_text_novelty's "how
     * much new information would this incoming slice add" answered from
@@ -119,17 +115,9 @@ object ServeQueries {
     CurationQueries.textNovelty.oracle,
   )
 
-  private[graft] def aggStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "agg")
-      if (!graft.streaming.IncrementalAgg.committedBatch(s, base).contains(1L)) {
-        val events = Tables.events(s, dir)
-        for (i <- 0 until 2)
-          graft.streaming.IncrementalAgg.processBatch(s,
-            events.filter(pmod(col("event_id"), lit(2)) === i), base, Some(i.toLong))
-      }
-      base
-    }
+  private def aggStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "agg", col("event_id"), 2)(Tables.events(s, dir))(
+      IncrementalAgg.processBatch(s, _, _, _))
 
   /** The matview maintainer's SERVE path as a registered row: the
     * per-event-type count/decimal-sum aggregate read from IncrementalAgg's
@@ -144,9 +132,9 @@ object ServeQueries {
   val serveAggState = QueryDef(
     "q_serve_agg_state",
     (s, dir) =>
-      graft.streaming.IncrementalAgg.readState(s, aggStateBuilt(s, dir))
+      IncrementalAgg.readState(s, aggStateBuilt(s, dir))
         .select(col("event_type"), col("n"),
-          col("sum_value").cast(org.apache.spark.sql.types.DoubleType).as("sum_value"))
+          col("sum_value").cast(DoubleType).as("sum_value"))
         .orderBy("event_type"),
     Some("""
       SELECT event_type, COUNT(*) AS n,
@@ -155,22 +143,11 @@ object ServeQueries {
     """.trim),
   )
 
-  private[graft] def statsStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "stats")
-      if (!graft.streaming.IncrementalStats.committedBatch(s, base).contains(1L)) {
-        val frame = Tables.orders(s, dir)
-          .filter(col("o_orderstatus").isin("O", "F"))
-          .select(col("o_orderkey"), col("o_orderstatus").as("grp"),
-            (col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(12, 2)) * 100)
-              .cast(org.apache.spark.sql.types.LongType).as("v"))
-        for (i <- 0 until 2)
-          graft.streaming.IncrementalStats.processBatch(s,
-            frame.filter(pmod(col("o_orderkey"), lit(2)) === i).select("grp", "v"),
-            base, Some(i.toLong))
-      }
-      base
-    }
+  private def statsStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "stats", col("o_orderkey"), 2)(
+      Tables.orders(s, dir).filter(col("o_orderstatus").isin("O", "F"))
+        .select(col("o_orderkey"), col("o_orderstatus").as("grp"), cents(col("o_totalprice")).as("v")))(
+      (batch, base, id) => IncrementalStats.processBatch(s, batch.select("grp", "v"), base, id))
 
   /** The stats-histogram maintainer's SERVE path as a registered row:
     * Mann-Whitney U answered from the maintained value-distinct histogram
@@ -183,21 +160,13 @@ object ServeQueries {
   val serveMwState = QueryDef(
     "q_serve_mw_state",
     (s, dir) =>
-      graft.streaming.IncrementalStats.serveMannWhitney(s, statsStateBuilt(s, dir), "O"),
+      IncrementalStats.serveMannWhitney(s, statsStateBuilt(s, dir), "O"),
     StatQueries.statMannWhitney.oracle,
   )
 
-  private[graft] def neardupStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "neardup")
-      if (!graft.streaming.IncrementalDedup.committedBatch(s, base).contains(1L)) {
-        val docs = Tables.documents(s, dir)
-        for (i <- 0 until 2)
-          graft.streaming.IncrementalDedup.processBatch(s,
-            docs.filter(pmod(col("doc_id"), lit(2)) === i), base, Some(i.toLong))
-      }
-      base
-    }
+  private def neardupStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "neardup", col("doc_id"), 2)(Tables.documents(s, dir))(
+      IncrementalDedup.processBatch(s, _, _, _))
 
   /** The near-dedup maintainer's SERVE path as a registered row: the
     * accumulated verified pair set read from IncrementalDedup's
@@ -212,32 +181,28 @@ object ServeQueries {
   val serveNeardupState = QueryDef(
     "q_serve_neardup_state",
     (s, dir) =>
-      graft.streaming.IncrementalDedup.readPairs(s, neardupStateBuilt(s, dir))
+      IncrementalDedup.readPairs(s, neardupStateBuilt(s, dir))
         .orderBy("doc_id1", "doc_id2"),
     DedupQueries.dedupNear.oracle,
   )
 
-  private[graft] def cdcStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "cdc")
-      if (!graft.streaming.IncrementalCdc.committedBatch(s, base).contains(1L)) {
-        val orders = Tables.orders(s, dir)
-        // batch 0 seeds the snapshot (every snapshot key as an upsert of
-        // its own row); batch 1 is q_cdc_upsert's exact derived change
-        // set — keys divisible by 5 delete, even keys upsert at +10.00
-        val seed = orders.filter(col("o_orderkey") % 3 =!= 0)
-          .select(col("o_orderkey"), lit("U").as("op"),
-            col("o_custkey").as("c_custkey"), col("o_totalprice").as("new_price"))
-        val changes = orders
-          .filter(col("o_orderkey") % 2 === 0 || col("o_orderkey") % 5 === 0)
-          .select(col("o_orderkey"),
-            when(col("o_orderkey") % 5 === 0, lit("D")).otherwise(lit("U")).as("op"),
-            col("o_custkey").as("c_custkey"),
-            (col("o_totalprice") + 10.0).as("new_price"))
-        graft.streaming.IncrementalCdc.processBatch(s, seed, base, Some(0L))
-        graft.streaming.IncrementalCdc.processBatch(s, changes, base, Some(1L))
-      }
-      base
+  private def cdcStateBuilt(s: SparkSession, dir: String): String =
+    state(s, dir, "cdc") { base =>
+      val orders = Tables.orders(s, dir)
+      // batch 0 seeds the snapshot (every snapshot key as an upsert of
+      // its own row); batch 1 is q_cdc_upsert's exact derived change
+      // set — keys divisible by 5 delete, even keys upsert at +10.00
+      val seed = orders.filter(col("o_orderkey") % 3 =!= 0)
+        .select(col("o_orderkey"), lit("U").as("op"),
+          col("o_custkey").as("c_custkey"), col("o_totalprice").as("new_price"))
+      val changes = orders
+        .filter(col("o_orderkey") % 2 === 0 || col("o_orderkey") % 5 === 0)
+        .select(col("o_orderkey"),
+          when(col("o_orderkey") % 5 === 0, lit("D")).otherwise(lit("U")).as("op"),
+          col("o_custkey").as("c_custkey"),
+          (col("o_totalprice") + 10.0).as("new_price"))
+      IncrementalCdc.processBatch(s, seed, base, Some(0L))
+      IncrementalCdc.processBatch(s, changes, base, Some(1L))
     }
 
   /** The CDC maintainer's SERVE path as a registered row: the maintained
@@ -251,7 +216,7 @@ object ServeQueries {
   val serveCdcState = QueryDef(
     "q_serve_cdc_state",
     (s, dir) =>
-      graft.streaming.IncrementalCdc.readState(s, cdcStateBuilt(s, dir))
+      IncrementalCdc.readState(s, cdcStateBuilt(s, dir))
         .orderBy("o_orderkey"),
     Some("""
       WITH snap AS (
@@ -271,20 +236,14 @@ object ServeQueries {
     """.trim),
   )
 
-  private[graft] def shardsStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "shards")
-      if (!graft.streaming.IncrementalShards.committedBatch(s, base).contains(1L)) {
-        val docs = Tables.documents(s, dir).select("doc_id", "n_chars", "text")
-        // the manifest's feed contract: doc_id-ordered batches (offsets
-        // accumulate) — split at the id midpoint, lower half first
-        val mid = docs.agg(max("doc_id")).head().getLong(0) / 2
-        graft.streaming.IncrementalShards.processBatch(s,
-          docs.filter(col("doc_id") <= mid), base, Some(0L))
-        graft.streaming.IncrementalShards.processBatch(s,
-          docs.filter(col("doc_id") > mid), base, Some(1L))
-      }
-      base
+  private def shardsStateBuilt(s: SparkSession, dir: String): String =
+    state(s, dir, "shards") { base =>
+      val docs = Tables.documents(s, dir).select("doc_id", "n_chars", "text")
+      // the manifest's feed contract: doc_id-ordered batches (offsets
+      // accumulate) — split at the id midpoint, lower half first
+      val mid = docs.agg(max("doc_id")).head().getLong(0) / 2
+      IncrementalShards.processBatch(s, docs.filter(col("doc_id") <= mid), base, Some(0L))
+      IncrementalShards.processBatch(s, docs.filter(col("doc_id") > mid), base, Some(1L))
     }
 
   /** The shard-manifest maintainer's SERVE path as a registered row: the
@@ -298,34 +257,27 @@ object ServeQueries {
   val serveShardsState = QueryDef(
     "q_serve_shards_state",
     (s, dir) =>
-      graft.streaming.IncrementalShards.readState(s, shardsStateBuilt(s, dir))
+      IncrementalShards.readState(s, shardsStateBuilt(s, dir))
         .orderBy("shard_id"),
     CurationQueries.pipelineShards.oracle,
   )
 
-  private[graft] def scd2StateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "scd2")
-      if (!graft.streaming.IncrementalScd2.committedBatch(s, base).contains(2L)) {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("event_id"), col("event_type"), col("ts"),
-            expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-              .as("us"))
-        // time-ordered terciles (per-user order preserved) — the
-        // IncrementalScd2Spec feed shape; percentile_approx with fixed
-        // accuracy is deterministic on fixed data
-        val b = ev.selectExpr(
-          "percentile_approx(us, 0.3333, 10000)",
-          "percentile_approx(us, 0.6667, 10000)").head
-        val (t1, t2) = (b.getLong(0), b.getLong(1))
-        graft.streaming.IncrementalScd2.processBatch(s,
-          ev.filter(col("us") <= t1), base, Some(0L))
-        graft.streaming.IncrementalScd2.processBatch(s,
-          ev.filter(col("us") > t1 && col("us") <= t2), base, Some(1L))
-        graft.streaming.IncrementalScd2.processBatch(s,
-          ev.filter(col("us") > t2), base, Some(2L))
-      }
-      base
+  private def scd2StateBuilt(s: SparkSession, dir: String): String =
+    state(s, dir, "scd2") { base =>
+      val ev = Tables.events(s, dir)
+        .select(col("user_id"), col("event_id"), col("event_type"), col("ts"),
+          expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
+            .as("us"))
+      // time-ordered terciles (per-user order preserved) — the
+      // IncrementalScd2Spec feed shape; percentile_approx with fixed
+      // accuracy is deterministic on fixed data
+      val b = ev.selectExpr(
+        "percentile_approx(us, 0.3333, 10000)",
+        "percentile_approx(us, 0.6667, 10000)").head
+      val (t1, t2) = (b.getLong(0), b.getLong(1))
+      IncrementalScd2.processBatch(s, ev.filter(col("us") <= t1), base, Some(0L))
+      IncrementalScd2.processBatch(s, ev.filter(col("us") > t1 && col("us") <= t2), base, Some(1L))
+      IncrementalScd2.processBatch(s, ev.filter(col("us") > t2), base, Some(2L))
     }
 
   /** The SCD2 maintainer's SERVE path as a registered row: the full
@@ -340,31 +292,26 @@ object ServeQueries {
   val serveScd2State = QueryDef(
     "q_serve_scd2_state",
     (s, dir) =>
-      graft.streaming.IncrementalScd2.readDimension(s, scd2StateBuilt(s, dir)),
+      IncrementalScd2.readDimension(s, scd2StateBuilt(s, dir)),
     CdcQueries.cdcScd2.oracle,
   )
 
-  private[graft] def componentsStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "components")
-      if (!graft.streaming.IncrementalComponents.committedBatch(s, base).contains(2L)) {
-        val edges = GraphQueries.lshUndirectedEdges(s, dir).localCheckpoint()
-        val maxId = Tables.embeddings(s, dir).agg(max("vec_id")).head().getLong(0)
-        val (cut1, cut2) = (maxId / 3, 2 * maxId / 3)
-        def batchOf(c: org.apache.spark.sql.Column) =
-          when(c <= cut1, 0L).when(c <= cut2, 1L).otherwise(2L)
-        val nodes = Tables.embeddings(s, dir)
-          .select(col("vec_id").as("node_id"), batchOf(col("vec_id")).as("bid"))
-        // an edge lands with its LATER endpoint (the maintainer's
-        // deliver-with-endpoints contract)
-        val edgesB = edges.withColumn("bid", batchOf(greatest(col("a"), col("b"))))
-        for (bid <- 0L to 2L)
-          graft.streaming.IncrementalComponents.processBatch(s,
-            nodes.filter(col("bid") === bid).select("node_id"),
-            edgesB.filter(col("bid") === bid).select("a", "b"),
-            base, Some(bid))
-      }
-      base
+  private def componentsStateBuilt(s: SparkSession, dir: String): String =
+    state(s, dir, "components") { base =>
+      val edges = GraphQueries.lshUndirectedEdges(s, dir).localCheckpoint()
+      val maxId = Tables.embeddings(s, dir).agg(max("vec_id")).head().getLong(0)
+      val (cut1, cut2) = (maxId / 3, 2 * maxId / 3)
+      def batchOf(c: Column) = when(c <= cut1, 0L).when(c <= cut2, 1L).otherwise(2L)
+      val nodes = Tables.embeddings(s, dir)
+        .select(col("vec_id").as("node_id"), batchOf(col("vec_id")).as("bid"))
+      // an edge lands with its LATER endpoint (the maintainer's
+      // deliver-with-endpoints contract)
+      val edgesB = edges.withColumn("bid", batchOf(greatest(col("a"), col("b"))))
+      for (bid <- 0L to 2L)
+        IncrementalComponents.processBatch(s,
+          nodes.filter(col("bid") === bid).select("node_id"),
+          edgesB.filter(col("bid") === bid).select("a", "b"),
+          base, Some(bid))
     }
 
   /** The connected-components maintainer's SERVE path as a registered
@@ -378,7 +325,7 @@ object ServeQueries {
   val serveComponentsState = QueryDef(
     "q_serve_components_state",
     (s, dir) => {
-      val labels = graft.streaming.IncrementalComponents
+      val labels = IncrementalComponents
         .readState(s, componentsStateBuilt(s, dir))
       val sizes = labels.groupBy("component").agg(count(lit(1)).as("component_size"))
       labels.join(broadcast(sizes), "component")
@@ -388,18 +335,10 @@ object ServeQueries {
     GraphQueries.graphComponentsLsh.oracle,
   )
 
-  private[graft] def mineStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "mine")
-      if (!graft.streaming.IncrementalMine.committedBatch(s, base).contains(2L)) {
-        val bi = Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        for (i <- 0 until 3)
-          graft.streaming.IncrementalMine.processBatch(s,
-            bi.filter(pmod(hash(col("ok")), lit(3)) === i), base, Some(i.toLong))
-      }
-      base
-    }
+  private def mineStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "mine", hash(col("ok")), 3)(
+      Tables.lineitem(s, dir).select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))(
+      IncrementalMine.processBatch(s, _, _, _))
 
   /** The mining maintainer's SERVE path as a registered row: association
     * rules answered from the maintained (item supports, pair supports,
@@ -412,34 +351,24 @@ object ServeQueries {
   val serveRulesState = QueryDef(
     "q_serve_rules_state",
     (s, dir) =>
-      graft.streaming.IncrementalMine.serveRules(s, mineStateBuilt(s, dir)),
+      IncrementalMine.serveRules(s, mineStateBuilt(s, dir)),
     MiningQueries.mineRules.oracle,
   )
 
-  private[graft] def trendStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      // trend_v2: the r13 slope-histogram protocol added a `slopes` state
-      // table; trend_v3/v4: the r14 moments protocol added
-      // `vals`/`moments`/`slopes_cum` — a state built by an older writer
-      // lacks the new tables, so the family name is bumped rather than
-      // served mixed
-      val base = stateBase(s, dir, "trend_v4")
-      if (!graft.streaming.IncrementalTrend.committedBatch(s, base).contains(2L)) {
-        val raw = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"),
-            col("event_type").as("g"),
-            expr("unix_micros(cast(ts as timestamp)) div 3600000000").as("h"),
-            (col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)) * 100)
-              .cast(org.apache.spark.sql.types.LongType).as("x"),
-            expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-            (col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)) * 100)
-              .cast(org.apache.spark.sql.types.LongType).as("m"))
-        for (i <- 0 until 3)
-          graft.streaming.IncrementalTrend.processBatch(s,
-            raw.filter(pmod(hash(col("event_id")), lit(3)) === i), base, Some(i.toLong))
-      }
-      base
-    }
+  /** trend_v4: the family name is bumped whenever the maintainer adds a
+    * state table (v2 `slopes`, v3/v4 `vals`/`moments`/`slopes_cum`), so
+    * a state an older writer built is never served mixed.
+    */
+  private def trendStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "trend_v4", hash(col("event_id")), 3)(
+      Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"),
+          col("event_type").as("g"),
+          expr("unix_micros(cast(ts as timestamp)) div 3600000000").as("h"),
+          cents(col("value")).as("x"),
+          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
+          cents(col("value")).as("m")))(
+      IncrementalTrend.processBatch(s, _, _, _))
 
   /** The trend maintainer's SERVE path as a registered row: Mann-Kendall/
     * Sen trend answered from the maintained hourly moments after a
@@ -451,21 +380,13 @@ object ServeQueries {
   val serveTrendState = QueryDef(
     "q_serve_trend_state",
     (s, dir) =>
-      graft.streaming.IncrementalTrend.serveTrend(s, trendStateBuilt(s, dir)),
+      IncrementalTrend.serveTrend(s, trendStateBuilt(s, dir)),
     TimeSeriesQueries.tsTrend.oracle,
   )
 
-  private[graft] def winnowStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "winnow")
-      if (!graft.streaming.IncrementalWinnow.committedBatch(s, base).contains(1L)) {
-        val docs = Tables.documents(s, dir).select("doc_id", "text")
-        for (i <- 0 until 2)
-          graft.streaming.IncrementalWinnow.processBatch(s,
-            docs.filter(pmod(col("doc_id"), lit(2)) === i), base, Some(i.toLong))
-      }
-      base
-    }
+  private def winnowStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "winnow", col("doc_id"), 2)(
+      Tables.documents(s, dir).select("doc_id", "text"))(IncrementalWinnow.processBatch(s, _, _, _))
 
   /** The winnow maintainer's SERVE path as a registered row: the MOSS
     * match step answered from the maintained fingerprint segments after
@@ -479,23 +400,16 @@ object ServeQueries {
   val serveWinnowState = QueryDef(
     "q_serve_winnow_state",
     (s, dir) =>
-      graft.streaming.IncrementalWinnow
+      IncrementalWinnow
         .serveWinnowPairs(s, winnowStateBuilt(s, dir))
         .orderBy("doc_id1", "doc_id2"),
     TextQueries.textWinnowPairs.oracle,
   )
 
-  private[graft] def driftStateBuilt(s: SparkSession, dir: String): String =
-    synchronized {
-      val base = stateBase(s, dir, "drift")
-      if (!graft.streaming.IncrementalDrift.committedBatch(s, base).contains(2L)) {
-        val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-        for (i <- 0 until 3)
-          graft.streaming.IncrementalDrift.processBatch(s,
-            docs.filter(pmod(col("doc_id"), lit(3)) === i), base, Some(i.toLong))
-      }
-      base
-    }
+  private def driftStateBuilt(s: SparkSession, dir: String): String =
+    splitState(s, dir, "drift", col("doc_id"), 3)(
+      Tables.documents(s, dir).select("doc_id", "source", "text"))(
+      IncrementalDrift.processBatch(s, _, _, _))
 
   /** The drift maintainer's SERVE path as a registered row: the top-30
     * Dunning-G² source-drift tokens answered from the maintained
@@ -508,7 +422,7 @@ object ServeQueries {
   val serveDriftState = QueryDef(
     "q_serve_drift_state",
     (s, dir) =>
-      graft.streaming.IncrementalDrift.driftFromState(s, driftStateBuilt(s, dir)),
+      IncrementalDrift.driftFromState(s, driftStateBuilt(s, dir)),
     TextQueries.textDrift.oracle,
   )
 

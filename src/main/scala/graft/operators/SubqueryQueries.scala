@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Subqueries (Catalyst decorrelation), pivot/unpivot reshaping, and
   * time-series gap-filling — relational surface beyond SURVEY §2.B's

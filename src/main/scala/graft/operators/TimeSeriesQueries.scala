@@ -478,15 +478,6 @@ object TimeSeriesQueries {
       sAgg.join(nAgg, "g").join(ties, "g")
   }
 
-  /** MK/Sen output from precomputed moments + the slope histogram — the
-    * maintained serve path's entry: a constant-size moments read plus
-    * the Sen order statistic over the histogram (the one declared
-    * serve-time pass; an order statistic has no associative form).
-    */
-  private[graft] def trendFromMoments(moments: org.apache.spark.sql.DataFrame,
-      hist0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      trendTail(moments, hist0.localCheckpoint())
-
   /** The CUMULATIVE Sen marginal of a slope histogram: one row per
     * (g, v = slope_q summed over sgn) with its pair count t and the
     * cumulative count cb of strictly-smaller slopes — the artifact that

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Pure-SQL-path analytics in the classic TPC-H query shapes (Q3 shipping
   * priority, Q5 local supplier volume), adapted to the fixture's 1995-2001

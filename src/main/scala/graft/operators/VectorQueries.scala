@@ -1280,7 +1280,7 @@ object VectorQueries {
     * edges never do).
     */
   private def incrMergeTop3(oldGraph: DataFrame, freshEdges0: DataFrame,
-      preMaterialized: Boolean = false): DataFrame = {
+      preMaterialized: Boolean): DataFrame = {
     // the fresh-edge subtree feeds THREE consumers (affected-set build,
     // semi-joined re-rank input, and the union itself) — without a
     // lineage cut Catalyst re-executes the whole collision+scoring

@@ -13,7 +13,6 @@ import org.apache.spark.sql.types._
   * unpartitioned (a global ORDER BY window would serialize on one task).
   */
 object WindowQueries {
-  private val D = DecimalType(12, 4)
 
   /** Ranking trio. Window order includes the unique orderkey so ranks are
     * total and engine-independent.

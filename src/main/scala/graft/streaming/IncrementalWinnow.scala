@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.TextQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Incremental maintenance of the winnowing fingerprint index

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.functions._
 
 /** Batch twins of the Group J streaming transforms, registered in
   * SparkEntry so the driver oracle-checks the *semantics*; StreamingSpec

@@ -9,12 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Guards against regrowth of hand-rolled build-once guards: every
-  * artifact derived from a scale dir goes through `GraftFs.artifact` /
+  * artifact derived from a scale dir — derived layouts and the serve
+  * rows' maintained state alike — goes through `GraftFs.artifact` /
   * `GraftFs.persisted`, so the fingerprint (`scaleTag(`) and the commit
-  * marker check (`hasSuccess(`) appear only in GraftFs itself, in
-  * BucketedTables (whose layouts are also revalidated file by file), and
-  * — for the tag alone — in ServeQueries, whose state completes on a
-  * committed batch tag rather than a marker.
+  * marker check (`hasSuccess(`) appear only in GraftFs itself and in
+  * BucketedTables, whose layouts are also revalidated file by file.
   */
 class ArtifactSitesSpec extends AnyFunSuite with Matchers {
 
@@ -32,9 +31,8 @@ class ArtifactSitesSpec extends AnyFunSuite with Matchers {
     filesContaining("hasSuccess(") shouldBe Set("GraftFs.scala", "BucketedTables.scala")
   }
 
-  test("scaleTag( appears only in GraftFs, BucketedTables and ServeQueries") {
-    filesContaining("scaleTag(") shouldBe
-      Set("GraftFs.scala", "BucketedTables.scala", "ServeQueries.scala")
+  test("scaleTag( appears only in GraftFs and BucketedTables") {
+    filesContaining("scaleTag(") shouldBe Set("GraftFs.scala", "BucketedTables.scala")
   }
 
   test("the _SUCCESS marker path is spelled only in GraftFs") {

@@ -56,6 +56,47 @@ class PackLogFormatSpec extends SparkTestBase with Matchers {
     PackStore.latest(spark, base) shouldBe tip
   }
 
+  test("blooms encoded in the established format still admit their ids and reject the same misses") {
+    // snap-0 of a store over ids 100..149 and the meta zone of a
+    // (kind, n) frame {(alpha, 7), (beta, 9)}, both as that format wrote them
+    val idBloom = "BAAAAAAQIAAAQQAAABAEAAAAABAAAAACAgAAACAAACAAAAABAQAAAAgAAAABAIAAAAAAAAAAAIACFAEAAAAAAAAAAAAA" +
+      "BACIgAAAAABAAAAAAAAQAAAIQIAAAAAAACAIACAAAMAAEAAAAAAAAAAIACAAACAQEAABBAQAAAAAAAAAgAAAABAIAAAAAAAAAIAA" +
+      "AAAAggBAAAAAAAIAAAgAAAAAAAAAABCAAAIAAAAAAAQAAAABAAAoAABAgCAAAAAAAAAAAAAIAAAAAAAAAAAAAAAAAAAQAAIAAAoI" +
+      "AAIQAAAAAECAAAAAAAAAAAAAAgCAAAAAAAAQAEAAAQgAAAAAAAAAAAAAAAAAAAAAAAAAAACAAAAAAAAAAAAAgIgAAAAAAAAAAADA" +
+      "AAAACAAAAAAIBQAAAAIAAAAAAEAAAAAAACAAAAAIAAAgAAACAIAEAAAAGAAIAABBBAAAEKAAAAAAAACAAAAAAAIAAAAAAAAAAAAQ" +
+      "AAIAAABAAAAggABCCACAABEAAAAEAAAAAAAACAAAEAAAAAAAAAAAAAEAAAACAAQAAAAgAAAAAAAAAAACAIAAAAAAAAAAAIAAAAAAA" +
+      "AAAAAAAAAAAAAgAAEAAIAAAAAAAAQAAgAAgAQAAAAAEBAAAABIAAAAACAAACAAAECIAAAAAAgAAAAAIAAABAAAAAAA="
+    val zoneTok = "YTJsdVpBPT0fc3RyaW5nH1lXeHdhR0U9H1ltVjBZUT09H0FBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQU" +
+      "FBQUFBQUFBQUFBQUFBQUFBQUFBQ0FBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFnQUFBQUFBQUFBQUFBQUFBQUNBQUFBQUFBQUFB" +
+      "QUFBTkFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQT0eYmc9PR9sb25nH053PT0fT1" +
+      "E9PR9BQUFBQUFBQUFBQUFFQUFBQUFBQUFBQUFBQUFBQUFDUUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQkFB" +
+      "QUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFBQUFCQUFBQUFBQUFBQUFBQUFBQWdBQUFBQUFBQUFBQUFBQU" +
+      "FBQUFBQUFBQUFBQUFBQUFBQUFBQUE9"
+    val base = fresh("bloom")
+    GraftFs.writeSmallFileAtomic(spark, s"$base/snapshots/snap-0",
+      s"#kind=init\n/data/packs/v0-aa\t100\t149\t$idBloom\t$zoneTok\n#eof")
+    val Seq(comp) = PackStore.readCurrent(spark, base)
+    val ids = comp.bloom.get
+    ids should have size 64
+    all((100L to 149L).map(PackStore.IdBloom.mightContain(ids, _))) shouldBe true
+    (150L to 154L).exists(PackStore.IdBloom.mightContain(ids, _)) shouldBe false
+    graft.multimodal.Bloom.encode(ids) shouldBe idBloom
+
+    import org.apache.spark.sql.functions.col
+    val zone = comp.metaStats.get
+    zone("kind").bloom should have size 16
+    MetaZone.encode(zone) shouldBe zoneTok
+    def excludes(c: org.apache.spark.sql.Column) =
+      MetaZone.excludes(zone, org.apache.spark.sql.GraftPlanBridge.columnExpr(c))
+    excludes(col("kind") === "alpha") shouldBe false
+    excludes(col("kind") === "beta") shouldBe false
+    excludes(col("n") === 7L) shouldBe false
+    excludes(col("n") === 9L) shouldBe false
+    // inside [min, max], rejected by the bloom alone
+    excludes(col("kind") === "b") shouldBe true
+    excludes(col("n") === 8L) shouldBe true
+  }
+
   test("a publish writes snap-<k> and a digits-only CURRENT in that format") {
     val base = fresh("write")
     def objs(lo: Long, hi: Long) =

@@ -131,7 +131,7 @@ class PackStoreSpec extends SparkTestBase with Matchers {
 
     // a missing odd id the bloom provably rejects (deterministic hashes)
     val miss = (301L to 397L by 2)
-      .find(id => !PackStore.mightContain(delta.bloom.get, id)).get
+      .find(id => !PackStore.IdBloom.mightContain(delta.bloom.get, id)).get
     CountingFileSystem.reset()
     PackStore.scan(spark, base, Some((miss, miss))).count() shouldBe 0L
     // min/max said "maybe", the bloom said "no" — the delta was never touched

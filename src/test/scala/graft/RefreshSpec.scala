@@ -329,6 +329,18 @@ class RefreshSpec extends SparkTestBase with Matchers {
     RefresherApp.parseArgs(Array.empty[String]).isLeft shouldBe true
   }
 
+  test("R8/R9 CLI rejects a non-integer -timeout or -concurrency with usage, like Go's flag") {
+    RefresherApp.parseArgs(Array("-targets", "a", "-timeout", "x")).isLeft shouldBe true
+    RefresherApp.parseArgs(Array("-targets", "a", "-concurrency", "x")).isLeft shouldBe true
+    RefresherApp.parseArgs(Array("-table", "t1", "-nodes", "n1", "-timeout", "1.5")).isLeft shouldBe true
+  }
+
+  test("R8/R9 CLI rejects an unknown flag or a trailing flag with no value") {
+    RefresherApp.parseArgs(Array("-targets", "a", "-bogus", "1")).isLeft shouldBe true
+    RefresherApp.parseArgs(Array("-table", "t1", "-nodes", "n1", "-timeout")).isLeft shouldBe true
+    RefresherApp.parseArgs(Array("-targets", "a", "-concurrency")).isLeft shouldBe true
+  }
+
   test("R8/R9 CLI engine-native -targets form still parses with flag overrides") {
     val cfg = RefresherApp.parseArgs(
       Array("-targets", "a,b", "-timeout", "5", "-concurrency", "2")).toOption.get

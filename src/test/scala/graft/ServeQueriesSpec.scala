@@ -36,19 +36,51 @@ class ServeQueriesSpec extends SparkTestBase with Matchers {
       graft.operators.CurationQueries.textNovelty.query(spark, sfTiny))
   }
 
-  test("q_serve_agg_state ≡ the one-shot events aggregate row for row") {
+  private def oneShotAgg = {
     import org.apache.spark.sql.{functions => F}
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val served = rows(ServeQueries.serveAggState.query(spark, sfTiny))
-    served should not be empty
-    served shouldBe rows(Tables.events(spark, sfTiny)
+    rows(Tables.events(spark, sfTiny)
       .groupBy("event_type")
       .agg(F.count(F.lit(1)).as("n"),
         F.sum(F.col("value").cast(DecimalType(9, 2))).cast(DecimalType(38, 2))
           .cast(DoubleType).as("sum_value"))
       .orderBy("event_type"))
+  }
+
+  test("q_serve_agg_state ≡ the one-shot events aggregate row for row") {
+    val served = rows(ServeQueries.serveAggState.query(spark, sfTiny))
+    served should not be empty
+    served shouldBe oneShotAgg
     // idempotent: a second call serves the committed state unchanged
     rows(ServeQueries.serveAggState.query(spark, sfTiny)) shouldBe served
+  }
+
+  test("q_serve_agg_state rebuilds a state interrupted after batch 0, then serves it untouched") {
+    import org.apache.spark.sql.{functions => F}
+    import graft.sources.GraftFs
+    import graft.streaming.IncrementalAgg
+    // the row's state dir with batch 0 committed and no _SUCCESS marker:
+    // a build that died between its two batches
+    val base = GraftFs.qualify(spark,
+      s"target/graft-state/${GraftFs.scaleTag(spark, sfTiny)}/agg")
+    GraftFs.deleteRecursively(spark, base)
+    val events = Tables.events(spark, sfTiny)
+    IncrementalAgg.processBatch(spark,
+      events.filter(F.pmod(F.col("event_id"), F.lit(2)) === 0), base, Some(0L))
+    IncrementalAgg.committedBatch(spark, base) shouldBe Some(0L)
+    GraftFs.exists(spark, s"$base/_SUCCESS") shouldBe false
+
+    val served = rows(ServeQueries.serveAggState.query(spark, sfTiny))
+    served shouldBe oneShotAgg
+    IncrementalAgg.committedBatch(spark, base) shouldBe Some(1L)
+
+    // a second call serves the marked state: no rebuild, no new commit
+    def stamp(f: String) =
+      (GraftFs.readSmallFile(spark, s"$base/$f"), GraftFs.modificationTime(spark, s"$base/$f"))
+    val before = Seq(stamp("_CURRENT"), stamp("_SUCCESS"))
+    before.foreach(_._1 should not be empty)
+    rows(ServeQueries.serveAggState.query(spark, sfTiny)) shouldBe served
+    Seq(stamp("_CURRENT"), stamp("_SUCCESS")) shouldBe before
   }
 
   test("q_serve_neardup_state ≡ q_dedup_near row for row") {
