@@ -142,10 +142,11 @@ object Refresh {
 
   /** R10: parse a comma-separated target list. Deviation from the reference
     * (impala-refresher.go:170-172): empty segments are rejected instead of
-    * silently producing an empty hostname.
+    * silently producing an empty hostname. A trailing empty segment
+    * (`n1,`) is one too.
     */
   def parseTargets(arg: String): Seq[RefreshTarget] = {
-    val names = arg.split(",").map(_.trim).toSeq
+    val names = arg.split(",", -1).map(_.trim).toSeq
     require(names.nonEmpty && names.forall(_.nonEmpty), s"empty refresh target in '$arg'")
     names.map(RefreshTarget)
   }
@@ -257,7 +258,8 @@ object RefresherApp {
   /** R8/R9: flag parsing + required-argument validation, returned as data so
     * the validation rules are unit-testable (RefreshSpec). Like Go's `flag`
     * package, an unknown flag, a flag with no value and a non-integer
-    * `-timeout`/`-concurrency` are usage errors.
+    * `-timeout`/`-concurrency` are usage errors, and so is an empty
+    * target segment (`a,,b`, `n1,`), which [[Refresh.parseTargets]] rejects.
     */
   def parseArgs(args: Array[String]): Either[String, RefresherConfig] = {
     val pairs = args.grouped(2).toSeq
@@ -265,6 +267,8 @@ object RefresherApp {
     val opts = pairs.map(p => p(0) -> p(1)).toMap
     def int(flag: String, default: Int) =
       opts.get(flag).fold(Option(default))(_.toIntOption).toRight(usageText)
+    def targets(arg: String) =
+      scala.util.Try(Refresh.parseTargets(arg)).toOption.toRight(usageText)
     val table = opts.getOrElse("-table", "")
     val nodes = opts.getOrElse("-nodes", "")
     val targetsArg = opts.getOrElse("-targets", "")
@@ -275,9 +279,9 @@ object RefresherApp {
         if (table.nonEmpty || nodes.nonEmpty) {
           // reference shape: both -table and -nodes are required (ref :157-160)
           if (table.isEmpty || nodes.isEmpty) Left(usageText)
-          else Right(RefresherConfig(Refresh.parseTargets(nodes), Some(table), timeout.seconds, concurrency))
+          else targets(nodes).map(RefresherConfig(_, Some(table), timeout.seconds, concurrency))
         } else if (targetsArg.nonEmpty)
-          Right(RefresherConfig(Refresh.parseTargets(targetsArg), None, timeout.seconds, concurrency))
+          targets(targetsArg).map(RefresherConfig(_, None, timeout.seconds, concurrency))
         else Left(usageText)
     } yield cfg
   }

@@ -30,9 +30,7 @@ object IncrementalAgg {
     StructField("n", LongType),
     StructField("sum_value", DecimalType(38, 2))))
 
-  /** The committed micro-batch id, if the writer threads one — the
-    * build-completeness probe the serve row uses.
-    */
+  /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     StateLog.pointer(s, base).flatMap(_.batch)
 
@@ -61,28 +59,21 @@ object IncrementalAgg {
     * (same stance as IncrementalIndex.processBatch).
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): DataFrame = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId)))
-      return readState(s, base)
-    val merged = readState(s, base).select(
-        col("event_type"), col("n").as("n1"), col("sum_value").as("s1"))
-      .join(partials(batch).select(
-        col("event_type").as("et2"), col("n").as("n2"), col("sum_value").as("s2")),
-        col("event_type") === col("et2"), "full_outer")
-      .select(
-        coalesce(col("event_type"), col("et2")).as("event_type"),
-        (coalesce(col("n1"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n"),
-        (coalesce(col("s1"), lit(0).cast(DecimalType(38, 2)))
-          + coalesce(col("s2"), lit(0).cast(DecimalType(38, 2))))
-          .cast(DecimalType(38, 2)).as("sum_value"))
-      // materialize BEFORE touching the directory tree the plan reads from
-      .localCheckpoint()
-    val next = StateLog.nextVersion(ptr)
-    merged.write.mode("overwrite").parquet(s"$base/v$next")
-    StateLog.swap(s, base, ptr, next, batchId)
-    merged
-  }
+      batchId: Option[Long] = None): DataFrame =
+    StateLog.commitFrame(s, base, batchId, stateSchema)(v => s"$base/$v") { state =>
+      state.select(col("event_type"), col("n").as("n1"), col("sum_value").as("s1"))
+        .join(partials(batch).select(
+          col("event_type").as("et2"), col("n").as("n2"), col("sum_value").as("s2")),
+          col("event_type") === col("et2"), "full_outer")
+        .select(
+          coalesce(col("event_type"), col("et2")).as("event_type"),
+          (coalesce(col("n1"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n"),
+          (coalesce(col("s1"), lit(0).cast(DecimalType(38, 2)))
+            + coalesce(col("s2"), lit(0).cast(DecimalType(38, 2))))
+            .cast(DecimalType(38, 2)).as("sum_value"))
+        // materialize BEFORE touching the directory tree the plan reads from
+        .localCheckpoint()
+    }
 
   /** Attach the incremental aggregate to an events stream via foreachBatch;
     * the batch id is threaded into the committed pointer for crash-replay

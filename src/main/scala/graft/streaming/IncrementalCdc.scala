@@ -47,31 +47,25 @@ object IncrementalCdc {
     * merge to the post-merge state silently diverges from the one-shot.
     */
   def processBatch(s: SparkSession, changes: DataFrame, base: String,
-      batchId: Option[Long] = None): DataFrame = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId)))
-      return readState(s, base)
-    val perKey = changes.groupBy("o_orderkey").agg(
-      max(when(col("op") === "D", 1).otherwise(0)).as("has_d"),
-      // at most one U per key per batch under the key-partitioned feed;
-      // max over the single struct is a deterministic pick either way
-      max(when(col("op") === "U",
-        struct(col("c_custkey"), col("new_price")))).as("u"))
-    val merged = readState(s, base)
-      .join(perKey.select(col("o_orderkey").as("k"), col("has_d"), col("u")),
-        col("o_orderkey") === col("k"), "full_outer")
-      .filter(coalesce(col("has_d"), lit(0)) === 0)
-      .select(
-        coalesce(col("o_orderkey"), col("k")).as("o_orderkey"),
-        coalesce(col("u.c_custkey"), col("o_custkey")).as("o_custkey"),
-        coalesce(col("u.new_price"), col("o_totalprice")).as("o_totalprice"))
-      // materialize BEFORE touching the directory tree the plan reads from
-      .localCheckpoint()
-    val next = StateLog.nextVersion(ptr)
-    merged.write.mode("overwrite").parquet(s"$base/v$next")
-    StateLog.swap(s, base, ptr, next, batchId)
-    merged
-  }
+      batchId: Option[Long] = None): DataFrame =
+    StateLog.commitFrame(s, base, batchId, stateSchema)(v => s"$base/$v") { state =>
+      val perKey = changes.groupBy("o_orderkey").agg(
+        max(when(col("op") === "D", 1).otherwise(0)).as("has_d"),
+        // at most one U per key per batch under the key-partitioned feed;
+        // max over the single struct is a deterministic pick either way
+        max(when(col("op") === "U",
+          struct(col("c_custkey"), col("new_price")))).as("u"))
+      state
+        .join(perKey.select(col("o_orderkey").as("k"), col("has_d"), col("u")),
+          col("o_orderkey") === col("k"), "full_outer")
+        .filter(coalesce(col("has_d"), lit(0)) === 0)
+        .select(
+          coalesce(col("o_orderkey"), col("k")).as("o_orderkey"),
+          coalesce(col("u.c_custkey"), col("o_custkey")).as("o_custkey"),
+          coalesce(col("u.new_price"), col("o_totalprice")).as("o_totalprice"))
+        // materialize BEFORE touching the directory tree the plan reads from
+        .localCheckpoint()
+    }
 
   /** Attach the CDC apply to a change-row stream via foreachBatch.
     *

@@ -66,39 +66,33 @@ object IncrementalComponents {
     * tag forward — the IncrementalDrift discipline).
     */
   def processBatch(s: SparkSession, batchNodes: DataFrame, batchEdges: DataFrame,
-      base: String, batchId: Option[Long] = None): DataFrame = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId))) return readState(s, base)
-    val st = readState(s, base)
-    val fresh = batchNodes.select(col("node_id")).distinct()
-      .join(st.select(col("node_id")), Seq("node_id"), "left_anti")
-      .select(col("node_id"), col("node_id").as("component"))
-    val labels = st.unionByName(fresh).localCheckpoint()
-    // contract batch edges to the label graph; self-loops (both endpoints
-    // already in one component) carry no new connectivity and drop here
-    val la = labels.select(col("node_id").as("a"), col("component").as("ca"))
-    val lb = labels.select(col("node_id").as("b"), col("component").as("cb"))
-    val contracted = batchEdges.select(col("a"), col("b"))
-      .join(la, Seq("a")).join(lb, Seq("b"))
-      .filter(col("ca") =!= col("cb"))
-      .select(least(col("ca"), col("cb")).as("doc_id1"),
-        greatest(col("ca"), col("cb")).as("doc_id2"))
-      .distinct()
-      .localCheckpoint()
-    val touched = contracted.select(col("doc_id1").as("doc_id"))
-      .union(contracted.select(col("doc_id2").as("doc_id"))).distinct()
-    val merged = DedupQueries.connectedComponents(touched, contracted)
-      .select(col("doc_id").as("component"), col("cluster_id").as("merged"))
-    val updated = labels
-      .join(broadcast(merged), Seq("component"), "left")
-      .select(col("node_id"),
-        coalesce(col("merged"), col("component")).as("component"))
-      .localCheckpoint()
-    val next = StateLog.nextVersion(ptr)
-    updated.write.mode("overwrite").parquet(s"$base/labels/v$next")
-    StateLog.swap(s, base, ptr, next, batchId)
-    updated
-  }
+      base: String, batchId: Option[Long] = None): DataFrame =
+    StateLog.commitFrame(s, base, batchId, stateSchema)(v => s"$base/labels/$v") { st =>
+      val fresh = batchNodes.select(col("node_id")).distinct()
+        .join(st.select(col("node_id")), Seq("node_id"), "left_anti")
+        .select(col("node_id"), col("node_id").as("component"))
+      val labels = st.unionByName(fresh).localCheckpoint()
+      // contract batch edges to the label graph; self-loops (both endpoints
+      // already in one component) carry no new connectivity and drop here
+      val la = labels.select(col("node_id").as("a"), col("component").as("ca"))
+      val lb = labels.select(col("node_id").as("b"), col("component").as("cb"))
+      val contracted = batchEdges.select(col("a"), col("b"))
+        .join(la, Seq("a")).join(lb, Seq("b"))
+        .filter(col("ca") =!= col("cb"))
+        .select(least(col("ca"), col("cb")).as("doc_id1"),
+          greatest(col("ca"), col("cb")).as("doc_id2"))
+        .distinct()
+        .localCheckpoint()
+      val touched = contracted.select(col("doc_id1").as("doc_id"))
+        .union(contracted.select(col("doc_id2").as("doc_id"))).distinct()
+      val merged = DedupQueries.connectedComponents(touched, contracted)
+        .select(col("doc_id").as("component"), col("cluster_id").as("merged"))
+      labels
+        .join(broadcast(merged), Seq("component"), "left")
+        .select(col("node_id"),
+          coalesce(col("merged"), col("component")).as("component"))
+        .localCheckpoint()
+    }
 
   /** Attach to an edge stream whose rows are (a, b) pairs; nodes are the
     * endpoints (first sight of an id creates its singleton label), so a

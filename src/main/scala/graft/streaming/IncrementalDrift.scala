@@ -51,24 +51,20 @@ object IncrementalDrift {
     * as IncrementalIndex.processBatch).
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): Unit = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId))) return
-    val partial = batch.select(col("source"),
-        explode(graft.functions.Tokenize.tokens(col("text"))).as("token"))
-      .groupBy("source", "token").agg(count(lit(1)).as("n2"))
-    val next = StateLog.nextVersion(ptr)
-    val merged = readCounts(s, base)
-      .join(partial.withColumnRenamed("source", "s2").withColumnRenamed("token", "t2"),
-        col("source") === col("s2") && col("token") === col("t2"), "full_outer")
-      .select(
-        coalesce(col("source"), col("s2")).as("source"),
-        coalesce(col("token"), col("t2")).as("token"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n"))
-      .localCheckpoint()
-    merged.write.mode("overwrite").parquet(s"$base/counts/v$next")
-    StateLog.swap(s, base, ptr, next, batchId)
-  }
+      batchId: Option[Long] = None): Unit =
+    StateLog.commitFrame(s, base, batchId, stateSchema)(v => s"$base/counts/$v") { counts =>
+      val partial = batch.select(col("source"),
+          explode(graft.functions.Tokenize.tokens(col("text"))).as("token"))
+        .groupBy("source", "token").agg(count(lit(1)).as("n2"))
+      counts
+        .join(partial.withColumnRenamed("source", "s2").withColumnRenamed("token", "t2"),
+          col("source") === col("s2") && col("token") === col("t2"), "full_outer")
+        .select(
+          coalesce(col("source"), col("s2")).as("source"),
+          coalesce(col("token"), col("t2")).as("token"),
+          (coalesce(col("n"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n"))
+        .localCheckpoint()
+    }
 
   /** q_text_drift's output served ENTIRELY from the maintained counts:
     * top-`k` Dunning-G² tokens between `sourceA` and everything else —

@@ -43,22 +43,24 @@ object IncrementalMine {
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     StateLog.pointer(s, base).flatMap(_.batch)
 
-  /** Current (sup, pairs, nb) state; all empty before batch 0. */
-  def readState(s: SparkSession, base: String): (DataFrame, DataFrame, DataFrame) = {
-    val p = StateLog.pointer(s, base)
+  /** Current (sup, pairs, nb) state, all from one pointer read; all
+    * empty before batch 0.
+    */
+  def readState(s: SparkSession, base: String): (DataFrame, DataFrame, DataFrame) =
+    stateAt(s, base, StateLog.pointer(s, base))
+
+  private def stateAt(s: SparkSession, base: String,
+      p: Option[StateLog.Pointer]): (DataFrame, DataFrame, DataFrame) =
     (StateLog.readGeneration(s, p, supSchema)(v => s"$base/$v/sup"),
       StateLog.readGeneration(s, p, pairSchema)(v => s"$base/$v/pairs"),
       StateLog.readGeneration(s, p, nbSchema)(v => s"$base/$v/nb"))
-  }
 
   /** Merge one micro-batch of (ok, pk) basket items (whole baskets) into
     * the mining state and swap versions. Replays (batch id <= committed
     * tag) are skipped — re-merging would double every count.
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): Unit = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId))) return
+      batchId: Option[Long] = None): Unit = StateLog.commit(s, base, batchId) { (ptr, next) =>
     val bi = batch.select(col("ok"), col("pk")).distinct().localCheckpoint()
     val supP = bi.groupBy(col("pk").as("pk2")).agg(count(lit(1)).as("s2"))
     val pairP = bi.as("a").join(bi.as("b"),
@@ -66,7 +68,7 @@ object IncrementalMine {
       .groupBy(col("a.pk").as("q1"), col("b.pk").as("q2"))
       .agg(count(lit(1)).as("c2"))
     val nbP = bi.select(countDistinct(col("ok")).as("nb2"))
-    val (sup, pairs, nb) = readState(s, base)
+    val (sup, pairs, nb) = stateAt(s, base, ptr)
     val supM = sup.join(supP, col("pk") === col("pk2"), "full_outer")
       .select(coalesce(col("pk"), col("pk2")).as("pk"),
         (coalesce(col("s"), lit(0L)) + coalesce(col("s2"), lit(0L))).as("s"))
@@ -80,11 +82,7 @@ object IncrementalMine {
     val nbM = nb.unionByName(nbP.select(col("nb2").as("nb")))
       .agg(sum("nb").cast(LongType).as("nb")) // empty state: just the partial
       .localCheckpoint()
-    val next = StateLog.nextVersion(ptr)
-    supM.write.mode("overwrite").parquet(s"$base/v$next/sup")
-    pairM.write.mode("overwrite").parquet(s"$base/v$next/pairs")
-    nbM.write.mode("overwrite").parquet(s"$base/v$next/nb")
-    StateLog.swap(s, base, ptr, next, batchId)
+    Seq(s"$base/v$next/sup" -> supM, s"$base/v$next/pairs" -> pairM, s"$base/v$next/nb" -> nbM)
   }
 
   /** The serve-time filtered tables: frequent items (s >= MinItemSup),

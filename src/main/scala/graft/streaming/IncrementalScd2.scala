@@ -34,35 +34,41 @@ object IncrementalScd2 {
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     StateLog.pointer(s, base).flatMap(_.batch)
 
+  private val closedSchema = StructType(curSchema.fields :+ StructField("valid_to_us", LongType))
+
   /** Open (current) versions, one row per user seen so far. */
   def readCurrentTable(s: SparkSession, base: String): DataFrame =
-    StateLog.readGeneration(s, StateLog.pointer(s, base), curSchema)(v => s"$base/current/$v")
+    currentAt(s, base, StateLog.pointer(s, base))
 
-  /** All closed versions (append-only segments). */
-  def readClosed(s: SparkSession, base: String): DataFrame = {
-    val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/closed")
-    if (!fs.exists(q)) s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(curSchema.fields :+ StructField("valid_to_us", LongType)))
-    else s.read.option("recursiveFileLookup", "true").parquet(s"$base/closed")
-  }
+  private def currentAt(s: SparkSession, base: String, p: Option[StateLog.Pointer]): DataFrame =
+    StateLog.readGeneration(s, p, curSchema)(v => s"$base/current/$v")
 
-  /** The full dimension in q_cdc_scd2's output shape. */
-  def readDimension(s: SparkSession, base: String): DataFrame =
-    readClosed(s, base)
+  /** All committed closed versions (append-only segments). */
+  def readClosed(s: SparkSession, base: String): DataFrame =
+    closedAt(s, base, StateLog.pointer(s, base))
+
+  /** The closed segments `closed/b<i>` of generations 0 to `p`'s: a
+    * segment written by a batch that failed before its swap is not read.
+    */
+  private def closedAt(s: SparkSession, base: String, p: Option[StateLog.Pointer]): DataFrame =
+    p.fold(StateLog.emptyFrame(s, closedSchema))(q => s.read.schema(closedSchema)
+      .parquet((0L to q.version).map(i => s"$base/closed/b$i"): _*))
+
+  /** The full dimension in q_cdc_scd2's output shape, from one pointer read. */
+  def readDimension(s: SparkSession, base: String): DataFrame = {
+    val p = StateLog.pointer(s, base)
+    closedAt(s, base, p)
       .select(col("user_id"), col("event_type"), col("valid_from_us"),
         col("valid_to_us"), lit(false).as("is_current"))
-      .unionByName(readCurrentTable(s, base)
+      .unionByName(currentAt(s, base, p)
         .select(col("user_id"), col("event_type"), col("valid_from_us"),
           lit(null).cast(LongType).as("valid_to_us"), lit(true).as("is_current")))
       .orderBy("user_id", "valid_from_us", "event_type")
+  }
 
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): Unit = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId))) return
-    val next = StateLog.nextVersion(ptr)
-    val cur = readCurrentTable(s, base).localCheckpoint()
+      batchId: Option[Long] = None): Unit = StateLog.commit(s, base, batchId) { (ptr, next) =>
+    val cur = currentAt(s, base, ptr).localCheckpoint()
     val ev = batch.select(col("user_id"), col("event_id"), col("event_type"),
       expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
         .as("ts_us"))
@@ -79,19 +85,14 @@ object IncrementalScd2 {
       .withColumn("valid_to_us", lead("ts_us", 1).over(
         Window.partitionBy("user_id").orderBy(asc("ts_us"), asc("event_id"))))
       .localCheckpoint()
-    kept.filter(col("valid_to_us").isNotNull)
+    val closed = kept.filter(col("valid_to_us").isNotNull)
       .select(col("user_id"), col("event_type"),
         col("ts_us").as("valid_from_us"), col("valid_to_us"))
-      .write.mode("overwrite").parquet(s"$base/closed/b$next")
     val newCur = kept.filter(col("valid_to_us").isNull)
       .select(col("user_id"), col("event_type"), col("ts_us").as("valid_from_us"))
     val untouched = cur.join(affected, Seq("user_id"), "left_anti")
-    newCur.unionByName(untouched).localCheckpoint()
-      .write.mode("overwrite").parquet(s"$base/current/v$next")
-    // a manual call WITHOUT a batch id carries the committed tag forward —
-    // dropping it would erase replay protection for the next crash-replay
-    // of an attach()-driven stream sharing this state
-    StateLog.swap(s, base, ptr, next, batchId)
+    Seq(s"$base/closed/b$next" -> closed,
+      s"$base/current/v$next" -> newCur.unionByName(untouched).localCheckpoint())
   }
 
   /** Attach to an events stream via foreachBatch (replay-protected). */

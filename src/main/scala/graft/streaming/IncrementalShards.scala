@@ -40,32 +40,26 @@ object IncrementalShards {
     * every later offset.
     */
   def processBatch(s: SparkSession, docs: DataFrame, base: String,
-      batchId: Option[Long] = None): DataFrame = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId))) return readState(s, base)
-    val state = readState(s, base)
-    val baseOffset = state.agg(coalesce(sum("n_bytes"), lit(0L))).collect()(0).getLong(0)
-    val partials = shardsFrom(docs, baseOffset)
-    val merged = state.select(col("shard_id"), col("n_docs").as("d1"), col("n_bytes").as("b1"),
-        col("n_tokens").as("t1"), col("first_doc").as("f1"), col("last_doc").as("l1"))
-      .join(partials.select(col("shard_id").as("sid2"), col("n_docs").as("d2"),
-        col("n_bytes").as("b2"), col("n_tokens").as("t2"),
-        col("first_doc").as("f2"), col("last_doc").as("l2")),
-        col("shard_id") === col("sid2"), "full_outer")
-      .select(
-        coalesce(col("shard_id"), col("sid2")).as("shard_id"),
-        (coalesce(col("d1"), lit(0L)) + coalesce(col("d2"), lit(0L))).as("n_docs"),
-        (coalesce(col("b1"), lit(0L)) + coalesce(col("b2"), lit(0L))).as("n_bytes"),
-        (coalesce(col("t1"), lit(0L)) + coalesce(col("t2"), lit(0L))).as("n_tokens"),
-        least(coalesce(col("f1"), col("f2")), coalesce(col("f2"), col("f1"))).as("first_doc"),
-        greatest(coalesce(col("l1"), col("l2")), coalesce(col("l2"), col("l1"))).as("last_doc"))
-      // materialize BEFORE touching the directory tree the plan reads from
-      .localCheckpoint()
-    val next = StateLog.nextVersion(ptr)
-    merged.write.mode("overwrite").parquet(s"$base/v$next")
-    StateLog.swap(s, base, ptr, next, batchId)
-    merged
-  }
+      batchId: Option[Long] = None): DataFrame =
+    StateLog.commitFrame(s, base, batchId, stateSchema)(v => s"$base/$v") { state =>
+      val baseOffset = state.agg(coalesce(sum("n_bytes"), lit(0L))).collect()(0).getLong(0)
+      val partials = shardsFrom(docs, baseOffset)
+      state.select(col("shard_id"), col("n_docs").as("d1"), col("n_bytes").as("b1"),
+          col("n_tokens").as("t1"), col("first_doc").as("f1"), col("last_doc").as("l1"))
+        .join(partials.select(col("shard_id").as("sid2"), col("n_docs").as("d2"),
+          col("n_bytes").as("b2"), col("n_tokens").as("t2"),
+          col("first_doc").as("f2"), col("last_doc").as("l2")),
+          col("shard_id") === col("sid2"), "full_outer")
+        .select(
+          coalesce(col("shard_id"), col("sid2")).as("shard_id"),
+          (coalesce(col("d1"), lit(0L)) + coalesce(col("d2"), lit(0L))).as("n_docs"),
+          (coalesce(col("b1"), lit(0L)) + coalesce(col("b2"), lit(0L))).as("n_bytes"),
+          (coalesce(col("t1"), lit(0L)) + coalesce(col("t2"), lit(0L))).as("n_tokens"),
+          least(coalesce(col("f1"), col("f2")), coalesce(col("f2"), col("f1"))).as("first_doc"),
+          greatest(coalesce(col("l1"), col("l2")), coalesce(col("l2"), col("l1"))).as("last_doc"))
+        // materialize BEFORE touching the directory tree the plan reads from
+        .localCheckpoint()
+    }
 
   /** Per-shard partials of `docs` (doc_id order) laid out from byte
     * offset `baseOffset`: each doc's shard is its starting offset over
@@ -106,24 +100,19 @@ object IncrementalShards {
     * sequence cost almost nothing.
     */
   def repair(s: SparkSession, docsCorrected: DataFrame, minCorrectedId: Long,
-      base: String): DataFrame = {
-    val state = readState(s, base)
-    val cutRow = state.filter(col("first_doc") <= minCorrectedId)
-      .agg(max("shard_id")).collect()(0)
-    val cutShard = if (cutRow.isNullAt(0)) 0L else cutRow.getLong(0)
-    val kept = state.filter(col("shard_id") < cutShard)
-    val keptInfo = kept.agg(
-      coalesce(sum("n_bytes"), lit(0L)), coalesce(max("last_doc"), lit(Long.MinValue)))
-      .collect()(0)
-    val (baseOffset, lastKeptDoc) = (keptInfo.getLong(0), keptInfo.getLong(1))
-    val rebuilt = shardsFrom(docsCorrected.filter(col("doc_id") > lastKeptDoc), baseOffset)
-    val merged = kept.union(rebuilt).localCheckpoint()
-    val ptr = StateLog.pointer(s, base)
-    val next = StateLog.nextVersion(ptr)
-    merged.write.mode("overwrite").parquet(s"$base/v$next")
-    // a repair is not a stream batch: carry the committed batch tag
-    // forward unchanged so replay protection survives the repair swap
-    StateLog.swap(s, base, ptr, next, None)
-    merged
-  }
+      base: String): DataFrame =
+    // a repair is not a stream batch: no id, so the committed batch tag
+    // carries forward unchanged and replay protection survives the repair
+    StateLog.commitFrame(s, base, None, stateSchema)(v => s"$base/$v") { state =>
+      val cutRow = state.filter(col("first_doc") <= minCorrectedId)
+        .agg(max("shard_id")).collect()(0)
+      val cutShard = if (cutRow.isNullAt(0)) 0L else cutRow.getLong(0)
+      val kept = state.filter(col("shard_id") < cutShard)
+      val keptInfo = kept.agg(
+        coalesce(sum("n_bytes"), lit(0L)), coalesce(max("last_doc"), lit(Long.MinValue)))
+        .collect()(0)
+      val (baseOffset, lastKeptDoc) = (keptInfo.getLong(0), keptInfo.getLong(1))
+      val rebuilt = shardsFrom(docsCorrected.filter(col("doc_id") > lastKeptDoc), baseOffset)
+      kept.union(rebuilt).localCheckpoint()
+    }
 }

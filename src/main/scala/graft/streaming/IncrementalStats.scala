@@ -35,9 +35,7 @@ object IncrementalStats {
     StructField("v", LongType),
     StructField("t", LongType)))
 
-  /** The committed micro-batch id, if the writer threads one — the
-    * build-completeness probe the serve row uses.
-    */
+  /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     StateLog.pointer(s, base).flatMap(_.batch)
 
@@ -62,25 +60,19 @@ object IncrementalStats {
     * IncrementalIndex.processBatch).
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): DataFrame = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId)))
-      return readState(s, base)
-    val partial = batch.groupBy(col("grp").as("g2"), col("v").as("v2"))
-      .agg(count(lit(1)).as("t2"))
-    val merged = readState(s, base)
-      .join(partial, col("grp") === col("g2") && col("v") === col("v2"), "full_outer")
-      .select(
-        coalesce(col("grp"), col("g2")).as("grp"),
-        coalesce(col("v"), col("v2")).as("v"),
-        (coalesce(col("t"), lit(0L)) + coalesce(col("t2"), lit(0L))).as("t"))
-      // materialize BEFORE touching the directory tree the plan reads from
-      .localCheckpoint()
-    val next = StateLog.nextVersion(ptr)
-    merged.write.mode("overwrite").parquet(s"$base/v$next")
-    StateLog.swap(s, base, ptr, next, batchId)
-    merged
-  }
+      batchId: Option[Long] = None): DataFrame =
+    StateLog.commitFrame(s, base, batchId, stateSchema)(v => s"$base/$v") { state =>
+      val partial = batch.groupBy(col("grp").as("g2"), col("v").as("v2"))
+        .agg(count(lit(1)).as("t2"))
+      state
+        .join(partial, col("grp") === col("g2") && col("v") === col("v2"), "full_outer")
+        .select(
+          coalesce(col("grp"), col("g2")).as("grp"),
+          coalesce(col("v"), col("v2")).as("v"),
+          (coalesce(col("t"), lit(0L)) + coalesce(col("t2"), lit(0L))).as("t"))
+        // materialize BEFORE touching the directory tree the plan reads from
+        .localCheckpoint()
+    }
 
   /** Attach to a stream of (grp, v) rows via foreachBatch; the batch id
     * is threaded into the committed pointer for crash-replay idempotence.

@@ -42,46 +42,49 @@ object IncrementalTrend {
     StructField("n_pairs", LongType), StructField("n", LongType),
     StructField("tie", LongType)))
 
-  private def readOr(s: SparkSession, base: String, sub: String,
+  private val cumSchema = StructType(Seq(
+    StructField("g", StringType), StructField("v", LongType),
+    StructField("t", LongType), StructField("cb", LongType)))
+
+  /** Table `sub` of the generation `p` names. */
+  private def readAt(s: SparkSession, base: String, p: Option[StateLog.Pointer], sub: String,
       schema: StructType): DataFrame =
-    StateLog.readGeneration(s, StateLog.pointer(s, base), schema)(v => s"$base/$v/$sub")
+    StateLog.readGeneration(s, p, schema)(v => s"$base/$v/$sub")
 
   /** Current hourly trend grain (empty before batch 0). */
   def readHourly(s: SparkSession, base: String): DataFrame =
-    readOr(s, base, "hourly", trendSchema)
+    readAt(s, base, StateLog.pointer(s, base), "hourly", trendSchema)
 
   /** Current maintained pairwise slope histogram (g, slope_q, sgn, t) —
     * the artifact that keeps the hours² Mann-Kendall/Sen pair grid OFF
     * the serve path (empty before batch 0).
     */
   def readSlopes(s: SparkSession, base: String): DataFrame =
-    readOr(s, base, "slopes", slopeSchema)
+    readAt(s, base, StateLog.pointer(s, base), "slopes", slopeSchema)
 
   /** Current per-user RFM triple (empty before batch 0). */
   def readUsers(s: SparkSession, base: String): DataFrame =
-    readOr(s, base, "users", rfmSchema)
+    readAt(s, base, StateLog.pointer(s, base), "users", rfmSchema)
 
   /** Current per-(g, x) hourly-cell VALUE census — the grain the tie
     * correction is a moment of (empty before batch 0).
     */
   def readVals(s: SparkSession, base: String): DataFrame =
-    readOr(s, base, "vals", valsSchema)
+    readAt(s, base, StateLog.pointer(s, base), "vals", valsSchema)
 
   /** Current per-series MK moments (g, s, n_pairs, n, tie) — the
     * constant-size read that keeps EVERY full-grain re-aggregation off
     * the serve path (empty before batch 0).
     */
   def readMoments(s: SparkSession, base: String): DataFrame =
-    readOr(s, base, "moments", momentsSchema)
+    readAt(s, base, StateLog.pointer(s, base), "moments", momentsSchema)
 
   /** Current CUMULATIVE Sen marginal (g, v, t, cb) — precumulated at
     * ingest so the serve-time Sen median is a rank probe, not a window
     * sort (empty before batch 0).
     */
   def readSlopesCum(s: SparkSession, base: String): DataFrame =
-    readOr(s, base, "slopes_cum", StructType(Seq(
-      StructField("g", StringType), StructField("v", LongType),
-      StructField("t", LongType), StructField("cb", LongType))))
+    readAt(s, base, StateLog.pointer(s, base), "slopes_cum", cumSchema)
 
   /** Pair histogram deltas between the cells of `a` and `b` — `a` and
     * `b` are (g, h, x) frames over DISJOINT hour sets when `within` is
@@ -151,9 +154,8 @@ object IncrementalTrend {
     * IncrementalIndex.processBatch).
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): Unit = {
-    val ptr = StateLog.pointer(s, base)
-    if (ptr.exists(_.covers(batchId))) return
+      batchId: Option[Long] = None): Unit = StateLog.commit(s, base, batchId) { (ptr, next) =>
+    def read(sub: String, schema: StructType) = readAt(s, base, ptr, sub, schema)
     // Barrier budget (r17 — the maintainer's ~4.5 s/batch was almost
     // entirely driver-sequenced tiny jobs): only frames that are BOTH
     // multi-consumer AND non-trivial to recompute stay materialized (hP,
@@ -163,7 +165,7 @@ object IncrementalTrend {
     // anti-join over that scan, same story.
     val hP = batch.groupBy(col("g").as("g2"), col("h").as("h2"))
       .agg(sum("x").cast(LongType).as("x2")).localCheckpoint()
-    val hOld = readHourly(s, base)
+    val hOld = read("hourly", trendSchema)
     val hM = hOld
       .join(hP, col("g") === col("g2") && col("h") === col("h2"), "full_outer")
       .select(coalesce(col("g"), col("g2")).as("g"),
@@ -199,7 +201,7 @@ object IncrementalTrend {
         negate(pairHist(tOld, tOld, within = true)))
       .reduce(_ unionByName _)
       .localCheckpoint()
-    val slopesM = readSlopes(s, base).unionByName(deltaAll)
+    val slopesM = read("slopes", slopeSchema).unionByName(deltaAll)
       .groupBy("g", "slope_q", "sgn").agg(sum("t").cast(LongType).as("t"))
       .filter(col("t") =!= 0L)
       .localCheckpoint()
@@ -216,7 +218,7 @@ object IncrementalTrend {
       .groupBy("g", "x").agg(sum("dc").cast(LongType).as("dc"))
       .filter(col("dc") =!= 0L)
       .localCheckpoint()
-    val valsOld = readVals(s, base)
+    val valsOld = read("vals", valsSchema)
     // tie delta per affected (g, x): f(c + dc) − f(c), f(c) = c(c−1)(2c+5)
     def fTie(c: org.apache.spark.sql.Column) =
       c * (c - lit(1L)) * (lit(2L) * c + lit(5L))
@@ -233,7 +235,7 @@ object IncrementalTrend {
       .select(coalesce(col("g"), col("g4")).as("gd"),
         coalesce(col("ds"), lit(0L)).as("ds"), coalesce(col("dp"), lit(0L)).as("dp"),
         coalesce(col("dtie"), lit(0L)).as("dtie"), coalesce(col("dn"), lit(0L)).as("dn"))
-    val momentsM = readMoments(s, base)
+    val momentsM = read("moments", momentsSchema)
       .join(dMom, col("g") === col("gd"), "full_outer")
       .select(coalesce(col("g"), col("gd")).as("g"),
         (coalesce(col("s"), lit(0L)) + coalesce(col("ds"), lit(0L))).as("s"),
@@ -250,39 +252,21 @@ object IncrementalTrend {
     val uP = batch.groupBy(col("user_id").as("u2"))
       .agg(max("ts_us").as("l2"), count(lit(1)).as("f2"),
         sum("m").cast(LongType).as("m2"))
-    val uM = readUsers(s, base)
+    val uM = read("users", rfmSchema)
       .join(uP, col("user_id") === col("u2"), "full_outer")
       .select(coalesce(col("user_id"), col("u2")).as("user_id"),
         greatest(coalesce(col("last_us"), lit(Long.MinValue)),
           coalesce(col("l2"), lit(Long.MinValue))).as("last_us"),
         (coalesce(col("f"), lit(0L)) + coalesce(col("f2"), lit(0L))).as("f"),
         (coalesce(col("m"), lit(0L)) + coalesce(col("m2"), lit(0L))).as("m"))
-    val next = StateLog.nextVersion(ptr)
-    // the six grain writes are INDEPENDENT jobs (slopes_cum derives from
-    // the materialized slopesM, not from the slopes parquet) — overlap
-    // them from a small thread pool (guide §2.6) instead of paying six
-    // sequential driver-scheduled write barriers; the version pointer
-    // swaps only after every write has committed, so readers still see
-    // old-or-new, never a mix. A failed write is rethrown only after ALL
-    // six have settled and the pointer never swaps: no writer is still
-    // running into `v<next>` when a replay of this batch rewrites it.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      () => hM.write.mode("overwrite").parquet(s"$base/v$next/hourly"),
-      () => slopesM.write.mode("overwrite").parquet(s"$base/v$next/slopes"),
+    Seq(s"$base/v$next/hourly" -> hM, s"$base/v$next/slopes" -> slopesM,
       // the cumulative Sen marginal is rewritten alongside the histogram
-      // it derives from — the window is paid HERE, with the grain work,
-      // so serve never sorts
-      () => graft.operators.TimeSeriesQueries.senCumFromSlopes(slopesM)
-        .write.mode("overwrite").parquet(s"$base/v$next/slopes_cum"),
-      () => uM.write.mode("overwrite").parquet(s"$base/v$next/users"),
-      () => valsM.write.mode("overwrite").parquet(s"$base/v$next/vals"),
-      () => momentsM.write.mode("overwrite").parquet(s"$base/v$next/moments"))
-    writes.map(w => Future(w())).map(Await.ready(_, Duration.Inf).value.get)
-      .collectFirst { case scala.util.Failure(e) => throw e }
-    StateLog.swap(s, base, ptr, next, batchId)
+      // it derives from (from the materialized slopesM, not the slopes
+      // parquet) — the window is paid HERE, with the grain work, so serve
+      // never sorts
+      s"$base/v$next/slopes_cum" -> graft.operators.TimeSeriesQueries.senCumFromSlopes(slopesM),
+      s"$base/v$next/users" -> uM, s"$base/v$next/vals" -> valsM,
+      s"$base/v$next/moments" -> momentsM)
   }
 
   /** The committed micro-batch id, if the writer threads one. */
@@ -297,9 +281,11 @@ object IncrementalTrend {
     * scan — the declared floor: an order statistic has no associative
     * form, but its selection needs no serve-time sort either).
     */
-  def serveTrend(s: SparkSession, base: String): DataFrame =
+  def serveTrend(s: SparkSession, base: String): DataFrame = {
+    val p = StateLog.pointer(s, base)
     graft.operators.TimeSeriesQueries.trendFromMomentsCum(
-      readMoments(s, base), readSlopesCum(s, base))
+      readAt(s, base, p, "moments", momentsSchema), readAt(s, base, p, "slopes_cum", cumSchema))
+  }
 
   /** RFM segmentation from state — ≡ q_events_rfm one-shot. */
   def serveRfm(s: SparkSession, base: String): DataFrame =

@@ -50,9 +50,7 @@ object IncrementalWinnow {
   private[graft] def currentState(s: SparkSession, base: String): WinnowState =
     stateLog.current(s, base)
 
-  /** The committed micro-batch id — the serve row's build-completeness
-    * probe.
-    */
+  /** The committed micro-batch id. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     currentState(s, base).batch
 

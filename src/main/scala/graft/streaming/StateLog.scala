@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import scala.annotation.tailrec
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The one implementation of graft's two state-publication protocols.
   * Every maintainer commits a new version of its state and readers pick
@@ -65,11 +67,18 @@ import scala.annotation.tailrec
   *    its failures are reported, never thrown, because the batch is
   *    already committed and the fold re-triggers on the next publish.
   *
-  * '''Version pointer''' ([[StateLog.pointer]]: IncrementalAgg, Stats,
-  * Cdc, Mine, Drift, Scd2, Components, Shards, Trend). Each batch writes a
-  * complete new generation under `v<N>`, then atomically overwrites
-  * `_CURRENT` with `v<N>[:batch=<id>]`; readers see the old generation
-  * or the new one, never a mix. The tag is the replay guard.
+  * '''Version pointer''' ([[StateLog.commit]]: IncrementalAgg, Stats,
+  * Cdc, Mine, Drift, Scd2, Components, Shards, Trend).
+  *  - A batch reads `_CURRENT` once, builds a complete new generation
+  *    `v<N>` from the generation it names, writes every frame of it, and
+  *    only then atomically overwrites `_CURRENT` with `v<N>[:batch=<id>]`;
+  *    readers see the old generation or the new one, never a mix. The
+  *    tag is the replay guard.
+  *  - A failed write is rethrown once every write of the batch has
+  *    settled, and the pointer does not swap; the replay rewrites `v<N>`.
+  *  - A reader of several tables resolves `_CURRENT` once and reads them
+  *    all from that generation, so a swap between its reads cannot serve
+  *    a mix of two generations.
   *
   * In both protocols a batch id at or below the committed tag is a crash
   * replay and lands nothing ([[StateLog.Committed.covers]]), and a call
@@ -334,13 +343,56 @@ private[graft] object StateLog {
       }
     }
 
+  /** Commit one generation behind the version pointer at `base`, the
+    * only writer of `_CURRENT`. Reads the pointer once; a replay of
+    * `batchId` writes nothing and returns Left(that pointer). Otherwise
+    * `write(pointer, next)` builds generation `next` from the generation
+    * that pointer names, as (path, frame) pairs; once they are written,
+    * `_CURRENT` swaps to `next` and Right(the frames) is returned.
+    */
+  def commit(s: SparkSession, base: String, batchId: Option[Long])(
+      write: (Option[Pointer], Long) => Seq[(String, DataFrame)])
+      : Either[Option[Pointer], Seq[DataFrame]] = {
+    val ptr = pointer(s, base)
+    if (ptr.exists(_.covers(batchId))) return Left(ptr)
+    val next = nextVersion(ptr)
+    val frames = write(ptr, next)
+    // the writes are INDEPENDENT jobs — overlap them from a small thread
+    // pool instead of paying one sequential write barrier each; the
+    // pointer swaps only after every write has committed, so readers still
+    // see old-or-new, never a mix. A failed write is rethrown only after
+    // ALL writes have settled and the pointer never swaps: no writer is
+    // still running into `v<next>` when a replay of this batch rewrites
+    // it. The pool's threads start from this one, so the writes carry its
+    // Spark job group and tags.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(frames.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try frames.map { case (p, f) => Future(f.write.mode("overwrite").parquet(p)) }
+      .map(Await.ready(_, Duration.Inf).value.get)
+      .collectFirst { case scala.util.Failure(e) => throw e }
+    finally pool.shutdown()
+    swap(s, base, ptr, next, batchId)
+    Right(frames.map(_._2))
+  }
+
+  /** [[commit]] of a one-frame state whose generation `v<N>` is at
+    * `path("v<N>")`: `merge` maps the guarded generation's frame (empty
+    * before the first commit) to the next one. Returns the next frame, or
+    * on a replay the guarded one.
+    */
+  def commitFrame(s: SparkSession, base: String, batchId: Option[Long], schema: StructType)(
+      path: String => String)(merge: DataFrame => DataFrame): DataFrame = {
+    def at(p: Option[Pointer]) = readGeneration(s, p, schema)(path)
+    commit(s, base, batchId)((p, v) => Seq(path(s"v$v") -> merge(at(p)))).fold(at, _.head)
+  }
+
   /** The generation the next swap publishes: one past `p`, else 0. */
-  def nextVersion(p: Option[Pointer]): Long = p.fold(0L)(_.version + 1)
+  private def nextVersion(p: Option[Pointer]): Long = p.fold(0L)(_.version + 1)
 
   /** Point `_CURRENT` at generation `version`, tagged with `batchId` or
     * else with `prev`'s tag carried forward.
     */
-  def swap(s: SparkSession, base: String, prev: Option[Pointer], version: Long,
+  private def swap(s: SparkSession, base: String, prev: Option[Pointer], version: Long,
       batchId: Option[Long]): Unit = {
     val tag = batchId.orElse(prev.flatMap(_.batch)).fold("")(id => s":batch=$id")
     GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v$version$tag")

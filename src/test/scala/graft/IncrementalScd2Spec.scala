@@ -57,4 +57,40 @@ class IncrementalScd2Spec extends SparkTestBase with Matchers {
     graft.streaming.IncrementalScd2.readDimension(spark, base).count() shouldBe once
     new java.io.File(s"$base/closed").listFiles().length shouldBe 1
   }
+
+  test("a batch that fails after its closed write shows none of it; the replay converges") {
+    FaultInjectingFileSystem.install(spark)
+    val ev = Tables.events(spark, sfTiny)
+      .select(col("user_id"), col("event_id"), col("event_type"), col("ts"),
+        expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
+          .as("us"))
+    val bounds = ev.selectExpr(
+      "percentile_approx(us, 0.3333, 10000)",
+      "percentile_approx(us, 0.6667, 10000)").head
+    val (t1, t2) = (bounds.getLong(0), bounds.getLong(1))
+    val batches = Seq(ev.filter(col("us") <= t1),
+      ev.filter(col("us") > t1 && col("us") <= t2), ev.filter(col("us") > t2))
+    def dimension(base: String) =
+      IncrementalScd2.readDimension(spark, base).collect().map(_.toString).toSeq
+    val clean = Files.createTempDirectory("graft_incscd2_clean").toFile.getAbsolutePath
+    batches.zipWithIndex.foreach { case (b, i) =>
+      IncrementalScd2.processBatch(spark, b, clean, Some(i.toLong)) }
+    val faultDir = Files.createTempDirectory("graft_incscd2_fault").toFile.getAbsolutePath
+    val fault = s"graftfault://$faultDir"
+    FaultInjectingFileSystem.reset()
+    try {
+      IncrementalScd2.processBatch(spark, batches(0), fault, Some(0L))
+      val batch0 = dimension(fault)
+      // batch 1's current-table write fails; its closed segment still lands
+      FaultInjectingFileSystem.failCreateOnce("/current/v1")
+      intercept[Exception] { IncrementalScd2.processBatch(spark, batches(1), fault, Some(1L)) }
+      FaultInjectingFileSystem.fired.map(_._1) should contain("failCreate")
+      new java.io.File(faultDir, "closed/b1").isDirectory shouldBe true
+      IncrementalScd2.committedBatch(spark, fault) shouldBe Some(0L)
+      dimension(fault) shouldBe batch0
+      IncrementalScd2.processBatch(spark, batches(1), fault, Some(1L))
+      IncrementalScd2.processBatch(spark, batches(2), fault, Some(2L))
+    } finally FaultInjectingFileSystem.reset()
+    dimension(fault) shouldBe dimension(clean)
+  }
 }

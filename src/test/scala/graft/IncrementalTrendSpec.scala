@@ -86,4 +86,22 @@ class IncrementalTrendSpec extends SparkTestBase with Matchers {
     rows(IncrementalTrend.serveRfm(spark, fault)) shouldBe
       rows(IncrementalTrend.serveRfm(spark, clean))
   }
+
+  test("one batch and one serve each read _CURRENT once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CountingFileSystem].getName)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.AbstractFileSystem.graftcount.impl", classOf[CountingAbstractFs].getName)
+    val local = Files.createTempDirectory("graft_inctrend_opens").toFile.getAbsolutePath
+    val base = s"graftcount:$local/state"
+    def pointerOpens(f: => Any): Int = {
+      CountingFileSystem.reset()
+      f
+      CountingFileSystem.openedPaths.count(_.endsWith("/_CURRENT"))
+    }
+    val split = (0 until 2).map(i => rawRows.filter(abs(hash(col("event_id"))) % 2 === i))
+    IncrementalTrend.processBatch(spark, split(0), base, Some(0L))
+    pointerOpens(IncrementalTrend.processBatch(spark, split(1), base, Some(1L))) shouldBe 1
+    pointerOpens(IncrementalTrend.serveTrend(spark, base).collect()) shouldBe 1
+  }
 }

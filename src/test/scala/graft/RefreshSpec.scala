@@ -311,6 +311,7 @@ class RefreshSpec extends SparkTestBase with Matchers {
     Refresh.parseTargets("a, b ,c").map(_.name) shouldBe Seq("a", "b", "c")
     an[IllegalArgumentException] should be thrownBy Refresh.parseTargets("a,,b")
     an[IllegalArgumentException] should be thrownBy Refresh.parseTargets("")
+    an[IllegalArgumentException] should be thrownBy Refresh.parseTargets("n1,")
   }
 
   test("R8/R9 CLI accepts the reference-shaped -table + -nodes invocation (ref :151-160)") {
@@ -339,6 +340,11 @@ class RefreshSpec extends SparkTestBase with Matchers {
     RefresherApp.parseArgs(Array("-targets", "a", "-bogus", "1")).isLeft shouldBe true
     RefresherApp.parseArgs(Array("-table", "t1", "-nodes", "n1", "-timeout")).isLeft shouldBe true
     RefresherApp.parseArgs(Array("-targets", "a", "-concurrency")).isLeft shouldBe true
+  }
+
+  test("R8/R9 CLI rejects an empty target segment with usage, not a throw") {
+    RefresherApp.parseArgs(Array("-targets", "a,,b")).isLeft shouldBe true
+    RefresherApp.parseArgs(Array("-table", "t1", "-nodes", "n1,")).isLeft shouldBe true
   }
 
   test("R8/R9 CLI engine-native -targets form still parses with flag overrides") {

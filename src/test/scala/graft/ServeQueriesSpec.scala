@@ -141,6 +141,12 @@ class ServeQueriesSpec extends SparkTestBase with Matchers {
       graft.operators.TimeSeriesQueries.tsTrend.query(spark, sfTiny))
   }
 
+  test("q_serve_winnow_state ≡ q_text_winnow_pairs row for row") {
+    val served = rows(ServeQueries.serveWinnowState.query(spark, sfTiny))
+    served should not be empty
+    served shouldBe rows(TextQueries.textWinnowPairs.query(spark, sfTiny))
+  }
+
   test("q_serve_drift_state ≡ q_text_drift row for row") {
     val served = rows(ServeQueries.serveDriftState.query(spark, sfTiny))
     served should not be empty

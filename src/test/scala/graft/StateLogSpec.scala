@@ -3,10 +3,12 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.GraftFs
-import graft.streaming.{CurationIngest, IncrementalAgg, IncrementalDedup, IncrementalIndex,
-  IncrementalSpan, IncrementalWinnow}
+import graft.streaming.{CurationIngest, IncrementalAgg, IncrementalCdc, IncrementalComponents,
+  IncrementalDedup, IncrementalDrift, IncrementalIndex, IncrementalMine, IncrementalScd2,
+  IncrementalShards, IncrementalSpan, IncrementalStats, IncrementalTrend, IncrementalWinnow}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType}
 import org.scalatest.matchers.should.Matchers
 
 /** The shared state-publication module (graft.streaming.StateLog) as the
@@ -97,20 +99,76 @@ class StateLogSpec extends SparkTestBase with Matchers {
       CurationIngest.IngestLog(0L, Seq("b0-aa"), Some(0L))
   }
 
-  test("the version pointer keeps its v<N>[:batch=<id>] format and carries the tag forward") {
-    val base = Files.createTempDirectory("graft_statelog_ptr").toFile.getAbsolutePath
+  private case class PointerMaintainer(name: String, ingest: (Int, String, Option[Long]) => Unit,
+      committed: String => Option[Long], state: String => DataFrame)
+
+  /** The nine version-pointer maintainers; `ingest(part, base, id)` lands
+    * half `part` (0 or 1) of a fixture table.
+    */
+  private def pointerMaintainers = {
     val events = Tables.events(spark, sfTiny)
-    def pointer = GraftFs.readSmallFile(spark, s"$base/_CURRENT").map(_.trim)
-    IncrementalAgg.processBatch(spark, events.filter(col("event_id") % 2 === 0), base, Some(4L))
-    pointer shouldBe Some("v0:batch=4")
-    IncrementalAgg.processBatch(spark, events.filter(col("event_id") % 2 === 1), base)
-    pointer shouldBe Some("v1:batch=4") // a call without an id keeps the tag
-    IncrementalAgg.processBatch(spark, events, base, Some(4L)) // replay: no swap
-    pointer shouldBe Some("v1:batch=4")
-    IncrementalAgg.committedBatch(spark, base) shouldBe Some(4L)
-    // an untagged pointer written by an older writer still reads
-    GraftFs.writeSmallFileAtomic(spark, s"$base/_CURRENT", "v1")
-    IncrementalAgg.committedBatch(spark, base) shouldBe None
-    IncrementalAgg.readState(spark, base).count() should be > 0L
+    val orders = Tables.orders(spark, sfTiny)
+    val docs = Tables.documents(spark, sfTiny)
+    val cents = (c: String) => (col(c).cast(DecimalType(12, 2)) * 100).cast(LongType)
+    def half(df: DataFrame, key: String, part: Int) = df.filter(pmod(col(key), lit(2)) === part)
+    def nodes(part: Int) = spark.range(part * 10L, part * 10L + 10).select(col("id").as("node_id"))
+    Seq(
+      PointerMaintainer("agg",
+        (i, base, id) => IncrementalAgg.processBatch(spark, half(events, "event_id", i), base, id),
+        IncrementalAgg.committedBatch(spark, _), IncrementalAgg.readState(spark, _)),
+      PointerMaintainer("stats", (i, base, id) => IncrementalStats.processBatch(spark,
+          half(orders, "o_orderkey", i).select(col("o_orderstatus").as("grp"),
+            cents("o_totalprice").as("v")), base, id),
+        IncrementalStats.committedBatch(spark, _), IncrementalStats.readState(spark, _)),
+      PointerMaintainer("cdc", (i, base, id) => IncrementalCdc.processBatch(spark,
+          half(orders, "o_orderkey", i).select(col("o_orderkey"), lit("U").as("op"),
+            col("o_custkey").as("c_custkey"), col("o_totalprice").as("new_price")), base, id),
+        IncrementalCdc.committedBatch(spark, _), IncrementalCdc.readState(spark, _)),
+      PointerMaintainer("mine", (i, base, id) => IncrementalMine.processBatch(spark,
+          half(Tables.lineitem(spark, sfTiny), "l_orderkey", i)
+            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")), base, id),
+        IncrementalMine.committedBatch(spark, _), IncrementalMine.readState(spark, _)._1),
+      PointerMaintainer("drift",
+        (i, base, id) => IncrementalDrift.processBatch(spark, half(docs, "doc_id", i), base, id),
+        IncrementalDrift.committedBatch(spark, _), IncrementalDrift.readCounts(spark, _)),
+      PointerMaintainer("scd2", (i, base, id) => IncrementalScd2.processBatch(spark,
+          half(events, "user_id", i).select("user_id", "event_id", "event_type", "ts"), base, id),
+        IncrementalScd2.committedBatch(spark, _), IncrementalScd2.readDimension(spark, _)),
+      PointerMaintainer("components", (i, base, id) => IncrementalComponents.processBatch(spark,
+          nodes(i), nodes(i).select(col("node_id").as("a"), (col("node_id") + 1).as("b"))
+            .filter(col("b") < i * 10L + 10), base, id),
+        IncrementalComponents.committedBatch(spark, _), IncrementalComponents.readState(spark, _)),
+      PointerMaintainer("shards", (i, base, id) => IncrementalShards.processBatch(spark,
+          half(docs, "doc_id", i).select("doc_id", "n_chars", "text"), base, id),
+        IncrementalShards.committedBatch(spark, _), IncrementalShards.readState(spark, _)),
+      PointerMaintainer("trend", (i, base, id) => IncrementalTrend.processBatch(spark,
+          half(events, "event_id", i).select(col("event_id"), col("user_id"),
+            col("event_type").as("g"),
+            expr("unix_micros(cast(ts as timestamp)) div 3600000000").as("h"),
+            cents("value").as("x"), expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
+            cents("value").as("m")), base, id),
+        IncrementalTrend.committedBatch(spark, _), IncrementalTrend.readHourly(spark, _)))
+  }
+
+  test("the version pointer keeps its v<N>[:batch=<id>] format and carries the tag forward") {
+    def files(f: java.io.File): Set[String] =
+      if (f.isDirectory) f.listFiles().toSet.flatMap(files) else Set(f.getPath)
+    for (m <- pointerMaintainers) withClue(s"maintainer=${m.name} ") {
+      val base = Files.createTempDirectory(s"graft_statelog_ptr_${m.name}").toFile.getAbsolutePath
+      def pointer = GraftFs.readSmallFile(spark, s"$base/_CURRENT").map(_.trim)
+      m.ingest(0, base, Some(4L))
+      pointer shouldBe Some("v0:batch=4")
+      m.ingest(1, base, None)
+      pointer shouldBe Some("v1:batch=4") // a call without an id keeps the tag
+      val landed = files(new java.io.File(base))
+      m.ingest(0, base, Some(4L)) // replay: no write, no swap
+      pointer shouldBe Some("v1:batch=4")
+      files(new java.io.File(base)) shouldBe landed
+      m.committed(base) shouldBe Some(4L)
+      // an untagged pointer written by an older writer still reads
+      GraftFs.writeSmallFileAtomic(spark, s"$base/_CURRENT", "v1")
+      m.committed(base) shouldBe None
+      m.state(base).count() should be > 0L
+    }
   }
 }
